@@ -2061,8 +2061,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "weighted_sample": q_weighted_sample,
         "dsir_weights": q_dsir_weights,
     }
-    # Round-14 window, composition COMPUTED by tools/close_round.py's
-    # recommended_window from CORRECTNESS_r01..r13.json.  The r7 rule,
+    # Round-14 window, composition computed by the round-era
+    # recommended_window rule from CORRECTNESS_r01..r13.json.  The r7 rule,
     # with "changed" read as changed SINCE LAST ATTESTATION: an entry
     # whose code moved in r13 but whose last driver-green row predates
     # that change (sample rotation skipped it) is as unattested as

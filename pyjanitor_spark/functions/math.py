@@ -191,6 +191,7 @@ def apply_math(df: DataFrame, column_name: str, fn, dest: str | None = None) -> 
         # enforced by an inline assert_true that rides the groupBy's own
         # scan instead of a separate eager count action.
         from pyjanitor_spark.utils.order import partitioned_cumsum
+        from pyjanitor_spark.utils.pin import pin
 
         numeric = ("integer", "long", "double", "float", "short", "byte", "decimal")
         if df.schema[column_name].dataType.typeName() not in numeric:
@@ -205,10 +206,8 @@ def apply_math(df: DataFrame, column_name: str, fn, dest: str | None = None) -> 
         # so the second full scan+aggregate the old `df.agg(count)` plan
         # ran is gone, and the pinned LogicalRDD is provably replay-
         # stable so partitioned_cumsum skips its own internal pin
-        counts = (
-            df.groupBy(column_name)
-            .agg(F.count(F.lit(1)).alias("__cnt"))
-            .localCheckpoint(eager=False)
+        counts = pin(
+            df.groupBy(column_name).agg(F.count(F.lit(1)).alias("__cnt"))
         )
         total = counts.agg(F.sum("__cnt").alias("__n"))
         cum = partitioned_cumsum(counts, "__cnt", column_name, "__cle")

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyjanitor_spark.operators.text_analysis import tokens
+from pyjanitor_spark.utils.pin import pin
 
 __all__ = ["nb_train", "nb_score"]
 
@@ -52,8 +53,8 @@ def nb_train(
     Plan: two corpus scans total — one per-class doc-count aggregate
     (its bounded one-row-per-class collect also yields the label list
     and the doc total) and one tokenize pass into (label, token) counts
-    (partial-aggregated shuffle, lazily checkpointed so ``V`` and the
-    grid share it); the dense vocab × label grid is an ``explode`` over
+    (partial-aggregated shuffle, pinned so ``V`` and the grid share it;
+    under AQE the pin runs that shuffle at call time); the dense vocab × label grid is an ``explode`` over
     the driver-known label list — no corpus cross join; class totals
     join back by label (tiny, broadcast), and ``k·V`` rides the plan as
     a broadcast one-row aggregate rather than a blocking driver
@@ -76,11 +77,8 @@ def nb_train(
     toks = labeled.select(
         lab.alias("label"), F.explode(_toks(F.col(text_col))).alias("token")
     )
-    counts = (
-        toks.groupBy("label", "token")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)  # V-count and the grid share one pass
-    )
+    # V-count and the grid share one pass
+    counts = pin(toks.groupBy("label", "token").agg(F.count(F.lit(1)).alias("c")))
     vocab = (
         counts.groupBy("token")
         .agg(F.sum("c").alias("tc"))
@@ -89,10 +87,9 @@ def nb_train(
     )
     # r14: V rides the model plan as a broadcast one-row table instead
     # of a blocking driver count() — one less driver round trip per
-    # train, and the counts pin now materializes in the first REAL
-    # action instead of a count-only job.  k·V is the same IEEE double
-    # product either way (V is exact in a double for any vocabulary
-    # below 2^53), so llk is bit-identical.
+    # train, and no count-only job re-reads the counts pin.  k·V is the
+    # same IEEE double product either way (V is exact in a double for
+    # any vocabulary below 2^53), so llk is bit-identical.
     vcount = vocab.agg(
         (F.lit(float(k)) * F.count(F.lit(1)).cast("double")).alias("__kV")
     )

@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 
 from pyjanitor_spark.operators.text_analysis import word_shingles
 from pyjanitor_spark.utils.expr import let
+from pyjanitor_spark.utils.pin import pin
 
 __all__ = [
     "dedupe_exact",
@@ -364,7 +365,7 @@ def simhash_pairs(
     # aggregate — 4 fingerprint computations per document in the
     # executed plan.  The pin is (id, band, key, fp): bands x ~40 bytes
     # per document, metadata-sized at any scale.
-    banded = banded.localCheckpoint(eager=False)
+    banded = pin(banded)
     a, b = banded.alias("a"), banded.alias("b")
     xor = F.col("a.__sh").bitwiseXOR(F.col("b.__sh"))
     ham = F.bit_count(xor)
@@ -499,11 +500,10 @@ def ngram_jaccard_pairs(
         # the original subtree's size estimate through (verified
         # empirically this round), and the r10-era `merge` hint below
         # statically pins sort-merge for the pair-side joins anyway.
-        buckets = (
+        buckets = pin(
             sh.groupBy("s")
             .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("__ids"))
             .filter(F.size("__ids") <= max_doc_freq)
-            .localCheckpoint(eager=False)
         )
         sizes = (
             buckets.select(F.explode("__ids").alias(id_col))
@@ -1012,7 +1012,6 @@ def near_dup_clusters(
     id_col: str = "doc_id",
     dest: str = "cluster_id",
     max_iter: int = 20,
-    checkpoint_dir: str | None = None,
     small_graph_edges: int = 1_000_000,
 ) -> DataFrame:
     """Connected components over near-dup ``pairs`` (columns id_1,
@@ -1020,8 +1019,8 @@ def near_dup_clusters(
     pair graph — the canonical representative of its duplicate cluster.
 
     Adaptive execution, the same idea as Spark's own broadcast-join
-    threshold: the normalized distinct edge set is counted once (the
-    action that materializes its checkpoint anyway); at or below
+    threshold: the normalized distinct edge set is pinned and counted
+    once (the count reads the pin); at or below
     ``small_graph_edges`` (default 1M edges ≈ tens of MB of id pairs —
     a BOUNDED collect, gated by the count) the components are solved
     with path-compressed union-find on the driver in one collect
@@ -1074,31 +1073,20 @@ def near_dup_clusters(
     ``nodes`` (they carry no connectivity, but the id was present in
     ``pairs`` and must not vanish from the labeling — ADVICE r12).
 
-    ``checkpoint_dir``: on a real cluster pass a durable (HDFS/S3) path —
-    iterations then use reliable ``checkpoint()`` so a lost executor
-    cannot force recomputing the whole lineage; the default
-    ``localCheckpoint`` is executor-local (fine on local mode, lossy
-    under executor failure).
+    The call runs Spark jobs: one ``count`` of the edge set and, on the
+    small-graph path, one bounded ``collect``; on the distributed path,
+    one ``isEmpty`` fixed-point test per round.  Under AQE the edge-set
+    pin and each round's pin also run their upstream shuffle stages
+    when taken (see :func:`~pyjanitor_spark.utils.pin.pin`).  Pins are
+    durable when ``SparkContext.setCheckpointDir`` is set and
+    executor-local otherwise.
     """
-    if checkpoint_dir is not None:
-        pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _ckpt(d: DataFrame) -> DataFrame:
-        # eager=False: the next action (the convergence signature)
-        # materializes the checkpoint in the SAME job — an eager
-        # checkpoint would run one extra blocking job per round
-        return (
-            d.checkpoint(eager=False)
-            if checkpoint_dir is not None
-            else d.localCheckpoint(eager=False)
-        )
-
     # normalize child > parent and checkpoint BEFORE the self-loop
     # filter: ids appearing ONLY in degenerate self-pairs must still be
     # labeled (singleton roots), and splitting selfs/edges off the one
     # materialized frame keeps the (possibly expensive) upstream pair
     # pipeline from being computed twice in the final plan
-    norm = _ckpt(
+    norm = pin(
         pairs.select(
             F.greatest("id_1", "id_2").alias("c"),
             F.least("id_1", "id_2").alias("p"),
@@ -1110,7 +1098,7 @@ def near_dup_clusters(
     edges = norm.filter(F.col("c") != F.col("p"))
 
     # ---- small-graph fast path: count-gated BOUNDED collect --------
-    n_edges = norm.count()  # also materializes the checkpoint
+    n_edges = norm.count()
     if n_edges <= small_graph_edges:
         parent: dict = {}
 
@@ -1153,8 +1141,9 @@ def near_dup_clusters(
     def _is_proper_stars(e: DataFrame) -> bool:
         # exact structural fixed-point test (see docstring): no child
         # with >1 parent, no id that is both a child and a parent.
-        # One groupBy over 2|E| skinny (id, flag) rows — also the
-        # action that materializes this round's lazy checkpoint.
+        # One groupBy over 2|E| skinny (id, flag) rows of the pinned
+        # edge set; under AQE the pin already ran that set's upstream
+        # shuffles when it was taken, so this action runs only its own.
         roles = e.select(
             F.col("c").alias("v"),
             F.lit(1).alias("nc"),
@@ -1222,7 +1211,7 @@ def near_dup_clusters(
         # emit (p -> m) per edge plus (c -> m) once per c via a 2-wide
         # explode; the trailing distinct collapses the per-edge (c, m)
         # repeats, so the SET equals the old smins-join ∪ smins union
-        edges = _ckpt(
+        edges = pin(
             large.withColumn("m", F.min("p").over(wc))
             .select(F.explode(F.array("p", "c")).alias("x"), "m")
             .filter(F.col("x") != F.col("m"))
@@ -1751,7 +1740,9 @@ def dup_span_fraction(
     boilerplate; RefinedWeb-style curation).  Documents with fewer than
     ``k`` tokens have no spans and score NULL.
     """
-    spans = (
+    # feeds the flag agg, the per-doc totals, and the dup counts — pin
+    # so the corpus shingles once
+    spans = pin(
         df.select(
             F.col(id_col),
             F.explode(
@@ -1762,9 +1753,6 @@ def dup_span_fraction(
         # the dominant stream's bytes for an internal-only key
         .withColumn("__h", F.unhex(F.md5(F.col("__s"))))
         .drop("__s")
-        # feeds the flag agg, the per-doc totals, and the dup counts —
-        # pin so the corpus shingles once
-        .localCheckpoint(eager=False)
     )
     flagged = (
         spans.groupBy("__h")
@@ -1825,7 +1813,11 @@ def remove_duplicated_spans(
 
     out_col = dest or column_name
     text = F.col(column_name)
-    spans = (
+    # feeds both the flag aggregate and the join-back — pin so the
+    # corpus shingles once (deterministic input would replay
+    # identically, but this stream is large; one materialization beats
+    # two shingle passes)
+    spans = pin(
         df.select(
             F.col(id_col),
             F.posexplode(
@@ -1838,11 +1830,6 @@ def remove_duplicated_spans(
         # flag-aggregate exchanges, and the semi-join bytes for nothing
         .withColumn("__h", F.unhex(F.md5(F.col("__s"))))
         .drop("__s")
-        # feeds both the flag aggregate and the join-back — pin so the
-        # corpus shingles once (deterministic input would replay
-        # identically, but this stream is large; one materialization
-        # beats two shingle passes)
-        .localCheckpoint(eager=False)
     )
     flagged = (
         spans.groupBy("__h")
@@ -1850,7 +1837,11 @@ def remove_duplicated_spans(
         .filter(F.col("__nd") >= min_docs)
         .select("__h")
     )
-    covered = (
+    # feeds BOTH the rewritten-doc id list and the kept-token anti join
+    # — unpinned, the whole flagged+semi-join+explode+distinct chain
+    # (and the flag aggregate above it) plans twice; pinned, it is one
+    # pass and the second consumer reads (id, pos) pairs
+    covered = pin(
         spans.join(flagged, "__h", "left_semi")
         .select(
             F.col(id_col),
@@ -1859,11 +1850,6 @@ def remove_duplicated_spans(
             ).alias("__cpos"),
         )
         .distinct()
-        # feeds BOTH the rewritten-doc id list and the kept-token anti
-        # join — unpinned, the whole flagged+semi-join+explode+distinct
-        # chain (and the flag aggregate above it) plans twice; pinned,
-        # it is one pass and the second consumer reads (id, pos) pairs
-        .localCheckpoint(eager=False)
     )
     # only documents that CONTAIN a flagged span are ever rewritten, so
     # the token explode + anti join + reassembly groupBy run over just

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyjanitor_spark.operators.text_analysis import word_shingles
+from pyjanitor_spark.utils.pin import pin
 
 __all__ = ["dsir_weights"]
 
@@ -73,11 +74,8 @@ def dsir_weights(
 
     src = gram_buckets(df).groupBy("__b").agg(F.count(F.lit(1)).alias("__cs"))
     tgt = gram_buckets(target).groupBy("__b").agg(F.count(F.lit(1)).alias("__ct"))
-    joined = (
-        src.join(tgt, "__b", "full")
-        .na.fill(0, ["__cs", "__ct"])
-        .localCheckpoint(eager=False)  # totals + ratio table share it
-    )
+    # totals + ratio table share it
+    joined = pin(src.join(tgt, "__b", "full").na.fill(0, ["__cs", "__ct"]))
     # bounded: one row (sums over <= num_buckets rows)
     tot = joined.agg(
         F.sum("__cs").alias("s"), F.sum("__ct").alias("t")

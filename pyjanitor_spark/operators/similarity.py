@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyjanitor_spark.operators.dedup import cosine_sim
+from pyjanitor_spark.utils.pin import pin
 
 __all__ = [
     "cosine_topk",
@@ -160,7 +161,6 @@ def semdedup(
     cluster_col: str,
     eps: float = 0.95,
     keep: str = "far",
-    checkpoint_dir: str | None = None,
     max_cluster_size: int | None = _ROW_CAP_UNSET,  # type: ignore[assignment]
     check: str = "inline",
     max_cluster_cells: int | None = 200_000_000,
@@ -187,9 +187,8 @@ def semdedup(
     here, and only (id, group) rows ever leave the task (the pair
     stream itself is never shuffled).  Centroids are the decimal-exact
     bounded aggregate reused from :func:`ivf_topk` and join back
-    broadcast (n_clusters rows).  ``checkpoint_dir`` is accepted for
-    API compatibility and unused: the in-task closure has no iterative
-    lineage to checkpoint.
+    broadcast (n_clusters rows).  The in-task closure has no iterative
+    lineage, so this default path pins nothing.
 
     The Σ size² pair cost is only bounded when clusters are genuinely
     small relative to the corpus — the natural failure mode is feeding a
@@ -222,10 +221,11 @@ def semdedup(
     ``embedding_near_dup(split=...)`` sub-tasks — split·(split+1)/2
     balanced tasks per cluster, per-task memory ÷(split/2) — and the
     duplicate groups close through the distributed log-round
-    :func:`~pyjanitor_spark.operators.dedup.near_dup_clusters` (which
-    is where ``checkpoint_dir`` finally matters: pass a durable path
-    on a real cluster).  Output is identical — the in-task union-find
-    and min-label propagation both yield min-reachable-id groups.  In
+    :func:`~pyjanitor_spark.operators.dedup.near_dup_clusters`, whose
+    per-round pins are durable when ``SparkContext.setCheckpointDir``
+    is set (see :func:`~pyjanitor_spark.utils.pin.pin`).  Output is
+    identical — the in-task union-find and min-label propagation both
+    yield min-reachable-id groups.  In
     split mode the cluster-level row gate does not apply
     (``max_cluster_size`` default 100,000 — passing it EXPLICITLY
     together with a split emits a warning instead of silently ignoring
@@ -504,7 +504,6 @@ def semdedup(
             pairs.select("id_1", "id_2"),
             id_col="__sid",
             dest="__grp",
-            checkpoint_dir=checkpoint_dir,
         )
     else:
         grp = (
@@ -722,12 +721,14 @@ def kmeans_assign(
     # iterative-trainer input cache (Spark MLlib KMeans persists its
     # input the same way).  The final assignment projects over the
     # caller's full frame and is not served by the pin.
-    base = df.select(
-        v.alias("__v"),
-        F.md5(
-            F.concat(F.lit(seed + ":"), F.col(id_col).cast("string"))
-        ).alias("__h"),
-    ).localCheckpoint(eager=False)
+    base = pin(
+        df.select(
+            v.alias("__v"),
+            F.md5(
+                F.concat(F.lit(seed + ":"), F.col(id_col).cast("string"))
+            ).alias("__h"),
+        )
+    )
     seeds = (
         base.orderBy("__h")
         .limit(k)  # bounded: k rows
@@ -805,12 +806,14 @@ def _pq_train_cents(
     v = F.col(vec_col).cast("array<double>")
     # iterative-trainer input cache (see kmeans_assign): the seed scan
     # and every Lloyd round re-read the cast vectors
-    base = df.select(
-        v.alias("__v"),
-        F.md5(
-            F.concat(F.lit(seed + ":"), F.col(id_col).cast("string"))
-        ).alias("__h"),
-    ).localCheckpoint(eager=False)
+    base = pin(
+        df.select(
+            v.alias("__v"),
+            F.md5(
+                F.concat(F.lit(seed + ":"), F.col(id_col).cast("string"))
+            ).alias("__h"),
+        )
+    )
     seeds = (
         base.orderBy("__h")
         .limit(k)  # bounded: k rows

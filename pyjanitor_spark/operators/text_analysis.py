@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pyjanitor_spark.utils.expr import let
+from pyjanitor_spark.utils.pin import pin
 
 __all__ = [
     "tokens",
@@ -1231,20 +1232,15 @@ def top_collocations(
     # pinned: the unigram table feeds the w1 join, the w2 join, AND the
     # token total — unpinned, the corpus tokenize+aggregate plans three
     # times (one scan+explode+two-level agg per consumer)
-    uni = (
-        toks.groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
-    )
-    bi_counts = (
+    uni = pin(toks.groupBy("w").agg(F.count(F.lit(1)).alias("c")))
+    # pinned: feeds both the totals agg and the min_count branch —
+    # one corpus-scale shingle pass, one vocabulary-sized cache
+    bi_counts = pin(
         df.select(
             F.explode(word_shingles(F.col(column_name), 2, distinct=False)).alias("bg")
         )
         .groupBy("bg")
         .agg(F.count(F.lit(1)).alias("c_xy"))
-        # pinned: feeds both the totals agg and the min_count branch —
-        # one corpus-scale shingle pass, one vocabulary-sized cache
-        .localCheckpoint(eager=False)
     )
     bi = (
         bi_counts.filter(F.col("c_xy") >= min_count)
@@ -1324,11 +1320,10 @@ def ngram_lm_score(
     )
     # vocabulary: pinned — feeds the totals row, the seen-bigram
     # denominator, and the backoff table (one corpus tokenize pass)
-    uni = (
+    uni = pin(
         lowered.select(F.explode(tokens(F.col("__t"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
     )
     total = uni.agg(F.sum("c").cast("double").alias("__T"))
     bi = (

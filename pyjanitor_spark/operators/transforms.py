@@ -14,6 +14,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyjanitor_spark.utils.pin import pin
 from pyjanitor_spark.utils.select import resolve_columns
 
 __all__ = [
@@ -948,11 +949,10 @@ def quantile_bin(
     # aggregate and re-joined the cumsum offsets; pinned, totals is one
     # tiny aggregate over the O(distinct) table, and the stable
     # LogicalRDD lets partitioned_cumsum skip its own internal pin
-    counts = (
+    counts = pin(
         df.filter(col.isNotNull())
         .groupBy(from_column_name)
         .agg(F.count(F.lit(1)).alias("__cnt"))
-        .localCheckpoint(eager=False)
     )
     totals = counts.agg(F.sum("__cnt").alias("__n"))
     counts = partitioned_cumsum(
@@ -1463,11 +1463,10 @@ def quantiles(
     # the totals row otherwise re-runs the scan + aggregate + cumsum
     # offsets branch, and the stable LogicalRDD lets partitioned_cumsum
     # skip its own internal pin
-    counts = (
+    counts = pin(
         df.filter(col.isNotNull())
         .groupBy(column_name)
         .agg(F.count(F.lit(1)).alias("__cnt"))
-        .localCheckpoint(eager=False)
     )
     totals = counts.agg(F.sum("__cnt").alias("__n"))
     counts = partitioned_cumsum(

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..utils.expr import let
+from ..utils.pin import pin
 from .text_analysis import BPE_ISH_PATTERN, tokens
 
 __all__ = ["hashed_tfidf", "bm25_score"]
@@ -88,7 +89,7 @@ def hashed_tfidf(
     # token explode + md5 bucketing + two-level aggregate would plan
     # three times; pinned, the corpus is tokenized once and the
     # (id, bucket, tf) table — at most docs x dim rows — is re-read
-    tf = tf.localCheckpoint(eager=False)
+    tf = pin(tf)
     dfreq = tf.groupBy("bucket").agg(F.count(F.lit(1)).alias("__df"))
     ndocs = tf.agg(F.count_distinct(F.col(id_column)).alias("__n"))
     weighted = (

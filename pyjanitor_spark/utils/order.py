@@ -27,105 +27,37 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyjanitor_spark.utils.pin import _plan_is_deterministic, pin
+
 ORDER_COL = "_row_order"
 
 __all__ = ["ORDER_COL", "ensure_order_column", "positional_index", "partitioned_cumsum"]
 
-# Analyzed-plan node names that can NEVER have an Exchange inserted
-# beneath their physical translation: leaf scans plus narrow (partition-
-# preserving) operators.  Everything else — Aggregate, Join (broadcast
-# included: BroadcastExchange also diverges between separately re-executed
-# branch reads), Window, Sort, Repartition, Deduplicate, limits — is
-# absent, so it fails closed to the pin exactly like the previous
-# physical-plan "no Exchange" check did.
-_SAFE_NODES = frozenset({
-    "Project", "Filter", "Generate", "Union", "SubqueryAlias", "View",
-    "LogicalRelation", "Relation", "LogicalRDD", "LocalRelation",
-    "DataSourceV2Relation", "DataSourceV2ScanRelation", "Range", "Sample",
-})
-
-
-def _plan_is_deterministic(df: DataFrame) -> bool:
-    """True only for provably replay-stable plans, decided entirely on
-    the ANALYZED logical tree (one walk, no optimizer or physical
-    planning — the previous implementation forced ``executedPlan()``
-    per call, driver latency the round-6 bench attributed ~0.1-0.2s
-    regressions to):
-
-    * every node's name is in ``_SAFE_NODES`` — leaf scans and narrow
-      operators only.  Narrow-only analyzed trees translate to
-      exchange-free physical plans (no node introduces a distribution
-      requirement), which is load-bearing even with all expressions
-      deterministic: the two branch reads in the callers below are
-      separately column-pruned subtrees, so exchange reuse is not
-      guaranteed, and AQE may coalesce each branch's re-executed
-      shuffle into a different partition count (pruned byte sizes
-      differ) — diverging ``__pid`` assignments between the branches.
-      The node check runs first and short-circuits, so the common
-      pin-needed inputs (anything with an Aggregate/Join/Window on
-      top) cost two py4j calls, not a planner run.
-    * every expression in every node reports
-      ``Expression.deterministic`` (walked via the JVM tree, so
-      nondeterministic Python UDFs marked ``.asNondeterministic()``,
-      ``rand``/``uuid``/``monotonically_increasing_id``, etc. are all
-      covered — no string matching).
-
-    Anything unprovable (py4j failure, unseen node name) returns
-    False — the pin is the safe side."""
-    try:
-        qe = df._jdf.queryExecution()
-        stack = [qe.analyzed()]
-        while stack:
-            node = stack.pop()
-            if node.nodeName() not in _SAFE_NODES:
-                return False
-            exprs = node.expressions()
-            for i in range(exprs.size()):
-                if not exprs.apply(i).deterministic():
-                    return False
-            ch = node.children()
-            for i in range(ch.size()):
-                stack.append(ch.apply(i))
-        return True
-    except Exception:
-        return False
-
-
-def positional_index(
-    df: DataFrame, name: str, deterministic: bool | None = None
-) -> DataFrame:
+def positional_index(df: DataFrame, name: str) -> DataFrame:
     """0-based positional row index in the frame's current order,
     computed scalably: per-partition ``row_number`` plus a broadcast of
     cumulative partition offsets (one tiny agg of #partitions rows) —
     no global single-task window.  After an ``orderBy`` (range-partitioned
     total sort) this yields the global sort rank.
 
-    When the upstream plan is nondeterministic (rand/sample/uuid/…),
-    ``localCheckpoint`` pins the input before the plan branches: the
-    offsets aggregate and the joined branch must read the SAME partition
-    layout, and without materialization a nondeterministic upstream (or
-    an AQE re-plan between the two executions) could hand each branch
-    different ``__pid``/``__mid`` assignments.  Only a provably
-    replay-stable plan — all expressions deterministic AND no exchange
-    (``_plan_is_deterministic``; AQE may re-coalesce a re-executed
-    shuffle differently per branch) — skips the pin and its extra
-    materialization.  (Non-durable checkpoint: on executor loss the job retries
-    from the action — acceptable; use a durable ``checkpoint_dir``
-    pattern as in ``near_dup_clusters`` when running under
-    preemption.)
-
-    ``deterministic``: a caller that has already probed (or pinned) the
-    SAME plan may pass the known verdict to skip the re-probe; ``None``
-    probes here."""
+    When the upstream plan is nondeterministic (rand/sample/uuid/…) or
+    shuffled, :func:`~pyjanitor_spark.utils.pin.pin` materializes the
+    input before the plan branches: the offsets aggregate and the
+    joined branch must read the SAME partition layout, and without
+    materialization a nondeterministic upstream (or an AQE re-plan
+    between the two executions) could hand each branch different
+    ``__pid``/``__mid`` assignments.  Only a provably replay-stable
+    plan — all expressions deterministic AND no exchange
+    (``_plan_is_deterministic``) — skips the pin and its extra
+    materialization.  A pinned call runs the upstream's shuffle stages
+    when it is made (see ``pin``)."""
     from pyspark.sql import Window
 
     d = df.withColumn("__pid", F.spark_partition_id()).withColumn(
         "__mid", F.monotonically_increasing_id()
     )
-    if deterministic is None:
-        deterministic = _plan_is_deterministic(df)
-    if not deterministic:
-        d = d.localCheckpoint(eager=False)
+    if not _plan_is_deterministic(df):
+        d = pin(d)
     sizes = d.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
     w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = sizes.withColumn(
@@ -145,7 +77,6 @@ def partitioned_cumsum(
     order_col: str,
     dest: str,
     num_partitions: int | None = None,
-    deterministic: bool | None = None,
 ) -> DataFrame:
     """Running total of ``value_col`` over the total order of
     ``order_col`` with NO single-task stage.
@@ -155,12 +86,13 @@ def partitioned_cumsum(
     one partition), per-partition partial sums, broadcast the cumulative
     offsets (one tiny #partitions-row aggregate — the only unpartitioned
     window, bounded by the partition count), then an in-partition
-    cumulative window plus the offset.  For nondeterministic inputs
-    ``localCheckpoint`` pins the partition layout so the offsets
-    aggregate and the main branch read identical partitions; a
-    deterministic plan skips the pin — the identical range exchange on
-    both branches is computed once via exchange reuse, or replays
-    bit-identically if not (see ``positional_index``)."""
+    cumulative window plus the offset.  For nondeterministic or
+    shuffled inputs :func:`~pyjanitor_spark.utils.pin.pin` fixes the
+    partition layout so the offsets aggregate and the main branch read
+    identical partitions; a deterministic plan skips the pin — the
+    identical range exchange on both branches is computed once via
+    exchange reuse, or replays bit-identically if not (see
+    ``positional_index``)."""
     from pyspark.sql import Window
 
     if num_partitions is not None and num_partitions < 1:
@@ -181,15 +113,13 @@ def partitioned_cumsum(
             num_partitions = 200
     d = df.repartitionByRange(num_partitions, order)
     d = d.withColumn("__pid", F.spark_partition_id())
-    if deterministic is None:
-        deterministic = _plan_is_deterministic(df)
-    if not deterministic:
+    if not _plan_is_deterministic(df):
         # nondeterministic or shuffled upstream: pin the layout so the
         # offsets agg and the joined branch read the SAME partition
         # assignment (deterministic exchange-free inputs replay
         # bit-identically through the fixed-count, fixed-seed range
         # exchange on both branches)
-        d = d.localCheckpoint(eager=False)
+        d = pin(d)
     sizes = d.groupBy("__pid").agg(
         F.coalesce(F.sum(value_col), F.lit(0)).alias("__psum")
     )

@@ -172,6 +172,79 @@ def test_partitioned_cumsum_pin_skipped_for_deterministic_plan(spark, tmp_path):
     assert got == want
 
 
+def _unstable_input(spark, kind):
+    """(o, v, pad) frames whose re-execution can differ: the inputs the
+    conditional pin in positional_index / partitioned_cumsum exists for.
+    ``o`` is unique per row.  ``pad`` is read by only one of the two
+    branches, so column pruning gives each branch its own upstream
+    shuffle instead of one reused exchange."""
+    base = spark.range(2000).select(
+        "id", F.repeat(F.lit("x"), (F.col("id") % 50).cast("int")).alias("pad")
+    )
+    if kind == "rand":
+        return base.repartition("id").select(
+            F.col("id").alias("o"), (F.rand(3) * 10).cast("long").alias("v"), "pad"
+        )
+    if kind == "mid_after_repartition":
+        return base.repartition(5).select(
+            F.monotonically_increasing_id().alias("o"),
+            (F.col("id") % 7).alias("v"),
+            "pad",
+        )
+    assert kind == "groupby_shuffle"
+    return base.groupBy((F.col("id") % 397).alias("o")).agg(
+        F.count(F.lit(1)).alias("v"), F.max("pad").alias("pad")
+    )
+
+
+def check_index_and_cumsum(spark, kind):
+    """positional_index returns exactly 0..n-1 and partitioned_cumsum
+    equals the serial prefix sum over the values it returns.  Shared
+    with the checkpoint-dir session in test_pin.py."""
+    from pyjanitor_spark.utils.order import partitioned_cumsum, positional_index
+
+    df = _unstable_input(spark, kind)
+    n = 397 if kind == "groupby_shuffle" else 2000
+
+    idx = sorted(r["idx"] for r in positional_index(df, "idx").select("idx").collect())
+    assert idx == list(range(n)), kind
+
+    rows = sorted(
+        (r["o"], r["v"], r["cum"])
+        for r in partitioned_cumsum(df, "v", "o", "cum", num_partitions=4).collect()
+    )
+    assert len(rows) == n and len({o for o, _, _ in rows}) == n
+    acc = 0
+    for o, v, cum in rows:
+        acc += v
+        assert cum == acc, (kind, o)
+    if kind == "mid_after_repartition":
+        assert sorted(v for _, v, _ in rows) == sorted(i % 7 for i in range(n))
+    if kind == "groupby_shuffle":
+        assert [(o, v) for o, v, _ in rows] == [
+            (k, len(range(k, 2000, 397))) for k in range(397)
+        ]
+
+
+UNSTABLE_KINDS = ["rand", "mid_after_repartition", "groupby_shuffle"]
+
+
+@pytest.mark.parametrize("kind", UNSTABLE_KINDS)
+def test_positional_index_and_cumsum_on_unstable_inputs(spark, kind):
+    """The offsets aggregate and the main branch must read one
+    materialisation of a nondeterministic or shuffled upstream.
+
+    Which cases guard the pin: with it removed, ``rand`` and
+    ``mid_after_repartition`` fail the partitioned_cumsum check in
+    local mode, because each re-execution of the upstream gives the
+    rows other ``v`` values or other ``o`` ids.  No case fails
+    positional_index without its pin in local mode (both branches
+    replay the same partition sizes), and ``groupby_shuffle`` passes
+    for both; those checks hold the values, not the pin.
+    """
+    check_index_and_cumsum(spark, kind)
+
+
 class TestQuantilesProperty:
     @staticmethod
     def _reference(values, qs):
