@@ -552,12 +552,12 @@ def q_ngram_jaccard(spark, sf):
     # doc-freq there is 7) -> still exact vs the all-shingle oracle.
     # GATE-INPUT cap (multiblock precedent, r11): doc_id < 5000 is a
     # no-op at sf0.01/sf0.1 (max doc_id 499/4999) so the correctness
-    # compare is untouched; at the sweep's make_sf1 it bounds an input
-    # whose true-pair OUTPUT is quadratic by construction (10x body
+    # compare is untouched; on a 10x-replicated ~sf1 corpus it bounds an
+    # input whose true-pair OUTPUT is quadratic by construction (10x body
     # replication -> ~100x qualifying pairs), which is a property of
     # the synthetic replication, not of the plan.  Exact mode's real
-    # scale adjudication lives in SCALE.md; the full-input sf1 sweep
-    # entry for this family is ngram_jaccard_sampled.
+    # scale adjudication lives in SCALE.md; the full-input entry for
+    # this family at that scale is ngram_jaccard_sampled.
     d = _docs(spark, sf).filter(F.col("doc_id") < 5000)
     return pj.ngram_jaccard_pairs(d, "doc_id", "text", shingle_n=3, threshold=0.5)
 
@@ -610,7 +610,7 @@ def q_near_dup_multiblock(spark, sf):
     # for the row-block split (600*5 = 3000 rows -> 3 row blocks), not a
     # scale test — uncapped, the one-block design cost grows
     # quadratically with SF (227 s at ~sf1 in the r11 sweep; the
-    # hot-block SCALE story lives in SKEW_BENCH_r11 + the split gates)
+    # hot-block scale story lives in SCALE.md + the split gates)
     e = (
         _t(spark, sf, "embeddings")
         .filter(F.col("vec_id") < 600)
@@ -1862,18 +1862,10 @@ def q_unionize_categories(spark, sf):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # NOTE on ordering: the driver's correctness gate samples the FIRST 50
-    # entries in insertion order; the _WINDOW list below (applied at the
-    # return) defines the round-7 window.  Composition: (a) the 6 NEW
-    # long-tail gates (VERDICT r6 task 2 — first-ever driver rows),
-    # (b) every verb whose code changed in the round-7 null-semantics /
-    # keyword-surface wave (changed code must out-rank stale-but-green
-    # attestations), (c) the oldest (r4-era) attestations that still
-    # fit.  Rotated-out entries are driver-green on unchanged code and
-    # stay replica-covered (tools/check_correctness.py).
-    q = {
-        # ==== round-7 first-50 driver window ====
-        # (a) new gates — never driver-attested
+    # Every entry is checked against its oracle_sql() twin by
+    # tools/check_correctness.py; tests/test_oracle_gate.py runs the
+    # entries whose verbs the perfbench workloads call.
+    return {
         "row_to_names": q_row_to_names,
         "drop_duplicate_columns": q_drop_duplicate_columns,
         "to_datetime": q_to_datetime,
@@ -1886,7 +1878,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "json_roundtrip": q_json_roundtrip,
         "bucketed_roundtrip": q_bucketed_roundtrip,
         "zorder_roundtrip": q_zorder_roundtrip,
-        # (b) order.py probe riders + math trio + r6 regression re-times
         "ecdf": q_ecdf,
         "z_score": q_z_score,
         "softmax": q_softmax,
@@ -1901,7 +1892,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "shuffle": q_shuffle,
         "get_dupes": q_get_dupes,
         "take_first": q_take_first,
-        # (c) r4-era stale attestations to refresh
         "xlsx_table": q_xlsx_table,
         "xlsx_cells": q_xlsx_cells,
         "fill_direction": q_fill_direction,
@@ -1941,9 +1931,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "chunk_text": q_chunk_text,
         "expand_grid": q_expand_grid,
         "cartesian_product": q_cartesian_product,
-        # ==== end of first-50 window ====
-        # everything below is r05/r06 driver-green with unchanged code
-        # and stays replica-covered (tools/check_correctness.py)
         "sort_naturally": q_sort_naturally,
         "case_when": q_case_when,
         "update_where": q_update_where,
@@ -2040,8 +2027,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "process_text_fallback": q_process_text_fallback,
         "add_columns": q_add_columns,
         "move_reorder": q_move_reorder,
-        # round-7 second wave (below the window; rotate into the r8
-        # first-50 — first-ever driver rows for these six)
         "collapse_levels": q_collapse_levels,
         "explode_index": q_explode_index,
         "join_apply": q_join_apply,
@@ -2061,47 +2046,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "weighted_sample": q_weighted_sample,
         "dsir_weights": q_dsir_weights,
     }
-    # Round-14 window, composition computed by the round-era
-    # recommended_window rule from CORRECTNESS_r01..r13.json.  The r7 rule,
-    # with "changed" read as changed SINCE LAST ATTESTATION: an entry
-    # whose code moved in r13 but whose last driver-green row predates
-    # that change (sample rotation skipped it) is as unattested as
-    # fresh code (VERDICT r13 item 8 names them all).
-    _WINDOW = [
-        # (b1) entries whose CODE changed in round 14: gopher in-task
-        # Arrow kernel (+_exact shares tokenization), Arrow trigram LID,
-        # LM-model broadcast, NB model-side broadcast, star-contraction
-        # window rewrite (clusters/contracted/dedupe_near family),
-        # bloom __hv scheme gate, multiblock single-scan input
-        "near_dup_clusters_contracted", "near_dup_clusters",
-        "dedupe_near", "dedupe_near_best",
-        "gopher_repetition", "gopher_repetition_exact",
-        "language_id", "ngram_lm_score",
-        "near_dup_multiblock", "bloom_dedupe_against", "nb_classify",
-        # (b2) r13 code changes never driver-attested since (their last
-        # green rows are r10-r12, all BEFORE the r13 edits)
-        "ngram_jaccard_pairs", "ngram_jaccard_capped",
-        "semdedup", "semdedup_auto", "semdedup_split",
-        "contamination", "remove_duplicated_spans",
-        # (c) stalest attestations, oldest round first (ledger r10 tail;
-        # includes the overdue conditional_join family)
-        "conditional_join_keep_first", "conditional_join_keep_last",
-        "conditional_join_left", "conditional_join_outer",
-        "conditional_join_range", "conditional_join_range_open",
-        "conditional_join_right", "convert_units",
-        "deconcatenate_column", "dsir_weights", "flag_nulls",
-        "frame_sample", "groupby_agg_multi", "groupby_topk",
-        "hash_columns", "hashed_tfidf", "heavy_hitters", "impute",
-        "inflate_currency", "limit_column_characters", "min_max_scale",
-        "mix_corpora", "move_rows", "orc_roundtrip", "pivot_longer",
-        "pivot_longer_spec", "process_text", "process_text_fallback",
-        "remove_empty", "round_to_fraction", "simhash_pairs",
-        "sort_naturally",
-    ]
-    assert len(_WINDOW) == 50 and len(set(_WINDOW)) == 50
-    ordered = {k: q[k] for k in _WINDOW}
-    ordered.update((k, v) for k, v in q.items() if k not in ordered)
-    return ordered
 
 
 def oracle_sql() -> dict[str, str]:

@@ -1200,7 +1200,7 @@ def near_dup_clusters(
         # semantic effect.  Shuffle bytes strictly drop (|E| once vs
         # |E| into the distinct + the deduped stream into the window);
         # measured 2.6-3.6 s -> 1.5-2.3 s for the sf0.1 loop, identical
-        # edge sets (A/B in OPTIMIZATION_r14.md).
+        # edge sets.
         large = (
             sym.withColumn("m", F.least(F.min("p").over(wc), F.col("c")))
             .filter(F.col("p") > F.col("c"))

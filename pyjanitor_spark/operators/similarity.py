@@ -62,7 +62,7 @@ _ROW_CAP_UNSET = _RowCapUnset()
 # share of the corpus' embedding cells: below it, other clusters keep
 # the cores busy while the big one runs, and the distributed-components
 # overhead of split mode outweighs the win (measured crossover,
-# SKEW_BENCH_r11 / SCALE.md)
+# SCALE.md)
 _AUTO_HOT_SHARE = 0.2
 
 

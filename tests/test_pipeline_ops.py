@@ -4,7 +4,7 @@ text analysis, multimodal, timeseries."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -528,6 +528,16 @@ def test_dedupe_near_end_to_end(docs):
         min_size=0,
         max_size=25,
     )
+)
+# hub-heavy: node 0 joined to 200 spokes that also link to each other,
+# so large-star emits the same (spoke, 0) row from the hub and from the
+# spoke's smaller neighbor, and those duplicates reach the small-star
+# window; plus a separate chain that must keep its own label
+@example(
+    edges=[(0, s) for s in range(1, 201)]
+    + [(s, s + 1) for s in range(1, 200, 2)]
+    + [(s, s + 100) for s in range(1, 101, 3)]
+    + [(s, s + 1) for s in range(300, 310)]
 )
 @settings(max_examples=12, deadline=None)
 def test_near_dup_clusters_matches_union_find(spark, edges):

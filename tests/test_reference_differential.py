@@ -19,11 +19,12 @@ import pytest
 from pyspark.sql import functions as F
 
 import pyjanitor_spark as pj
-from tests.reference_janitor import load_reference
+from tests.reference_janitor import _REFERENCE_PATH, load_reference
 
 ref = load_reference()
 pytestmark = [pytest.mark.slow] + [pytest.mark.skipif(
-    ref is None, reason="reference janitor not importable in this environment"
+    ref is None,
+    reason=f"no importable pyjanitor checkout at {_REFERENCE_PATH}",
 )]
 
 

@@ -1,8 +1,9 @@
-"""Local replica of the driver's correctness gate: run every
-``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB at
-sf0.01, compare row count + sorted values (float tol 1e-9).
+"""The DuckDB oracle: run every ``queries()`` entry on Spark and its
+``oracle_sql()`` on DuckDB at sf0.01, compare row count + sorted values
+(float tol 1e-9).  ``check`` is the importable form;
+``tests/test_oracle_gate.py`` runs it on the benchmarked verbs.
 
-Usage: python tools/check_correctness.py [name ...]
+Usage: [CHECK_SF_DIR=dir] python tools/check_correctness.py [name ...]
 """
 
 from __future__ import annotations
@@ -10,6 +11,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -48,6 +50,59 @@ def compare(rows_a, rows_b, cols):
     return None
 
 
+def connect(sf_dir: str):
+    """A DuckDB connection with one view per parquet table in ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def check(spark, names, sf_dir: str) -> list[str]:
+    """Run each named ``queries()`` entry on ``spark`` and its
+    ``oracle_sql()`` on DuckDB over ``sf_dir``; print and return one
+    ``OK``/``ROWS``/``FAIL`` line per name."""
+    import __spark_entry__ as entry
+
+    qs = entry.queries()
+    oracles = entry.oracle_sql()
+    con = connect(sf_dir)
+    lines = []
+    for name in names:
+        line = _check_one(spark, con, name, qs[name], oracles.get(name), sf_dir)
+        print(line)
+        lines.append(line)
+    con.close()
+    return lines
+
+
+def _check_one(spark, con, name, query, sql, sf_dir):
+    try:
+        sdf = query(spark, sf_dir)
+        cols = sorted(sdf.columns)
+        srows = [tuple(r[c] for c in cols) for r in sdf.collect()]
+    except Exception as e:
+        return f"FAIL  {name}: spark error: {e}"
+    if sql is None:
+        return f"ROWS  {name}: {len(srows)} rows (no oracle)"
+    try:
+        res = con.execute(sql)
+        ocols = [d[0] for d in res.description]
+        orows_raw = res.fetchall()
+        order = [ocols.index(c) for c in sorted(ocols)]
+        orows = [tuple(r[i] for i in order) for r in orows_raw]
+        if sorted(ocols) != cols:
+            return f"FAIL  {name}: columns {cols} vs oracle {sorted(ocols)}"
+    except Exception as e:
+        return f"FAIL  {name}: duckdb error: {e}"
+    err = compare(srows, orows, sorted(cols))
+    if err:
+        return f"FAIL  {name}: {err}"
+    return f"OK    {name} ({len(srows)} rows)"
+
+
 def main():
     from pyspark.sql import SparkSession
 
@@ -63,56 +118,12 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{SF}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-
-    qs = entry.queries()
-    oracles = entry.oracle_sql()
     only = set(sys.argv[1:])
-    passed = failed = skipped = 0
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        try:
-            sdf = fn(spark, SF)
-            cols = sorted(sdf.columns)
-            srows = [tuple(r[c] for c in cols) for r in sdf.collect()]
-        except Exception as e:
-            print(f"FAIL  {name}: spark error: {e}")
-            failed += 1
-            continue
-        sql = oracles.get(name)
-        if sql is None:
-            print(f"ROWS  {name}: {len(srows)} rows (no oracle)")
-            skipped += 1
-            continue
-        try:
-            res = con.execute(sql)
-            ocols = [d[0] for d in res.description]
-            orows_raw = res.fetchall()
-            order = [ocols.index(c) for c in sorted(ocols)]
-            orows = [tuple(r[i] for i in order) for r in orows_raw]
-            if sorted(ocols) != cols:
-                print(f"FAIL  {name}: columns {cols} vs oracle {sorted(ocols)}")
-                failed += 1
-                continue
-        except Exception as e:
-            print(f"FAIL  {name}: duckdb error: {e}")
-            failed += 1
-            continue
-        err = compare(srows, orows, sorted(cols))
-        if err:
-            print(f"FAIL  {name}: {err}")
-            failed += 1
-        else:
-            print(f"OK    {name} ({len(srows)} rows)")
-            passed += 1
-    print(f"\n{passed} ok, {failed} failed, {skipped} rows-only")
+    names = [n for n in entry.queries() if not only or n in only]
+    tally = Counter(line.split()[0] for line in check(spark, names, SF))
+    print(f"\n{tally['OK']} ok, {tally['FAIL']} failed, {tally['ROWS']} rows-only")
     spark.stop()
-    return 1 if failed else 0
+    return 1 if tally["FAIL"] else 0
 
 
 if __name__ == "__main__":
