@@ -628,10 +628,13 @@ def embedding_near_dup(
     lands in deterministic sub-block ``xxhash64(id) mod split``, and
     task (i, j) scores sub-block i against sub-block j (diagonal tasks
     score their own triangle) — every pair lands in exactly ONE task,
-    output identical to ``split=1``.  Each row is replicated ``split``
-    times (shuffle volume ×split) and per-task memory drops to
-    ~(2·block/split)·dim, so ``split ≈ ceil(block_rows / 50k)`` turns
-    a one-task straggler into a fleet of balanced tasks.
+    output identical to ``split=1``, whose task is the one diagonal
+    sub-block over the whole block (every task runs the same blocked
+    pair loop, :func:`~pyjanitor_spark.utils.vecmat.cosine_pairs`).
+    Each row is replicated ``split`` times (shuffle volume ×split) and
+    per-task memory drops to ~(2·block/split)·dim, so ``split ≈
+    ceil(block_rows / 50k)`` turns a one-task straggler into a fleet
+    of balanced tasks.
 
     ``split='auto'`` sizes the split PER BLOCK from the data, so a
     100 TB corpus needs no a-priori knowledge of its hot-block size:
@@ -727,8 +730,9 @@ def embedding_near_dup(
         # BLOCKED matrix products instead of an equi-join whose
         # zip_with/aggregate cosine is CodegenFallback — interpreted
         # once per PAIR (the semdedup lesson, similarity.py).  Only the
-        # verified (id_1, id_2, cos) pairs leave the task; the
-        # score-matrix row block is capped at ~32 MB so task memory is
+        # verified (id_1, id_2, cos) pairs leave the task; the pair
+        # loop is utils/vecmat.py's cosine_pairs, whose score-matrix
+        # row block is capped at ~32 MB so task memory is
         # O(block·dim + rowblock·block).  cos semantics identical to
         # cosine_sim: dot/(n1·n2), zero-norm sides score 0.0.  The
         # applyInArrow entry reads the vector column's flat Arrow
@@ -739,12 +743,25 @@ def embedding_near_dup(
         id_t = df.schema[id_col].dataType.simpleString()
         vname, iname = vec_col, id_col
         bname = block_col
+        s_n = 0 if auto_split else int(split)
+        split_path = auto_split or s_n > 1
 
-        def _block_pairs(key, tbl):
+        def _pairs(key, tbl):
+            # one task scores a whole block, or — split path — the
+            # triangle-partitioned sub-task key = (block, ti, tj):
+            # diagonal (ti == tj) the upper triangle over sub-block ti's
+            # rows, off-diagonal the full cross product ti × tj.  Every
+            # (a, b) pair lands in exactly one task — (sb_a, sb_b)
+            # sorted — so no downstream dedup is needed beyond the
+            # banded-collision groupBy below.  An unsplit block is the
+            # one diagonal sub-block over all its rows.
             import numpy as np
             import pyarrow as pa
 
-            from pyjanitor_spark.utils.vecmat import list_column_matrix
+            from pyjanitor_spark.utils.vecmat import (
+                cosine_pairs,
+                list_column_matrix,
+            )
 
             n = tbl.num_rows
             ids_arr = tbl.column(iname)
@@ -761,6 +778,13 @@ def embedding_near_dup(
                 return empty
             V, _good, dim = list_column_matrix(tbl.column(vname))
             if cells_cap is not None and n * dim > cells_cap:
+                if split_path:
+                    raise ValueError(
+                        f"embedding_near_dup: sub-task {key!r} holds "
+                        f"{n} x {dim} = {n * dim} embedding cells, exceeding "
+                        f"max_block_cells={cells_cap}; raise split= or "
+                        f"max_block_cells"
+                    )
                 raise ValueError(
                     f"embedding_near_dup: block {key[0]!r} holds "
                     f"{n} x {dim} = {n * dim} embedding cells, exceeding "
@@ -768,27 +792,29 @@ def embedding_near_dup(
                     f"float64 per task); split the block (finer block_col / "
                     f"more auto_block_planes) or raise max_block_cells"
                 )
+            ia = ib = None
+            if split_path:
+                # applyInArrow hands grouping keys as pyarrow scalars
+                ti, tj = (
+                    int(k.as_py() if hasattr(k, "as_py") else k)
+                    for k in key[-2:]
+                )
+                sb_np = np.asarray(tbl.column("__sb"))
+                ia = np.flatnonzero(sb_np == ti)
+                if ti != tj:
+                    ib = np.flatnonzero(sb_np == tj)
             ids_np = ids_arr.to_numpy(zero_copy_only=False)
-            norms = np.sqrt((V * V).sum(axis=1))
             out_i, out_j, out_c = [], [], []
-            block = max(1, (1 << 22) // n)
-            for s in range(0, n, block):
-                e = min(s + block, n)
-                S = V[s:e] @ V.T
-                denom = norms[s:e, None] * norms[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    C = np.where(denom > 0, S / denom, 0.0)
-                bi, j = np.nonzero(C >= thr)
-                i = bi + s
-                # upper triangle once; rows sharing an id value never
-                # self-pair (the old a.id < b.id join predicate)
-                keep = (i < j) & (ids_np[i] != ids_np[j])
-                i, j, bi = i[keep], j[keep], bi[keep]
+            for i, j, cos in cosine_pairs(V, thr, ia, ib):
+                # rows sharing an id value never self-pair (the old
+                # a.id < b.id join predicate)
+                keep = ids_np[i] != ids_np[j]
+                i, j = i[keep], j[keep]
                 if len(i):
                     swap = ids_np[i] > ids_np[j]  # pair labeled id_1 < id_2
                     out_i.append(np.where(swap, j, i))
                     out_j.append(np.where(swap, i, j))
-                    out_c.append(C[bi, j])
+                    out_c.append(cos[keep])
             if not out_i:
                 return empty
             i1 = pa.array(np.concatenate(out_i), type=pa.int64())
@@ -801,91 +827,7 @@ def embedding_near_dup(
                 }
             )
 
-        s_n = 0 if auto_split else int(split)
-
-        def _split_pairs(key, tbl):
-            # triangle-partitioned sub-task: key = (block, ti, tj).
-            # diagonal (ti == tj): upper triangle over this sub-block's
-            # rows; off-diagonal: full cross product sub-block ti ×
-            # sub-block tj.  Every (a, b) pair lands in exactly one
-            # task — (sb_a, sb_b) sorted — so no downstream dedup is
-            # needed beyond the banded-collision groupBy below.
-            import numpy as np
-            import pyarrow as pa
-
-            from pyjanitor_spark.utils.vecmat import list_column_matrix
-
-            # applyInArrow hands grouping keys as pyarrow scalars
-            ti, tj = (
-                int(k.as_py() if hasattr(k, "as_py") else k) for k in key[-2:]
-            )
-            n = tbl.num_rows
-            ids_arr = tbl.column(iname)
-            if isinstance(ids_arr, pa.ChunkedArray):
-                ids_arr = ids_arr.combine_chunks()
-            empty = pa.table(
-                {
-                    "id_1": ids_arr.slice(0, 0),
-                    "id_2": ids_arr.slice(0, 0),
-                    "cos": pa.array([], type=pa.float64()),
-                }
-            )
-            if n < 2:
-                return empty
-            V, _good, dim = list_column_matrix(tbl.column(vname))
-            if cells_cap is not None and n * dim > cells_cap:
-                raise ValueError(
-                    f"embedding_near_dup: sub-task {key!r} holds "
-                    f"{n} x {dim} = {n * dim} embedding cells, exceeding "
-                    f"max_block_cells={cells_cap}; raise split= or "
-                    f"max_block_cells"
-                )
-            ids_np = ids_arr.to_numpy(zero_copy_only=False)
-            sb_np = np.asarray(tbl.column("__sb"))
-            norms = np.sqrt((V * V).sum(axis=1))
-            if ti == tj:
-                ia = ib = np.nonzero(sb_np == ti)[0]
-            else:
-                ia = np.nonzero(sb_np == ti)[0]
-                ib = np.nonzero(sb_np == tj)[0]
-            if len(ia) == 0 or len(ib) == 0:
-                return empty
-            A, B = V[ia], V[ib]
-            na_, nb_ = norms[ia], norms[ib]
-            out_i, out_j, out_c = [], [], []
-            rb = max(1, (1 << 22) // max(1, len(ib)))
-            for s in range(0, len(ia), rb):
-                e = min(s + rb, len(ia))
-                S = A[s:e] @ B.T
-                denom = na_[s:e, None] * nb_[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    C = np.where(denom > 0, S / denom, 0.0)
-                ri, rj = np.nonzero(C >= thr)
-                gi, gj = ia[ri + s], ib[rj]
-                if ti == tj:
-                    keep = gi < gj
-                else:
-                    keep = np.ones(len(gi), dtype=bool)
-                keep &= ids_np[gi] != ids_np[gj]
-                gi, gj, ri, rj = gi[keep], gj[keep], ri[keep], rj[keep]
-                if len(gi):
-                    swap = ids_np[gi] > ids_np[gj]
-                    out_i.append(np.where(swap, gj, gi))
-                    out_j.append(np.where(swap, gi, gj))
-                    out_c.append(C[ri, rj])
-            if not out_i:
-                return empty
-            i1 = pa.array(np.concatenate(out_i), type=pa.int64())
-            i2 = pa.array(np.concatenate(out_j), type=pa.int64())
-            return pa.table(
-                {
-                    "id_1": ids_arr.take(i1),
-                    "id_2": ids_arr.take(i2),
-                    "cos": pa.array(np.concatenate(out_c), type=pa.float64()),
-                }
-            )
-
-        if auto_split or s_n > 1:
+        if split_path:
             # deterministic sub-block from the id; a row fans out to
             # every task touching its sub-block (m rows per input row,
             # m = the block's split factor), so shuffle volume is ×m
@@ -974,11 +916,11 @@ def embedding_near_dup(
             )
             fanned = fanned.repartition(n_part, bname, "__ti", "__tj")
             out = fanned.groupBy(bname, "__ti", "__tj").applyInArrow(
-                _split_pairs, f"id_1 {id_t}, id_2 {id_t}, cos double"
+                _pairs, f"id_1 {id_t}, id_2 {id_t}, cos double"
             )
         else:
             out = slim.groupBy(bname).applyInArrow(
-                _block_pairs, f"id_1 {id_t}, id_2 {id_t}, cos double"
+                _pairs, f"id_1 {id_t}, id_2 {id_t}, cos double"
             )
         if dedup_pairs:
             # a pair colliding in several bands is scored once per band
@@ -1006,6 +948,41 @@ def embedding_near_dup(
     )
 
 
+def component_labels(n: int, edge_blocks):
+    """Connected components of nodes ``0..n-1``: returns ``lab`` with
+    ``lab[x]`` = the MIN node reachable from ``x``.  ``edge_blocks``
+    yields ``(u, v)`` int64 index-array pairs and is consumed one block
+    at a time, so memory is O(n + block), never O(edges).
+
+    The package's one in-memory labeller: :func:`near_dup_clusters`'
+    small-graph path and :func:`~pyjanitor_spark.operators.similarity.
+    semdedup`'s per-cluster task both call it, numbering their nodes in
+    id order so the min node is the min id.  Vectorized union-find:
+    labels are parent pointers kept fully shortcut (``lab[lab] ==
+    lab``); per edge batch, roots hook via scatter-min, then
+    pointer-jump to the fixpoint.  Roots only merge, and only under a
+    smaller root, so per-block fixpoints compose into the global
+    components and each root is its component's minimum.
+    """
+    import numpy as np
+
+    lab = np.arange(n, dtype=np.int64)
+    for u, v in edge_blocks:
+        while True:
+            lu, lv = lab[u], lab[v]
+            if np.array_equal(lu, lv):
+                break
+            m = np.minimum(lu, lv)
+            np.minimum.at(lab, lu, m)
+            np.minimum.at(lab, lv, m)
+            while True:
+                nl = lab[lab]
+                if np.array_equal(nl, lab):
+                    break
+                lab = nl
+    return lab
+
+
 def near_dup_clusters(
     pairs: DataFrame,
     nodes: DataFrame | None = None,
@@ -1023,15 +1000,16 @@ def near_dup_clusters(
     once (the count reads the pin); at or below
     ``small_graph_edges`` (default 1M edges ≈ tens of MB of id pairs —
     a BOUNDED collect, gated by the count) the components are solved
-    with path-compressed union-find on the driver in one collect
-    instead of 3-6 iterative contraction rounds of multi-stage shuffle
-    jobs whose per-job scheduling overhead dwarfs the data at this
-    size.  Above the cap — the 100 TB regime, where LSH over a
-    replicated corpus can emit billions of candidate edges — the
-    distributed alternating star contraction below engages; tests pin
-    ``small_graph_edges=0`` to exercise it at any size.  Both paths
-    produce the identical min-reachable-id labeling (driver union-find
-    hangs the larger root under the smaller).
+    on the driver in one collect — the ids are factorized with
+    ``np.unique`` (index order == id order) and labelled in one
+    :func:`component_labels` call — instead of 3-6 iterative
+    contraction rounds of multi-stage shuffle jobs whose per-job
+    scheduling overhead dwarfs the data at this size.  Above the cap —
+    the 100 TB regime, where LSH over a replicated corpus can emit
+    billions of candidate edges — the distributed alternating star
+    contraction below engages; tests pin ``small_graph_edges=0`` to
+    exercise it at any size.  Both paths produce the identical
+    min-reachable-id labeling.
 
     Alternating star contraction (the two-phase algorithm of Kiveris
     et al. 2014, "Connected Components in MapReduce and Beyond" —
@@ -1072,6 +1050,8 @@ def near_dup_clusters(
     id_2) likewise label their id as a singleton root even without
     ``nodes`` (they carry no connectivity, but the id was present in
     ``pairs`` and must not vanish from the labeling — ADVICE r12).
+    A pair whose ids are both null names no id and is dropped; a
+    half-null pair normalizes to a self-pair of its non-null id.
 
     The call runs Spark jobs: one ``count`` of the edge set and, on the
     small-graph path, one bounded ``collect``; on the distributed path,
@@ -1100,26 +1080,22 @@ def near_dup_clusters(
     # ---- small-graph fast path: count-gated BOUNDED collect --------
     n_edges = norm.count()
     if n_edges <= small_graph_edges:
-        parent: dict = {}
+        import numpy as np
 
-        def _find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in norm.collect():  # bounded: n_edges <= small_graph_edges
-            c, p = r["c"], r["p"]
-            if c == p:
-                _find(c)  # self-pair: ensure the id gets a label
-                continue
-            rc, rp = _find(c), _find(p)
-            if rc != rp:
-                # larger root under smaller -> root IS the component min
-                parent[max(rc, rp)] = min(rc, rp)
-        spark = pairs.sparkSession
         id_type = norm.schema["c"].dataType
+        # bounded: n_edges <= small_graph_edges; greatest() skips
+        # nulls, so c is null only for a null-null pair, which names
+        # no id (the star path's filters drop it too)
+        cp = [x for r in norm.collect() if r["c"] is not None for x in r]
+        int_ids = isinstance(id_type, T.IntegralType)
+        ids, idx = np.unique(
+            np.array(cp, dtype=np.int64 if int_ids else object),
+            return_inverse=True,
+        )
+        # index order == id order, so the min-index label IS the min id;
+        # a self-pair is just a node with no edge
+        lab = component_labels(ids.size, [(idx[0::2], idx[1::2])])
+        spark = pairs.sparkSession
         labels_schema = T.StructType(
             [
                 T.StructField(id_col, id_type),
@@ -1127,7 +1103,7 @@ def near_dup_clusters(
             ]
         )
         out = spark.createDataFrame(
-            [(x, _find(x)) for x in parent], labels_schema
+            list(zip(ids.tolist(), ids[lab].tolist())), labels_schema
         )
         if nodes is not None:
             all_ids = nodes.select(F.col(id_col)).distinct()

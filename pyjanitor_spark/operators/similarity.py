@@ -181,7 +181,9 @@ def semdedup(
     as BLOCKED matrix products (numpy/BLAS — the paper's own
     computation shape; the score-matrix block is capped at ~32 MB so
     task memory is O(cluster·dim), never O(cluster²)) and closes the
-    duplicate groups with an in-task union-find — components can never
+    duplicate groups in-task with
+    :func:`~pyjanitor_spark.operators.dedup.component_labels`, fed one
+    score block of edges at a time — components can never
     span clusters, so the log-round distributed label propagation
     ``near_dup_clusters`` needs for unbounded graphs is unnecessary
     here, and only (id, group) rows ever leave the task (the pair
@@ -224,8 +226,8 @@ def semdedup(
     :func:`~pyjanitor_spark.operators.dedup.near_dup_clusters`, whose
     per-round pins are durable when ``SparkContext.setCheckpointDir``
     is set (see :func:`~pyjanitor_spark.utils.pin.pin`).  Output is
-    identical — the in-task union-find and min-label propagation both
-    yield min-reachable-id groups.  In
+    identical — the in-task labeller and the distributed components
+    both yield min-reachable-id groups.  In
     split mode the cluster-level row gate does not apply
     (``max_cluster_size`` default 100,000 — passing it EXPLICITLY
     together with a split emits a warning instead of silently ignoring
@@ -380,11 +382,12 @@ def semdedup(
 
     # ONE Arrow task per cluster computes the Σ size² pair work as
     # BLOCKED matrix products (the SemDeDup paper's own computation
-    # shape) and closes the duplicate groups with an in-task
-    # union-find.  vs the previous expression-join pair stage this (a)
-    # moves the quadratic inner loop from interpreted HOF lambdas
-    # (zip_with/aggregate are CodegenFallback — evaluated per PAIR)
-    # into one dgemm per block, and (b) removes the pair-stream
+    # shape, utils/vecmat.py's cosine_pairs) and closes the duplicate
+    # groups in-task with dedup.component_labels, the package's one
+    # in-memory labeller.  vs the previous expression-join pair stage
+    # this (a) moves the quadratic inner loop from interpreted HOF
+    # lambdas (zip_with/aggregate are CodegenFallback — evaluated per
+    # PAIR) into one dgemm per block, and (b) removes the pair-stream
     # shuffle entirely — only (id, group) rows leave the task.  The
     # row-block size bounds the in-task score matrix to ~32 MB, so
     # memory is O(cluster·dim + block·cluster) regardless of cluster
@@ -399,8 +402,13 @@ def semdedup(
     def _cluster_groups(key, tbl):
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
-        from pyjanitor_spark.utils.vecmat import list_column_matrix
+        from pyjanitor_spark.operators.dedup import component_labels
+        from pyjanitor_spark.utils.vecmat import (
+            cosine_pairs,
+            list_column_matrix,
+        )
 
         n_rows = tbl.num_rows
         if cap is not None and n_rows > cap:
@@ -425,54 +433,19 @@ def semdedup(
                 f"GiB float64 per task); re-cluster with a larger k or "
                 f"raise/disable max_cluster_cells"
             )
-        ids = ids_arr.to_numpy(zero_copy_only=False)
-        norms = np.sqrt((V * V).sum(axis=1))
-        # vectorized union-find: labels are parent pointers kept fully
-        # shortcut (lab[lab] == lab); per edge batch, hook via
-        # scatter-min then pointer-jump to the fixpoint.  Once two rows
-        # share a root they share it forever (roots only merge), so
-        # per-block fixpoints compose into the global components.  The
-        # per-PAIR python loop this replaces was the task bottleneck on
-        # duplicate-dense clusters (every qualifying pair paid
-        # interpreter cost; replicated corpora qualify ~all pairs).
-        lab = np.arange(n_rows, dtype=np.int64)
-
-        def union_edges(lab, u, v):
-            while True:
-                lu, lv = lab[u], lab[v]
-                if np.array_equal(lu, lv):
-                    return lab
-                m = np.minimum(lu, lv)
-                np.minimum.at(lab, lu, m)
-                np.minimum.at(lab, lv, m)
-                while True:
-                    nl = lab[lab]
-                    if np.array_equal(nl, lab):
-                        break
-                    lab = nl
-
-        block = max(1, (1 << 22) // n_rows)
-        for s in range(0, n_rows, block):
-            e = min(s + block, n_rows)
-            S = V[s:e] @ V.T
-            denom = norms[s:e, None] * norms[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                C = np.where(denom > 0, S / denom, 0.0)
-            bi, j = np.nonzero(C >= eps_f)
-            u = bi + s
-            keep = u < j  # upper triangle only
-            if keep.any():
-                lab = union_edges(lab, u[keep], j[keep])
-        # representative = min ID in the component (the previous
-        # min-reachable-id rule, applied on values not indices)
-        rep: dict = {}
-        roots = lab.tolist()
-        for i, r in enumerate(roots):
-            if r not in rep or ids[i] < ids[rep[r]]:
-                rep[r] = i
-        grp_idx = pa.array(
-            np.fromiter((rep[r] for r in roots), dtype=np.int64, count=n_rows)
+        # number the rows in (id, row) order so the component labeller's
+        # min node is the min ID (ties to the first row) — the group
+        # representative; edges arrive one score block at a time, so
+        # memory stays O(block), not O(pairs).  Rows sharing an id are
+        # still separate nodes joined only by their cosine.
+        order = np.asarray(pc.sort_indices(ids_arr), dtype=np.int64)
+        rank = np.empty(n_rows, np.int64)
+        rank[order] = np.arange(n_rows)
+        lab = component_labels(
+            n_rows,
+            ((rank[i], rank[j]) for i, j, _ in cosine_pairs(V, eps_f)),
         )
+        grp_idx = pa.array(order[lab[rank]])
         return pa.table({"__sid": ids_arr, "__grp": ids_arr.take(grp_idx)})
 
     if split_path:

@@ -475,8 +475,8 @@ def gopher_repetition(
     positions instead.  These fractions are therefore an UPPER BOUND
     of the span-union fraction, clamped to 1.0 — conservative for
     filtering (never under-flags a repetitive document), identical
-    whenever duplicated grams don't overlap, and computable as one
-    hash-aggregate with no per-document position walk.
+    whenever duplicated grams don't overlap, and computable from
+    gram counts alone with no per-document position walk.
 
     Filter thresholds from the paper (e.g. drop when
     top_2_gram_char_frac > 0.20 or dup_5_gram_char_frac > 0.15) are
@@ -487,30 +487,24 @@ def gopher_repetition(
     documents whose repeated grams overlap — pass ``exact=True`` for
     threshold-faithful span-union semantics.
 
-    ``exact=True`` computes the span-union fractions exactly, entirely
-    in TOKEN space: the same (id, n, gram) explode as the default mode
-    additionally carries the start-token index, occurrence index lists
-    are grouped per (doc, n, gram) and then per doc, and the
-    char-interval union is a linear ``aggregate`` fold over sorted
-    token intervals — two n-gram occurrences overlap in char space iff
-    they overlap in token space, and a merged token interval [a, b]
-    covers exactly ``sum(len[a..b]) + (b - a)`` characters of the
+    ``exact=True`` computes the span-union fractions exactly, in TOKEN
+    space: two n-gram occurrences overlap in char space iff they
+    overlap in token space, and a merged token interval [a, b] covers
+    exactly ``sum(len[a..b]) + (b - a)`` characters of the
     whitespace-normalized text (all interior separators are covered,
     provable by induction over the overlap chain).  Same output
     columns; numerators are unions of character intervals in the
     normalized text over the same original-length denominator, so
-    ``exact`` ≤ clamped default for every column.  Costs one extra
-    groupBy over the default's explode-aggregate (no window sorts, no
-    per-token shuffle) — the default stays the cheap screening pass;
-    ``exact`` is the threshold-faithful one.
+    ``exact`` ≤ clamped default for every column.  The default stays
+    the cheaper screening pass (one packed sort per n instead of a
+    ``lexsort`` plus the span union); ``exact`` is the
+    threshold-faithful one.
 
-    Plan shape at 100 TB: the line/para fractions never shuffle; the
-    n-gram fractions explode once into ``(id, n, gram)`` for ALL
-    requested n values, hash-aggregate counts (map-side combined,
-    shuffle keyed on id+n+gram strings), reduce to one row per (id, n)
-    and pivot back via one join on ``id_col``.  Nothing quadratic; no
-    per-row HOF counting loops (an in-array count per distinct gram
-    would be interpreted O(k²) per document).
+    Plan shape at 100 TB: both modes are ONE ``mapInArrow`` over the
+    scan — the line/para fractions are per-row expressions and every
+    n-gram numerator comes from one in-task numpy kernel
+    (:func:`_gopher_scorer`), so there is no Exchange at all.  Nothing
+    quadratic; no per-row HOF counting loops.
     Docs shorter than n tokens score 0.0 for that n; empty docs score
     0.0 everywhere.
     """
@@ -541,40 +535,11 @@ def gopher_repetition(
     gram_src = F.trim(F.regexp_replace(col, r"\s+", " "))
     top_list = [int(n) for n in top_ns]
     dup_list = [int(n) for n in dup_ns]
-    ns_list = [int(n) for n in all_ns]
-    if exact:
-        # exact mode is per-document too (span unions in token space):
-        # the same zero-shuffle in-task Arrow shape as the default
-        # kernel, with span-union numerators instead of count*len (the
-        # r13 expression implementation exploded (id, n, gram, i) into
-        # TWO collect_list groupBys plus a join — all shuffle for math
-        # each document can do alone)
-        inp = df.select(
-            F.col(id_col),
-            F.length(col).alias("__chars"),
-            rep_frac(lines).alias("dup_line_frac"),
-            rep_frac(paras).alias("dup_para_frac"),
-            gram_src.alias("__norm"),
-        )
-        out_schema = _gopher_out_schema(df, id_col, top_list, dup_list)
-        score = _gopher_exact_arrow_scorer(ns_list, top_list, dup_list)
-        return inp.mapInArrow(score, out_schema)
-
-    # Default mode: every one of the nine signals is PER-DOCUMENT, so
-    # no shuffle is fundamentally required (guide §1.1 first-principles,
-    # §2.4).  The old shape exploded (id, n, gram-hash) for all nine n
-    # values — a ~9x-corpus-token exchange — and joined the pivot back.
-    # Instead: one in-task Arrow pass (guide §4.2) — tokens cross the
-    # boundary once as a normalized string column, and an exact numpy
-    # kernel (dictionary codes + rolling pair-encoding, hash-table
-    # factorization, sorted run-length counts) computes every (doc, n)
-    # top/dup numerator inside the scan stage.  Zero Exchange between
+    # Every signal is PER-DOCUMENT, so no shuffle is needed: one in-task
+    # Arrow pass (guide §4.2) — tokens cross the boundary once as a
+    # normalized string column and the numpy kernel computes every
+    # (doc, n) numerator inside the scan stage.  Zero Exchange between
     # the parquet scan and the result; parallelism = input splits.
-    # Values are bit-identical to the old aggregate: same (count, len)
-    # top-gram tiebreak (ties beyond that have equal count*len), same
-    # int64 numerators, same double division and clamp.  The kernel
-    # groups by exact token-id sequences — strictly stronger than the
-    # old 128-bit md5 identity.
     inp = df.select(
         F.col(id_col),
         F.length(col).alias("__chars"),
@@ -583,13 +548,15 @@ def gopher_repetition(
         gram_src.alias("__norm"),
     )
     out_schema = _gopher_out_schema(df, id_col, top_list, dup_list)
-    score = _gopher_arrow_scorer(ns_list, top_list, dup_list)
+    score = _gopher_scorer(
+        [int(n) for n in all_ns], top_list, dup_list, exact
+    )
     return inp.mapInArrow(score, out_schema)
 
 
 def _gopher_out_schema(df: DataFrame, id_col: str, top_list, dup_list):
-    """Output schema of the default-mode Arrow scorer: the caller's id
-    field (type preserved) + the nine double fraction columns."""
+    """Output schema of the Arrow scorer: the caller's id field (type
+    preserved) + the double fraction columns."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     id_field = df.schema[id_col]
@@ -605,9 +572,8 @@ def _gopher_out_schema(df: DataFrame, id_col: str, top_list, dup_list):
     return StructType(fields)
 
 
-def _gopher_arrow_scorer(ns_list, top_list, dup_list):
-    """Build the ``mapInArrow`` batch function for gopher_repetition's
-    default mode.
+def _gopher_scorer(ns_list, top_list, dup_list, exact):
+    """Build the ``mapInArrow`` batch function for gopher_repetition.
 
     Exact per-document n-gram accounting, fully vectorized (no Python
     per-row loop):
@@ -621,15 +587,30 @@ def _gopher_arrow_scorer(ns_list, top_list, dup_list):
       ids for n = 2..max by rolling pair-encoding — id(n-gram at i) =
       factorize(id(n-1-gram at i) << 32 | id(token at i+n-1)) — so
       equal grams share an id iff their token sequences are equal
-      (exact, no hash collisions).
-    * per (doc, gram) counts from one int64 sort + run-length pass;
-      gram char length = prefix-sum difference of token lengths +
+      (exact, no hash collisions).  Unigram ids are the token ids.
+    * gram char length = prefix-sum difference of token lengths +
       (n-1) separators, in CODEPOINTS to match JVM ``length()``
       (``UTF8String.numChars`` counts code points, NOT UTF-16 units —
       the astral-emoji differential row proved it).
-    * per-doc reductions via scatter max/add: top gram by (count, len)
-      encoded as count*LMUL+len, dup numerator = sum count*len over
-      count>=2.
+
+    Only the numerator differs between the modes:
+
+    * default — count·len: per (doc, gram) counts from one packed
+      int64 sort + run-length pass, then scatter max/add per doc: top
+      gram by (count, len) encoded as count*LMUL+len (ties beyond that
+      have equal count*len), dup numerator = Σ count*len over
+      count >= 2.
+    * ``exact`` — span union: runs of (gram, doc, start) from one
+      ``lexsort``; ``top_n``'s gram is chosen by (count, char length,
+      lexicographic gram — LARGEST string wins ties) and its numerator
+      is the merged char coverage of its occurrences; ``dup_n`` merges
+      the occurrences of ALL grams occurring >= 2 times (cross-gram
+      overlaps merge).  Sorted start indices chain while ``s_k <=
+      s_prev + n - 1``; a merged token interval [a, b] covers
+      ``cum[b+n] - cum[a] + (b + n - 1 - a)`` normalized chars.  Gram
+      STRINGS are materialized only for (count, len)-tied candidates
+      (UTF-8 byte order == codepoint order == Spark's binary string
+      comparison).
     """
     max_n = max(ns_list)
 
@@ -639,155 +620,24 @@ def _gopher_arrow_scorer(ns_list, top_list, dup_list):
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        def codepoint_lens(flat):
-            # JVM length() = UTF8String.numChars = CODE POINTS (a
-            # non-BMP codepoint counts once, unlike Java's
-            # String.length) — matches pyarrow utf8_length exactly
-            return pc.utf8_length(flat).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64, copy=False)
-
-        for batch in batches:
-            ndocs = batch.num_rows
-            chars = batch.column(1).to_numpy(zero_copy_only=False).astype(
-                np.float64, copy=False
-            )  # nulls -> NaN; NaN > 0 is False, like the JVM null guard
-            norm = batch.column(4)
-
-            toks = pc.split_pattern(norm, " ")
-            cnts = pc.list_value_length(toks).to_numpy(zero_copy_only=False)
-            cnts = np.nan_to_num(cnts, nan=0.0).astype(np.int64)  # null doc -> 0
-            flat = pc.list_flatten(toks)
-            offsets = np.concatenate(([0], np.cumsum(cnts)))
-            total = int(offsets[-1])
-            doc_of = np.repeat(np.arange(ndocs, dtype=np.int64), cnts)
-            pos = np.arange(total, dtype=np.int64) - offsets[:-1][doc_of]
-
-            top_chars = {n: np.zeros(ndocs, np.int64) for n in top_list}
-            dup_chars = {n: np.zeros(ndocs, np.int64) for n in dup_list}
-            if total:
-                codes = (
-                    flat.dictionary_encode()
-                    .indices.to_numpy(zero_copy_only=False)
-                    .astype(np.int64, copy=False)
-                )
-                cum = np.concatenate(([0], np.cumsum(codepoint_lens(flat))))
-                pn = codes  # ids of n-grams starting at i (currently n=1)
-                for n in range(2, max_n + 1):
-                    m = total - n + 1
-                    if m <= 0:
-                        break
-                    packed = (pn[:m] << 32) | codes[n - 1 : n - 1 + m]
-                    pn = pd.factorize(packed)[0].astype(np.int64, copy=False)
-                    if n not in ns_list:
-                        continue
-                    # valid starts: the window stays inside one doc
-                    st = np.flatnonzero(pos[:m] <= cnts[doc_of[:m]] - n)
-                    if not st.size:
-                        continue
-                    gid = pn[st]
-                    glen_by_gid = np.zeros(int(gid.max()) + 1, np.int64)
-                    glen_by_gid[gid] = cum[st + n] - cum[st] + (n - 1)
-                    key = (gid << 32) | doc_of[st]
-                    key.sort()
-                    run_start = np.concatenate(
-                        ([0], np.flatnonzero(np.diff(key)) + 1)
-                    )
-                    counts = np.diff(np.concatenate((run_start, [key.size])))
-                    ukey = key[run_start]
-                    gdoc = ukey & 0xFFFFFFFF
-                    glen = glen_by_gid[ukey >> 32]
-                    if n in top_list:
-                        lmul = int(glen.max()) + 1
-                        np.maximum.at(
-                            top_chars[n], gdoc, counts * lmul + glen
-                        )
-                        enc = top_chars[n]
-                        top_chars[n] = (enc // lmul) * (enc % lmul)
-                    if n in dup_list:
-                        rep = counts >= 2
-                        np.add.at(
-                            dup_chars[n], gdoc[rep], counts[rep] * glen[rep]
-                        )
-                if 1 in ns_list:
-                    # unigrams: every token is a gram; no pair-encoding
-                    st = np.arange(total, dtype=np.int64)
-                    gid = codes
-                    glen_by_gid = np.zeros(int(gid.max()) + 1, np.int64)
-                    glen_by_gid[gid] = cum[st + 1] - cum[st]
-                    key = (gid << 32) | doc_of
-                    key.sort()
-                    run_start = np.concatenate(
-                        ([0], np.flatnonzero(np.diff(key)) + 1)
-                    )
-                    counts = np.diff(np.concatenate((run_start, [key.size])))
-                    ukey = key[run_start]
-                    gdoc = ukey & 0xFFFFFFFF
-                    glen = glen_by_gid[ukey >> 32]
-                    if 1 in top_list:
-                        lmul = int(glen.max()) + 1
-                        np.maximum.at(top_chars[1], gdoc, counts * lmul + glen)
-                        enc = top_chars[1]
-                        top_chars[1] = (enc // lmul) * (enc % lmul)
-                    if 1 in dup_list:
-                        rep = counts >= 2
-                        np.add.at(dup_chars[1], gdoc[rep], counts[rep] * glen[rep])
-
-            cols = [batch.column(0), batch.column(2), batch.column(3)]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                ok = chars > 0
-                for n in top_list:
-                    frac = np.where(
-                        ok, np.minimum(1.0, top_chars[n] / chars), 0.0
-                    )
-                    cols.append(pa.array(frac, pa.float64()))
-                for n in dup_list:
-                    frac = np.where(
-                        ok, np.minimum(1.0, dup_chars[n] / chars), 0.0
-                    )
-                    cols.append(pa.array(frac, pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                cols,
-                names=[batch.schema.names[0], "dup_line_frac", "dup_para_frac"]
-                + [f"top_{n}_gram_char_frac" for n in top_list]
-                + [f"dup_{n}_gram_char_frac" for n in dup_list],
-            )
-
-    return _score
-
-
-def _gopher_exact_arrow_scorer(ns_list, top_list, dup_list):
-    """``mapInArrow`` batch function for gopher_repetition ``exact``
-    mode — identical tokenization/ids as :func:`_gopher_arrow_scorer`,
-    with SPAN-UNION numerators:
-
-    * ``top_n``: the top gram by (count, char length, lexicographic
-      gram — LARGEST string wins ties, the old ``array_max`` struct
-      order); its numerator is the merged char coverage of its
-      occurrence intervals.
-    * ``dup_n``: merged coverage of the occurrence intervals of ALL
-      grams occurring >= 2 times (cross-gram overlaps merge).
-
-    Interval algebra unchanged from the expression version: sorted
-    start indices chain while ``s_k <= s_prev + n - 1``; a merged
-    token interval [a, b] covers ``cum[b+1] - cum[a] + (b - a)``
-    normalized chars (codepoint token lengths + interior separators).
-    Chain merging, per-group sums and the (count, len) argmax are all
-    numpy scatter/run-length passes; gram STRINGS are materialized
-    only for the rare (count, len)-tied candidates (UTF-8 byte order
-    == codepoint order == Spark's binary string comparison)."""
-    max_n = max(ns_list)
-
-    def _score(batches):
-        import numpy as np
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        def cp_lens(flat):
-            return pc.utf8_length(flat).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64, copy=False)
+        def count_len(n, gid, sdoc, glen, top_chars, dup_chars):
+            glen_by_gid = np.zeros(int(gid.max()) + 1, np.int64)
+            glen_by_gid[gid] = glen
+            key = (gid << 32) | sdoc
+            key.sort()
+            run_start = np.concatenate(([0], np.flatnonzero(np.diff(key)) + 1))
+            counts = np.diff(np.concatenate((run_start, [key.size])))
+            ukey = key[run_start]
+            gdoc = ukey & 0xFFFFFFFF
+            glen = glen_by_gid[ukey >> 32]
+            if n in top_chars:
+                lmul = int(glen.max()) + 1
+                np.maximum.at(top_chars[n], gdoc, counts * lmul + glen)
+                enc = top_chars[n]
+                top_chars[n] = (enc // lmul) * (enc % lmul)
+            if n in dup_chars:
+                rep = counts >= 2
+                np.add.at(dup_chars[n], gdoc[rep], counts[rep] * glen[rep])
 
         def chain_cover(starts, groups, n, cum):
             """starts ascending within each contiguous group; returns
@@ -808,15 +658,72 @@ def _gopher_exact_arrow_scorer(ns_list, top_list, dup_list):
             np.add.at(out, inv, contrib)
             return ug, out
 
+        def span_union(
+            n, st, gid, sdoc, glen, cum, flat, words, top_chars, dup_chars
+        ):
+            order = np.lexsort((st, sdoc, gid))
+            g_s, d_s, s_s = gid[order], sdoc[order], st[order]
+            new = np.ones(s_s.size, bool)
+            new[1:] = (g_s[1:] != g_s[:-1]) | (d_s[1:] != d_s[:-1])
+            ridx = np.flatnonzero(new)
+            rcounts = np.diff(np.append(ridx, s_s.size))
+            if n in dup_chars:
+                memb = np.repeat(rcounts >= 2, rcounts)
+                s_d, d_d = s_s[memb], d_s[memb]
+                o2 = np.lexsort((s_d, d_d))
+                ug, cov = chain_cover(s_d[o2], d_d[o2], n, cum)
+                dup_chars[n][ug] += cov
+            if n not in top_chars:
+                return
+            rlen = glen[order[ridx]]
+            lmul = int(rlen.max()) + 1
+            enc = rcounts * lmul + rlen
+            rdoc = d_s[ridx]
+            best = np.full(top_chars[n].size, -1, np.int64)
+            np.maximum.at(best, rdoc, enc)
+            cand = np.flatnonzero(enc == best[rdoc])
+            cdoc = rdoc[cand]
+            # runs are (gid, doc)-ordered, so one doc's candidates can
+            # span gids -> stable doc sort
+            co = np.argsort(cdoc, kind="stable")
+            cand, cdoc = cand[co], cdoc[co]
+            dnew = np.ones(cand.size, bool)
+            dnew[1:] = cdoc[1:] != cdoc[:-1]
+            dstart = np.flatnonzero(dnew)
+            dcnt = np.diff(np.append(dstart, cand.size))
+            win = np.empty(dstart.size, np.int64)
+            for k, (si, cnt) in enumerate(zip(dstart, dcnt)):
+                if cnt == 1:
+                    win[k] = cand[si]
+                    continue
+                # (count, len) tie: largest gram STRING wins
+                if not words:
+                    words.extend(flat.to_pylist())
+                bestr, bestrun = None, -1
+                for r in cand[si : si + cnt]:
+                    s0 = s_s[ridx[r]]
+                    gram = " ".join(words[s0 : s0 + n])
+                    if bestr is None or gram > bestr:
+                        bestr, bestrun = gram, r
+                win[k] = bestrun
+            occ_counts = rcounts[win]
+            csum = np.concatenate(([0], np.cumsum(occ_counts)))
+            occ_idx = np.repeat(ridx[win], occ_counts) + (
+                np.arange(csum[-1]) - np.repeat(csum[:-1], occ_counts)
+            )
+            occ_s = s_s[occ_idx]  # ascending within run
+            occ_grp = np.repeat(np.arange(win.size, dtype=np.int64), occ_counts)
+            ug, cov = chain_cover(occ_s, occ_grp, n, cum)
+            top_chars[n][rdoc[win[ug]]] = cov
+
         for batch in batches:
             ndocs = batch.num_rows
             chars = batch.column(1).to_numpy(zero_copy_only=False).astype(
                 np.float64, copy=False
-            )
-            norm = batch.column(4)
-            toks = pc.split_pattern(norm, " ")
+            )  # nulls -> NaN; NaN > 0 is False, like the JVM null guard
+            toks = pc.split_pattern(batch.column(4), " ")
             cnts = pc.list_value_length(toks).to_numpy(zero_copy_only=False)
-            cnts = np.nan_to_num(cnts, nan=0.0).astype(np.int64)
+            cnts = np.nan_to_num(cnts, nan=0.0).astype(np.int64)  # null doc -> 0
             flat = pc.list_flatten(toks)
             offsets = np.concatenate(([0], np.cumsum(cnts)))
             total = int(offsets[-1])
@@ -831,103 +738,43 @@ def _gopher_exact_arrow_scorer(ns_list, top_list, dup_list):
                     .indices.to_numpy(zero_copy_only=False)
                     .astype(np.int64, copy=False)
                 )
-                cum = np.concatenate(([0], np.cumsum(cp_lens(flat))))
-                py_tokens = None
-                pn = codes
+                # JVM length() = UTF8String.numChars = CODE POINTS (a
+                # non-BMP codepoint counts once, unlike Java's
+                # String.length) — matches pyarrow utf8_length exactly
+                lens = pc.utf8_length(flat).to_numpy(zero_copy_only=False)
+                cum = np.concatenate(([0], np.cumsum(lens.astype(np.int64))))
+                words = []  # flat as python strings, filled on the first tie
+                pn = codes  # ids of n-grams starting at i
                 for n in range(1, max_n + 1):
+                    m = total - n + 1
+                    if m <= 0:
+                        break
                     if n >= 2:
-                        m = total - n + 1
-                        if m <= 0:
-                            break
                         packed = (pn[:m] << 32) | codes[n - 1 : n - 1 + m]
-                        pn = pd.factorize(packed)[0].astype(
-                            np.int64, copy=False
-                        )
+                        pn = pd.factorize(packed)[0].astype(np.int64, copy=False)
                     if n not in ns_list:
                         continue
-                    if n == 1:
-                        st = np.arange(total, dtype=np.int64)
-                        gid = codes
+                    # valid starts: the window stays inside one doc
+                    st = np.flatnonzero(pos[:m] <= cnts[doc_of[:m]] - n)
+                    if not st.size:
+                        continue
+                    gid, sdoc = pn[st], doc_of[st]
+                    glen = cum[st + n] - cum[st] + (n - 1)  # chars per gram
+                    if exact:
+                        span_union(
+                            n, st, gid, sdoc, glen, cum, flat, words,
+                            top_chars, dup_chars,
+                        )
                     else:
-                        st = np.flatnonzero(
-                            pos[: total - n + 1]
-                            <= cnts[doc_of[: total - n + 1]] - n
-                        )
-                        if not st.size:
-                            continue
-                        gid = pn[st]
-                    sdoc = doc_of[st]
-                    order = np.lexsort((st, sdoc, gid))
-                    g_s, d_s, s_s = gid[order], sdoc[order], st[order]
-                    new = np.ones(s_s.size, bool)
-                    new[1:] = (g_s[1:] != g_s[:-1]) | (d_s[1:] != d_s[:-1])
-                    ridx = np.flatnonzero(new)
-                    rcounts = np.diff(np.append(ridx, s_s.size))
-                    if n in dup_list:
-                        memb = np.repeat(rcounts >= 2, rcounts)
-                        s_d, d_d = s_s[memb], d_s[memb]
-                        o2 = np.lexsort((s_d, d_d))
-                        ug, cov = chain_cover(s_d[o2], d_d[o2], n, cum)
-                        dup_chars[n][ug] += cov
-                    if n in top_list and ridx.size:
-                        s_first = s_s[ridx]
-                        glen = cum[s_first + n] - cum[s_first] + (n - 1)
-                        lmul = int(glen.max()) + 1
-                        enc = rcounts * lmul + glen
-                        rdoc = d_s[ridx]
-                        best = np.full(ndocs, -1, np.int64)
-                        np.maximum.at(best, rdoc, enc)
-                        cand = np.flatnonzero(enc == best[rdoc])
-                        cdoc = rdoc[cand]
-                        # candidates are doc-sorted already (runs are
-                        # (gid, doc)-ordered, but argmax per doc can
-                        # span gids) -> stable doc sort
-                        co = np.argsort(cdoc, kind="stable")
-                        cand, cdoc = cand[co], cdoc[co]
-                        dnew = np.ones(cand.size, bool)
-                        dnew[1:] = cdoc[1:] != cdoc[:-1]
-                        dstart = np.flatnonzero(dnew)
-                        dcnt = np.diff(np.append(dstart, cand.size))
-                        win = np.empty(dstart.size, np.int64)
-                        for k, (si, cnt) in enumerate(zip(dstart, dcnt)):
-                            if cnt == 1:
-                                win[k] = cand[si]
-                                continue
-                            # (count, len) tie: largest gram STRING wins
-                            if py_tokens is None:
-                                py_tokens = flat.to_pylist()
-                            bestr, bestrun = None, -1
-                            for r in cand[si : si + cnt]:
-                                s0 = s_s[ridx[r]]
-                                gram = " ".join(py_tokens[s0 : s0 + n])
-                                if bestr is None or gram > bestr:
-                                    bestr, bestrun = gram, r
-                            win[k] = bestrun
-                        occ_counts = rcounts[win]
-                        csum = np.concatenate(([0], np.cumsum(occ_counts)))
-                        occ_idx = np.repeat(ridx[win], occ_counts) + (
-                            np.arange(csum[-1])
-                            - np.repeat(csum[:-1], occ_counts)
-                        )
-                        occ_s = s_s[occ_idx]  # ascending within run
-                        occ_grp = np.repeat(
-                            np.arange(win.size, dtype=np.int64), occ_counts
-                        )
-                        ug, cov = chain_cover(occ_s, occ_grp, n, cum)
-                        top_chars[n][rdoc[win[ug]]] = cov
+                        count_len(n, gid, sdoc, glen, top_chars, dup_chars)
 
             cols = [batch.column(0), batch.column(2), batch.column(3)]
             with np.errstate(divide="ignore", invalid="ignore"):
                 ok = chars > 0
-                for n in top_list:
-                    frac = np.where(
-                        ok, np.minimum(1.0, top_chars[n] / chars), 0.0
-                    )
-                    cols.append(pa.array(frac, pa.float64()))
-                for n in dup_list:
-                    frac = np.where(
-                        ok, np.minimum(1.0, dup_chars[n] / chars), 0.0
-                    )
+                for num in [top_chars[n] for n in top_list] + [
+                    dup_chars[n] for n in dup_list
+                ]:
+                    frac = np.where(ok, np.minimum(1.0, num / chars), 0.0)
                     cols.append(pa.array(frac, pa.float64()))
             yield pa.RecordBatch.from_arrays(
                 cols,

@@ -18,13 +18,19 @@ can never select them.  That reproduces the historical exclusion
 semantics: the expression path's ``zip_with`` dot with a null side was
 null (pair dropped), and a NaN component must not ride Spark's
 NaN-is-greater-than-everything comparison into the output.
+
+:func:`cosine_pairs` is the one blocked-cosine pair loop both stages
+share: ``embedding_near_dup`` (whole block, or one triangle-partitioned
+sub-task of a split block) and ``semdedup``'s per-cluster task.  It
+holds the module's only dgemm; callers keep their own cap gates, id
+rules and what they do with each yielded row block.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["list_column_matrix"]
+__all__ = ["list_column_matrix", "cosine_pairs"]
 
 
 def list_column_matrix(arr) -> tuple[np.ndarray, np.ndarray, int]:
@@ -93,3 +99,42 @@ def list_column_matrix(arr) -> tuple[np.ndarray, np.ndarray, int]:
             V[bad_vals] = 0.0
             good = good & finite
     return V, good, dim
+
+
+def cosine_pairs(V: np.ndarray, threshold: float, ia=None, ib=None):
+    """Yield ``(i, j, cos)`` per row block for every pair of rows
+    ``i ∈ ia``, ``j ∈ ib`` of ``V`` with ``cos >= threshold``.
+
+    ``ia=None`` means all rows; ``ib=None`` means the same set as
+    ``ia``, and then only the upper triangle ``i < j`` is yielded.
+    ``i``/``j`` are row indices into ``V``.  Cosine is
+    ``dot/(n1·n2)`` with zero-norm sides scoring 0.0 (the
+    ``cosine_sim`` semantics).  The ``ia`` rows are scored in blocks
+    whose score matrix holds at most ~4M float64 cells (~32 MB), so
+    memory is O(rows·dim + block·|ib|) whatever the set sizes.
+    """
+    norms = np.sqrt((V * V).sum(axis=1))
+    A, na = (V, norms) if ia is None else (V[ia], norms[ia])
+    same = ib is None
+    if same:
+        B, nb, ib = A, na, ia
+    else:
+        B, nb = V[ib], norms[ib]
+    rb = max(1, (1 << 22) // max(1, len(B)))
+    for s in range(0, len(A), rb):
+        e = min(s + rb, len(A))
+        S = A[s:e] @ B.T
+        denom = na[s:e, None] * nb[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            C = np.where(denom > 0, S / denom, 0.0)
+        ri, rj = np.nonzero(C >= threshold)
+        cos = C[ri, rj]
+        ri = ri + s
+        if same:
+            keep = ri < rj
+            ri, rj, cos = ri[keep], rj[keep], cos[keep]
+        yield (
+            ri if ia is None else ia[ri],
+            rj if ib is None else ib[rj],
+            cos,
+        )

@@ -118,13 +118,22 @@ def docs(draw):
     return rows
 
 
+# n = 1 (unigrams) rides along with the default sizes
+TOP_NS, DUP_NS = (1, 2, 3, 4), (1, 5, 6, 7, 8, 9, 10)
+
+
 @WAVE
 @given(rows=docs())
 def test_gopher_vs_brute_fuzz(spark, rows):
     df = spark.createDataFrame(rows, "id long, text string")
-    got = {r.id: r.asDict() for r in pj.gopher_repetition(df, "id", "text").collect()}
+    got = {
+        r.id: r.asDict()
+        for r in pj.gopher_repetition(
+            df, "id", "text", top_ns=TOP_NS, dup_ns=DUP_NS
+        ).collect()
+    }
     for i, t in rows:
-        want = _brute(t)
+        want = _brute(t, TOP_NS, DUP_NS)
         for k, v in want.items():
             assert got[i][k] == pytest.approx(v, abs=1e-12), (i, k, t)
 
@@ -196,7 +205,13 @@ def test_exact_hand_checked(spark):
     # normalized text -> span-union 1.0; the upper bound would be
     # min(1, 3*3/7) = 1.0 too, but 'x y x y z' separates them
     df = spark.createDataFrame(
-        [(1, "a a a a"), (2, "x y x y z"), (3, ""), (4, "q w e r t")],
+        [
+            (1, "a a a a"),
+            (2, "x y x y z"),
+            (3, ""),
+            (4, "q w e r t"),
+            (5, "x x x y z y z"),
+        ],
         "id long, text string",
     )
     got = {
@@ -211,27 +226,31 @@ def test_exact_hand_checked(spark):
     assert got[2]["dup_2_gram_char_frac"] == pytest.approx(6 / 9)
     assert got[3]["top_2_gram_char_frac"] == 0.0
     assert got[4]["dup_2_gram_char_frac"] == 0.0
+    # 'x x' and 'y z' tie on (count 2, length 3); the larger string
+    # 'y z' wins, covering [6,9) + [10,13) = 6 of 13 chars — the
+    # overlapping 'x x' occurrences would cover only [0,5) = 5
+    assert got[5]["top_2_gram_char_frac"] == pytest.approx(6 / 13)
 
 
 @WAVE
 @given(rows=docs())
-@pytest.mark.slow  # heavy brute/sweep: builder gate
 def test_gopher_exact_vs_brute_fuzz(spark, rows):
+    top_ns, dup_ns = (1, 2, 3), (1, 2, 5)
     df = spark.createDataFrame(rows, "id long, text string")
     got = {
         r.id: r.asDict()
         for r in pj.gopher_repetition(
-            df, "id", "text", top_ns=(2, 3), dup_ns=(2, 5), exact=True
+            df, "id", "text", top_ns=top_ns, dup_ns=dup_ns, exact=True
         ).collect()
     }
     ub = {
         r.id: r.asDict()
         for r in pj.gopher_repetition(
-            df, "id", "text", top_ns=(2, 3), dup_ns=(2, 5)
+            df, "id", "text", top_ns=top_ns, dup_ns=dup_ns
         ).collect()
     }
     for i, t in rows:
-        want = _brute_exact(t)
+        want = _brute_exact(t, top_ns, dup_ns)
         for k, v in want.items():
             assert got[i][k] == pytest.approx(v, abs=1e-12), (i, k, t)
             # exact is a tightening of the clamped upper bound

@@ -539,9 +539,15 @@ def test_dedupe_near_end_to_end(docs):
     + [(s, s + 100) for s in range(1, 101, 3)]
     + [(s, s + 1) for s in range(300, 310)]
 )
+# string ids: labels are the min id in string order, not insertion order
+@example(edges=[("b", "a"), ("c", "b"), ("zz", "z"), ("é", "y"), ("y", "e")])
 @settings(max_examples=12, deadline=None)
-def test_near_dup_clusters_matches_union_find(spark, edges):
-    """Property: distributed label propagation == driver union-find."""
+@pytest.mark.parametrize(
+    "kw", [{"small_graph_edges": 0}, {}], ids=["star_contraction", "driver"]
+)
+def test_near_dup_clusters_matches_union_find(spark, kw, edges):
+    """Property: both labelling paths (distributed star contraction
+    and the small-graph driver path) == a reference union-find."""
     parent = {}
 
     def find(x):
@@ -570,11 +576,25 @@ def test_near_dup_clusters_matches_union_find(spark, edges):
     )
     got = {
         r[0]: r[1]
-        for r in pj.near_dup_clusters(
-            pairs, id_col="id", small_graph_edges=0
-        ).collect()
+        for r in pj.near_dup_clusters(pairs, id_col="id", **kw).collect()
     }
     assert got == expect
+
+
+@pytest.mark.parametrize(
+    "kw", [{"small_graph_edges": 0}, {}], ids=["star_contraction", "driver"]
+)
+def test_near_dup_clusters_null_ids(spark, kw):
+    """A pair whose ids are both null names no id and is dropped on
+    both paths; a half-null pair keeps its id as a singleton."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (None, None), (7, None)], "id_1 long, id_2 long"
+    )
+    got = [
+        tuple(r)
+        for r in pj.near_dup_clusters(pairs, id_col="id", **kw).collect()
+    ]
+    assert len(got) == 4 and set(got) == {(1, 1), (2, 1), (3, 1), (7, 7)}
 
 
 def test_dedupe_against_reference(spark):

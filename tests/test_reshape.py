@@ -108,6 +108,32 @@ def test_pivot_wider_glue(spark):
     assert set(wide.columns) == {"dep", "a_1", "a_2"}
 
 
+def test_pivot_wider_two_names_from(spark):
+    """Two names_from columns label each output column with their values
+    joined by names_sep, in single- and multi-value form (pandas
+    flattens the column MultiIndex the same way)."""
+    long = spark.createDataFrame(
+        [(1, "a", "x", 10), (1, "a", "y", 11), (1, "b", "x", 12), (2, "a", "x", 20)],
+        "id int, g string, h string, v int",
+    )
+    wide = pj.pivot_wider(long, index="id", names_from=["g", "h"], values_from="v")
+    assert wide.columns == ["id", "a_x", "a_y", "b_x"]
+    rows = {r["id"]: r.asDict() for r in wide.collect()}
+    assert rows[1] == {"id": 1, "a_x": 10, "a_y": 11, "b_x": 12}
+    assert rows[2] == {"id": 2, "a_x": 20, "a_y": None, "b_x": None}
+    dash = pj.pivot_wider(
+        long.withColumn("w", F.col("v") * 2),
+        index="id",
+        names_from=["g", "h"],
+        values_from=["v", "w"],
+        names_sep="-",
+    )
+    assert dash.columns == ["id", "v-a-x", "v-a-y", "v-b-x", "w-a-x", "w-a-y", "w-b-x"]
+    got = {r["id"]: r.asDict() for r in dash.collect()}
+    assert got[1]["v-a-y"] == 11 and got[1]["w-b-x"] == 24
+    assert got[2]["w-a-x"] == 40 and got[2]["v-b-x"] is None
+
+
 def test_complete(spark):
     df = spark.createDataFrame(
         [(1999, "Dog", 2), (2000, "Cat", 3)], ["Year", "Taxon", "Abundance"]
