@@ -20,6 +20,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyjanitor_spark.utils.pin import probe
+
 __all__ = ["expand", "expand_grid", "cartesian_product", "complete", "fill_missing_timestamps"]
 
 
@@ -229,13 +231,22 @@ def fill_missing_timestamps(
     Grid generated JVM-side: ``sequence(min, max, interval)`` +
     ``explode`` — one row per grid point, no driver materialization.
     ``frequency`` is a Spark interval string ('1 hour', '15 minutes').
-    With ``by``, a grid per group (min/max per group via one agg)."""
+    With ``by``, a grid per group (min/max per group via one agg).
+
+    Actions: without ``by`` and with either grid end missing, ONE at call
+    time — a ``collect`` of the column's min/max (``utils.pin.probe``).
+    When ``df`` does not replay identically (a shuffle, join or
+    nondeterministic expression upstream) the probe pins it first, so
+    the call also runs ``df``'s shuffle and broadcast stages (adaptive
+    query execution materialises them; see ``utils.pin.pin``), and the
+    output's join reads the stored rows instead of re-running ``df``.
+    Every other call runs no job."""
     interval = F.expr(f"INTERVAL {frequency}")
     if by is None:
         if first_time_stamp is None or last_time_stamp is None:
-            row = df.agg(
-                F.min(column_name).alias("mn"), F.max(column_name).alias("mx")
-            ).first()
+            df, (row,) = probe(
+                df, lambda f: f.agg(F.min(column_name).alias("mn"), F.max(column_name).alias("mx"))
+            )
             lo = first_time_stamp or row["mn"]
             hi = last_time_stamp or row["mx"]
         else:

@@ -32,6 +32,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyjanitor_spark.utils.pin import _plan_is_deterministic, pin, probe
+
 __all__ = ["conditional_join", "get_join_indices", "asof_join"]
 
 _OPS = {"==", "!=", ">", ">=", "<", "<="}
@@ -74,16 +76,46 @@ def _num_cast(col: "F.Column", dtype: str) -> "F.Column":
     return col.cast("double")
 
 
-def _left_range(left: DataFrame, lo_col: str, dtype: str = "") -> tuple[float, float] | None:
-    """Min/max of the left point column: one bounded agg action (parquet
-    footer stats make this a metadata scan on unfiltered reads)."""
-    row = left.agg(
-        F.min(_num_cast(F.col(lo_col), dtype)).alias("mn"),
-        F.max(_num_cast(F.col(lo_col), dtype)).alias("mx"),
-    ).first()
-    if row["mn"] is None or row["mx"] is None:
+_BUCKETABLE = ("byte", "short", "integer", "long", "float", "double", "decimal",
+               "timestamp", "timestamp_ntz", "date", "boolean")
+
+
+def _band_column(df: DataFrame, right: DataFrame, conditions) -> str | None:
+    """The left point column a pure non-equi join bucketizes on, or None
+    when the shape doesn't fit (no range condition, several left
+    columns, or a non-bucketizable dtype) and the plain join runs.
+
+    Bucketization maps values onto the NUMERIC line, which is only
+    order-isomorphic for numeric / datetime / boolean columns — a
+    lexicographic string range ("10" < "2") disagrees with its numeric
+    cast, and under ANSI mode the cast on a non-numeric string THROWS."""
+    range_ops = [c for c in conditions if c[2] in (">", ">=", "<", "<=")]
+    lcols = {c[0] for c in range_ops}
+    if not range_ops or len(lcols) != 1:
         return None
-    return float(row["mn"]), float(row["mx"])
+    ltypes = {f.name: f.dataType.typeName() for f in df.schema.fields}
+    rtypes = {f.name: f.dataType.typeName() for f in right.schema.fields}
+    for lc, rc, _op in range_ops:
+        if not (ltypes[lc].startswith(_BUCKETABLE) and rtypes[rc].startswith(_BUCKETABLE)):
+            return None
+    return next(iter(lcols))
+
+
+def _left_range(
+    df: DataFrame, lo_col: str
+) -> tuple[DataFrame, tuple[float, float] | None]:
+    """Min/max of the left point column, probed with ``utils.pin.probe``:
+    returns the frame the join must read (``df``, or its pin when ``df``
+    does not replay identically) and the range, None when the column is
+    all-NULL.  One bounded agg action (parquet footer stats make it a
+    metadata scan on unfiltered reads)."""
+    num = _num_cast(F.col(lo_col), df.schema[lo_col].dataType.typeName())
+    frame, (row,) = probe(
+        df, lambda f: f.agg(F.min(num).alias("mn"), F.max(num).alias("mx"))
+    )
+    if row["mn"] is None or row["mx"] is None:
+        return frame, None
+    return frame, (float(row["mn"]), float(row["mx"]))
 
 
 def conditional_join(
@@ -109,6 +141,23 @@ def conditional_join(
     plan (can win when the right side is tiny), ``True`` to force
     bucketization.  Mixed equi+non-equi joins always use the native
     hash/sort-merge join on the equality keys.
+
+    Jobs at call time (the lazy contract's exceptions):
+
+    * the bucketized rewrite runs one action, a ``collect`` of the left
+      point column's min/max (``utils.pin.probe``) that sizes the
+      buckets.  When the left side does not replay identically (a
+      shuffle, join or nondeterministic expression upstream) the probe
+      pins it first, so the call also runs the left upstream's shuffle
+      and broadcast stages (adaptive query execution materialises them;
+      see ``utils.pin.pin``), and the join reads the stored rows: the
+      probe and the output share one run of the left upstream.
+    * with ``how`` right/outer/full, the bucketized outer patch-up
+      reads the right side twice, so a right side that does not replay
+      identically is pinned too, and its row ids agree between the
+      reads; that pin runs the right upstream's stages.
+
+    Any other call runs no job.
 
     Colliding right-side column names are prefixed ``right_`` in the
     output (flat-name stand-in for the reference's left/right
@@ -150,11 +199,25 @@ def conditional_join(
     # POST-keep matches (reference: _keep_output runs on the matched
     # index arrays before the null completion), so it needs right ids
     keep_right_rebuild = keep != "all" and how in ("right", "outer", "full")
-    need_ids = keep != "all" or bool(indicator) or (use_bucket and how != "inner")
+    # pure range join: the left point column's min/max is probed, and
+    # the join reads the probe's frame (the pin of a left side that
+    # does not replay identically), so both share one run of the
+    # upstream.  The rule is decided on the caller's input: the id
+    # column added below is itself nondeterministic.
+    rng = None
+    band = _band_column(df, right, conditions) if use_bucket and not eq_conds else None
+    if band is not None:
+        df, rng = _left_range(df, band)
+    bucketized = rng is not None
+    # the outer patch-up re-reads the right side too, and its row ids
+    # must agree between the reads
+    if bucketized and how in ("right", "outer", "full") and not _plan_is_deterministic(right):
+        right = pin(right)
+    need_ids = keep != "all" or bool(indicator) or (bucketized and how != "inner")
     left = df.withColumn(_L_ID, F.monotonically_increasing_id()) if need_ids else df
     rgt = (
         right.withColumn(_R_ID, F.monotonically_increasing_id())
-        if (bool(indicator) or keep_right_rebuild or (use_bucket and how != "inner"))
+        if (bool(indicator) or keep_right_rebuild or (bucketized and how != "inner"))
         else right
     )
 
@@ -165,9 +228,6 @@ def conditional_join(
 
     def rname(c: str) -> str:
         return rmap.get(c, c)
-
-    eq = [(lc, rc) for lc, rc, op in conditions if op == "=="]
-    noneq = [(lc, rc, op) for lc, rc, op in conditions if op != "=="]
 
     pred = None
     for lc, rc, op in conditions:
@@ -181,8 +241,10 @@ def conditional_join(
     # semantics: keep='last' can orphan right rows that only matched as
     # non-picked candidates, and they must resurface as right_only rows)
     join_how = ("left" if how in ("outer", "full") else "inner") if keep_right_rebuild else how
-    if use_bucket and not eq:
-        joined = _bucketized_join(left, rgt, rname, noneq, pred, join_how, bucket_width)
+    if bucketized:
+        joined = _bucketized_join(
+            left, rgt, rname, band, rng, conditions, pred, join_how, bucket_width
+        )
     else:
         joined = left.join(rgt, on=pred, how="full" if join_how == "outer" else join_how)
 
@@ -246,7 +308,9 @@ def _bucketized_join(
     left: DataFrame,
     rgt: DataFrame,
     rname,
-    noneq: list[tuple[str, str, str]],
+    lcol: str,
+    rng: tuple[float, float],
+    conditions: list[tuple[str, str, str]],
     pred: Column,
     how: str,
     width: float | None,
@@ -254,11 +318,12 @@ def _bucketized_join(
     """Interval-bucketization for pure non-equi range joins.
 
     For a band ``left.x BETWEEN f(right)`` (one or two range conditions
-    on one left column), assign each left row bucket ``floor(x/w)`` and
-    each right row the SPAN of buckets its admissible interval covers
-    (``sequence`` + ``explode``); equi-join on bucket id (hash shuffle,
-    scalable) then apply the exact residual predicate.  Mirrors the
-    intent of the reference's sorted range search
+    on one left column ``lcol``, whose min/max is ``rng``), assign each
+    left row bucket ``floor(x/w)`` and each right row the SPAN of
+    buckets its admissible interval covers (``sequence`` +
+    ``explode``); equi-join on bucket id (hash shuffle, scalable) then
+    apply the exact residual predicate.  Mirrors the intent of the
+    reference's sorted range search
     (``conditional_join.py:1004-1148``) with a shuffle-friendly plan.
 
     Two properties keep the bucket explosion bounded regardless of how
@@ -269,47 +334,21 @@ def _bucketized_join(
       more buckets than the left domain has;
     * width targets ~256 buckets over the left span (beyond the point
       where buckets stop pruning, extra granularity only multiplies the
-      replicated right rows).
-
-    Falls back to the plain (nested-loop) join when the shape doesn't
-    fit (multiple left columns, unbounded both sides, non-numeric)."""
-    range_ops = [c for c in noneq if c[2] in (">", ">=", "<", "<=")]
-    lcols = {c[0] for c in range_ops}
-    if not range_ops or len(lcols) != 1:
-        return left.join(rgt, on=pred, how="full" if how == "outer" else how)
-    # bucketization maps values onto the NUMERIC line, which is only
-    # order-isomorphic for numeric / datetime / boolean columns — a
-    # lexicographic string range ("10" < "2") disagrees with its numeric
-    # cast, and under ANSI mode the cast on a non-numeric string THROWS.
-    # Non-bucketizable dtypes on either side of a range condition take
-    # the exact plain-join fallback.
-    _ok = ("byte", "short", "integer", "long", "float", "double", "decimal",
-           "timestamp", "timestamp_ntz", "date", "boolean")
-    dtypes = {f.name: f.dataType.typeName() for f in left.schema.fields}
-    dtypes.update({f.name: f.dataType.typeName() for f in rgt.schema.fields})
-    for lc, rc, _op in range_ops:
-        for c in (lc, rname(rc)):
-            if not dtypes.get(c, "").startswith(_ok):
-                return left.join(rgt, on=pred, how="full" if how == "outer" else how)
-    lcol = next(iter(lcols))
+      replicated right rows)."""
+    range_ops = [c for c in conditions if c[2] in (">", ">=", "<", "<=")]
+    ltype = left.schema[lcol].dataType.typeName()
     lo_expr = None  # lower bound for left.x from right side
     hi_expr = None
     for lc, rc, op in range_ops:
-        r = _num_cast(F.col(rname(rc)), dtypes.get(rname(rc), ""))
+        r = _num_cast(F.col(rname(rc)), rgt.schema[rname(rc)].dataType.typeName())
         if op in (">", ">="):  # x > r  -> r is a lower bound
             lo_expr = r if lo_expr is None else F.greatest(lo_expr, r)
         else:  # x < r -> upper bound
             hi_expr = r if hi_expr is None else F.least(hi_expr, r)
-    rng = _left_range(left, lcol, dtypes.get(lcol, ""))
-    if rng is None:
-        # left point column all-NULL: no row can satisfy a range
-        # predicate, so the plain join is a no-match (or null-padded
-        # outer) plan over zero pairs — nested loop is moot
-        return left.join(rgt, on=pred, how="full" if how == "outer" else how)
     mn, mx = rng
     # ONE-SIDED conditions (only a lower or only an upper bound from the
     # right) still bucketize: the open side clamps to the left domain
-    # edge already fetched above, so the admissible interval is bounded
+    # edge already probed, so the admissible interval is bounded
     # exactly like the two-sided case.  Without this the plan silently
     # fell back to a BroadcastNestedLoopJoin — O(n*m) at scale for a
     # query as plain as (x > cutoff).  The pair OUTPUT of an unselective
@@ -322,7 +361,7 @@ def _bucketized_join(
     span = mx - mn
     w = width or (span / 256.0 if span > 0 else 1.0)
     lb = left.withColumn(
-        "__cj_bkt", F.floor(_num_cast(F.col(lcol), dtypes.get(lcol, "")) / F.lit(w))
+        "__cj_bkt", F.floor(_num_cast(F.col(lcol), ltype) / F.lit(w))
     )
     glo = F.greatest(lo_expr, F.lit(mn))
     ghi = F.least(hi_expr, F.lit(mx))

@@ -11,7 +11,8 @@ no UDF; output rows = n_labels × input rows, streamed.
 ``pivot_wider`` compiles to ``groupBy(index).pivot(names, values).agg``
 with the pivot label list learned in one bounded distinct action
 (schema-from-data, SURVEY.md §4) so Spark plans a single-pass pivot
-aggregate.
+aggregate; the action and the pivot read one pinned per-cell
+pre-aggregate, so the upstream runs once.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pyjanitor_spark.utils.pin import probe
 from pyjanitor_spark.utils.select import resolve_columns
 
 __all__ = ["pivot_longer", "pivot_longer_spec", "pivot_wider"]
@@ -335,20 +337,6 @@ def pivot_longer_spec(
 
 # ---------------------------------------------------------------- wider
 
-def _levels(df: DataFrame, col: str, explicit) -> list[str]:
-    """Level list for one expand column: explicit categories if given
-    (the repo's category model passes lists directly — see
-    ``encode_categorical``), else observed distincts (pandas levels of a
-    non-categorical).  One bounded collect per column."""
-    if isinstance(explicit, dict) and col in explicit:
-        return [str(v) for v in explicit[col]]
-    return sorted(
-        r[0]
-        for r in df.select(F.col(col).cast("string")).distinct().collect()
-        if r[0] is not None
-    )
-
-
 def pivot_wider(
     df: DataFrame,
     index: Any | None = None,
@@ -366,8 +354,21 @@ def pivot_wider(
     .pivot(names_from, <learned labels>).agg(first(values_from)).
 
     (index, names_from) combinations are unique in the reference's
-    contract, so ``first()`` is exact.  One bounded distinct action
-    learns the label list so the pivot is planned single-pass.
+    contract, so ``first()`` is exact.  The input is first reduced to
+    one row per (index, names_from) cell,
+    ``groupBy(index, names_from).agg(first(v) for v in values_from)``;
+    the label list and the pivot both read that frame.
+
+    Actions: ONE, at call time — a ``collect`` of the distinct
+    names_from tuples of the cell frame (``utils.pin.probe``), which
+    yields the pivot labels and the ``names_expand`` levels.  The cell
+    frame always holds an aggregate, so the probe pins it: the call
+    runs the input's shuffle stages and the cell aggregate (see
+    ``utils.pin.pin``), and the output's pivot, ``index_expand`` grid
+    and the caller's sink read the stored cells instead of re-running
+    the upstream.  ``names_expand`` given as a dict that lists every
+    names_from column needs no data to plan: the call then runs no job
+    and the output reads the input lazily.
 
     ``names_expand`` (ref ``pivot.py:2116-2147``): produce a column for
     EVERY combination of the names_from levels — the cartesian product of
@@ -407,25 +408,38 @@ def pivot_wider(
             )
     else:
         idx = resolve_columns(df, index)
+    # one row per (index, names) cell; the names are cast to string, the
+    # label type, before grouping, so cells split exactly as labels do
+    ncols = [f"__n{i}" for i in range(len(names))]
+    cells = df.groupBy(
+        *idx, *[F.col(c).cast("string").alias(n) for c, n in zip(names, ncols)]
+    ).agg(*[F.first(F.col(v), ignorenulls=False).alias(f"__v{i}") for i, v in enumerate(values)])
     if len(names) == 1:
-        name_col = F.col(names[0]).cast("string")
+        cells = cells.withColumn("__pname", F.col(ncols[0]))
     else:
-        name_col = F.concat_ws(names_sep, *[F.col(c).cast("string") for c in names])
-    tagged = df.withColumn("__pname", name_col)
+        cells = cells.withColumn("__pname", F.concat_ws(names_sep, *ncols))
+    explicit = names_expand if isinstance(names_expand, dict) else {}
+    if names_expand and all(c in explicit for c in names):
+        frame, rows = cells, []
+    else:
+        frame, rows = probe(cells, lambda f: f.select(*ncols, "__pname").distinct())
     if names_expand:
         from itertools import product
 
-        per_col = [_levels(df, c, names_expand) for c in names]
+        per_col = [
+            [str(v) for v in explicit[c]] if c in explicit
+            else sorted({r[i] for r in rows} - {None})
+            for i, c in enumerate(names)
+        ]
         labels = [names_sep.join(combo) for combo in product(*per_col)]
     else:
-        labels = [
-            r[0] for r in tagged.select("__pname").distinct().orderBy("__pname").collect()
-        ]
+        # Spark's ascending string order: NULL first, then code points
+        labels = sorted({r["__pname"] for r in rows}, key=lambda s: (s is not None, s or ""))
     if len(values) == 1:
-        agg = [F.first(F.col(values[0]), ignorenulls=False).alias("__v")]
+        agg = [F.first(F.col("__v0"), ignorenulls=False).alias("__v")]
     else:
-        agg = [F.first(F.col(v), ignorenulls=False).alias(v) for v in values]
-    out = tagged.groupBy(*idx).pivot("__pname", labels).agg(*agg)
+        agg = [F.first(F.col(f"__v{i}"), ignorenulls=False).alias(v) for i, v in enumerate(values)]
+    out = frame.groupBy(*idx).pivot("__pname", labels).agg(*agg)
     # normalize output names: single value -> bare label; multi-value ->
     # value<sep>label (pandas MultiIndex flattening order)
     renames: dict[str, str] = {}
@@ -467,8 +481,9 @@ def pivot_wider(
             out = out.select(*ordered)
     if index_expand:
         # row-side expansion: cross join of per-column index levels (tiny
-        # frames, broadcast), left-joined to the pivot result — absent
-        # combinations appear as all-NULL rows
+        # frames, broadcast; observed levels come from the cell frame),
+        # left-joined to the pivot result — absent combinations appear as
+        # all-NULL rows
         types = dict(df.dtypes)
         grid: DataFrame | None = None
         for c in idx:
@@ -478,7 +493,7 @@ def pivot_wider(
                     [(v,) for v in index_expand[c]], f"`{c}` string"
                 ).select(F.col(c).cast(types[c]))
             else:
-                lv = df.select(c).distinct()
+                lv = frame.select(c).distinct()
             grid = lv if grid is None else grid.crossJoin(lv)
         # null-SAFE equality: distinct() keeps a NULL level, and a plain
         # name-list join (null != null) would silently drop pivot rows

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyjanitor_spark.utils.pin import probe
+
 __all__ = [
     "write_parquet",
     "write_orc",
@@ -255,6 +257,14 @@ def zorder_key(
     not ranges, which is the best a sort can do for unordered data.
     NULL maps to 0 (sorts first).  The interleave itself is a flat
     bitwise expression — codegen-friendly, no UDF, no shuffle.
+
+    Actions: with a numeric/date/timestamp column, ONE at call time —
+    the min/max ``collect`` (``utils.pin.probe``).  When ``df`` does not
+    replay identically (a shuffle, join or nondeterministic expression
+    upstream) the probe pins it first, so the call also runs ``df``'s
+    shuffle and broadcast stages (adaptive query execution materialises
+    them; see ``utils.pin.pin``), and the keyed output reads the stored
+    rows.  With only hashed columns the call runs no job.
     """
     ncols = len(columns)
     if ncols == 0:
@@ -279,10 +289,10 @@ def zorder_key(
     num_cols = [c for c in columns if as_num(c) is not None]
     stats = {}
     if num_cols:
-        row = df.agg(
+        df, (row,) = probe(df, lambda f: f.agg(
             *[F.min(as_num(c)).alias(f"mn_{i}") for i, c in enumerate(num_cols)],
             *[F.max(as_num(c)).alias(f"mx_{i}") for i, c in enumerate(num_cols)],
-        ).first()
+        ))
         for i, c in enumerate(num_cols):
             stats[c] = (row[f"mn_{i}"], row[f"mx_{i}"])
 
@@ -326,6 +336,11 @@ def write_zordered(
     Downstream scans filtering on ANY prefix-stable combination of the
     z-ordered columns skip whole files via parquet footer min/max —
     the multi-column generalization of ``write_parquet(sort_by=...)``.
+
+    Jobs: ``zorder_key``'s min/max probe (and the pin of a ``df`` that
+    does not replay identically, see there), then the range-partition
+    sample and the write, both of which read the probed frame — so
+    ``df``'s upstream runs once.
     """
     keyed = zorder_key(df, zorder_by, bits=bits)
     if num_files is not None:

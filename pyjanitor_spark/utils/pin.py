@@ -1,14 +1,17 @@
 """The pin policy: ``pin`` is the one place the library materialises a
-reused intermediate, and ``_plan_is_deterministic`` decides whether
-``positional_index`` / ``partitioned_cumsum`` need a pin to keep their
-two branch reads of a nondeterministic or shuffled upstream consistent.
+reused intermediate; ``_plan_is_deterministic`` decides whether a frame
+read twice needs one (``positional_index`` / ``partitioned_cumsum``'s
+two branch reads, a pre-flight probe and the output it plans); and
+``probe`` is the one way a verb reads data before it can plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
 
-__all__ = ["pin"]
+from pyspark.sql import DataFrame, Row
+
+__all__ = ["pin", "probe"]
 
 
 def pin(df: DataFrame) -> DataFrame:
@@ -24,7 +27,8 @@ def pin(df: DataFrame) -> DataFrame:
     (``localCheckpoint``) by the first action that reads the result,
     each partition computed once, so every later reader sees the same
     rows even when the upstream is nondeterministic.  An exchange-free
-    upstream runs no job here.
+    upstream runs no job here.  Nothing is stored until that first
+    action; in ``probe`` it is the probe's ``collect``.
 
     Durability is the deployment's choice, not the caller's: when
     ``SparkContext.setCheckpointDir`` (or ``spark.checkpoint.dir``) is
@@ -42,6 +46,28 @@ def pin(df: DataFrame) -> DataFrame:
     if df.sparkSession.sparkContext.getCheckpointDir():
         return local.checkpoint(eager=False)
     return local
+
+
+def probe(
+    df: DataFrame, query: Callable[[DataFrame], DataFrame]
+) -> tuple[DataFrame, list[Row]]:
+    """Run a verb's pre-flight query and hand back the frame to build
+    the output from, so the probe and the output share ONE run of the
+    upstream.  Returns ``(frame, rows)``:
+
+    * ``frame`` is ``df`` itself when ``_plan_is_deterministic(df)``
+      holds (exchange-free, replays identically: re-reading it costs a
+      scan and yields the same rows), else ``pin(df)``;
+    * ``rows`` is ``query(frame).collect()`` — the helper's one action.
+
+    On a pinned frame the call runs the pin's upstream shuffle and
+    broadcast stages (adaptive query execution materialises them, see
+    ``pin``), then the query's jobs, which also store the pinned rows;
+    the caller's output later reads those stored rows instead of
+    recomputing the upstream.  Keep ``query`` small (an aggregate or a
+    ``distinct`` of a few columns): its rows come to the driver."""
+    frame = df if _plan_is_deterministic(df) else pin(df)
+    return frame, query(frame).collect()
 
 
 # Analyzed-plan node names that can NEVER have an Exchange inserted

@@ -230,6 +230,78 @@ def test_keep_preserves_unmatched_right_rows(spark, how):
     assert matched == ["m1"]
 
 
+# AQE knobs under which the two reads of a grouped side coalesce its
+# shuffle differently (one read prunes the wide column), so a
+# monotonically_increasing_id taken above it differs between the reads
+_SMALL_COALESCE = {
+    "spark.sql.shuffle.partitions": "16",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32kb",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1b",
+}
+
+
+@pytest.fixture
+def small_coalesce(spark):
+    old = {k: spark.conf.get(k, None) for k in _SMALL_COALESCE}
+    for k, v in _SMALL_COALESCE.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in old.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+@pytest.fixture(scope="module")
+def grouped_sides(spark):
+    """(left, right, left copy, right copy): both sides are aggregates
+    carrying a wide column, and each copy holds the same rows in a
+    ``createDataFrame`` frame, which replays identically."""
+    wide = F.lit("z" * 60)
+    raw = spark.range(0, 20000, 1, 4).select(
+        (F.col("id") % 5000).alias("k"), ((F.col("id") * 7919) % 10000 / 10.0).alias("x0")
+    )
+    left = raw.groupBy("k").agg(
+        F.avg("x0").alias("x"), F.max(F.concat(wide, F.col("x0").cast("string"))).alias("m")
+    )
+    right = (
+        spark.range(400, numPartitions=4)
+        .select(
+            (F.col("id") % 100 * 10.0).alias("lo"),
+            (F.col("id") % 100 * 10.0 + 5).alias("hi"),
+            F.concat(wide, F.col("id").cast("string")).alias("tag"),
+        )
+        .groupBy("lo", "hi")
+        .agg(F.max("tag").alias("tag"))
+    )
+    copy = lambda df: spark.createDataFrame(df.collect(), df.schema)  # noqa: E731
+    return left, right, copy(left), copy(right)
+
+
+@pytest.mark.parametrize("keep", ["all", "first", "last"])
+@pytest.mark.parametrize("how", ["left", "right", "outer"])
+def test_bucketized_outer_join_on_grouped_sides(grouped_sides, small_coalesce, how, keep):
+    """The bucketized outer patch-up reads each side twice; a grouped
+    side must give the same rows as the plain join and as the join of
+    its materialised copy (matched rows were null-padded and as many
+    unmatched rows lost when the re-read renumbered the row ids)."""
+    from collections import Counter
+
+    left, right, left_copy, right_copy = grouped_sides
+    conds = [("x", "lo", ">="), ("x", "hi", "<")]
+
+    def bag(l, r, bucket):
+        out = pj.conditional_join(l, r, *conds, how=how, keep=keep, use_bucket=bucket)
+        return Counter(map(tuple, out.collect()))
+
+    want = bag(left_copy, right_copy, False)
+    assert bag(left_copy, right_copy, True) == want
+    assert bag(left, right_copy, True) == want
+    assert bag(left_copy, right, True) == want
+
+
 def test_get_join_indices_positional(spark):
     left = spark.createDataFrame([(10,), (20,), (30,)], ["a"]).coalesce(1)
     right = spark.createDataFrame([(15,), (25,)], ["b"]).coalesce(1)

@@ -1,5 +1,7 @@
 """The pin policy (pyjanitor_spark/utils/pin.py): every checkpoint the
-library takes goes through ``pin``, and a deployment that sets
+library takes goes through ``pin``, every pre-flight read of the data
+goes through ``probe`` (so the probe and the verb's output share one run
+of the upstream), and a deployment that sets
 ``SparkContext.setCheckpointDir`` gets durable pins everywhere."""
 
 from __future__ import annotations
@@ -10,9 +12,25 @@ import re
 import subprocess
 import sys
 
+import pytest
+from pyspark.sql import functions as F
+
+import pyjanitor_spark as pj
+
 PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "pyjanitor_spark"
 )
+
+
+def _offenders(pattern: re.Pattern, paths: list[str]) -> list[str]:
+    out = []
+    for path in paths:
+        with open(path, encoding="utf-8") as fh:
+            for lineno, line in enumerate(fh, 1):
+                if pattern.search(line):
+                    rel = os.path.relpath(path, PKG)
+                    out.append(f"{rel}:{lineno}: {line.strip()}")
+    return out
 
 
 def test_checkpoint_calls_only_in_pin_module():
@@ -21,18 +39,93 @@ def test_checkpoint_calls_only_in_pin_module():
     not match."""
     call = re.compile(r"localCheckpoint\(|\.checkpoint\(")
     allowed = os.path.join(PKG, "utils", "pin.py")
-    offenders = []
-    for root, _dirs, files in os.walk(PKG):
-        for name in files:
-            path = os.path.join(root, name)
-            if not name.endswith(".py") or path == allowed:
-                continue
-            with open(path, encoding="utf-8") as fh:
-                for lineno, line in enumerate(fh, 1):
-                    if call.search(line):
-                        rel = os.path.relpath(path, PKG)
-                        offenders.append(f"{rel}:{lineno}: {line.strip()}")
+    paths = [
+        os.path.join(root, name)
+        for root, _dirs, files in os.walk(PKG)
+        for name in files
+        if name.endswith(".py")
+    ]
+    offenders = _offenders(call, [p for p in paths if p != allowed])
     assert not offenders, "checkpoint outside utils/pin.py:\n" + "\n".join(offenders)
+
+
+def test_probing_verbs_have_no_bare_actions():
+    """The verbs that read data before they can plan do it through
+    ``utils.pin.probe``; a bare action there would run the upstream once
+    for the probe and again for the output.  Spark's ``F.first(col)``
+    aggregate takes an argument and does not match."""
+    action = re.compile(
+        r"\.(collect|first|count|toPandas|toLocalIterator)\(\)|\.(take|head)\("
+    )
+    paths = [
+        os.path.join(PKG, "operators", "reshape.py"),
+        os.path.join(PKG, "operators", "joins.py"),
+        os.path.join(PKG, "operators", "complete.py"),
+        os.path.join(PKG, "sources", "sinks.py"),
+    ]
+    offenders = _offenders(action, paths)
+    assert not offenders, "bare action outside utils.pin.probe:\n" + "\n".join(offenders)
+
+
+def _counted(spark, n):
+    """``n`` rows whose every column derives from one accumulator-counting
+    Python UDF evaluated above a shuffle: the accumulator counts how many
+    times the upstream ran (no query can prune the UDF away), and the
+    shuffle makes the frame replay-unstable, so the probe pins it."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        acc.add(1)
+        return x
+
+    k = F.udf(tick, "long")("id")
+    df = spark.range(n, numPartitions=2).repartition(3).select(k.alias("k")).select(
+        F.floor(F.col("k") / 3).alias("id"),
+        F.concat(F.lit("g"), (F.col("k") % 3).cast("string")).alias("grp"),
+        F.col("k").cast("double").alias("v"),
+        (F.col("k") * 2).cast("double").alias("w"),
+        F.timestamp_seconds(F.col("k") * 7200).alias("ts"),
+    )
+    return df, acc
+
+
+_PIVOTS = {
+    "plain": {},
+    "names_expand": {"names_expand": True},
+    "index_expand": {"index_expand": True},
+    "two_values": {"values_from": ["v", "w"]},
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PIVOTS))
+def test_pivot_wider_runs_upstream_once(spark, case):
+    df, acc = _counted(spark, 21)
+    kw = {"index": "id", "names_from": "grp", "values_from": "v", **_PIVOTS[case]}
+    out = pj.pivot_wider(df.drop("ts"), **kw)
+    assert len(out.collect()) == 7
+    assert acc.value == 21
+
+
+def test_bucketized_conditional_join_runs_upstream_once(spark):
+    df, acc = _counted(spark, 200)
+    right = spark.createDataFrame([(0.0, 10.0), (50.0, 60.0), (100.0, 400.0)], "lo double, hi double")
+    out = pj.conditional_join(df, right, ("v", "lo", ">="), ("v", "hi", "<"), use_bucket=True)
+    assert len(out.collect()) == 10 + 10 + 100
+    assert acc.value == 200
+
+
+def test_fill_missing_timestamps_runs_upstream_once(spark):
+    df, acc = _counted(spark, 50)
+    out = pj.fill_missing_timestamps(df, "1 hour", "ts")
+    assert len(out.collect()) == 99
+    assert acc.value == 50
+
+
+def test_write_zordered_runs_upstream_once(spark, tmp_path):
+    df, acc = _counted(spark, 200)
+    pj.write_zordered(df, str(tmp_path / "z"), ["v", "ts"], num_files=2)
+    assert spark.read.parquet(str(tmp_path / "z")).count() == 200
+    assert acc.value == 200
 
 
 # Runs in its own Spark session: Spark has no public way to unset a
