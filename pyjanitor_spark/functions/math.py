@@ -204,8 +204,8 @@ def apply_math(df: DataFrame, column_name: str, fn, dest: str | None = None) -> 
         # pin the distinct-value counts: totals derive from them (sum of
         # per-value counts == non-null row count — nulls raise above),
         # so the second full scan+aggregate the old `df.agg(count)` plan
-        # ran is gone, and the pinned LogicalRDD is provably replay-
-        # stable so partitioned_cumsum skips its own internal pin
+        # ran is gone, and on these two columns partitioned_cumsum
+        # takes no pin of its own
         counts = pin(
             df.groupBy(column_name).agg(F.count(F.lit(1)).alias("__cnt"))
         )

@@ -32,7 +32,7 @@ from pyspark.sql import types as T
 
 from pyjanitor_spark.operators.text_analysis import word_shingles
 from pyjanitor_spark.utils.expr import let
-from pyjanitor_spark.utils.pin import pin
+from pyjanitor_spark.utils.pin import pin, probe, share
 
 __all__ = [
     "dedupe_exact",
@@ -996,17 +996,18 @@ def near_dup_clusters(
     pair graph — the canonical representative of its duplicate cluster.
 
     Adaptive execution, the same idea as Spark's own broadcast-join
-    threshold: the normalized distinct edge set is pinned and counted
-    once (the count reads the pin); at or below
-    ``small_graph_edges`` (default 1M edges ≈ tens of MB of id pairs —
-    a BOUNDED collect, gated by the count) the components are solved
-    on the driver in one collect — the ids are factorized with
-    ``np.unique`` (index order == id order) and labelled in one
-    :func:`component_labels` call — instead of 3-6 iterative
-    contraction rounds of multi-stage shuffle jobs whose per-job
-    scheduling overhead dwarfs the data at this size.  Above the cap —
-    the 100 TB regime, where LSH over a replicated corpus can emit
-    billions of candidate edges — the distributed alternating star
+    threshold: the normalized distinct edge set is pinned and probed
+    once with a BOUNDED collect of at most ``small_graph_edges + 1``
+    rows (:func:`~pyjanitor_spark.utils.pin.probe`).  The number of
+    rows returned picks the path: at or below ``small_graph_edges``
+    (default 1M edges ≈ tens of MB of id pairs) the returned rows ARE
+    the edge set, and the components are solved on the driver — the
+    ids are factorized with ``np.unique`` (index order == id order)
+    and labelled in one :func:`component_labels` call — instead of 3-6
+    iterative contraction rounds of multi-stage shuffle jobs whose
+    per-job scheduling overhead dwarfs the data at this size.  Above
+    the cap — the 100 TB regime, where LSH over a replicated corpus can
+    emit billions of candidate edges — the distributed alternating star
     contraction below engages; tests pin ``small_graph_edges=0`` to
     exercise it at any size.  Both paths produce the identical
     min-reachable-id labeling.
@@ -1053,40 +1054,39 @@ def near_dup_clusters(
     A pair whose ids are both null names no id and is dropped; a
     half-null pair normalizes to a self-pair of its non-null id.
 
-    The call runs Spark jobs: one ``count`` of the edge set and, on the
-    small-graph path, one bounded ``collect``; on the distributed path,
-    one ``isEmpty`` fixed-point test per round.  Under AQE the edge-set
-    pin and each round's pin also run their upstream shuffle stages
-    when taken (see :func:`~pyjanitor_spark.utils.pin.pin`).  Pins are
-    durable when ``SparkContext.setCheckpointDir`` is set and
+    The call runs Spark jobs: the probe's one bounded ``collect`` (above
+    the cap its ``small_graph_edges + 1`` rows are dropped) and, on the
+    distributed path, one ``isEmpty`` fixed-point test per round.  Under
+    AQE the edge-set pin and each round's pin also run their upstream
+    shuffle stages when taken (see :func:`~pyjanitor_spark.utils.pin.pin`).
+    Pins are durable when ``SparkContext.setCheckpointDir`` is set and
     executor-local otherwise.
     """
-    # normalize child > parent and checkpoint BEFORE the self-loop
-    # filter: ids appearing ONLY in degenerate self-pairs must still be
-    # labeled (singleton roots), and splitting selfs/edges off the one
+    # normalize child > parent and pin BEFORE the self-loop filter: ids
+    # appearing ONLY in degenerate self-pairs must still be labeled
+    # (singleton roots), and splitting selfs/edges off the one
     # materialized frame keeps the (possibly expensive) upstream pair
     # pipeline from being computed twice in the final plan
-    norm = pin(
+    norm, rows = probe(
         pairs.select(
             F.greatest("id_1", "id_2").alias("c"),
             F.least("id_1", "id_2").alias("p"),
-        ).distinct()
+        ).distinct(),
+        lambda f: f.limit(small_graph_edges + 1),
     )
     selfs = norm.filter(F.col("c") == F.col("p")).select(
         F.col("c").alias(id_col)
     )
     edges = norm.filter(F.col("c") != F.col("p"))
 
-    # ---- small-graph fast path: count-gated BOUNDED collect --------
-    n_edges = norm.count()
-    if n_edges <= small_graph_edges:
+    # ---- small-graph fast path: the probe's rows are the edge set --
+    if len(rows) <= small_graph_edges:
         import numpy as np
 
         id_type = norm.schema["c"].dataType
-        # bounded: n_edges <= small_graph_edges; greatest() skips
-        # nulls, so c is null only for a null-null pair, which names
-        # no id (the star path's filters drop it too)
-        cp = [x for r in norm.collect() if r["c"] is not None for x in r]
+        # greatest() skips nulls, so c is null only for a null-null
+        # pair, which names no id (the star path's filters drop it too)
+        cp = [x for r in rows if r["c"] is not None for x in r]
         int_ids = isinstance(id_type, T.IntegralType)
         ids, idx = np.unique(
             np.array(cp, dtype=np.int64 if int_ids else object),
@@ -1243,8 +1243,20 @@ def dedupe_near(
     all pairs — so the candidate stage runs in ``mode='star'`` (each
     bucket's min id × every member: O(bucket) edges, identical
     components).  With verification every candidate pair must be
-    Jaccard-checked, so the all-pairs emitter stays."""
+    Jaccard-checked, so the all-pairs emitter stays.
+
+    The LSH stage, the Jaccard stage and the final anti-join all read
+    :func:`~pyjanitor_spark.utils.pin.share` of ``df``, so an input
+    that does not replay identically (a shuffle, join or
+    nondeterministic expression upstream) is pinned and its upstream
+    runs once.  The call runs Spark jobs: under adaptive query
+    execution that pin and the Jaccard stage's bucket pin run their
+    upstream shuffle and broadcast stages when taken, and
+    :func:`near_dup_clusters` probes the pair graph (one bounded
+    ``collect``, which also stores the pinned input; on the
+    distributed path one ``isEmpty`` per round)."""
     pair_mode = "star" if jaccard_threshold is None else "all"
+    df = share(df)
     pairs = minhash_lsh_pairs(
         df, id_col, column_name,
         k=k, bands=bands, shingle_n=shingle_n, mode=pair_mode,
@@ -1297,16 +1309,21 @@ def contamination_score(
     16-byte binary md5 shingle key; per-doc totals and matches are two
     counts over the same exploded frame, joined on id.  Nothing
     quadratic, no driver-side membership set.
+
+    The corpus is read three times (totals, match counts and the id
+    list the scores join back to), all from
+    :func:`~pyjanitor_spark.utils.pin.share` of ``df``: an input that
+    does not replay identically is pinned, so its upstream runs once.
+    Under adaptive query execution that pin runs the upstream's
+    shuffle and broadcast stages when the call is made; a
+    replay-stable input runs no job.
     """
     if shingle_n < 1:
         raise ValueError("shingle_n must be >= 1")
     bcol = benchmark_column or column_name
+    df = share(df)
     # binary keys (16-byte unhex md5) — the shingle hash is internal, so
-    # the hex form just doubled the semi-join bytes.  The corpus stream
-    # feeds both the totals and the match counts and IS shingled twice;
-    # pinning it was measured a wash at best (the hash-stream serialize
-    # barrier costs what the second parallel explode costs), so the
-    # recompute deliberately stays
+    # the hex form just doubled the semi-join bytes
     doc_sh = (
         df.select(
             F.col(id_col),

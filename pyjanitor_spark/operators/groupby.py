@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyjanitor_spark.utils.order import ensure_order_column, partitioned_cumsum
+from pyjanitor_spark.utils.pin import share
 from pyjanitor_spark.utils.select import resolve_columns
 
 __all__ = [
@@ -360,9 +361,15 @@ def count_cumulative_unique(
     narrow ``(order, value)`` projection flows through the window +
     cumsum pipeline and the result joins back by order key: wide rows
     are shuffled once (the join) and never materialized by the cumsum's
-    layout pin.  Without ``order_by`` the generated id is only
-    consistent within a single pinned plan, so the full frame takes the
-    cumsum path directly."""
+    layout pin.  The narrow branch and the join-back both read
+    :func:`~pyjanitor_spark.utils.pin.share` of ``df``: an input that
+    does not replay identically is pinned, so every row gets the count
+    its own read produced, and under adaptive query execution that pin
+    runs the upstream's shuffle stages when the call is made.  Without
+    ``order_by`` the generated id is only consistent within a single
+    pinned plan, so the full frame takes the cumsum path directly (its
+    layout pin runs the upstream's shuffle stages and the range
+    exchange when the call is made)."""
     if not case_sensitive:
         t = df.schema[column_name].dataType.typeName()
         if t not in ("string", "varchar", "char"):
@@ -375,6 +382,7 @@ def count_cumulative_unique(
     df, ocol, added = ensure_order_column(df, order_by)
     val = F.col(column_name) if case_sensitive else F.lower(F.col(column_name))
     if not added:
+        df = share(df)
         narrow = df.select(F.col(ocol), val.alias("__v"))
         w_first = Window.partitionBy("__v").orderBy(F.col(ocol))
         flagged = narrow.withColumn(

@@ -32,7 +32,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyjanitor_spark.utils.pin import _plan_is_deterministic, pin, probe
+from pyjanitor_spark.utils.pin import probe, share
 
 __all__ = ["conditional_join", "get_join_indices", "asof_join"]
 
@@ -211,8 +211,8 @@ def conditional_join(
     bucketized = rng is not None
     # the outer patch-up re-reads the right side too, and its row ids
     # must agree between the reads
-    if bucketized and how in ("right", "outer", "full") and not _plan_is_deterministic(right):
-        right = pin(right)
+    if bucketized and how in ("right", "outer", "full"):
+        right = share(right)
     need_ids = keep != "all" or bool(indicator) or (bucketized and how != "inner")
     left = df.withColumn(_L_ID, F.monotonically_increasing_id()) if need_ids else df
     rgt = (

@@ -213,7 +213,10 @@ def take_token_budget(
     :func:`~pyjanitor_spark.utils.order.partitioned_cumsum` — range
     repartition + per-partition partials + broadcast offsets, no
     single-task stage.  ``dest`` keeps every row and adds the
-    cumulative-token column instead of filtering.
+    cumulative-token column instead of filtering.  The running sum
+    carries every column, so ``partitioned_cumsum`` pins its
+    range-exchanged frame: under adaptive query execution the call
+    runs the upstream's shuffle stages and the range exchange.
     """
     from pyjanitor_spark.operators.text_analysis import tokens
     from pyjanitor_spark.utils.order import partitioned_cumsum

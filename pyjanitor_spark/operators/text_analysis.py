@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pyjanitor_spark.utils.expr import let
-from pyjanitor_spark.utils.pin import pin
+from pyjanitor_spark.utils.pin import pin, share
 
 __all__ = [
     "tokens",
@@ -1026,11 +1026,20 @@ def assign_packs(
     running sum (:func:`~pyjanitor_spark.utils.order.partitioned_cumsum`
     — range partition + broadcast offsets, no single-task stage); the
     pack id joins back by order key, so wide rows shuffle exactly once.
+
+    The running sum and the join-back read one frame,
+    :func:`~pyjanitor_spark.utils.pin.share` of ``df``: an input that
+    does not replay identically (a shuffle, join or nondeterministic
+    expression upstream) is pinned, so every row gets the pack its own
+    tokens were counted into.  Under adaptive query execution that pin
+    runs the upstream's shuffle and broadcast stages when the call is
+    made; a replay-stable input runs no job.
     """
     if max_tokens < 1:
         raise ValueError("max_tokens must be >= 1")
     from pyjanitor_spark.utils.order import partitioned_cumsum
 
+    df = share(df)
     narrow = df.select(
         F.col(order_by), F.size(tokens(F.col(column_name), mode)).alias("__ntok")
     )

@@ -947,8 +947,8 @@ def quantile_bin(
     # pin the distinct-value counts: they feed both the prefix sum and
     # the totals row — unpinned, the totals branch re-ran the scan +
     # aggregate and re-joined the cumsum offsets; pinned, totals is one
-    # tiny aggregate over the O(distinct) table, and the stable
-    # LogicalRDD lets partitioned_cumsum skip its own internal pin
+    # tiny aggregate over the O(distinct) table, and on these two
+    # columns partitioned_cumsum takes no pin of its own
     counts = pin(
         df.filter(col.isNotNull())
         .groupBy(from_column_name)
@@ -1461,8 +1461,8 @@ def quantiles(
     col = F.col(column_name)
     # pin the distinct-value counts (same rationale as quantile_bin):
     # the totals row otherwise re-runs the scan + aggregate + cumsum
-    # offsets branch, and the stable LogicalRDD lets partitioned_cumsum
-    # skip its own internal pin
+    # offsets branch, and on these two columns partitioned_cumsum takes
+    # no pin of its own
     counts = pin(
         df.filter(col.isNotNull())
         .groupBy(column_name)

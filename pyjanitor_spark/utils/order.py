@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyjanitor_spark.utils.pin import _plan_is_deterministic, pin
+from pyjanitor_spark.utils.pin import pin, share
 
 ORDER_COL = "_row_order"
 
@@ -40,24 +40,17 @@ def positional_index(df: DataFrame, name: str) -> DataFrame:
     no global single-task window.  After an ``orderBy`` (range-partitioned
     total sort) this yields the global sort rank.
 
-    When the upstream plan is nondeterministic (rand/sample/uuid/…) or
-    shuffled, :func:`~pyjanitor_spark.utils.pin.pin` materializes the
-    input before the plan branches: the offsets aggregate and the
-    joined branch must read the SAME partition layout, and without
-    materialization a nondeterministic upstream (or an AQE re-plan
-    between the two executions) could hand each branch different
-    ``__pid``/``__mid`` assignments.  Only a provably replay-stable
-    plan — all expressions deterministic AND no exchange
-    (``_plan_is_deterministic``) — skips the pin and its extra
-    materialization.  A pinned call runs the upstream's shuffle stages
-    when it is made (see ``pin``)."""
+    The offsets aggregate and the joined branch must read the SAME
+    partition layout, so both start from
+    :func:`~pyjanitor_spark.utils.pin.share`: a replay-unstable input
+    (nondeterministic or shuffled) is pinned, and that pin runs the
+    upstream's shuffle stages when the call is made; a replay-stable
+    one runs no job."""
     from pyspark.sql import Window
 
-    d = df.withColumn("__pid", F.spark_partition_id()).withColumn(
+    d = share(df).withColumn("__pid", F.spark_partition_id()).withColumn(
         "__mid", F.monotonically_increasing_id()
     )
-    if not _plan_is_deterministic(df):
-        d = pin(d)
     sizes = d.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
     w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = sizes.withColumn(
@@ -86,13 +79,19 @@ def partitioned_cumsum(
     one partition), per-partition partial sums, broadcast the cumulative
     offsets (one tiny #partitions-row aggregate — the only unpartitioned
     window, bounded by the partition count), then an in-partition
-    cumulative window plus the offset.  For nondeterministic or
-    shuffled inputs :func:`~pyjanitor_spark.utils.pin.pin` fixes the
-    partition layout so the offsets aggregate and the main branch read
-    identical partitions; a deterministic plan skips the pin — the
-    identical range exchange on both branches is computed once via
-    exchange reuse, or replays bit-identically if not (see
-    ``positional_index``)."""
+    cumulative window plus the offset.
+
+    The offsets aggregate and the joined branch must read ONE execution
+    of the range exchange: it draws its bounds from a sample seeded per
+    execution, so two executions split even identical rows differently
+    once a partition outgrows the sample.  When the input holds only
+    ``order_col`` and ``value_col``, both branches need the same columns
+    and Spark reuses the exchange (``spark.sql.exchange.reuse``, on by
+    default), so the call runs no job whatever the upstream.  Any other
+    column is pruned from one branch only, so the exchanged frame is
+    pinned (:func:`~pyjanitor_spark.utils.pin.pin`), and under adaptive
+    query execution that pin runs the upstream's shuffle stages and the
+    range exchange when the call is made."""
     from pyspark.sql import Window
 
     if num_partitions is not None and num_partitions < 1:
@@ -105,20 +104,10 @@ def partitioned_cumsum(
     # partition counts — diverging __pid between the offsets aggregate
     # and the join-back.  An explicit count is never AQE-coalesced.
     if num_partitions is None:
-        try:
-            num_partitions = int(
-                df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except Exception:
-            num_partitions = 200
+        num_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     d = df.repartitionByRange(num_partitions, order)
     d = d.withColumn("__pid", F.spark_partition_id())
-    if not _plan_is_deterministic(df):
-        # nondeterministic or shuffled upstream: pin the layout so the
-        # offsets agg and the joined branch read the SAME partition
-        # assignment (deterministic exchange-free inputs replay
-        # bit-identically through the fixed-count, fixed-seed range
-        # exchange on both branches)
+    if set(df.columns) - {order_col, value_col}:
         d = pin(d)
     sizes = d.groupBy("__pid").agg(
         F.coalesce(F.sum(value_col), F.lit(0)).alias("__psum")

@@ -1,8 +1,18 @@
 """The pin policy: ``pin`` is the one place the library materialises a
-reused intermediate; ``_plan_is_deterministic`` decides whether a frame
-read twice needs one (``positional_index`` / ``partitioned_cumsum``'s
-two branch reads, a pre-flight probe and the output it plans); and
-``probe`` is the one way a verb reads data before it can plan.
+reused intermediate; ``share`` is the one "pin unless replay-stable"
+decision, taken by every verb that reads its input in more than one
+branch (``positional_index``, ``assign_packs``,
+``count_cumulative_unique``, ``dedupe_near``, ``contamination_score``,
+the bucketized outer ``conditional_join``'s right side); and ``probe``
+(``share`` plus one ``collect``) is the one way a verb reads data
+before it can plan.  ``partitioned_cumsum`` instead pins the output of
+its own range exchange when its two branches cannot share one
+execution of it (see its docstring).
+
+A verb call runs no Spark job unless its docstring names the action.
+``share`` is lazy except on a frame it pins: under adaptive query
+execution (the default) that pin runs the upstream's shuffle and
+broadcast stages as Spark jobs when it is taken (see ``pin``).
 """
 
 from __future__ import annotations
@@ -11,7 +21,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, Row
 
-__all__ = ["pin", "probe"]
+__all__ = ["pin", "probe", "share"]
 
 
 def pin(df: DataFrame) -> DataFrame:
@@ -48,25 +58,35 @@ def pin(df: DataFrame) -> DataFrame:
     return local
 
 
+def share(df: DataFrame) -> DataFrame:
+    """The frame a verb that reads ``df`` more than once builds from:
+    ``df`` itself when ``_plan_is_deterministic(df)`` holds (narrow and
+    deterministic: every re-read replays the same rows), else
+    ``pin(df)``, so every read sees one run of the upstream.
+
+    A replay-stable ``df`` runs no job.  A pinned one runs, when
+    ``share`` is called, the upstream's shuffle and broadcast stages
+    (adaptive query execution materialises them, see ``pin``); the
+    first action that reads the result stores its rows."""
+    return df if _plan_is_deterministic(df) else pin(df)
+
+
 def probe(
     df: DataFrame, query: Callable[[DataFrame], DataFrame]
 ) -> tuple[DataFrame, list[Row]]:
     """Run a verb's pre-flight query and hand back the frame to build
     the output from, so the probe and the output share ONE run of the
-    upstream.  Returns ``(frame, rows)``:
-
-    * ``frame`` is ``df`` itself when ``_plan_is_deterministic(df)``
-      holds (exchange-free, replays identically: re-reading it costs a
-      scan and yields the same rows), else ``pin(df)``;
-    * ``rows`` is ``query(frame).collect()`` — the helper's one action.
+    upstream.  Returns ``(frame, rows)``: ``frame`` is ``share(df)``
+    and ``rows`` is ``query(frame).collect()``, the helper's one
+    action.
 
     On a pinned frame the call runs the pin's upstream shuffle and
-    broadcast stages (adaptive query execution materialises them, see
-    ``pin``), then the query's jobs, which also store the pinned rows;
-    the caller's output later reads those stored rows instead of
-    recomputing the upstream.  Keep ``query`` small (an aggregate or a
-    ``distinct`` of a few columns): its rows come to the driver."""
-    frame = df if _plan_is_deterministic(df) else pin(df)
+    broadcast stages (see ``share``), then the query's jobs, which also
+    store the pinned rows; the caller's output later reads those stored
+    rows instead of recomputing the upstream.  Keep ``query`` small (an
+    aggregate, a ``distinct`` of a few columns or a ``limit``): its
+    rows come to the driver."""
+    frame = share(df)
     return frame, query(frame).collect()
 
 
@@ -92,8 +112,8 @@ def _plan_is_deterministic(df: DataFrame) -> bool:
       operators only.  Narrow-only analyzed trees translate to
       exchange-free physical plans (no node introduces a distribution
       requirement), which is load-bearing even with all expressions
-      deterministic: the two branch reads in ``positional_index`` and
-      ``partitioned_cumsum`` are separately column-pruned subtrees, so
+      deterministic: the branch reads of a shared frame (e.g. in
+      ``positional_index``) are separately column-pruned subtrees, so
       exchange reuse is not guaranteed, and AQE may coalesce each
       branch's re-executed shuffle into a different partition count
       (pruned byte sizes differ) — diverging ``__pid`` assignments

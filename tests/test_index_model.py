@@ -172,6 +172,29 @@ def test_partitioned_cumsum_pin_skipped_for_deterministic_plan(spark, tmp_path):
     assert got == want
 
 
+def test_partitioned_cumsum_on_wide_replay_stable_input(spark):
+    """A deterministic, exchange-free input with a column beyond the
+    order and value columns: the offsets branch prunes that column, so
+    the two branches run separate range exchanges, whose sampled bounds
+    differ once a partition holds more rows than the sample."""
+    from pyjanitor_spark.utils.order import partitioned_cumsum
+
+    df = spark.range(4000, numPartitions=2).select(
+        F.col("id").alias("o"),
+        (F.col("id") % 7).alias("v"),
+        F.col("id").cast("string").alias("pad"),
+    )
+    rows = sorted(
+        (r["o"], r["cum"])
+        for r in partitioned_cumsum(df, "v", "o", "cum", num_partitions=4).collect()
+    )
+    acc, want = 0, []
+    for i in range(4000):
+        acc += i % 7
+        want.append((i, acc))
+    assert rows == want
+
+
 def _unstable_input(spark, kind):
     """(o, v, pad) frames whose re-execution can differ: the inputs the
     conditional pin in positional_index / partitioned_cumsum exists for.

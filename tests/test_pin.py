@@ -1,7 +1,9 @@
 """The pin policy (pyjanitor_spark/utils/pin.py): every checkpoint the
-library takes goes through ``pin``, every pre-flight read of the data
-goes through ``probe`` (so the probe and the verb's output share one run
-of the upstream), and a deployment that sets
+library takes goes through ``pin``, every "pin unless replay-stable"
+decision goes through ``share`` (so a verb that reads its input twice
+reads one run of the upstream), every pre-flight read of the data goes
+through ``probe`` (so the probe and the verb's output share one run of
+the upstream), and a deployment that sets
 ``SparkContext.setCheckpointDir`` gets durable pins everywhere."""
 
 from __future__ import annotations
@@ -33,20 +35,31 @@ def _offenders(pattern: re.Pattern, paths: list[str]) -> list[str]:
     return out
 
 
+def _outside_pin_module() -> list[str]:
+    allowed = os.path.join(PKG, "utils", "pin.py")
+    return [
+        os.path.join(root, name)
+        for root, _dirs, files in os.walk(PKG)
+        for name in files
+        if name.endswith(".py") and os.path.join(root, name) != allowed
+    ]
+
+
 def test_checkpoint_calls_only_in_pin_module():
     """A checkpoint call anywhere else would be a second pin policy.
     Streaming's ``checkpointLocation`` option is not a call and does
     not match."""
     call = re.compile(r"localCheckpoint\(|\.checkpoint\(")
-    allowed = os.path.join(PKG, "utils", "pin.py")
-    paths = [
-        os.path.join(root, name)
-        for root, _dirs, files in os.walk(PKG)
-        for name in files
-        if name.endswith(".py")
-    ]
-    offenders = _offenders(call, [p for p in paths if p != allowed])
+    offenders = _offenders(call, _outside_pin_module())
     assert not offenders, "checkpoint outside utils/pin.py:\n" + "\n".join(offenders)
+
+
+def test_replay_rule_only_in_share():
+    """``share`` is the one "pin unless replay-stable" decision: a verb
+    that asks ``_plan_is_deterministic`` itself would be a second
+    replay policy."""
+    offenders = _offenders(re.compile(r"_plan_is_deterministic"), _outside_pin_module())
+    assert not offenders, "replay rule outside utils/pin.py:\n" + "\n".join(offenders)
 
 
 def test_probing_verbs_have_no_bare_actions():
@@ -128,6 +141,71 @@ def test_write_zordered_runs_upstream_once(spark, tmp_path):
     assert acc.value == 200
 
 
+def _counted_docs(spark, n):
+    """``_counted`` as documents: a unique long ``doc_id`` and a ``text``
+    that is one of three bodies, so each body is an exact-duplicate
+    cluster and no two bodies reach Jaccard 0.8."""
+    df, acc = _counted(spark, n)
+    body = F.concat(F.lit("alpha beta gamma delta epsilon "), F.col("grp"))
+    return df.select(F.col("v").cast("long").alias("doc_id"), body.alias("text")), acc
+
+
+def test_dedupe_near_runs_upstream_once(spark):
+    df, acc = _counted_docs(spark, 30)
+    out = pj.dedupe_near(df, "doc_id", "text", jaccard_threshold=0.8)
+    assert sorted(r["doc_id"] for r in out.collect()) == [0, 1, 2]
+    assert acc.value == 30
+
+
+def test_contamination_score_runs_upstream_once(spark):
+    df, acc = _counted_docs(spark, 30)
+    bench = spark.createDataFrame([("alpha beta gamma delta epsilon g1",)], "text string")
+    out = pj.contamination_score(df, bench, "doc_id", "text", shingle_n=3)
+    got = {r["doc_id"]: r["contamination"] for r in out.collect()}
+    assert got == {i: (1.0 if i % 3 == 1 else 0.75) for i in range(30)}
+    assert acc.value == 30
+
+
+def test_assign_packs_runs_upstream_once(spark):
+    df, acc = _counted_docs(spark, 30)
+    out = pj.assign_packs(df, "text", max_tokens=12, order_by="doc_id")
+    got = {r["doc_id"]: r["pack_id"] for r in out.collect()}
+    assert got == {i: max(0, (6 * (i + 1) - 1) // 12) for i in range(30)}
+    assert acc.value == 30
+
+
+def test_assign_packs_on_nondeterministic_input(spark):
+    """The running sum and the join-back must read one run of an input
+    that differs on every read: every row gets a pack, and the packs
+    are the serial packing of exactly the rows returned."""
+    import random
+
+    from pyspark.sql.types import BooleanType
+
+    coin = F.udf(lambda _: random.random() < 0.5, BooleanType()).asNondeterministic()
+    df = (
+        spark.range(2000, numPartitions=4)
+        .filter(coin("id"))
+        .select(
+            F.col("id").alias("doc_id"),
+            F.concat_ws(" ", F.array_repeat(F.lit("w"), (F.col("id") % 5 + 1).cast("int")))
+            .alias("text"),
+        )
+    )
+    rows = sorted(
+        (r["doc_id"], r["pack_id"])
+        for r in pj.assign_packs(df, "text", max_tokens=7, order_by="doc_id").collect()
+    )
+    assert rows and all(p is not None for _, p in rows)
+    packs = [p for _, p in rows]
+    assert packs == sorted(packs)
+    cum, want = 0, []
+    for i, _ in rows:
+        cum += i % 5 + 1
+        want.append(max(0, (cum - 1) // 7))
+    assert packs == want
+
+
 # Runs in its own Spark session: Spark has no public way to unset a
 # checkpoint dir, so setting one in the shared test session would turn
 # every later pin in the suite into a reliable checkpoint.
@@ -189,3 +267,25 @@ def test_pin_durable_checkpoint_dir(tmp_path):
         if f.startswith("part-")
     ]
     assert written, f"no reliable checkpoint files under {ckpt}"
+
+
+def test_count_cumulative_unique_on_nondeterministic_input(spark):
+    """With ``order_by`` the running count and its join-back must read
+    one run of an input that differs on every read."""
+    import random
+
+    from pyspark.sql.types import BooleanType
+
+    coin = F.udf(lambda _: random.random() < 0.5, BooleanType()).asNondeterministic()
+    df = spark.range(2000, numPartitions=4).filter(coin("id")).select(
+        "id", (F.col("id") % 13).alias("val")
+    )
+    rows = sorted(
+        (r["id"], r["cnt"])
+        for r in pj.count_cumulative_unique(df, "val", "cnt", order_by="id").collect()
+    )
+    seen, want = set(), []
+    for i, _ in rows:
+        seen.add(i % 13)
+        want.append((i, len(seen)))
+    assert rows and rows == want
