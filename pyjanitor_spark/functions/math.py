@@ -149,9 +149,12 @@ def apply_math(df: DataFrame, column_name: str, fn, dest: str | None = None) -> 
     For the whole-column statistics (``z_score``, ``softmax``) this takes
     the SCALABLE path: a two-stage partial aggregate broadcast-joined
     back to the rows (fully lazy, no empty-partition window, no
-    single-task stage).  Everything else is the plain expression."""
+    single-task stage).  ``ecdf`` starts from ``share(df)``: a
+    replay-unstable input is pinned, which under AQE runs its shuffle
+    stages when called.  Everything else is the plain expression."""
     dest = dest or column_name
     col = F.col(column_name)
+    # z_score/softmax still read df twice without share(df); wrangle calls z_score, so that fix needs its own A/B
     if fn is z_score:
         stats = df.agg(
             F.avg(col).alias("__mu"), F.stddev(col).alias("__sd")
@@ -191,11 +194,12 @@ def apply_math(df: DataFrame, column_name: str, fn, dest: str | None = None) -> 
         # enforced by an inline assert_true that rides the groupBy's own
         # scan instead of a separate eager count action.
         from pyjanitor_spark.utils.order import partitioned_cumsum
-        from pyjanitor_spark.utils.pin import pin
+        from pyjanitor_spark.utils.pin import pin, share
 
         numeric = ("integer", "long", "double", "float", "short", "byte", "decimal")
         if df.schema[column_name].dataType.typeName() not in numeric:
             raise TypeError(f"ecdf: column {column_name!r} dtype should be numeric.")
+        df = share(df)
         guard = F.assert_true(
             col.isNotNull(), F.lit(f"ecdf: column {column_name!r} contains nulls; drop them first.")
         )

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyjanitor_spark.operators.text_analysis import tokens
+from pyjanitor_spark.utils.local import local_frame
 from pyjanitor_spark.utils.pin import pin
 
 __all__ = ["nb_train", "nb_score"]
@@ -109,8 +110,10 @@ def nb_train(
     )
     # priors from the already-collected per-class counts; ln stays on
     # the JVM so the value matches the oracle's ln bit-for-bit
-    priors = df.sparkSession.createDataFrame(
-        [(r["label"], r["d"]) for r in ndoc_rows], "label string, d long"
+    priors = local_frame(
+        df.sparkSession,
+        [(r["label"], r["d"]) for r in ndoc_rows],
+        "label string, d long",
     ).select(
         F.lit(None).cast("string").alias("token"),
         "label",

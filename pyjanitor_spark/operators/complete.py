@@ -20,6 +20,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyjanitor_spark.utils.local import local_frame
 from pyjanitor_spark.utils.pin import probe
 
 __all__ = ["expand", "expand_grid", "cartesian_product", "complete", "fill_missing_timestamps"]
@@ -40,7 +41,8 @@ def _value_set(df: DataFrame, spec: Any, spark: SparkSession) -> DataFrame:
         if callable(values):
             values = values(df)
         vals = [(v,) for v in values]
-        return spark.createDataFrame(vals, [name])
+        # the types Spark's own inference gives this row list
+        return local_frame(spark, vals, spark._inferSchemaFromList(vals, [name]))
     if isinstance(spec, DataFrame):
         return spec
     raise TypeError(f"unsupported expand spec: {type(spec)!r}")

@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 
 from pyjanitor_spark.operators.text_analysis import word_shingles
 from pyjanitor_spark.utils.expr import let
+from pyjanitor_spark.utils.local import local_frame
 from pyjanitor_spark.utils.pin import pin, probe, share
 
 __all__ = [
@@ -1005,7 +1006,10 @@ def near_dup_clusters(
     ids are factorized with ``np.unique`` (index order == id order)
     and labelled in one :func:`component_labels` call — instead of 3-6
     iterative contraction rounds of multi-stage shuffle jobs whose
-    per-job scheduling overhead dwarfs the data at this size.  Above
+    per-job scheduling overhead dwarfs the data at this size.  The
+    labels come back as a driver-built ``LocalRelation``
+    (:func:`~pyjanitor_spark.utils.local.local_frame`), so every later
+    read takes them from the plan and starts no Python worker.  Above
     the cap — the 100 TB regime, where LSH over a replicated corpus can
     emit billions of candidate edges — the distributed alternating star
     contraction below engages; tests pin ``small_graph_edges=0`` to
@@ -1102,8 +1106,8 @@ def near_dup_clusters(
                 T.StructField(dest, id_type),
             ]
         )
-        out = spark.createDataFrame(
-            list(zip(ids.tolist(), ids[lab].tolist())), labels_schema
+        out = local_frame(
+            spark, zip(ids.tolist(), ids[lab].tolist()), labels_schema
         )
         if nodes is not None:
             all_ids = nodes.select(F.col(id_col)).distinct()
@@ -1254,7 +1258,13 @@ def dedupe_near(
     upstream shuffle and broadcast stages when taken, and
     :func:`near_dup_clusters` probes the pair graph (one bounded
     ``collect``, which also stores the pinned input; on the
-    distributed path one ``isEmpty`` per round)."""
+    distributed path one ``isEmpty`` per round).
+
+    On the small-graph path the cluster labels are a driver-built
+    ``LocalRelation``: the anti-join and every later read of the output
+    (a downstream pin, the sink) take them from the plan, start no
+    Python worker, and can broadcast them instead of shuffling the
+    text rows."""
     pair_mode = "star" if jaccard_threshold is None else "all"
     df = share(df)
     pairs = minhash_lsh_pairs(
@@ -1501,7 +1511,8 @@ def bloom_build(
     bitmaps: dict[int, list[int]] = {s: [0] * nwords for s in range(shards)}
     for row in words.collect():  # bounded: ≤ shards * m/64 rows (documented action)
         bitmaps[row["__shard"]][row["__w"]] = row["__word"]
-    return reference.sparkSession.createDataFrame(
+    return local_frame(
+        reference.sparkSession,
         [(s, bm, m, h, _BLOOM_HASH_SCHEME) for s, bm in bitmaps.items()],
         "__shard bigint, __bloom array<bigint>, __m bigint, __h int, __hv int",
     )

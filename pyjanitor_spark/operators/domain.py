@@ -18,6 +18,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyjanitor_spark.utils.local import local_frame
+
 __all__ = [
     "join_fasta",
     "convert_units",
@@ -68,9 +70,10 @@ def join_fasta(
 
     The FASTA file is parsed on the driver (small by construction) and
     BROADCAST — the big side never shuffles."""
-    spark = df.sparkSession
     recs = _parse_fasta(filename)
-    fasta = spark.createDataFrame(recs, f"`{id_col}` string, `{column_name}` string")
+    fasta = local_frame(
+        df.sparkSession, recs, f"`{id_col}` string, `{column_name}` string"
+    )
     return df.join(F.broadcast(fasta), on=id_col, how="left")
 
 
@@ -270,7 +273,8 @@ def data_description(
         )
         for c in df.columns
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "column_name string, type string, count long, "
         "pct_missing double, description string",

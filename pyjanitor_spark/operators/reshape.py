@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pyjanitor_spark.utils.local import local_frame
 from pyjanitor_spark.utils.pin import probe
 from pyjanitor_spark.utils.select import resolve_columns
 
@@ -488,9 +489,10 @@ def pivot_wider(
         grid: DataFrame | None = None
         for c in idx:
             if isinstance(index_expand, dict) and c in index_expand:
-                spark = df.sparkSession
-                lv = spark.createDataFrame(
-                    [(v,) for v in index_expand[c]], f"`{c}` string"
+                lv = local_frame(
+                    df.sparkSession,
+                    [(v,) for v in index_expand[c]],
+                    f"`{c}` string",
                 ).select(F.col(c).cast(types[c]))
             else:
                 lv = frame.select(c).distinct()

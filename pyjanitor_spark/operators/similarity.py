@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyjanitor_spark.operators.dedup import cosine_sim
+from pyjanitor_spark.utils.local import local_frame
 from pyjanitor_spark.utils.pin import pin
 
 __all__ = [
@@ -643,7 +644,8 @@ def _with_cluster(
     plane carries the k*dim doubles."""
     if len(cents) <= _KMEANS_LITERAL_MAX:
         return df.withColumn(dest, _argmin_cluster(v, cents))
-    cdf = df.sparkSession.createDataFrame(
+    cdf = local_frame(
+        df.sparkSession,
         [([list(map(float, c)) for c in cents],)],
         "__cents array<array<double>>",
     )
@@ -809,8 +811,8 @@ def _pq_train_cents(
         # so a single shuffle per round updates every codebook
         spark = df.sparkSession
         for _ in range(iters):
-            cdf = spark.createDataFrame(
-                [(cents,)], "__cb array<array<array<double>>>"
+            cdf = local_frame(
+                spark, [(cents,)], "__cb array<array<array<double>>>"
             )
             assigned = (
                 base.select(
@@ -878,8 +880,8 @@ def pq_train(
         for s in range(len(cents))
         for c in range(len(cents[s]))
     ]
-    return df.sparkSession.createDataFrame(
-        rows, "sub int, code int, centroid array<double>"
+    return local_frame(
+        df.sparkSession, rows, "sub int, code int, centroid array<double>"
     )
 
 
@@ -938,8 +940,8 @@ def pq_encode(
     if total <= _KMEANS_LITERAL_MAX:
         return df.withColumn(dest, _pq_codes(v, cents))
     m, dsub = len(cents), len(cents[0][0])
-    cdf = df.sparkSession.createDataFrame(
-        [(cents,)], "__cb array<array<array<double>>>"
+    cdf = local_frame(
+        df.sparkSession, [(cents,)], "__cb array<array<array<double>>>"
     )
     return (
         df.crossJoin(F.broadcast(cdf))

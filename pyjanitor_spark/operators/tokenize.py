@@ -29,6 +29,8 @@ from typing import Iterable, Union
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyjanitor_spark.utils.local import local_frame
+
 from .text_analysis import tokens
 
 __all__ = ["bpe_train", "bpe_encode", "bpe_token_count"]
@@ -129,8 +131,8 @@ def bpe_train(
         .collect()
     )
     merges = _train_merges([(r["w"], r["c"]) for r in wc], n_merges, min_frequency)
-    spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(i + 1, a, b) for i, (a, b) in enumerate(merges)],
         "rank int, left string, right string",
     )

@@ -14,7 +14,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyjanitor_spark.utils.pin import pin
+from pyjanitor_spark.utils.pin import pin, share
 from pyjanitor_spark.utils.select import resolve_columns
 
 __all__ = [
@@ -936,6 +936,10 @@ def quantile_bin(
     of every stage is O(k), so a 100 TB column with bounded cardinality
     bins at scan cost; a near-unique column degrades gracefully to the
     sort-based rank it would need anyway.
+
+    The counts and the join-back read ``share(df)``: a replay-unstable
+    input is pinned (under AQE its shuffle stages run when called), so
+    every row gets the bin of its own value.
     """
     from ..utils.order import partitioned_cumsum
 
@@ -943,6 +947,7 @@ def quantile_bin(
         raise ValueError("q must be >= 1")
     if labels is not None and len(labels) != q:
         raise ValueError("labels must have exactly q entries")
+    df = share(df)
     col = F.col(from_column_name)
     # pin the distinct-value counts: they feed both the prefix sum and
     # the totals row — unpinned, the totals branch re-ran the scan +

@@ -80,6 +80,26 @@ def test_probing_verbs_have_no_bare_actions():
     assert not offenders, "bare action outside utils.pin.probe:\n" + "\n".join(offenders)
 
 
+def test_driver_rows_become_frames_only_via_local_frame():
+    """Operators build a frame from driver-side rows only through
+    ``utils.local.local_frame`` (an Arrow-built ``LocalRelation``): a
+    row list handed to ``createDataFrame`` is a pickled Python RDD that
+    starts Python workers on every read.  ``sources/`` readers are
+    exempt: each builds a frame once from an external file, and the
+    type inference of that call is part of the reader's contract."""
+    paths = [
+        os.path.join(root, name)
+        for sub in ("operators", "functions")
+        for root, _dirs, files in os.walk(os.path.join(PKG, sub))
+        for name in files
+        if name.endswith(".py")
+    ]
+    offenders = _offenders(re.compile(r"createDataFrame\("), paths)
+    assert not offenders, "frame from driver rows outside local_frame:\n" + "\n".join(
+        offenders
+    )
+
+
 def _counted(spark, n):
     """``n`` rows whose every column derives from one accumulator-counting
     Python UDF evaluated above a shuffle: the accumulator counts how many
@@ -289,3 +309,40 @@ def test_count_cumulative_unique_on_nondeterministic_input(spark):
         seen.add(i % 13)
         want.append((i, len(seen)))
     assert rows and rows == want
+
+
+def _coin_filtered(spark):
+    """2000 ids filtered by a coin flip that differs on every read, with
+    a value column ``v`` that ties ids in pairs."""
+    import random
+
+    from pyspark.sql.types import BooleanType
+
+    coin = F.udf(lambda _: random.random() < 0.5, BooleanType()).asNondeterministic()
+    return spark.range(2000, numPartitions=4).filter(coin("id")).select(
+        "id", (F.col("id") / 2).cast("long").alias("v")
+    )
+
+
+def test_quantile_bin_on_nondeterministic_input(spark):
+    """The value counts and the join-back read one run of the input:
+    every row gets a bin, the bin of its value among the rows returned."""
+    df = _coin_filtered(spark)
+    rows = [(r["v"], r["bin"]) for r in pj.quantile_bin(df, "v", "bin", q=4).collect()]
+    assert rows and all(b is not None for _, b in rows)
+    vals = sorted(v for v, _ in rows)
+    n = len(vals)
+    le = {v: sum(1 for x in vals if x <= v) for v in set(vals)}
+    assert all(b == (le[v] - 1) * 4 // n for v, b in rows)
+
+
+def test_ecdf_on_nondeterministic_input(spark):
+    """``apply_math(..., ecdf)``: every row's ecdf is the fraction of the
+    returned rows whose value is at most its own."""
+    df = _coin_filtered(spark)
+    rows = [(r["v"], r["e"]) for r in pj.functions.apply_math(df, "v", pj.ecdf, dest="e").collect()]
+    assert rows and all(e is not None for _, e in rows)
+    vals = sorted(v for v, _ in rows)
+    n = len(vals)
+    le = {v: sum(1 for x in vals if x <= v) for v in set(vals)}
+    assert all(e == le[v] / n for v, e in rows)
