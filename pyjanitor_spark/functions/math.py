@@ -134,8 +134,8 @@ def ecdf(col: Column) -> Column:
     """Empirical CDF: fraction of values <= x (ref ``math.py:330-377``).
     Whole-column statistic — the bare Column form refuses (``cume_dist``
     over a total order is a single-task window); use
-    ``apply_math(df, column, ecdf)``: distinct-value prefix sum via
-    ``partitioned_cumsum``, no single-task stage."""
+    ``apply_math(df, column, ecdf)``: the distinct-value CDF of
+    ``utils.order.value_cdf``, no single-task stage."""
     raise ValueError(
         "ecdf is a whole-column statistic; the Column form would plan a "
         "single-task cume_dist window. Use apply_math(df, column, ecdf) — "
@@ -146,15 +146,26 @@ def ecdf(col: Column) -> Column:
 def apply_math(df: DataFrame, column_name: str, fn, dest: str | None = None) -> DataFrame:
     """Frame-level wrapper: ``apply_math(df, 'x', sigmoid)``.
 
-    For the whole-column statistics (``z_score``, ``softmax``) this takes
-    the SCALABLE path: a two-stage partial aggregate broadcast-joined
-    back to the rows (fully lazy, no empty-partition window, no
-    single-task stage).  ``ecdf`` starts from ``share(df)``: a
-    replay-unstable input is pinned, which under AQE runs its shuffle
-    stages when called.  Everything else is the plain expression."""
+    The whole-column statistics start from ``share(df)`` (the statistic
+    and the rows read one run of it): ``z_score`` and ``softmax`` attach
+    one-row aggregates by broadcast, ``ecdf`` joins back the
+    distinct-value CDF of ``utils.order.value_cdf``.  Call-time jobs:
+    the ``share`` pin's stages on a replay-unstable input, and for
+    ``ecdf`` the value counts' ``groupBy`` stage.  Everything else is the
+    plain expression."""
     dest = dest or column_name
     col = F.col(column_name)
-    # z_score/softmax still read df twice without share(df); wrangle calls z_score, so that fix needs its own A/B
+    if fn not in (z_score, softmax, ecdf):
+        return df.withColumn(dest, fn(col))
+    from pyjanitor_spark.utils.pin import share
+
+    if fn is ecdf:
+        # reference contract (math.py:330-376): a non-numeric dtype is a
+        # TypeError at once, from the schema
+        numeric = ("integer", "long", "double", "float", "short", "byte", "decimal")
+        if df.schema[column_name].dataType.typeName() not in numeric:
+            raise TypeError(f"ecdf: column {column_name!r} dtype should be numeric.")
+    df = share(df)
     if fn is z_score:
         stats = df.agg(
             F.avg(col).alias("__mu"), F.stddev(col).alias("__sd")
@@ -179,50 +190,21 @@ def apply_math(df: DataFrame, column_name: str, fn, dest: str | None = None) -> 
             .withColumn(dest, F.exp(col - F.col("__mx")) / F.col("__tot"))
             .drop("__mx", "__tot")
         )
-    if fn is ecdf:
-        # scalable exact cume_dist — on the DISTINCT values, not the
-        # rows: ecdf(x) = cnt_le(x)/n, and cnt_le is an inclusive prefix
-        # sum of groupBy(value).count() over the value order
-        # (partitioned_cumsum: range partition + broadcast offsets, no
-        # single-task stage).  The data side is touched exactly once, by
-        # the value-keyed join back — the full rows never pass through a
-        # sort, window, or checkpoint.  With k distinct values every
-        # heavy stage is O(k).
-        #
-        # Reference contract (math.py:330-376): non-numeric dtype is a
-        # TypeError at once (free, from the schema); null values raise —
-        # enforced by an inline assert_true that rides the groupBy's own
-        # scan instead of a separate eager count action.
-        from pyjanitor_spark.utils.order import partitioned_cumsum
-        from pyjanitor_spark.utils.pin import pin, share
+    from pyjanitor_spark.utils.order import value_cdf
 
-        numeric = ("integer", "long", "double", "float", "short", "byte", "decimal")
-        if df.schema[column_name].dataType.typeName() not in numeric:
-            raise TypeError(f"ecdf: column {column_name!r} dtype should be numeric.")
-        df = share(df)
-        guard = F.assert_true(
-            col.isNotNull(), F.lit(f"ecdf: column {column_name!r} contains nulls; drop them first.")
-        )
-        df = df.withColumn(column_name, F.when(guard.isNull(), col))
-
-        # pin the distinct-value counts: totals derive from them (sum of
-        # per-value counts == non-null row count — nulls raise above),
-        # so the second full scan+aggregate the old `df.agg(count)` plan
-        # ran is gone, and on these two columns partitioned_cumsum
-        # takes no pin of its own
-        counts = pin(
-            df.groupBy(column_name).agg(F.count(F.lit(1)).alias("__cnt"))
-        )
-        total = counts.agg(F.sum("__cnt").alias("__n"))
-        cum = partitioned_cumsum(counts, "__cnt", column_name, "__cle")
-        tbl = (
-            cum.crossJoin(F.broadcast(total))
-            .withColumn("__ecdf_out", F.col("__cle").cast("double") / F.col("__n"))
-            .select(F.col(column_name).alias("__ecdf_v"), "__ecdf_out")
-        )
-        return (
-            df.join(tbl, col.eqNullSafe(F.col("__ecdf_v")), "left")
-            .withColumn(dest, F.col("__ecdf_out"))
-            .drop("__ecdf_v", "__ecdf_out")
-        )
-    return df.withColumn(dest, fn(col))
+    # null values raise (reference contract): an inline assert_true
+    # rides the value counts' own scan and the join-back instead of a
+    # separate eager count action
+    guard = F.assert_true(
+        col.isNotNull(), F.lit(f"ecdf: column {column_name!r} contains nulls; drop them first.")
+    )
+    df = df.withColumn(column_name, F.when(guard.isNull(), col))
+    cdf = value_cdf(df, column_name).select(
+        F.col(column_name).alias("__ecdf_v"),
+        (F.col("__cum").cast("double") / F.col("__n")).alias("__ecdf_out"),
+    )
+    return (
+        df.join(cdf, col == F.col("__ecdf_v"), "left")
+        .withColumn(dest, F.col("__ecdf_out"))
+        .drop("__ecdf_v", "__ecdf_out")
+    )

@@ -13,6 +13,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pyjanitor_spark.utils.pin import probe
 from pyjanitor_spark.utils.select import resolve_columns
 
 __all__ = [
@@ -198,16 +199,17 @@ def get_dupes(df: DataFrame, column_names: Any | None = None) -> DataFrame:
 def remove_empty(df: DataFrame, *, rows: bool = True, columns: bool = True) -> DataFrame:
     """Drop all-null rows and/or all-null columns (ref
     ``remove_empty.py:8-47`` — the reference always drops BOTH, so both
-    default on).  Column removal needs one bounded agg action (a
-    per-column count, narrow scan); pass ``columns=False`` to skip that
-    scan when the schema is known dense."""
+    default on).  Column removal: ``probe`` runs one per-column count
+    aggregate (and its ``share`` pin's stages on a replay-unstable
+    input), and the output reads the probed frame; pass
+    ``columns=False`` to skip it when the schema is known dense."""
     out = df
     if rows:
         out = out.na.drop(how="all")
     if columns:
-        row = out.agg(
-            *[F.count(F.col(c)).alias(c) for c in out.columns]
-        ).first()
+        out, (row,) = probe(
+            out, lambda f: f.agg(*[F.count(F.col(c)).alias(c) for c in f.columns])
+        )
         empty = [c for c in out.columns if row[c] == 0]
         if empty:
             out = out.drop(*empty)

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyjanitor_spark.utils.order import ensure_order_column
+from pyjanitor_spark.utils.pin import probe
 from pyjanitor_spark.utils.select import resolve_columns
 
 __all__ = ["coalesce", "fill_empty", "impute", "fill_direction"]
@@ -131,10 +132,11 @@ def impute(
     statistic_column_name: str | None = None,
 ) -> DataFrame:
     """Fill nulls with a scalar or a column statistic (ref
-    ``impute.py:17-142``).  Statistic path: ONE agg action computing all
-    statistics in a single pass, then a null-safe ``coalesce`` — two scans
-    total regardless of column count.  Documented superset: ``'sum'`` is
-    accepted as a statistic (the reference's dict stops at max)."""
+    ``impute.py:17-142``).  Statistic path: ``probe`` runs ONE aggregate
+    of all statistics (and its ``share`` pin's stages on a
+    replay-unstable input), then a null-safe ``coalesce`` over the
+    probed frame.  Documented superset: ``'sum'`` is accepted as a
+    statistic (the reference's dict stops at max)."""
     cols = resolve_columns(df, column_names)
     if (value is None) == (statistic_column_name is None):
         raise ValueError("exactly one of value / statistic_column_name")
@@ -145,7 +147,7 @@ def impute(
     stat = _STATS.get(statistic_column_name)
     if stat is None:
         raise KeyError(f"unknown statistic {statistic_column_name!r}")
-    row = df.agg(*[stat(F.col(c)).alias(c) for c in cols]).first()
+    df, (row,) = probe(df, lambda f: f.agg(*[stat(F.col(c)).alias(c) for c in cols]))
     return df.withColumns(
         {c: F.coalesce(F.col(c), F.lit(row[c])) for c in cols if row[c] is not None}
     )

@@ -201,7 +201,6 @@ def take_token_budget(
     order_by: str,
     mode: str = "whitespace",
     dest: str | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Keep rows, in ``order_by`` order, while the RUNNING token total
     stays within ``budget`` — "give me the first 10B tokens of this
@@ -229,9 +228,7 @@ def take_token_budget(
     with_n = df.withColumn(
         "__n_tok", F.size(tokens(F.col(column_name), mode))
     )
-    cum = partitioned_cumsum(
-        with_n, "__n_tok", order_by, cum_col, num_partitions=num_partitions
-    ).drop("__n_tok")
+    cum = partitioned_cumsum(with_n, "__n_tok", order_by, cum_col).drop("__n_tok")
     if dest is not None:
         return cum
     return cum.filter(F.col(cum_col) <= F.lit(int(budget))).drop(cum_col)

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyjanitor_spark.utils.pin import share
+
 __all__ = [
     "heavy_hitters",
     "cardinality_sketch",
@@ -42,19 +44,20 @@ def heavy_hitters(
     ``1/min_share`` rows per group, so the result is always tiny no
     matter the input size.  Plan: one groupBy shuffle on
     (by…, value) with partial aggregation; totals per group are a
-    second tiny agg broadcast back.
+    second tiny agg over those counts, joined back, so the shares of a
+    group sum to 1.  Reads ``share(df)``; call-time jobs: the ``share``
+    pin's stages on a replay-unstable input, else none.
     """
     if not 0 < min_share <= 1:
         raise ValueError("min_share must be in (0, 1]")
     keys = list(by or [])
-    counts = df.groupBy(*keys, column_name).agg(F.count(F.lit(1)).alias("cnt"))
+    counts = share(df).groupBy(*keys, column_name).agg(F.count(F.lit(1)).alias("cnt"))
+    totals = counts.groupBy(*keys).agg(F.sum("cnt").alias("__tot"))
     if keys:
         # one row per group: unbounded for high-cardinality `by`, so no
         # broadcast hint — AQE picks broadcast itself when totals is small
-        totals = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__tot"))
         joined = counts.join(totals, keys)
     else:
-        totals = df.agg(F.count(F.lit(1)).alias("__tot"))
         joined = counts.crossJoin(F.broadcast(totals))
     return (
         joined.withColumn("share", F.col("cnt") / F.col("__tot"))

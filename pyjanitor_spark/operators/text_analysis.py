@@ -1009,7 +1009,6 @@ def assign_packs(
     order_by: str,
     dest: str = "pack_id",
     mode: str = "whitespace",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Assign documents to fixed-token-budget training packs: walking
     the corpus in ``order_by`` order, a document joins pack
@@ -1043,9 +1042,7 @@ def assign_packs(
     narrow = df.select(
         F.col(order_by), F.size(tokens(F.col(column_name), mode)).alias("__ntok")
     )
-    cum = partitioned_cumsum(
-        narrow, "__ntok", order_by, "__cum", num_partitions=num_partitions
-    )
+    cum = partitioned_cumsum(narrow, "__ntok", order_by, "__cum")
     packs = cum.select(
         F.col(order_by).alias("__pk_o"),
         # greatest(0, ...): a leading zero-token document has cum=0 and

@@ -14,7 +14,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyjanitor_spark.utils.pin import pin, share
+from pyjanitor_spark.utils.pin import probe, share
 from pyjanitor_spark.utils.select import resolve_columns
 
 __all__ = [
@@ -806,14 +806,16 @@ def bin_numeric(
     """``pd.cut`` into labeled bins (ref ``bin_numeric.py:19-79``, which
     forwards ``right``/``include_lowest`` to ``pd.cut``).
 
-    Explicit bin edges compile to a chained CASE WHEN (codegen); integer
-    ``bins`` computes min/max in one agg action then pd.cut's
+    Explicit bin edges compile to a chained CASE WHEN (codegen), lazy;
+    integer ``bins`` probes min/max with one aggregate then pd.cut's
     equal-width edges, including its boundary padding (0.1% of the
     range on the open end; ±0.1%·|x| when min == max) and its default
     label rendering (`_round_frac` at inferred precision ≥ 3, repr
     floats, int edges shown as ints unless ``include_lowest`` injects
     the float pad).  ``right=True`` bins are ``(lo, hi]``;
-    ``right=False`` bins are ``[lo, hi)``."""
+    ``right=False`` bins are ``[lo, hi)``.  The integer-``bins``
+    aggregate runs through ``probe`` (with its ``share`` pin's stages on
+    a replay-unstable input), and the output reads the probed frame."""
     if isinstance(bins, int) and bins < 1:
         raise ValueError("bins must be >= 1")
 
@@ -859,7 +861,7 @@ def bin_numeric(
     col = F.col(from_column_name)
     int_bins = isinstance(bins, int)
     if int_bins:
-        row = df.agg(F.min(col).alias("mn"), F.max(col).alias("mx")).first()
+        df, (row,) = probe(df, lambda f: f.agg(F.min(col).alias("mn"), F.max(col).alias("mx")))
         lo, hi = float(row["mn"]), float(row["mx"])
         if lo == hi:
             pad = 0.001 * abs(lo) if lo != 0 else 0.001
@@ -913,7 +915,6 @@ def quantile_bin(
     to_column_name: str,
     q: int,
     labels: list[str] | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Equal-frequency binning (the scalable ``pd.qcut`` analog missing
     from the reference, which only wraps ``pd.cut`` — ``bin_numeric``).
@@ -928,48 +929,30 @@ def quantile_bin(
     oracle-checkable, unlike approx-percentile edges.  NULL values get a
     NULL bin (``pd.qcut`` NaN behavior).
 
-    Scale shape: rank is computed on the DISTINCT values, not the rows —
-    ``groupBy(value).count()`` (map-side partial agg), an exclusive
-    prefix sum over the value order via :func:`partitioned_cumsum`
-    (range partition + broadcast offsets, no single-task stage), then
-    one join back on value.  With ``k`` distinct values the heavy side
-    of every stage is O(k), so a 100 TB column with bounded cardinality
-    bins at scan cost; a near-unique column degrades gracefully to the
-    sort-based rank it would need anyway.
+    Scale shape: rank is computed on the DISTINCT values, not the rows
+    (``utils.order.value_cdf``: an inclusive prefix sum of the value
+    counts, no single-task stage), then one join back on value.  With
+    ``k`` distinct values the heavy side of every stage is O(k), so a
+    100 TB column with bounded cardinality bins at scan cost; a
+    near-unique column degrades gracefully to the sort-based rank it
+    would need anyway.
 
-    The counts and the join-back read ``share(df)``: a replay-unstable
-    input is pinned (under AQE its shuffle stages run when called), so
-    every row gets the bin of its own value.
+    The counts and the join-back read ``share(df)``.  Call-time jobs:
+    the value counts' ``groupBy`` stage, and the ``share`` pin's stages
+    on a replay-unstable input.
     """
-    from ..utils.order import partitioned_cumsum
+    from ..utils.order import value_cdf
 
     if q < 1:
         raise ValueError("q must be >= 1")
     if labels is not None and len(labels) != q:
         raise ValueError("labels must have exactly q entries")
     df = share(df)
-    col = F.col(from_column_name)
-    # pin the distinct-value counts: they feed both the prefix sum and
-    # the totals row — unpinned, the totals branch re-ran the scan +
-    # aggregate and re-joined the cumsum offsets; pinned, totals is one
-    # tiny aggregate over the O(distinct) table, and on these two
-    # columns partitioned_cumsum takes no pin of its own
-    counts = pin(
-        df.filter(col.isNotNull())
-        .groupBy(from_column_name)
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-    )
-    totals = counts.agg(F.sum("__cnt").alias("__n"))
-    counts = partitioned_cumsum(
-        counts, "__cnt", from_column_name, "__cum", num_partitions=num_partitions
-    )
-    binned = (
-        counts.crossJoin(F.broadcast(totals))
-        .withColumn(
-            to_column_name,
-            F.floor((F.col("__cum") - 1) * F.lit(float(q)) / F.col("__n")),
-        )
-        .select(from_column_name, to_column_name)
+    binned = value_cdf(df, from_column_name).select(
+        from_column_name,
+        F.floor((F.col("__cum") - 1) * F.lit(float(q)) / F.col("__n")).alias(
+            to_column_name
+        ),
     )
     out = df.join(binned, on=from_column_name, how="left")
     if labels is not None:
@@ -1062,8 +1045,12 @@ def min_max_scale(
     jointly: bool = False,
 ) -> DataFrame:
     """Scale to feature range, per-column or jointly (ref
-    ``min_max_scale.py:21-191``).  One agg action for all min/max, then
-    pure expressions — two scans total."""
+    ``min_max_scale.py:21-191``).  One 1-row min/max aggregate of all
+    columns broadcast back to the rows, both reading ``share(df)``;
+    call-time jobs: the ``share`` pin's stages on a replay-unstable
+    input, else none.  Nulls are skipped like pandas' NaN: ``jointly``
+    takes ``least``/``greatest`` of the column bounds, so an all-null
+    column stays null and the others scale over their joint range."""
     lo_t, hi_t = float(feature_range[0]), float(feature_range[1])
     if hi_t <= lo_t:
         raise ValueError("feature_range must be (low, high) with high > low")
@@ -1071,33 +1058,36 @@ def min_max_scale(
         f.name for f in df.schema.fields
         if f.dataType.typeName() in ("integer", "long", "double", "float", "short", "byte", "decimal")
     ]
-    aggs = []
-    for c in cols:
-        aggs += [F.min(F.col(c)).alias(f"mn_{c}"), F.max(F.col(c)).alias(f"mx_{c}")]
-    row = df.agg(*aggs).first()
+    df = share(df)
     if jointly:
-        gmn = min(row[f"mn_{c}"] for c in cols)
-        gmx = max(row[f"mx_{c}"] for c in cols)
-        spans = {c: (gmn, gmx) for c in cols}
-    else:
-        spans = {c: (row[f"mn_{c}"], row[f"mx_{c}"]) for c in cols}
-    updates = {}
-    for c in cols:
-        mn, mx = spans[c]
-        if mn is None or mx is None or mx == mn:
-            # pandas: (x - min) / 0 is 0/0 = NaN for a constant column
-            # (and an all-null column stays null); under ANSI the naive
-            # division would THROW, and any non-null stand-in would be
-            # an invented value
-            updates[c] = F.lit(None).cast("double")
-            continue
-        # reference operation ORDER, min_max_scale.py:192: multiply by
-        # the new range BEFORE dividing by the old — the two
-        # associations differ by an ulp on some inputs (fuzz-pinned)
-        updates[c] = (
-            (F.col(c) - F.lit(mn)) * F.lit(hi_t - lo_t) / F.lit(mx - mn) + F.lit(lo_t)
+        mins = [F.min(F.col(c)) for c in cols]
+        maxs = [F.max(F.col(c)) for c in cols]
+        stats = df.agg(
+            (F.least(*mins) if len(cols) > 1 else mins[0]).alias("__mn0"),
+            (F.greatest(*maxs) if len(cols) > 1 else maxs[0]).alias("__mx0"),
         )
-    return df.withColumns(updates)
+        bounds = {c: ("__mn0", "__mx0") for c in cols}
+    else:
+        bounds = {c: (f"__mn{i}", f"__mx{i}") for i, c in enumerate(cols)}
+        stats = df.agg(
+            *[F.min(F.col(c)).alias(bounds[c][0]) for c in cols],
+            *[F.max(F.col(c)).alias(bounds[c][1]) for c in cols],
+        )
+    # pandas: (x - min) / 0 is 0/0 = NaN for a constant column (and an
+    # all-null column stays null); under ANSI the naive division would
+    # THROW, and any non-null stand-in would be an invented value.
+    # Reference operation ORDER, min_max_scale.py:192: multiply by the
+    # new range BEFORE dividing by the old — the two associations differ
+    # by an ulp on some inputs (fuzz-pinned)
+    updates = {
+        c: F.when(
+            F.col(mx) != F.col(mn),
+            (F.col(c) - F.col(mn)) * F.lit(hi_t - lo_t) / (F.col(mx) - F.col(mn))
+            + F.lit(lo_t),
+        )
+        for c, (mn, mx) in bounds.items()
+    }
+    return df.crossJoin(F.broadcast(stats)).withColumns(updates).drop(*stats.columns)
 
 
 def factorize_columns(
@@ -1263,8 +1253,8 @@ def deconcatenate_column(
 
     With ``autoname`` alone the output WIDTH comes from the data (the
     reference reads it off the expanded frame): one bounded
-    ``max(size(split(...)))`` agg — a schema-from-data action, same
-    contract as ``expand_column``."""
+    ``max(size(split(...)))`` aggregate run by ``probe``, same contract
+    as ``expand_column``."""
     if sep is None and pattern is None:
         raise ValueError("provide sep or pattern")
     import re as _re
@@ -1274,7 +1264,8 @@ def deconcatenate_column(
     if new_column_names is None:
         if not autoname:
             raise ValueError("provide new_column_names or autoname")
-        width = df.agg(F.max(F.size(arr))).first()[0] or 0
+        df, (row,) = probe(df, lambda f: f.agg(F.max(F.size(arr))))
+        width = row[0] or 0
         new_column_names = list(range(width))
     if autoname:
         new_column_names = [f"{autoname}{i + 1}" for i in range(len(new_column_names))]
@@ -1298,19 +1289,21 @@ def expand_column(
     df: DataFrame, column_name: str, sep: str = "|", concat: bool = True
 ) -> DataFrame:
     """One-hot expand a delimited string col (ref ``expand_column.py:13-85``
-    == ``str.get_dummies``).  One bounded distinct action to learn the
+    == ``str.get_dummies``).  One bounded distinct query learns the
     token vocabulary (schema-from-data, SURVEY.md §4), then pure
-    ``array_contains`` expressions — no explode/pivot shuffle."""
+    ``array_contains`` expressions — no explode/pivot shuffle.  ``probe``
+    runs the vocabulary query (with its ``share`` pin's stages on a
+    replay-unstable input), and the output reads the probed frame."""
     import re as _re
 
-    toks = (
-        df.select(F.explode(F.split(F.col(column_name), _re.escape(sep))).alias("t"))
+    arr = F.split(F.col(column_name), _re.escape(sep))
+    df, toks = probe(
+        df,
+        lambda f: f.select(F.explode(arr).alias("t"))
         .where(F.col("t") != "")
         .distinct()
-        .orderBy("t")
-        .collect()
+        .orderBy("t"),
     )
-    arr = F.split(F.col(column_name), _re.escape(sep))
     clash = [r["t"] for r in toks if r["t"] in df.columns]
     if clash and concat:
         # the reference's join raises the same way ("columns overlap")
@@ -1346,7 +1339,8 @@ def add_column(df: DataFrame, column_name: str, value: Any, fill_remaining: bool
       stage) indexes into the values array; ``fill_remaining=True``
       cycles the values when shorter than the frame (ref
       ``add_columns.py:96-118``), otherwise the length must equal the
-      row count (checked with one bounded ``count()`` action).  "Row
+      row count: ``probe`` runs one count aggregate, and the index is
+      built from the probed frame.  "Row
       order" is the frame's current order per the ``_row_order``
       contract (``utils/order.py``).  Bounded at
       ``_ADD_COLUMN_MAX_VALUES`` values — the list rides the plan as an
@@ -1367,17 +1361,17 @@ def add_column(df: DataFrame, column_name: str, value: Any, fill_remaining: bool
         from ..utils.order import positional_index
 
         arr = F.array(*[F.lit(v) for v in vals])
-        d = positional_index(df, "__add_pos")
         if fill_remaining:
             idx = (F.col("__add_pos") % F.lit(len(vals))) + 1
         else:
-            n_rows = df.count()  # bounded action: one count aggregate
+            df, ((n_rows,),) = probe(df, lambda f: f.agg(F.count(F.lit(1))))
             if n_rows != len(vals):
                 raise ValueError(
                     f"add_column: {len(vals)} values for {n_rows} rows; "
                     f"pass fill_remaining=True to cycle"
                 )
             idx = F.col("__add_pos") + 1
+        d = positional_index(df, "__add_pos")
         return d.withColumn(
             column_name, F.element_at(arr, idx.cast("int"))
         ).drop("__add_pos")
@@ -1407,7 +1401,6 @@ def winsorize(
     dest: str | None = None,
     lower: float = 0.05,
     upper: float = 0.95,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Clip a numeric column to its [``lower``, ``upper``] empirical
     quantiles — the standard outlier-taming transform before scaling /
@@ -1420,18 +1413,17 @@ def winsorize(
     tie-safe contract :func:`quantile_bin` uses (approx-percentile
     edges would not be oracle-checkable).
 
-    Scale shape: quantiles come from the DISTINCT values —
-    ``groupBy(value).count()`` (map-side combined), the
-    ``partitioned_cumsum`` prefix sum (no single-task stage), then ONE
-    bounded 1-row aggregate for both cutpoints, broadcast back.  Rows
-    are touched once, by the final projection join.
+    Scale shape: both cutpoints are ONE bounded row from
+    :func:`quantiles`, broadcast back to the rows.  The cutpoints and
+    the rows read ``share(df)``; call-time jobs as :func:`quantile_bin`.
     """
     if not (0.0 <= lower <= upper <= 1.0):
         raise ValueError("need 0 <= lower <= upper <= 1")
+    df = share(df)
     col = F.col(column_name)
-    cuts = quantiles(
-        df, column_name, [lower, upper], num_partitions=num_partitions
-    ).select(F.col("q_0").alias("__lo"), F.col("q_1").alias("__hi"))
+    cuts = quantiles(df, column_name, [lower, upper]).select(
+        F.col("q_0").alias("__lo"), F.col("q_1").alias("__hi")
+    )
     out = df.crossJoin(F.broadcast(cuts)).withColumn(
         dest or column_name,
         F.when(
@@ -1442,43 +1434,24 @@ def winsorize(
     return out.drop("__lo", "__hi")
 
 
-def quantiles(
-    df: DataFrame,
-    column_name: str,
-    qs: list[float],
-    num_partitions: int | None = None,
-) -> DataFrame:
+def quantiles(df: DataFrame, column_name: str, qs: list[float]) -> DataFrame:
     """Exact empirical quantiles of a numeric column as ONE bounded row
     (columns ``q_0, q_1, ...`` in ``qs`` order) — the cut engine behind
     :func:`winsorize` / :func:`robust_scale`, exposed for reuse.
 
     Each quantile is the smallest value whose inclusive ECDF reaches
     ``q`` (tie-safe, deterministic, engine-reproducible — see
-    :func:`quantile_bin`).  Cost: one distinct-value count agg, the
-    ``partitioned_cumsum`` prefix sum, one 1-row aggregate; never a
-    raw-row sort or global window.
+    :func:`quantile_bin`).  Cost: ``utils.order.value_cdf`` (whose
+    ``groupBy`` stage the call runs) and one 1-row aggregate over it;
+    never a raw-row sort or global window.
     """
-    from ..utils.order import partitioned_cumsum
+    from ..utils.order import value_cdf
 
     for q in qs:
         if not 0.0 <= q <= 1.0:
             raise ValueError(f"quantile {q} outside [0, 1]")
-    col = F.col(column_name)
-    # pin the distinct-value counts (same rationale as quantile_bin):
-    # the totals row otherwise re-runs the scan + aggregate + cumsum
-    # offsets branch, and on these two columns partitioned_cumsum takes
-    # no pin of its own
-    counts = pin(
-        df.filter(col.isNotNull())
-        .groupBy(column_name)
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-    )
-    totals = counts.agg(F.sum("__cnt").alias("__n"))
-    counts = partitioned_cumsum(
-        counts, "__cnt", column_name, "__cum", num_partitions=num_partitions
-    )
     frac = F.col("__cum") / F.col("__n")
-    return counts.crossJoin(F.broadcast(totals)).agg(
+    return value_cdf(df, column_name).agg(
         *[
             F.min(
                 F.when(frac >= F.lit(float(q)), F.col(column_name))
@@ -1492,7 +1465,6 @@ def robust_scale(
     df: DataFrame,
     column_name: str,
     dest: str | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Median/IQR scaling: ``(x - median) / (q75 - q25)`` — the
     outlier-robust alternative to :func:`min_max_scale` / ``z_score``
@@ -1500,11 +1472,11 @@ def robust_scale(
     Quantiles use the tie-safe ECDF definition of :func:`quantiles`;
     a zero IQR (constant-dominated column) yields NULL rather than an
     ANSI divide-by-zero; NULL passes through.  One bounded 1-row
-    quantile aggregate broadcast over the rows.
+    quantile aggregate broadcast over the rows, both reading
+    ``share(df)``; call-time jobs as :func:`quantile_bin`.
     """
-    cuts = quantiles(
-        df, column_name, [0.25, 0.5, 0.75], num_partitions=num_partitions
-    ).select(
+    df = share(df)
+    cuts = quantiles(df, column_name, [0.25, 0.5, 0.75]).select(
         F.col("q_0").alias("__q1"),
         F.col("q_1").alias("__med"),
         F.col("q_2").alias("__q3"),

@@ -10,7 +10,7 @@ vectorizers.  Collisions are the accepted trade (bounded by ``dim``).
 
 Everything is Column expressions + three aggregations:
 
-1. ``explode`` tokens → ``groupBy(id, bucket).count()`` — the only
+1. ``explode`` tokens → ``groupBy(id, bucket)`` counts — the only
    full-size shuffle, keyed on (id, bucket) with map-side combine;
 2. document frequency: ``groupBy(bucket)`` over the tf rows — output is
    at most ``dim`` rows, broadcast back;
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..utils.expr import let
-from ..utils.pin import pin
+from ..utils.pin import pin, share
 from .text_analysis import BPE_ISH_PATTERN, tokens
 
 __all__ = ["hashed_tfidf", "bm25_score"]
@@ -160,10 +160,9 @@ def bm25_score(
     Shape: the query's few terms become per-term ``tf`` expressions over
     the ``let``-bound token array (one split per row, zero shuffles on
     the data side); corpus statistics (N, avgdl, per-term df) are ONE
-    tiny aggregate broadcast back.  Two scans total, no explode, no
-    joins on the data — at 100 TB the cost is the cost of reading the
-    text column twice (or once, if the stats frame is cached/persisted
-    by the caller).
+    tiny aggregate broadcast back.  No explode, no joins on the data.
+    The statistics and the rows read ``share(df)``; call-time jobs: the
+    ``share`` pin's stages on a replay-unstable input, else none.
     """
     if k1 < 0 or not 0.0 <= b <= 1.0:
         raise ValueError("need k1 >= 0 and 0 <= b <= 1 (BM25 ranges)")
@@ -199,7 +198,7 @@ def bm25_score(
         )
 
     toks = F.coalesce(tokens(col, mode), F.array().cast("array<string>"))
-    featured = df.withColumn("__f", let(toks, feats))
+    featured = share(df).withColumn("__f", let(toks, feats))
     stats = featured.agg(
         F.count(F.lit(1)).alias("__n"),
         F.avg(F.col("__f.dl")).alias("__avgdl"),

@@ -31,7 +31,10 @@ from pyjanitor_spark.utils.pin import pin, share
 
 ORDER_COL = "_row_order"
 
-__all__ = ["ORDER_COL", "ensure_order_column", "positional_index", "partitioned_cumsum"]
+__all__ = [
+    "ORDER_COL", "ensure_order_column", "positional_index", "partitioned_cumsum",
+    "value_cdf",
+]
 
 def positional_index(df: DataFrame, name: str) -> DataFrame:
     """0-based positional row index in the frame's current order,
@@ -125,6 +128,28 @@ def partitioned_cumsum(
         d.join(F.broadcast(offsets), "__pid")
         .withColumn(dest, F.col("__off") + F.sum(value_col).over(w_in))
         .drop("__pid", "__off")
+    )
+
+
+def value_cdf(df: DataFrame, column: str) -> DataFrame:
+    """One row per distinct non-null value of ``column`` with ``__cum``,
+    the count of non-null rows whose value is at most it, and ``__n``,
+    the non-null count: the engine of ``apply_math(ecdf)``,
+    ``quantile_bin`` and ``quantiles``.  The value counts are pinned
+    (the prefix sum and the total both read them), so the call runs
+    their ``groupBy`` shuffle stage; :func:`partitioned_cumsum` over
+    them takes no pin of its own.  Every stage after the scan is
+    O(distinct values).  A caller that joins the result back to ``df``
+    passes ``share(df)``."""
+    col = F.col(column)
+    counts = pin(
+        df.filter(col.isNotNull()).groupBy(column).agg(F.count(F.lit(1)).alias("__cnt"))
+    )
+    totals = counts.agg(F.sum("__cnt").alias("__n"))
+    return (
+        partitioned_cumsum(counts, "__cnt", column, "__cum")
+        .crossJoin(F.broadcast(totals))
+        .select(column, "__cum", "__n")
     )
 
 

@@ -1,11 +1,9 @@
 """The pin policy: ``pin`` is the one place the library materialises a
 reused intermediate; ``share`` is the one "pin unless replay-stable"
 decision, taken by every verb that reads its input in more than one
-branch (``positional_index``, ``assign_packs``,
-``count_cumulative_unique``, ``dedupe_near``, ``contamination_score``,
-the bucketized outer ``conditional_join``'s right side); and ``probe``
-(``share`` plus one ``collect``) is the one way a verb reads data
-before it can plan.  ``partitioned_cumsum`` instead pins the output of
+branch (a whole-column statistic attached to the rows, a running sum
+joined back, a dedup keep-set); and ``probe`` (``share`` plus one
+``collect``) is the one way a verb reads data before it can plan.  ``partitioned_cumsum`` instead pins the output of
 its own range exchange when its two branches cannot share one
 execution of it (see its docstring).
 

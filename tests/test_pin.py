@@ -71,11 +71,12 @@ def test_probing_verbs_have_no_bare_actions():
         r"\.(collect|first|count|toPandas|toLocalIterator)\(\)|\.(take|head)\("
     )
     paths = [
-        os.path.join(PKG, "operators", "reshape.py"),
-        os.path.join(PKG, "operators", "joins.py"),
-        os.path.join(PKG, "operators", "complete.py"),
-        os.path.join(PKG, "sources", "sinks.py"),
-    ]
+        os.path.join(PKG, "operators", f"{name}.py")
+        for name in (
+            "reshape", "joins", "complete", "transforms", "missing", "filters",
+            "sketches", "vectorize",
+        )
+    ] + [os.path.join(PKG, "sources", "sinks.py"), os.path.join(PKG, "functions", "math.py")]
     offenders = _offenders(action, paths)
     assert not offenders, "bare action outside utils.pin.probe:\n" + "\n".join(offenders)
 
@@ -159,6 +160,52 @@ def test_write_zordered_runs_upstream_once(spark, tmp_path):
     pj.write_zordered(df, str(tmp_path / "z"), ["v", "ts"], num_files=2)
     assert spark.read.parquet(str(tmp_path / "z")).count() == 200
     assert acc.value == 200
+
+
+def test_z_score_runs_upstream_once(spark):
+    df, acc = _counted(spark, 30)
+    out = pj.functions.apply_math(df, "v", pj.z_score, dest="z")
+    assert len(out.collect()) == 30
+    assert acc.value == 30
+
+
+_PREFLIGHT = {
+    "impute": lambda df: pj.impute(df, "v", statistic_column_name="mean"),
+    # rows=False: the all-null row filter would be pushed below the
+    # projection and call the counting UDF twice per row in one run
+    "remove_empty": lambda df: pj.remove_empty(df, rows=False),
+    "bin_numeric": lambda df: pj.bin_numeric(df, "v", "b", bins=3),
+    "deconcatenate_column": lambda df: pj.deconcatenate_column(df, "grp", sep="g", autoname="p"),
+    "expand_column": lambda df: pj.expand_column(df, "grp"),
+    # distinct: a bare row count would prune the counting UDF away
+    "add_column": lambda df: pj.add_column(df.distinct(), "c", list(range(30))),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(_PREFLIGHT))
+def test_preflight_verbs_run_upstream_once(spark, verb):
+    """A verb that reads the data before it can plan builds its output
+    from the frame ``probe`` returns: the probe and the output read one
+    run of the upstream."""
+    df, acc = _counted(spark, 30)
+    assert len(_PREFLIGHT[verb](df).collect()) == 30
+    assert acc.value == 30
+
+
+def test_min_max_scale_runs_no_job_on_a_replay_stable_input(spark, monkeypatch):
+    """The min/max aggregate is a lazy one-row broadcast attach: building
+    the output calls no driver action (checked by making them raise,
+    which does not depend on how adaptive execution splits jobs)."""
+    df = spark.range(5).select((F.col("id") * 2).cast("double").alias("v"))
+
+    def no_action(self, *args, **kwargs):
+        raise AssertionError("min_max_scale ran a driver action")
+
+    with monkeypatch.context() as m:
+        for name in ("first", "collect", "count", "head", "take", "toPandas"):
+            m.setattr(type(df), name, no_action)
+        out = pj.min_max_scale(df, column_name="v")
+    assert sorted(r["v"] for r in out.collect()) == [0.0, 0.25, 0.5, 0.75, 1.0]
 
 
 def _counted_docs(spark, n):
@@ -346,3 +393,110 @@ def test_ecdf_on_nondeterministic_input(spark):
     n = len(vals)
     le = {v: sum(1 for x in vals if x <= v) for v in set(vals)}
     assert all(e == le[v] / n for v, e in rows)
+
+
+def _bm25(texts, terms, k1=1.2, b=0.75):
+    """Okapi BM25 of each text against ``terms``, computed serially."""
+    import math
+
+    docs = [t.split() for t in texts]
+    n = len(docs)
+    avgdl = sum(len(d) for d in docs) / n
+    dfs = [sum(1 for d in docs if t in d) for t in terms]
+    out = []
+    for d in docs:
+        norm = 1.0 - b + b * len(d) / avgdl
+        score = 0.0
+        for t, df_t in zip(terms, dfs):
+            tf = d.count(t)
+            idf = math.log((n - df_t + 0.5) / (df_t + 0.5) + 1.0)
+            score += idf * tf * (k1 + 1.0) / (tf + k1 * norm)
+        out.append(score)
+    return out
+
+
+def _zscores(vals):
+    n = len(vals)
+    mu = sum(vals) / n
+    sd = (sum((v - mu) ** 2 for v in vals) / (n - 1)) ** 0.5
+    return [(v - mu) / sd for v in vals]
+
+
+def _quantile(vals, q):
+    """The smallest value whose inclusive ECDF reaches ``q``."""
+    s = sorted(vals)
+    return next(v for i, v in enumerate(s, 1) if i / len(s) >= q)
+
+
+def _check_z_score(df):
+    rows = [(r["v"], r["z"]) for r in pj.functions.apply_math(df, "v", pj.z_score, dest="z").collect()]
+    want = _zscores([v for v, _ in rows])
+    assert [z for _, z in rows] == pytest.approx(want, rel=1e-9, abs=1e-12)
+
+
+def _check_softmax(df):
+    import math
+
+    rows = [(r["v"], r["s"]) for r in pj.functions.apply_math(df, "v", pj.softmax, dest="s").collect()]
+    mx = max(v for v, _ in rows)
+    tot = sum(math.exp(v - mx) for v, _ in rows)
+    assert [s for _, s in rows] == pytest.approx([math.exp(v - mx) / tot for v, _ in rows], rel=1e-9)
+
+
+def _check_winsorize(df):
+    rows = [(r["v"], r["w"]) for r in pj.winsorize(df, "v", dest="w", lower=0.1, upper=0.9).collect()]
+    vals = [v for v, _ in rows]
+    lo, hi = _quantile(vals, 0.1), _quantile(vals, 0.9)
+    assert [w for _, w in rows] == [min(max(v, lo), hi) for v in vals]
+
+
+def _check_robust_scale(df):
+    rows = [(r["v"], r["r"]) for r in pj.robust_scale(df, "v", dest="r").collect()]
+    vals = [v for v, _ in rows]
+    q1, med, q3 = (_quantile(vals, q) for q in (0.25, 0.5, 0.75))
+    assert [r for _, r in rows] == pytest.approx([(v - med) / (q3 - q1) for v in vals], rel=1e-12)
+
+
+def _check_min_max_scale(df):
+    rows = [(r["id"], r["v"]) for r in pj.min_max_scale(df, column_name="v").collect()]
+    ids = [i for i, _ in rows]
+    lo, hi = min(ids), max(ids)
+    assert [v for _, v in rows] == pytest.approx([(i - lo) / (hi - lo) for i in ids], rel=1e-12)
+
+
+def _check_heavy_hitters(df):
+    out = pj.heavy_hitters(df.select((F.col("id") % 7).alias("k")), "k", min_share=1e-9).collect()
+    n = sum(r["cnt"] for r in out)
+    assert sum(r["share"] for r in out) == pytest.approx(1.0, rel=1e-12)
+    assert all(r["share"] == r["cnt"] / n for r in out)
+
+
+def _check_bm25_score(df):
+    text = F.concat_ws(
+        " ",
+        F.array_repeat(F.lit("w"), (F.col("id") % 5 + 1).cast("int")),
+        F.when(F.col("id") % 3 == 0, F.lit("x")),
+    )
+    rows = [(r["t"], r["bm25"]) for r in pj.bm25_score(df.select(text.alias("t")), "t", "w x").collect()]
+    want = _bm25([t for t, _ in rows], ["w", "x"])
+    assert [s for _, s in rows] == pytest.approx(want, rel=1e-9)
+
+
+_STATISTICS = {
+    "z_score": _check_z_score,
+    "softmax": _check_softmax,
+    "winsorize": _check_winsorize,
+    "robust_scale": _check_robust_scale,
+    "min_max_scale": _check_min_max_scale,
+    "heavy_hitters": _check_heavy_hitters,
+    "bm25_score": _check_bm25_score,
+}
+
+
+@pytest.mark.parametrize("verb", list(_STATISTICS))
+def test_column_statistic_on_nondeterministic_input(spark, verb):
+    """A verb that attaches a whole-column statistic to its rows reads
+    one run of its input: the output equals the serial computation over
+    the rows it returned.  ``v`` is unique per row (``v = id``)."""
+    df = _coin_filtered(spark).select("id", F.col("id").cast("double").alias("v"))
+    _STATISTICS[verb](df)

@@ -1926,6 +1926,23 @@ def test_scalers_constant_column_null_not_throw(spark):
     assert vals == [0.0, 1.0]
 
 
+def test_min_max_scale_jointly_skips_an_all_null_column(spark):
+    """``jointly=True`` takes the joint range over the non-null values
+    (pandas' min/max skip NaN): the all-null column stays null, and the
+    others scale over [0, 10], the range of x and y together."""
+    df = spark.createDataFrame(
+        [(1, 0.0, 4.0, None), (2, 5.0, 10.0, None), (3, None, 2.0, None)],
+        "k int, x double, y double, z double",
+    )
+    out = pj.min_max_scale(df, column_name=["x", "y", "z"], jointly=True)
+    got = {r["k"]: (r["x"], r["y"], r["z"]) for r in out.collect()}
+    assert got == {
+        1: (0.0, 0.4, None),
+        2: (0.5, 1.0, None),
+        3: (None, 0.2, None),
+    }
+
+
 class TestProductQuantization:
     def test_train_shape_and_layout_determinism(self, spark, embeddings):
         cb = pj.pq_train(embeddings, "embedding", "vec_id", m=4, k=4, iters=1)

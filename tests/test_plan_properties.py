@@ -257,6 +257,7 @@ def test_registry_scale_lint(spark):
         "robust_scale",      # 3-quantile 1-row attach
         "hashed_tfidf",      # n_docs 1-row attach
         "bm25_score",        # avgdl/N 1-row attach
+        "nb_classify",       # nb_train's k*V 1-row attach
         "ngram_lm_score",    # unigram/bigram totals 1-row attach
         "top_collocations",  # PMI T/B totals 1-row attach
         "heavy_hitters",     # global totals 1-row attach (ungrouped form)
