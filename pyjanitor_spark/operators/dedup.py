@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pyjanitor_spark.operators.text_analysis import word_shingles
+from pyjanitor_spark.operators.text_analysis import tokens, word_shingles
 from pyjanitor_spark.utils.expr import let
 from pyjanitor_spark.utils.local import local_frame
 from pyjanitor_spark.utils.pin import pin, probe, share
@@ -120,6 +120,14 @@ def dedupe_exact(
     )
 
 
+def _perm(i: int):
+    """MinHash permutation ``i``: the md5 of the shingle keyed by an
+    ``'{i}:'`` prefix.  One parameter: PySpark passes the array index to
+    any second parameter of a ``transform`` lambda (even a defaulted
+    one)."""
+    return lambda s: F.md5(F.concat(F.lit(f"{i}:"), s))
+
+
 def minhash_signature(
     df: DataFrame,
     column_name: str,
@@ -139,19 +147,64 @@ def minhash_signature(
 
     if k < 1 or shingle_n < 1:
         raise ValueError("k and shingle_n must be >= 1")
-
-    # NB: the lambda must take exactly one parameter — PySpark passes the
-    # array index to any second parameter (even a defaulted one)
-    def perm(prefix: str):
-        return lambda s: F.md5(F.concat(F.lit(prefix), s))
-
     sig = let(
         word_shingles(F.col(column_name), shingle_n),
-        lambda sh: F.array(
-            *[F.array_min(F.transform(sh, perm(f"{i}:"))) for i in range(k)]
-        ),
+        lambda sh: F.array(*[F.array_min(F.transform(sh, _perm(i))) for i in range(k)]),
     )
     return df.withColumn(dest, sig)
+
+
+def minhash_band_buckets(
+    frame: DataFrame,
+    id_col: str,
+    column_name: str,
+    k: int = 8,
+    bands: int = 4,
+    shingle_n: int = 3,
+) -> DataFrame:
+    """(id, band, key) MinHash band buckets: the one band table behind
+    :func:`minhash_lsh_pairs`, :func:`dedupe_against` and
+    :func:`streaming_dedupe_near`.  Signatures depend only on the text,
+    so write this once per corpus increment and probe it forever: the
+    incremental-dedup cost becomes O(new batch), not O(corpus
+    re-tokenized per batch).  Reads ``frame`` once."""
+    if k < 1 or bands < 1:
+        raise ValueError("k and bands must be >= 1")
+    if k % bands:
+        raise ValueError("k must be divisible by bands")
+    r = k // bands
+    # Physical shape: explode shingles -> hash-aggregate the k mins.
+    # One expression tree per row would inline the whole shingle+md5
+    # pipeline into every band column AND both join sides (k*bands*2
+    # re-evaluations, and past ~64KB the codegen bails to interpreted
+    # mode).  The explode/agg computes each md5 exactly once, map-side
+    # combines, and shuffles only (id, k hashes) per doc.  Docs with no
+    # shingles vanish at the explode (they can never pair).
+    shingled = frame.select(
+        F.col(id_col),
+        F.explode(word_shingles(F.col(column_name), shingle_n)).alias("__s"),
+    )
+    sig = shingled.groupBy(id_col).agg(
+        *[F.min(_perm(i)(F.col("__s"))).alias(f"__m{i}") for i in range(k)]
+    )
+    band_cols = [
+        F.concat_ws("|", *[F.col(f"__m{b * r + j}") for j in range(r)]).alias(
+            f"__band_{b}"
+        )
+        for b in range(bands)
+    ]
+    keyed = sig.select(F.col(id_col), *band_cols)
+    return keyed.select(
+        F.col(id_col),
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(b).alias("band"), F.col(f"__band_{b}").alias("key"))
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bk"),
+    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
 
 def minhash_lsh_pairs(
@@ -165,9 +218,9 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Candidate near-dup pairs (id_1 < id_2) sharing ≥1 LSH band.
 
-    signature[k] → ``bands`` bands of k/bands rows; band key = concat of
-    its signature elements; pairs = self-equi-join on (band_idx, key)
-    then distinct.  The join shuffles only (band, key) — scalable.
+    signature[k] → ``bands`` bands of k/bands rows
+    (:func:`minhash_band_buckets`); the pairs are those of a self-join
+    of that table on (band, key), then distinct.
 
     ``mode='all'`` (default) emits every in-bucket pair — the candidate
     set a verification stage (exact Jaccard) must see.  ``mode='star'``
@@ -178,46 +231,9 @@ def minhash_lsh_pairs(
     pairs to 1e6 edges)."""
     if mode not in ("all", "star"):
         raise ValueError(f"mode must be 'all' or 'star', got {mode!r}")
-    if k < 1 or bands < 1:
-        raise ValueError("k and bands must be >= 1")
-    if k % bands:
-        raise ValueError("k must be divisible by bands")
-    r = k // bands
-    # Physical shape: explode shingles -> hash-aggregate the k mins.
-    # One expression tree per row would inline the whole shingle+md5
-    # pipeline into every band column AND both join sides (k*bands*2
-    # re-evaluations, and past ~64KB the codegen bails to interpreted
-    # mode).  The explode/agg computes each md5 exactly once, map-side
-    # combines, and shuffles only (id, k hashes) per doc.  Docs with no
-    # shingles vanish at the explode (they can never pair).
-    shingled = df.select(
-        F.col(id_col),
-        F.explode(word_shingles(F.col(column_name), shingle_n)).alias("__s"),
+    buckets = minhash_band_buckets(
+        df, id_col, column_name, k=k, bands=bands, shingle_n=shingle_n
     )
-    sig = shingled.groupBy(id_col).agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("__s")))).alias(f"__m{i}")
-            for i in range(k)
-        ]
-    )
-    band_cols = [
-        F.concat_ws("|", *[F.col(f"__m{b * r + j}") for j in range(r)]).alias(
-            f"__band_{b}"
-        )
-        for b in range(bands)
-    ]
-    keyed = sig.select(F.col(id_col), *band_cols)
-    buckets = keyed.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), F.col(f"__band_{b}").alias("key"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
     # ONE shuffle on (band, key): collect the bucket's ids and emit its
     # pairs in-task (a self-join would recompute the whole signature
     # pipeline for both sides and shuffle it twice).  Bucket sizes are
@@ -421,10 +437,13 @@ def ngram_jaccard_pairs(
     |A∩B| by bucketing on the shingle: ONE shuffle keyed on the shingle
     string, each shingle's doc-id list collected sorted in-task, pairs
     emitted and counted (vs. a self-join, which computes and shuffles
-    the shingle table twice).  |A∪B| = |A|+|B|−|A∩B| with |A| computed
-    shuffle-free as ``size(word_shingles(...))`` on the base table.
-    With ``candidates`` (e.g. LSH output: columns id_1, id_2) the pair
-    stream is semi-filtered first — the production shape at corpus
+    the shingle table twice).  |A∪B| = |A|+|B|−|A∩B| with |A| the
+    number of buckets that hold the doc.  The buckets are pinned, so
+    both counts read one run of the shingle table, and the call runs
+    that pin's shuffle stage as a Spark job (adaptive query execution,
+    see :func:`~pyjanitor_spark.utils.pin.pin`), with or without the
+    ``max_doc_freq`` cap.  With ``candidates`` (e.g. LSH output:
+    columns id_1, id_2) the pair stream is semi-filtered first — the production shape at corpus
     scale, where a stop-shingle's quadratic bucket would otherwise
     dominate (exact all-pairs Jaccard is inherently Σ bucket²).
 
@@ -442,7 +461,8 @@ def ngram_jaccard_pairs(
     (``10_000``: worst single-bucket pair stream C(10k, 2) ≈ 5e7 rows,
     bounded regardless of corpus size); pass ``None`` to opt out into
     fully exact all-shingle semantics when the corpus is known to have
-    no stop shingles — the scale hazard is then yours.
+    no stop shingles — the scale hazard is then yours.  ``None`` only
+    drops the cap filter: the uncapped call takes the same bucket path.
 
     ``shingle_sample=p`` (opt-in ESTIMATOR, exact mode stays default)
     keeps a shingle iff ``md5(shingle) < p`` on the hash's [0, 1)
@@ -489,41 +509,27 @@ def ngram_jaccard_pairs(
             F.conv(F.substring(F.md5(F.col("s")), 1, 8), 16, 10).cast("long")
             < F.lit(cut)
         )
+    # one shuffle into buckets, capped BEFORE pair emission; sizes
+    # re-derived from the kept buckets (2nd shuffle) so |A| and |A∩B|
+    # live in the same space (word_shingles is distinct per doc, so a
+    # doc's bucket count is its shingle-set size).  PINNED so the
+    # shingle explode + collect_list aggregate runs once for both
+    # consumers.  The pinned LogicalRDD carries the subtree's size
+    # estimate, and the `merge` hint below pins sort-merge for the
+    # pair-side joins, so the (huge) pair aggregation is never
+    # broadcast to the driver.
+    buckets = sh.groupBy("s").agg(
+        F.sort_array(F.collect_list(F.col(id_col))).alias("__ids")
+    )
     if max_doc_freq is not None:
-        # one shuffle into buckets, capped BEFORE pair emission; sizes
-        # re-derived from the kept buckets (2nd shuffle — same count as
-        # the uncapped path) so |A| and |A∩B| live in the same space.
-        # PINNED so the shingle explode + collect_list aggregate runs
-        # once for both consumers.  This was unsafe in r10 — the
-        # LogicalRDD's bogus-small statistics made Catalyst BROADCAST
-        # the (huge) pair aggregation and OOM the driver — but two
-        # things changed since: lazy-checkpoint LogicalRDDs now carry
-        # the original subtree's size estimate through (verified
-        # empirically this round), and the r10-era `merge` hint below
-        # statically pins sort-merge for the pair-side joins anyway.
-        buckets = pin(
-            sh.groupBy("s")
-            .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("__ids"))
-            .filter(F.size("__ids") <= max_doc_freq)
-        )
-        sizes = (
-            buckets.select(F.explode("__ids").alias(id_col))
-            .groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        bucketed = buckets.filter(F.size("__ids") > 1)
-    else:
-        # per-doc shingle-set size from the exploded table: a count-agg
-        # of (id) pairs.  NOT a size() expression on the base table —
-        # predicate pushdown would re-inline the whole shingle pipeline
-        # into the single-task file scan (once for the filter, again for
-        # the projection, per join side) and kick it out of codegen.
-        sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-        bucketed = (
-            sh.groupBy("s")
-            .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("__ids"))
-            .filter(F.size("__ids") > 1)
-        )
+        buckets = buckets.filter(F.size("__ids") <= max_doc_freq)
+    buckets = pin(buckets)
+    sizes = (
+        buckets.select(F.explode("__ids").alias(id_col))
+        .groupBy(id_col)
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    bucketed = buckets.filter(F.size("__ids") > 1)
     # chunked emission (O(bucket) per row, not O(bucket²)): belt and
     # braces under the doc-freq cap, the whole story without it
     pair_stream = _emit_pairs(bucketed)
@@ -1366,53 +1372,6 @@ def contamination_score(
     )
 
 
-def minhash_band_buckets(
-    frame: DataFrame,
-    id_col: str,
-    column_name: str,
-    k: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, band, key) MinHash band buckets — the deterministic,
-    PERSISTABLE probe structure behind :func:`dedupe_against` and
-    :func:`streaming_dedupe_near`.  Signatures depend only on the text,
-    so write this once per corpus increment and probe it forever: the
-    incremental-dedup cost becomes O(new batch), not O(corpus
-    re-tokenized per batch)."""
-    if k < 1 or bands < 1:
-        raise ValueError("k and bands must be >= 1")
-    if k % bands:
-        raise ValueError("k must be divisible by bands")
-    r = k // bands
-    shingled = frame.select(
-        F.col(id_col),
-        F.explode(word_shingles(F.col(column_name), shingle_n)).alias("__s"),
-    )
-    sig = shingled.groupBy(id_col).agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("__s")))).alias(f"__m{i}")
-            for i in range(k)
-        ]
-    )
-    return sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            "|", *[F.col(f"__m{b * r + j}") for j in range(r)]
-                        ).alias("key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-
-
 def dedupe_against(
     df: DataFrame,
     reference: DataFrame | None,
@@ -1433,13 +1392,19 @@ def dedupe_against(
     shuffle is on (band, key).  Pass ``reference_buckets`` (a persisted
     :func:`minhash_band_buckets` frame; ``reference`` may then be None)
     to skip re-tokenizing the corpus side — built with the same
-    k/bands/shingle_n or the probe is meaningless."""
+    k/bands/shingle_n or the probe is meaningless.
+
+    The band table and the anti-join both read
+    :func:`~pyjanitor_spark.utils.pin.share` of ``df``.  Call-time
+    jobs: that pin's shuffle and broadcast stages when ``df`` does not
+    replay identically, else none."""
     if reference_buckets is None:
         if reference is None:
             raise ValueError("need reference or reference_buckets")
         reference_buckets = minhash_band_buckets(
             reference, id_col, column_name, k=k, bands=bands, shingle_n=shingle_n
         )
+    df = share(df)
     new_b = minhash_band_buckets(
         df, id_col, column_name, k=k, bands=bands, shingle_n=shingle_n
     )
@@ -1689,6 +1654,48 @@ def bloom_dedupe_against(
     return clean.unionByName(survivors)
 
 
+def _dup_spans(
+    df: DataFrame,
+    id_col: str,
+    column_name: str,
+    k: int,
+    min_docs: int,
+    pos: bool = True,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The one duplicated-span table, ``(df, spans, flagged)``.
+
+    ``df`` is :func:`~pyjanitor_spark.utils.pin.share` of the input: a
+    caller that joins back to its rows reads that frame, so every read
+    sees one run of the upstream.  ``spans`` is the positional word
+    ``k``-gram explode of it, ``(id_col, __pos, __h)`` with ``__pos``
+    only when ``pos`` and ``__h`` the 16-byte binary md5 span key (the
+    span table is the dominant stream, one row per token, and the key
+    is most of the row; the 32-char hex form would double the pin,
+    both flag-aggregate exchanges and the semi-join bytes).  ``spans``
+    is pinned with just those columns, so the explode runs once for
+    every consumer.  ``flagged`` is ``(__h, __nd)``: the keys found in
+    at least ``min_docs`` distinct documents, ``__nd`` their document
+    count, one partial-aggregated shuffle on the key."""
+    df = share(df)
+    spans = df.select(
+        F.col(id_col),
+        F.posexplode(word_shingles(F.col(column_name), k, distinct=False)).alias(
+            "__pos", "__s"
+        ),
+    ).select(
+        F.col(id_col),
+        *(["__pos"] if pos else []),
+        F.unhex(F.md5(F.col("__s"))).alias("__h"),
+    )
+    spans = pin(spans)
+    flagged = (
+        spans.groupBy("__h")
+        .agg(F.count_distinct(F.col(id_col)).alias("__nd"))
+        .filter(F.col("__nd") >= min_docs)
+    )
+    return df, spans, flagged
+
+
 def duplicated_spans(
     df: DataFrame,
     id_col: str,
@@ -1701,32 +1708,23 @@ def duplicated_spans(
     Training Data Makes Language Models Better"): every word ``k``-gram
     span that occurs in at least ``min_docs`` DISTINCT documents,
     reported as ``(id_col, pos, span_hash, n_docs)`` with ``pos`` the
-    0-based token position of the span in its document.  Within-doc
+    0-based token position of the span in its document and
+    ``span_hash`` the span's lowercase md5 hex.  Within-doc
     repetition does not flag (that is ``repetition_score``'s job) —
     this is the cross-document boilerplate/quotation detector.
 
-    Plan: one non-distinct positional shingle explode -> md5 span key;
-    distinct-doc counts are a partial-aggregated shuffle on the 32-hex
-    key; flagged keys join back to the position stream on the same key.
-    Nothing quadratic; span keys are fixed-width hashes, never text.
+    Plan: the pinned span table of :func:`_dup_spans`; flagged keys
+    join back to it on the same key.  Nothing quadratic; span keys are
+    fixed-width hashes, never text.  Call-time jobs: the ``share``
+    pin's stages on an input that does not replay identically, else
+    none.
     """
-    spans = (
-        df.select(
-            F.col(id_col),
-            F.posexplode(
-                word_shingles(F.col(column_name), k, distinct=False)
-            ).alias("pos", "__s"),
-        )
-        .withColumn("span_hash", F.md5(F.col("__s")))
-        .drop("__s")
-    )
-    flagged = (
-        spans.groupBy("span_hash")
-        .agg(F.count_distinct(F.col(id_col)).alias("n_docs"))
-        .filter(F.col("n_docs") >= min_docs)
-    )
-    return spans.join(flagged, "span_hash").select(
-        id_col, "pos", "span_hash", "n_docs"
+    _, spans, flagged = _dup_spans(df, id_col, column_name, k, min_docs)
+    return spans.join(flagged, "__h").select(
+        F.col(id_col),
+        F.col("__pos").alias("pos"),
+        F.lower(F.hex(F.col("__h"))).alias("span_hash"),
+        F.col("__nd").alias("n_docs"),
     )
 
 
@@ -1743,27 +1741,14 @@ def dup_span_fraction(
     form of :func:`duplicated_spans` (filter high fractions as
     boilerplate; RefinedWeb-style curation).  Documents with fewer than
     ``k`` tokens have no spans and score NULL.
+
+    The per-doc totals and duplicate counts come from the pinned span
+    table of :func:`_dup_spans` and join back to the same
+    :func:`~pyjanitor_spark.utils.pin.share` of ``df``.  Call-time
+    jobs: that pin's stages on an input that does not replay
+    identically, else none.
     """
-    # feeds the flag agg, the per-doc totals, and the dup counts — pin
-    # so the corpus shingles once
-    spans = pin(
-        df.select(
-            F.col(id_col),
-            F.explode(
-                word_shingles(F.col(column_name), k, distinct=False)
-            ).alias("__s"),
-        )
-        # binary key — see remove_duplicated_spans: the hex form doubles
-        # the dominant stream's bytes for an internal-only key
-        .withColumn("__h", F.unhex(F.md5(F.col("__s"))))
-        .drop("__s")
-    )
-    flagged = (
-        spans.groupBy("__h")
-        .agg(F.count_distinct(F.col(id_col)).alias("__nd"))
-        .filter(F.col("__nd") >= min_docs)
-        .select("__h")
-    )
+    df, spans, flagged = _dup_spans(df, id_col, column_name, k, min_docs, pos=False)
     totals = spans.groupBy(id_col).agg(F.count(F.lit(1)).alias("__tot"))
     dups = (
         spans.join(flagged, "__h", "left_semi")
@@ -1805,42 +1790,23 @@ def remove_duplicated_spans(
     becomes the empty string — filter on it downstream if desired.
     In-place when ``dest`` is None.
 
-    Plan shape (nothing quadratic, all key-partitioned shuffles):
-    positional shingle explode -> md5 span keys; flagged keys = one
-    partial-agg distinct-doc count on the 16-byte binary key; covered token
-    positions = flagged spans exploded k-wide then distinct; kept
+    Plan shape (nothing quadratic, all key-partitioned shuffles): the
+    pinned span table and flagged keys of :func:`_dup_spans`; covered
+    token positions = flagged spans exploded k-wide then distinct; kept
     tokens = anti join on (id, pos); reassembly = one groupBy(id) with
     an in-group sort of (pos, token) structs.  Span keys are
     fixed-width hashes; raw text moves only in the final token stream.
+    The token stream and the final join read the same
+    :func:`~pyjanitor_spark.utils.pin.share` of ``df`` as the spans.
+    Call-time jobs: that pin's stages on an input that does not replay
+    identically, and the covered-position pin's stages (the flag
+    aggregate, the semi-join and the distinct; adaptive query
+    execution runs them when the pin is taken, see
+    :func:`~pyjanitor_spark.utils.pin.pin`).
     """
-    from pyjanitor_spark.operators.text_analysis import tokens, word_shingles
-
     out_col = dest or column_name
     text = F.col(column_name)
-    # feeds both the flag aggregate and the join-back — pin so the
-    # corpus shingles once (deterministic input would replay
-    # identically, but this stream is large; one materialization beats
-    # two shingle passes)
-    spans = pin(
-        df.select(
-            F.col(id_col),
-            F.posexplode(
-                word_shingles(text, k, distinct=False)
-            ).alias("__pos", "__s"),
-        )
-        # BINARY span key (unhex md5, 16 bytes): the span table is the
-        # dominant stream here — one row per token — and the key is most
-        # of the row; the 32-char hex form doubles the pin, both
-        # flag-aggregate exchanges, and the semi-join bytes for nothing
-        .withColumn("__h", F.unhex(F.md5(F.col("__s"))))
-        .drop("__s")
-    )
-    flagged = (
-        spans.groupBy("__h")
-        .agg(F.count_distinct(F.col(id_col)).alias("__nd"))
-        .filter(F.col("__nd") >= min_docs)
-        .select("__h")
-    )
+    df, spans, flagged = _dup_spans(df, id_col, column_name, k, min_docs)
     # feeds BOTH the rewritten-doc id list and the kept-token anti join
     # — unpinned, the whole flagged+semi-join+explode+distinct chain
     # (and the flag aggregate above it) plans twice; pinned, it is one

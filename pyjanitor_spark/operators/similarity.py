@@ -163,7 +163,6 @@ def semdedup(
     eps: float = 0.95,
     keep: str = "far",
     max_cluster_size: int | None = _ROW_CAP_UNSET,  # type: ignore[assignment]
-    check: str = "inline",
     max_cluster_cells: int | None = 200_000_000,
     split: int | str = 1,
     auto_split_cells: int = 25_000_000,
@@ -199,20 +198,16 @@ def semdedup(
     (n/8)² per block.  ``max_cluster_size`` makes that cost explicit
     (the same gate pattern as ``embedding_near_dup``'s
     ``allow_cross_join``): any cluster exceeding it aborts the job.
-    ``check='inline'`` (default) enforces it INSIDE the per-cluster
-    task before any pair work starts — zero extra jobs, the violation
-    surfaces as a runtime error naming the offending cluster.
-    ``check='eager'`` runs one bounded pre-flight aggregate instead and
-    raises ``ValueError`` listing the five largest offenders before any
-    heavy work starts (nicer message, one extra scan).  Pass
-    ``max_cluster_size=None`` to skip entirely.
+    The gate runs INSIDE the per-cluster task before any pair work
+    starts — zero extra jobs, the violation surfaces as a runtime error
+    naming the offending cluster.  Pass ``max_cluster_size=None`` to
+    skip entirely.
 
     ``max_cluster_cells`` additionally bounds rows × dim float64 CELLS
     per task (default 2e8 ≈ 1.6 GB): a row cap alone under-gates
     high-dim embeddings — 100k rows passes ``max_cluster_size`` but at
-    3072 dims is a 2.5 GB matrix before any score block.  Checked
-    under the same ``check`` policy (eager uses one ``size(vec)``
-    sample per cluster).  Degenerate vectors — null, ragged length, or
+    3072 dims is a 2.5 GB matrix before any score block.  Checked in
+    the same task, before the pair work.  Degenerate vectors — null, ragged length, or
     non-finite components — are zero-filled in-task: they group with
     nothing (cosine 0.0 < any positive eps) and survive as singleton
     groups, matching the old expression path's null-pair exclusion
@@ -232,8 +227,7 @@ def semdedup(
     split mode the cluster-level row gate does not apply
     (``max_cluster_size`` default 100,000 — passing it EXPLICITLY
     together with a split emits a warning instead of silently ignoring
-    it, as does ``check='eager'``, whose cluster-level pre-flight is
-    replaced by the per-sub-task gates); ``max_cluster_cells`` is
+    it); ``max_cluster_cells`` is
     enforced per SUB-task (the memory-relevant unit).  The quadratic
     pair COST remains — pick ``split ≈ ceil(hot_cluster_rows / 50k)``.
 
@@ -257,8 +251,6 @@ def semdedup(
     """
     if keep not in ("far", "near"):
         raise ValueError(f"keep must be 'far' or 'near', got {keep!r}")
-    if check not in ("inline", "eager"):
-        raise ValueError(f"check must be 'inline' or 'eager', got {check!r}")
     explicit_row_cap = max_cluster_size is not _ROW_CAP_UNSET
     if not explicit_row_cap:
         max_cluster_size = 100_000
@@ -315,65 +307,16 @@ def semdedup(
         if split_eff < 1:
             raise ValueError("split must be >= 1")
     split_path = split_eff == "auto" or split_eff > 1
-    if split_path:
+    if split_path and explicit_row_cap and max_cluster_size is not None:
         import warnings
 
-        notes = []
-        if explicit_row_cap and max_cluster_size is not None:
-            notes.append(
-                f"the cluster-level row gate max_cluster_size="
-                f"{max_cluster_size} does not apply in split mode "
-                f"(pass max_cluster_size=None to silence)"
-            )
-        if check == "eager":
-            notes.append(
-                "check='eager' has no cluster-level pre-flight in split "
-                "mode; max_cluster_cells is enforced per sub-task instead"
-            )
-        if notes:
-            warnings.warn(
-                "semdedup split mode: " + "; ".join(notes),
-                UserWarning,
-                stacklevel=2,
-            )
-    if (
-        check == "eager"
-        and not split_path
-        and (max_cluster_size is not None or max_cluster_cells is not None)
-    ):
-        row_cap = -1 if max_cluster_size is None else int(max_cluster_size)
-        cell_cap = -1 if max_cluster_cells is None else int(max_cluster_cells)
-        big = (
-            df.groupBy(cluster_col)
-            .agg(
-                F.count(F.lit(1)).alias("__sz"),
-                F.max(F.size(F.col(vec_col))).alias("__dim"),
-            )
-            .filter(
-                ((F.lit(row_cap) >= 0) & (F.col("__sz") > row_cap))
-                | (
-                    (F.lit(cell_cap) >= 0)
-                    & (F.col("__sz") * F.col("__dim") > cell_cap)
-                )
-            )
-            .orderBy((F.col("__sz") * F.col("__dim")).desc())
-            .limit(5)
-            .collect()  # bounded: 5 rows
+        warnings.warn(
+            f"semdedup split mode: the cluster-level row gate "
+            f"max_cluster_size={max_cluster_size} does not apply in split "
+            f"mode (pass max_cluster_size=None to silence)",
+            UserWarning,
+            stacklevel=2,
         )
-        if big:
-            worst = ", ".join(
-                f"{r[cluster_col]}={r['__sz']}rows x {r['__dim']}dims"
-                for r in big
-            )
-            raise ValueError(
-                f"semdedup: cluster(s) exceed max_cluster_size="
-                f"{max_cluster_size} rows or max_cluster_cells="
-                f"{max_cluster_cells} rows*dims ({worst}); the "
-                f"within-cluster pair work is quadratic in cluster size "
-                f"and task memory is rows*dims*8 bytes — re-cluster with "
-                f"a larger k (kmeans_assign) or raise/disable the caps "
-                f"explicitly"
-            )
     v = F.col(vec_col).cast("array<double>")
     base = df.select(F.col(id_col), F.col(cluster_col), v.alias("__v"))
     id_t = df.schema[id_col].dataType.simpleString()

@@ -1058,6 +1058,8 @@ def min_max_scale(
         f.name for f in df.schema.fields
         if f.dataType.typeName() in ("integer", "long", "double", "float", "short", "byte", "decimal")
     ]
+    if not cols:
+        raise ValueError("min_max_scale: there are no numeric columns to scale")
     df = share(df)
     if jointly:
         mins = [F.min(F.col(c)) for c in cols]

@@ -315,8 +315,8 @@ def test_semdedup_split_warns_on_explicit_gates(spark, frame):
     with _w.catch_warnings(record=True) as rec:
         _w.simplefilter("always")
         pj.semdedup(sdf, "emb", "vid", "lab", eps=0.9, split=2,
-                    check="eager")
-    assert any("eager" in str(r.message) for r in rec)
+                    max_cluster_size=100)
+    assert any("row gate" in str(r.message) for r in rec)
     # default caps in split mode stay silent — only EXPLICIT ones warn
     with _w.catch_warnings(record=True) as rec:
         _w.simplefilter("always")

@@ -68,7 +68,7 @@ def test_probing_verbs_have_no_bare_actions():
     for the probe and again for the output.  Spark's ``F.first(col)``
     aggregate takes an argument and does not match."""
     action = re.compile(
-        r"\.(collect|first|count|toPandas|toLocalIterator)\(\)|\.(take|head)\("
+        r"\.(collect|first|count|toPandas|toLocalIterator|isEmpty)\(\)|\.(take|head)\("
     )
     paths = [
         os.path.join(PKG, "operators", f"{name}.py")
@@ -500,3 +500,120 @@ def test_column_statistic_on_nondeterministic_input(spark, verb):
     the rows it returned.  ``v`` is unique per row (``v = id``)."""
     df = _coin_filtered(spark).select("id", F.col("id").cast("double").alias("v"))
     _STATISTICS[verb](df)
+
+
+def _span_text(i):
+    """A shared 5-token prefix, 5 tokens shared by the ids with the same
+    ``i % 7`` and 5 tokens of the doc's own: with ``k=5`` every doc has
+    duplicated spans (so every doc of the run shows up in
+    ``duplicated_spans``) and spans of its own."""
+    return " ".join(
+        ["alpha", "beta", "gamma", "delta", "epsilon"]
+        + [f"{t}{i % 7}" for t in "vwxyz"]
+        + [f"{t}{i}" for t in "pqrst"]
+    )
+
+
+def _own_text(i):
+    """Eight tokens no other id shares: only an exact copy collides."""
+    return " ".join(f"{t}{i}" for t in "abcdefgh")
+
+
+def _dedupe_against_evens(spark, df):
+    """``dedupe_against`` with a reference holding exact copies of the
+    even ids' texts (under other ids)."""
+    ref = spark.createDataFrame(
+        [(10_000 + i, _own_text(i)) for i in range(0, 400, 2)], "doc_id long, text string"
+    )
+    return pj.dedupe_against(df, ref, "doc_id", "text")
+
+
+_DEDUP_VERBS = {
+    "duplicated_spans": (
+        _span_text, lambda spark, df: pj.duplicated_spans(df, "doc_id", "text", k=5)
+    ),
+    "dup_span_fraction": (
+        _span_text, lambda spark, df: pj.dup_span_fraction(df, "doc_id", "text", k=5)
+    ),
+    "remove_duplicated_spans": (
+        _span_text, lambda spark, df: pj.remove_duplicated_spans(df, "doc_id", "text", k=5)
+    ),
+    "dedupe_against": (_own_text, _dedupe_against_evens),
+}
+
+
+@pytest.mark.parametrize("verb", list(_DEDUP_VERBS))
+def test_dedup_verb_on_nondeterministic_input(spark, verb):
+    """A dedup verb that reads its input more than once reads one run of
+    it: on 400 docs filtered by a coin flip that differs on every read,
+    the output equals the verb run on exactly the docs that came back."""
+    import random
+
+    from pyspark.sql.types import BooleanType
+
+    text, run = _DEDUP_VERBS[verb]
+    coin = F.udf(lambda _: random.random() < 0.5, BooleanType()).asNondeterministic()
+    docs = spark.createDataFrame(
+        [(i, text(i)) for i in range(400)], "doc_id long, text string"
+    ).filter(coin("doc_id"))
+    got = sorted(map(tuple, run(spark, docs).collect()), key=repr)
+    ids = sorted({r[0] for r in got})
+    assert ids
+    back = spark.createDataFrame([(i, text(i)) for i in ids], "doc_id long, text string")
+    assert got == sorted(map(tuple, run(spark, back).collect()), key=repr)
+
+
+def _components(edges):
+    """The connected components of ``edges`` as a set of frozensets."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent[find(a)] = find(b)
+    groups = {}
+    for x in list(parent):
+        groups.setdefault(find(x), set()).add(x)
+    return {frozenset(g) for g in groups.values()}
+
+
+@pytest.mark.parametrize("mode", ["all", "star"])
+def test_lsh_pairs_equal_band_table_self_join(spark, mode):
+    """``minhash_lsh_pairs`` emits the pairs of a self-join of
+    ``minhash_band_buckets`` on (band, key), the table ``dedupe_against``
+    and ``streaming_dedupe_near`` probe: every pair in ``mode='all'``,
+    the same connected components in ``mode='star'``."""
+    rows = []
+    for i in range(60):
+        toks = [f"w{i % 10}_{j}" for j in range(12)]
+        if i >= 20:
+            toks[i % 12] = f"x{i}"
+        rows.append((i, " ".join(toks)))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    pairs = {
+        (r["id_1"], r["id_2"])
+        for r in pj.minhash_lsh_pairs(docs, "doc_id", "text", mode=mode).collect()
+    }
+    b = pj.minhash_band_buckets(docs, "doc_id", "text")
+    x, y = b.alias("x"), b.alias("y")
+    joined = {
+        (r[0], r[1])
+        for r in x.join(
+            y,
+            (F.col("x.band") == F.col("y.band"))
+            & (F.col("x.key") == F.col("y.key"))
+            & (F.col("x.doc_id") < F.col("y.doc_id")),
+        )
+        .select("x.doc_id", "y.doc_id")
+        .collect()
+    }
+    assert joined
+    if mode == "all":
+        assert pairs == joined
+    else:
+        assert _components(pairs) == _components(joined)

@@ -1376,22 +1376,6 @@ class TestSemdedupClusterGuard:
         with pytest.raises(Exception, match="max_cluster_size"):
             out.count()
 
-    def test_oversize_cluster_raises_eagerly(self, spark):
-        df = spark.createDataFrame(
-            [(i, [float(i), 1.0], 0) for i in range(20)],
-            "vec_id int, embedding array<double>, label int",
-        )
-        with pytest.raises(ValueError, match="max_cluster_size"):
-            pj.semdedup(df, "embedding", "vec_id", "label",
-                        max_cluster_size=10, check="eager")
-
-    def test_bad_check_mode_raises(self, spark):
-        df = spark.createDataFrame(
-            [(1, [1.0], 0)], "vec_id int, embedding array<double>, label int"
-        )
-        with pytest.raises(ValueError, match="check"):
-            pj.semdedup(df, "embedding", "vec_id", "label", check="maybe")
-
     def test_guard_disabled_or_loose_passes(self, spark):
         df = spark.createDataFrame(
             [(i, [float(i % 3), 1.0], i % 2) for i in range(20)],
@@ -1941,6 +1925,24 @@ def test_min_max_scale_jointly_skips_an_all_null_column(spark):
         2: (0.5, 1.0, None),
         3: (None, 0.2, None),
     }
+
+
+@pytest.mark.parametrize("jointly", [False, True])
+def test_min_max_scale_without_numeric_columns_raises_at_call(spark, jointly):
+    """A frame with no numeric column has nothing to scale: the call
+    raises a ``ValueError`` saying so, before it runs any Spark job.
+    The input sits above a shuffle, so a ``share`` pin taken before
+    the check would run one."""
+    sc = spark.sparkContext
+    df = spark.range(4).repartition(2).select(F.col("id").cast("string").alias("s"))
+    sc.setJobGroup("min_max_scale_no_numeric", "min_max_scale without numeric columns")
+    try:
+        with pytest.raises(ValueError, match="no numeric columns to scale"):
+            pj.min_max_scale(df, jointly=jointly)
+        jobs = sc.statusTracker().getJobIdsForGroup("min_max_scale_no_numeric")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
 
 
 class TestProductQuantization:

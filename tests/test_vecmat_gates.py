@@ -4,8 +4,8 @@ vector / duplicate-id semantics VERDICT r10 + ADVICE flagged.
 
 * ``max_cluster_cells`` / ``max_block_cells`` — a ROW cap alone
   under-gates high-dim embeddings (100k × 3072 dims = 2.5 GB float64);
-  the cells gate must fire on a high-dim cluster that passes the row
-  cap, in both inline and eager check modes.
+  the cells gate must fire, inside the task, on a high-dim cluster
+  that passes the row cap.
 * degenerate vectors (null / ragged / NaN) previously crashed the Arrow
   task via ``np.asarray(pdf[v].tolist())``; now they zero-fill — cosine
   0.0 against everything — reproducing the old expression-join's
@@ -85,15 +85,6 @@ def test_semdedup_cells_gate_inline(spark):
         pj.semdedup(
             df, "emb", "id", "cl", eps=0.99, max_cluster_cells=100
         ).collect()
-
-
-def test_semdedup_cells_gate_eager(spark):
-    df = _cluster_frame(spark, n=8, dim=16)
-    with pytest.raises(ValueError, match="max_cluster_cells"):
-        pj.semdedup(
-            df, "emb", "id", "cl", eps=0.99, check="eager",
-            max_cluster_cells=100,
-        )
 
 
 def test_semdedup_cells_gate_admits_small(spark):
