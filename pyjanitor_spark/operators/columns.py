@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyjanitor_spark.utils.order import ORDER_COL, ensure_order_column
+from pyjanitor_spark.utils.pin import probe
 from pyjanitor_spark.utils.select import resolve_columns
 from pyjanitor_spark.utils.strings import make_unique
 
@@ -94,8 +95,11 @@ def select_rows(df: DataFrame, *args: Any, invert: bool = False) -> DataFrame:
       order (the ``_row_order`` contract) — pandas ``.iloc`` parity,
       resolved through ``positional_index`` (partition-offset pattern,
       no single-task stage).  Negative positions and open-ended or
-      negative slice bounds need the row count: ONE bounded ``count()``
-      action, only when such a selector appears.
+      negative slice bounds need the row count, only when such a
+      selector appears: the call then runs one bounded count job
+      through :func:`~pyjanitor_spark.utils.pin.probe` (plus its pin's
+      upstream stages on a replay-unstable input), and the positions
+      are read from that same run of the input.
     * a slice with NON-int bounds (``slice("b", "d")``) is a LABEL
       slice on the ``_row_order`` column, inclusive of BOTH endpoints
       like pandas ``.loc`` (ref ``select.py:300-316``) — a pure range
@@ -166,7 +170,9 @@ def select_rows(df: DataFrame, *args: Any, invert: bool = False) -> DataFrame:
             or (isinstance(a, (list, tuple)) and any(x < 0 for x in a))
             for a in pos_args
         )
-        n = df.count() if needs_n else None  # bounded action, documented
+        n = None
+        if needs_n:
+            df, ((n,),) = probe(df, lambda f: f.agg(F.count(F.lit(1))))
 
         def fix(i: int) -> int:
             return i + n if i < 0 else i
@@ -261,9 +267,13 @@ def move(
       position, preserving its internal order; the result is a
       range-sorted frame, so downstream positional verbs
       (``positional_index``, ``select_rows`` positions, ``row_to_names``)
-      see the new order.  Negative positions count from the end (one
-      bounded ``count()`` action).  Plan: ``positional_index`` + one
-      total sort on the adjusted key — no single-task stage.
+      see the new order.  Negative positions, and a frame-edge move
+      ``position='after'``, count from the end: the call then runs one
+      bounded count job through :func:`~pyjanitor_spark.utils.pin.probe`
+      (plus its pin's upstream stages on a replay-unstable input), and
+      the output is built from that same run of the input.  Plan:
+      ``positional_index`` + one total sort on the adjusted key — no
+      single-task stage.
 
     ``axis=None`` infers: string source = column, int/list = rows.
     """
@@ -315,7 +325,9 @@ def move(
         or (target is not None and target < 0)
         or (target is None and position == "after")
     )
-    n = df.count() if needs_n else None  # bounded action, documented
+    n = None
+    if needs_n:
+        df, ((n,),) = probe(df, lambda f: f.agg(F.count(F.lit(1))))
 
     def fix(i: int) -> int:
         return i + n if i < 0 else i
@@ -366,16 +378,19 @@ def drop_duplicate_columns(df: DataFrame, column_name: str, nth_index: int = 0) 
 
 def drop_constant_columns(df: DataFrame) -> DataFrame:
     """Drop columns with a single unique value (ref
-    ``drop_constant_columns.py``).  One bounded driver action: a single
-    agg pass computing min==max per column (null-aware) — scales as one
-    map-reduce over the data, no per-column jobs."""
+    ``drop_constant_columns.py``).  One bounded driver action through
+    :func:`~pyjanitor_spark.utils.pin.probe`: a single agg pass
+    computing min==max per column (null-aware) — scales as one
+    map-reduce over the data, no per-column jobs — plus the pin's
+    upstream stages on a replay-unstable input; the output is built
+    from the same run of the input."""
     aggs = []
     for c in df.columns:
         aggs.append(F.min(F.col(c)).alias(f"__min_{c}"))
         aggs.append(F.max(F.col(c)).alias(f"__max_{c}"))
         aggs.append(F.count(F.col(c)).alias(f"__cnt_{c}"))
         aggs.append(F.count(F.lit(1)).alias(f"__tot_{c}"))
-    row = df.agg(*aggs).first()
+    df, (row,) = probe(df, lambda f: f.agg(*aggs))
     drop = []
     for c in df.columns:
         mn, mx, cnt, tot = (
@@ -439,7 +454,9 @@ def row_to_names(
 
     Needs an order column ("row k" is positional).  One bounded driver
     action collects just the designated row(s) (LIMIT k+1 under the order
-    — cheap)."""
+    — cheap) through :func:`~pyjanitor_spark.utils.pin.probe`, plus the
+    pin's upstream stages on a replay-unstable input; the output is
+    built from the same run of the input."""
     if isinstance(row_numbers, slice):
         if row_numbers.step is not None:
             raise ValueError(
@@ -467,9 +484,16 @@ def row_to_names(
                 "or a slice."
             )
         rows = list(row_numbers)
-    df, ocol, added = ensure_order_column(df, order_by)
     k = max(rows) + 1
-    head = df.orderBy(F.col(ocol)).limit(k).collect()
+
+    def first_rows(f: DataFrame) -> DataFrame:
+        f, ocol, _ = ensure_order_column(f, order_by)
+        return f.orderBy(F.col(ocol)).limit(k)
+
+    # the replay decision is taken on the caller's frame: an added
+    # monotonically_increasing_id order is stable over a stable frame
+    df, head = probe(df, first_rows)
+    df, ocol, added = ensure_order_column(df, order_by)
     if len(head) <= max(rows):
         # same failure the reference's df.iloc[row] hits, named clearly
         raise ValueError(

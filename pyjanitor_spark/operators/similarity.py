@@ -85,31 +85,66 @@ def cosine_topk(
     )
 
 
-def centroids(df: DataFrame, vec_col: str, cluster_col: str) -> DataFrame:
-    """Elementwise-mean centroid per cluster: posexplode → (cluster,
-    pos) avg → re-assemble with array_agg sorted by pos.  One shuffle on
-    (cluster,pos); output is n_clusters rows (tiny)."""
-    exploded = df.select(
-        F.col(cluster_col), F.posexplode(F.col(vec_col).cast("array<double>"))
-    )
+def _mean_vectors(df: DataFrame, vec: Column, keys: list[str]) -> DataFrame:
+    """Elementwise mean of ``vec`` per ``keys`` group, as ``(*keys,
+    centroid)``: posexplode → (keys, pos) mean → re-assembled in pos
+    order.  One shuffle on (keys, pos); one output row per group."""
     # sum in DECIMAL: decimal addition is exact, so the centroid is
     # independent of partitioning/combine order (a double sum is not),
     # making results reproducible across cluster layouts AND engines
     # (the DuckDB oracle recomputes the identical value); the single
     # rounding happens once, at the final cast-to-double division
-    per_pos = exploded.groupBy(cluster_col, "pos").agg(
-        (
-            F.sum(F.col("col").cast("decimal(27,10)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("v")
+    per_pos = (
+        df.select(*keys, F.posexplode(vec).alias("__pos", "__x"))
+        .groupBy(*keys, "__pos")
+        .agg(
+            (
+                F.sum(F.col("__x").cast("decimal(27,10)")).cast("double")
+                / F.count(F.lit(1))
+            ).alias("__m")
+        )
     )
-    return per_pos.groupBy(cluster_col).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("pos"), F.col("v")))
-        ).alias("__pv")
-    ).select(
-        cluster_col, F.transform(F.col("__pv"), lambda s: s["v"]).alias("centroid")
+    return per_pos.groupBy(*keys).agg(
+        F.array_sort(F.collect_list(F.struct("__pos", "__m"))).alias("__pm")
+    ).select(*keys, F.transform("__pm", lambda s: s["__m"]).alias("centroid"))
+
+
+def centroids(df: DataFrame, vec_col: str, cluster_col: str) -> DataFrame:
+    """Elementwise-mean centroid per cluster, DECIMAL-exact (layout- and
+    engine-reproducible).  One shuffle on (cluster, pos); output is
+    n_clusters rows (tiny)."""
+    return _mean_vectors(
+        df, F.col(vec_col).cast("array<double>"), [cluster_col]
     )
+
+
+def _probed_clusters(
+    df: DataFrame,
+    query: list[float],
+    vec_col: str,
+    cluster_col: str,
+    nprobe: int,
+    centroids_df: DataFrame | None,
+) -> list:
+    """The ``nprobe`` clusters whose centroids are most cosine-similar
+    to ``query``, ties by cluster id: one bounded collect of ``nprobe``
+    rows, over ``centroids_df`` or else the centroid aggregate of
+    ``df``."""
+    cents = (
+        centroids_df
+        if centroids_df is not None
+        else centroids(df, vec_col, cluster_col)
+    )
+    ranked = (
+        cents.select(
+            F.col(cluster_col),
+            cosine_sim(F.col("centroid"), _qvec(query)).alias("ccos"),
+        )
+        .orderBy(F.col("ccos").desc(), F.col(cluster_col).asc())
+        .limit(nprobe)
+        .collect()
+    )
+    return [r[cluster_col] for r in ranked]
 
 
 def ivf_topk(
@@ -137,21 +172,9 @@ def ivf_topk(
     persisted file is bit-reproducible), serve every query against the
     stored index — per-query cost is one tiny ranking action plus the
     pruned scan."""
-    cents = (
-        centroids_df
-        if centroids_df is not None
-        else centroids(df, vec_col, cluster_col)
+    probe = _probed_clusters(
+        df, query, vec_col, cluster_col, nprobe, centroids_df
     )
-    ranked = (
-        cents.select(
-            F.col(cluster_col),
-            cosine_sim(F.col("centroid"), _qvec(query)).alias("ccos"),
-        )
-        .orderBy(F.col("ccos").desc(), F.col(cluster_col).asc())
-        .limit(nprobe)
-        .collect()
-    )
-    probe = [r[cluster_col] for r in ranked]
     return cosine_topk(df.filter(F.col(cluster_col).isin(probe)), query, vec_col, id_col, k)
 
 
@@ -462,20 +485,33 @@ def semdedup(
     return df.join(kept, id_col, "left_semi")
 
 
+_LSH_SEED = "lsh"
+
+
+def _plane_signs(dim: int, planes: int, seed: str) -> list[list[float]]:
+    """The hyperplane sign table: ``signs[p][d]`` = ±1 from the low bit
+    of md5(f'{seed}:{p}:{d}') — deterministic and engine-portable."""
+    import hashlib
+
+    return [
+        [
+            1.0
+            if int(hashlib.md5(f"{seed}:{p}:{d}".encode()).hexdigest()[-1], 16) & 1
+            else -1.0
+            for d in range(dim)
+        ]
+        for p in range(planes)
+    ]
+
+
 def hyperplane_bucket(
-    vec: Column, dim: int, planes: int = 8, seed: str = "lsh"
+    vec: Column, dim: int, planes: int = 8, seed: str = _LSH_SEED
 ) -> Column:
     """LSH bucket id: for plane p, sign of Σ_d s(p,d)·v_d with s(p,d) =
     ±1 from the low bit of md5(f'{seed}:{p}:{d}') — deterministic and
     engine-portable.  Returns a ``planes``-char '0'/'1' string."""
-    import hashlib
-
     bits = []
-    for p in range(planes):
-        signs = []
-        for d in range(dim):
-            h = hashlib.md5(f"{seed}:{p}:{d}".encode()).hexdigest()
-            signs.append(1.0 if int(h[-1], 16) & 1 else -1.0)
+    for signs in _plane_signs(dim, planes, seed):
         # one zip_with+aggregate per plane instead of a dim-term sum
         # tree: ~16x fewer codegen nodes, so Janino compile time (the
         # dominant cost for small inputs) stays flat as dim grows
@@ -507,63 +543,46 @@ def lsh_bucket_topk(
     bucketed = df.withColumn(
         "__bkt", hyperplane_bucket(F.col(vec_col).cast("array<double>"), dim, planes)
     )
-    import hashlib
-
     qbits = ""
-    for p in range(planes):
+    for signs in _plane_signs(dim, planes, _LSH_SEED):
+        # the same left-to-right double sum as the bucket's aggregate
         acc = 0.0
-        for d in range(dim):
-            h = hashlib.md5(f"lsh:{p}:{d}".encode()).hexdigest()
-            s = 1.0 if int(h[-1], 16) & 1 else -1.0
-            acc += s * float(query[d])
+        for s, q in zip(signs, query):
+            acc += s * float(q)
         qbits += "1" if acc > 0 else "0"
     return cosine_topk(
         bucketed.filter(F.col("__bkt") == qbits), query, vec_col, id_col, k
     )
 
 
-# above this many centroids, assignment rides a one-row broadcast of the
-# centroid data instead of O(k*dim) plan literals — large literal trees
-# break whole-stage codegen and eventually Janino's 64 KB method limit
+# --- Vector quantization: one Lloyd trainer, one nearest-centroid
+# expression and one encoder serve k-means and product quantization
+# (Jégou et al. 2011, "Product Quantization for Nearest Neighbor
+# Search").  PQ cuts each vector into m subspaces with one codebook of k
+# centroids each and stores the m nearest-centroid indices; k-means is
+# the m=1 case.  Queries score PQ codes through asymmetric distance
+# computation (ADC): a tiny m*k lookup table built once per query,
+# folded into the plan as literals.  At 100 TB the embedding column is
+# the dominant payload; scanning codes instead of raw floats is a
+# ~dim*4/m reduction in bytes moved.
+
+# codebooks of at most this many centroids in total fold into the plan
+# as literals; larger ones ride one broadcast row instead of O(k*dim)
+# plan literals — large literal trees break whole-stage codegen and
+# eventually Janino's 64 KB method limit
 _KMEANS_LITERAL_MAX = 64
 
 
-def _argmin_cluster(v: Column, cents: list[list[float]]) -> Column:
-    """0-based index of the nearest centroid by squared Euclidean
-    distance; ties take the lowest index (both engines' first-match)."""
-    from pyjanitor_spark.utils.expr import let
-
-    def dists(vv: Column) -> Column:
-        d = F.array(
-            *[
-                F.aggregate(
-                    F.zip_with(
-                        vv,
-                        F.array(*[F.lit(float(x)) for x in c]),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                for c in cents
-            ]
-        )
-        return let(
-            d, lambda arr: (F.array_position(arr, F.array_min(arr)) - 1).cast("int")
-        )
-
-    return let(v, dists)
-
-
-def _argmin_cluster_data(v: Column, cents_arr: Column) -> Column:
-    """Data-driven twin of :func:`_argmin_cluster`: centroids arrive as
-    an ``array<array<double>>`` COLUMN (one broadcast row), so the plan
-    is O(1) size regardless of k.  Same first-min tie semantics."""
+def _argmin(v: Column, cents: Column) -> Column:
+    """0-based index of the centroid in ``cents`` (an
+    ``array<array<double>>`` column) nearest to ``v`` by squared
+    Euclidean distance; ties take the lowest index (both engines'
+    first-match)."""
     from pyjanitor_spark.utils.expr import let
 
     def dists(vv: Column) -> Column:
         d = F.transform(
-            cents_arr,
+            cents,
             lambda c: F.aggregate(
                 F.zip_with(vv, c, lambda a, b: (a - b) * (a - b)),
                 F.lit(0.0),
@@ -577,26 +596,109 @@ def _argmin_cluster_data(v: Column, cents_arr: Column) -> Column:
     return let(v, dists)
 
 
-def _with_cluster(
-    df: DataFrame, v: Column, cents: list[list[float]], dest: str
+def _pq_slices(v: Column, m: int, dsub: int) -> list[Column]:
+    return [F.slice(v, s * dsub + 1, dsub) for s in range(m)]
+
+
+def _with_codes(
+    df: DataFrame, v: Column, cents: list[list[list[float]]], dest: str
 ) -> DataFrame:
-    """Attach the nearest-centroid index as ``dest``.  Small k folds the
-    centroids into the plan as literals (pure projection, scan-time);
-    above ``_KMEANS_LITERAL_MAX`` the centroids ride ONE broadcast row
-    cross-joined in, keeping the expression tree O(1) while the data
-    plane carries the k*dim doubles."""
-    if len(cents) <= _KMEANS_LITERAL_MAX:
-        return df.withColumn(dest, _argmin_cluster(v, cents))
-    cdf = local_frame(
-        df.sparkSession,
-        [([list(map(float, c)) for c in cents],)],
-        "__cents array<array<double>>",
+    """Attach ``dest``, the ``array<int>`` of ``v``'s nearest-centroid
+    index in each of the ``m = len(cents)`` subspace codebooks.  The one
+    size rule: up to ``_KMEANS_LITERAL_MAX`` centroids in total fold
+    into the plan as literals (a pure scan-time projection); beyond it
+    the codebooks ride ONE broadcast row cross-joined in, keeping the
+    expression tree O(1) in ``k`` while the data plane carries the
+    doubles."""
+    m, dsub = len(cents), len(cents[0][0])
+    out = df
+    if sum(map(len, cents)) <= _KMEANS_LITERAL_MAX:
+        books = [
+            F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in sub])
+            for sub in cents
+        ]
+    else:
+        cdf = local_frame(
+            df.sparkSession, [(cents,)], "__cb array<array<array<double>>>"
+        )
+        out = df.crossJoin(F.broadcast(cdf))
+        books = [F.element_at(F.col("__cb"), s + 1) for s in range(m)]
+    codes = F.array(
+        *[_argmin(sv, books[s]) for s, sv in enumerate(_pq_slices(v, m, dsub))]
     )
-    return (
-        df.crossJoin(F.broadcast(cdf))
-        .withColumn(dest, _argmin_cluster_data(v, F.col("__cents")))
-        .drop("__cents")
+    return out.withColumn(dest, codes).drop("__cb")
+
+
+def _train_codebooks(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    m: int,
+    k: int,
+    iters: int,
+    seed: str,
+    verb: str,
+) -> list[list[list[float]]]:
+    """Deterministic Lloyd, all ``m`` subspaces in ONE scan per round;
+    returns ``cents[subspace][code]``.  Engine-reproducible by
+    construction (no RNG): the initial centroids are the slices of the
+    ``k`` rows with the smallest ``md5(seed:id)`` (a fixed hash
+    permutation, clamped to the row count); each round assigns through
+    :func:`_with_codes` and recomputes every centroid with the
+    DECIMAL-exact mean of :func:`centroids`, keyed by (subspace,
+    cluster, position) so one shuffle updates every codebook.  A
+    centroid that loses every member keeps its previous value.
+
+    Call-time actions: the pin of the (vector, hash) working set (its
+    upstream's shuffle stages run when it is taken, see
+    :func:`~pyjanitor_spark.utils.pin.pin`), one bounded collect of the
+    ``k`` seed rows, then one bounded collect of ``m * k`` rows per
+    round."""
+    if m < 1 or k < 1 or iters < 0:
+        raise ValueError(f"{verb}: m >= 1, k >= 1 and iters >= 0 required")
+    # pin the working set once: the seed scan and every Lloyd round
+    # re-read it, and each unpinned read would re-run the source scan
+    # and the array cast — the standard iterative-trainer input cache
+    # (Spark MLlib KMeans persists its input the same way)
+    base = pin(
+        df.select(
+            F.col(vec_col).cast("array<double>").alias("__v"),
+            F.md5(
+                F.concat(F.lit(seed + ":"), F.col(id_col).cast("string"))
+            ).alias("__h"),
+        )
     )
+    seeds = base.orderBy("__h").limit(k).collect()  # bounded: k rows
+    if not seeds:
+        raise ValueError(f"{verb}: input DataFrame is empty")
+    k = len(seeds)
+    dim = len(seeds[0]["__v"])
+    if dim % m:
+        raise ValueError(f"vector dim {dim} is not divisible by m={m}")
+    dsub = dim // m
+    cents = [
+        [list(r["__v"][s * dsub : (s + 1) * dsub]) for r in seeds]
+        for s in range(m)
+    ]
+    for _ in range(iters):
+        subs = (
+            _with_codes(base, F.col("__v"), cents, "__code")
+            .select(
+                F.posexplode(F.array(*_pq_slices(F.col("__v"), m, dsub))).alias(
+                    "__s", "__sv"
+                ),
+                "__code",
+            )
+            .withColumn("__c", F.element_at("__code", F.col("__s") + 1))
+        )
+        rows = _mean_vectors(
+            subs, F.col("__sv"), ["__s", "__c"]
+        ).collect()  # bounded: m*k rows
+        got = {(r["__s"], r["__c"]): list(r["centroid"]) for r in rows}
+        cents = [
+            [got.get((s, c), cents[s][c]) for c in range(k)] for s in range(m)
+        ]
+    return cents
 
 
 def kmeans_assign(
@@ -612,196 +714,32 @@ def kmeans_assign(
     cluster-assignment producer for :func:`ivf_topk` / :func:`semdedup`
     when no natural partition exists.
 
-    Engine-reproducible by construction (no RNG): initial centroids are
-    the ``k`` rows with the smallest ``md5(seed:id)`` (a fixed hash
-    permutation); each Lloyd round recomputes centroids with the same
+    k-means is product quantization with one subspace: the codebook
+    comes from the same trainer as :func:`pq_train` (``m=1``), and the
+    label is that codebook's code, so ``kmeans_assign(k, iters,
+    seed=s)`` labels equal code 0 of ``pq_encode(pq_train(m=1, k,
+    iters, seed=s))``.  Engine-reproducible by construction (no RNG):
+    initial centroids are the ``k`` rows with the smallest
+    ``md5(seed:id)``; each round recomputes centroids with the same
     DECIMAL-exact elementwise mean as :func:`centroids` (order- and
     layout-independent); assignment is first-min squared-Euclidean.
     Clusters that lose every member keep their previous centroid.
+    ``k`` is clamped to the row count when the input is smaller.  This
+    is fixed-round Lloyd, not convergence-driven: ``iters`` bounds cost
+    explicitly.
 
-    Cost: ``iters`` scans, each with one (cluster, pos)-keyed shuffle
-    for the centroid update and one bounded k-row collect (the
-    documented iterative-algorithm exception, same as
-    ``near_dup_clusters``).  Assignment is a pure projection: for small
-    ``k`` the centroids fold into the plan as literals; beyond
-    ``_KMEANS_LITERAL_MAX`` (64) they ride a single broadcast row so the
-    expression tree stays O(1) regardless of ``k`` (large literal trees
-    would break whole-stage codegen).  This is fixed-round Lloyd, not
-    convergence-driven: ``iters`` bounds cost explicitly.  ``k`` is
-    clamped to the row count when the input is smaller than ``k``.
-    """
-    if k < 1 or iters < 0:
-        raise ValueError("k >= 1 and iters >= 0 required")
-    v = F.col(vec_col).cast("array<double>")
-    # pin the (hash, vector) working set once: Lloyd re-reads it per
-    # round (seed scan + one scan per iteration), and each unpinned
-    # read re-runs the source scan and the array cast — the standard
-    # iterative-trainer input cache (Spark MLlib KMeans persists its
-    # input the same way).  The final assignment projects over the
-    # caller's full frame and is not served by the pin.
-    base = pin(
-        df.select(
-            v.alias("__v"),
-            F.md5(
-                F.concat(F.lit(seed + ":"), F.col(id_col).cast("string"))
-            ).alias("__h"),
-        )
-    )
-    seeds = (
-        base.orderBy("__h")
-        .limit(k)  # bounded: k rows
-        .collect()
-    )
-    if not seeds:
-        raise ValueError("kmeans_assign: input DataFrame is empty")
-    # fewer rows than k: clamp — every row is its own centroid and the
-    # extra clusters could never win an assignment anyway
-    k = min(k, len(seeds))
-    cents = [list(r["__v"]) for r in seeds]
-    for _ in range(iters):
-        assigned = _with_cluster(base, F.col("__v"), cents, "__c").select(
-            F.col("__c"), F.col("__v")
-        )
-        per_pos = (
-            assigned.select(F.col("__c"), F.posexplode(F.col("__v")))
-            .groupBy("__c", "pos")
-            .agg(
-                (
-                    F.sum(F.col("col").cast("decimal(27,10)")).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("m")
-            )
-        )
-        rows = (
-            per_pos.groupBy("__c")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("pos"), F.col("m")))
-                ).alias("__pm")
-            )
-            .select(
-                "__c", F.transform(F.col("__pm"), lambda s: s["m"]).alias("cv")
-            )
-            .collect()  # bounded: k rows
-        )
-        got = {r["__c"]: list(r["cv"]) for r in rows}
-        cents = [got.get(i, cents[i]) for i in range(k)]
-    return _with_cluster(df, v, cents, dest)
-
-
-# --- Product quantization (Jégou et al. 2011, "Product Quantization for
-# Nearest Neighbor Search") — the compressed-domain ANN scale path:
-# m sub-codebooks of k centroids quantize each vector to m small codes
-# (dim*4 bytes -> m bytes), and queries score candidates through
-# asymmetric distance computation (ADC): a tiny m*k lookup table built
-# once per query, folded into the plan as literals.  At 100 TB the
-# embedding column is the dominant payload; scanning codes instead of
-# raw floats is a ~dim*4/m reduction in bytes moved.
-
-
-def _pq_slices(v: Column, m: int, dsub: int) -> list[Column]:
-    return [F.slice(v, s * dsub + 1, dsub) for s in range(m)]
-
-
-def _pq_train_cents(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    m: int,
-    k: int,
-    iters: int,
-    seed: str,
-) -> list[list[list[float]]]:
-    """Deterministic per-subspace Lloyd, all ``m`` subspaces in ONE scan
-    per round.  Same reproducibility contract as :func:`kmeans_assign`:
-    k global seed rows by ``md5(seed:id)`` (each subspace initializes
-    from the same rows' slices), DECIMAL-exact per-(subspace, cluster,
-    position) means, first-min tie-break, empty clusters keep their
-    previous centroid.  Bounded collects only (k seed rows; m*k centroid
-    rows per round)."""
-    if m < 1 or k < 1 or iters < 0:
-        raise ValueError("m >= 1, k >= 1 and iters >= 0 required")
-    v = F.col(vec_col).cast("array<double>")
-    # iterative-trainer input cache (see kmeans_assign): the seed scan
-    # and every Lloyd round re-read the cast vectors
-    base = pin(
-        df.select(
-            v.alias("__v"),
-            F.md5(
-                F.concat(F.lit(seed + ":"), F.col(id_col).cast("string"))
-            ).alias("__h"),
-        )
-    )
-    seeds = (
-        base.orderBy("__h")
-        .limit(k)  # bounded: k rows
-        .collect()
-    )
-    if not seeds:
-        raise ValueError("pq_train: input DataFrame is empty")
-    k = min(k, len(seeds))
-    dim = len(seeds[0]["__v"])
-    if dim % m:
-        raise ValueError(f"vector dim {dim} is not divisible by m={m}")
-    dsub = dim // m
-    cents = [
-        [list(r["__v"][s * dsub : (s + 1) * dsub]) for r in seeds[:k]]
-        for s in range(m)
-    ]
-    if iters:
-        # one broadcast row carries all m codebooks; the per-row subspace
-        # explode keys every Lloyd statistic by (subspace, cluster, pos)
-        # so a single shuffle per round updates every codebook
-        spark = df.sparkSession
-        for _ in range(iters):
-            cdf = local_frame(
-                spark, [(cents,)], "__cb array<array<array<double>>>"
-            )
-            assigned = (
-                base.select(
-                    F.posexplode(
-                        F.array(*_pq_slices(F.col("__v"), m, dsub))
-                    )
-                )
-                .withColumnRenamed("pos", "__s")
-                .withColumnRenamed("col", "__sv")
-                .crossJoin(F.broadcast(cdf))
-                .select(
-                    "__s",
-                    "__sv",
-                    _argmin_cluster_data(
-                        F.col("__sv"),
-                        F.element_at(F.col("__cb"), F.col("__s") + 1),
-                    ).alias("__c"),
-                )
-            )
-            rows = (
-                assigned.select("__s", "__c", F.posexplode(F.col("__sv")))
-                .groupBy("__s", "__c", "pos")
-                .agg(
-                    (
-                        F.sum(F.col("col").cast("decimal(27,10)")).cast("double")
-                        / F.count(F.lit(1))
-                    ).alias("m")
-                )
-                .groupBy("__s", "__c")
-                .agg(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("pos"), F.col("m")))
-                    ).alias("__pm")
-                )
-                .select(
-                    "__s",
-                    "__c",
-                    F.transform(F.col("__pm"), lambda x: x["m"]).alias("cv"),
-                )
-                .collect()  # bounded: m*k rows
-            )
-            got = {(r["__s"], r["__c"]): list(r["cv"]) for r in rows}
-            cents = [
-                [got.get((s, c), cents[s][c]) for c in range(k)] for s in range(m)
-            ]
-    return cents
+    Call-time actions: the trainer's pin of the (vector, hash) working
+    set, one bounded collect of the ``k`` seed rows, and per round one
+    scan with one (cluster, pos)-keyed shuffle and a bounded ``k``-row
+    collect (the documented iterative-algorithm exception, same as
+    ``near_dup_clusters``).  The returned assignment is a lazy
+    projection under the one size rule of the encoder: up to
+    ``_KMEANS_LITERAL_MAX`` (64) centroids fold into the plan as
+    literals, beyond it they ride a single broadcast row, so the
+    expression tree stays O(1) in ``k``."""
+    cents = _train_codebooks(df, vec_col, id_col, 1, k, iters, seed, "kmeans_assign")
+    out = _with_codes(df, F.col(vec_col).cast("array<double>"), cents, dest)
+    return out.withColumn(dest, F.col(dest)[0])
 
 
 def pq_train(
@@ -816,8 +754,16 @@ def pq_train(
     """Train product-quantization codebooks; returns a BOUNDED frame of
     ``m * k`` rows ``(sub, code, centroid array<double>)`` — persistable
     to parquet and accepted by :func:`pq_encode` / :func:`pq_topk`
-    (the :func:`bpe_train` model-table pattern)."""
-    cents = _pq_train_cents(df, vec_col, id_col, m, k, iters, seed)
+    (the :func:`bpe_train` model-table pattern).
+
+    Deterministic per-subspace Lloyd with the reproducibility contract
+    of :func:`kmeans_assign` (which is its ``m=1`` case).  Call-time
+    actions: the pin of the (vector, hash) working set, one bounded
+    collect of the ``k`` seed rows, and one bounded ``m * k``-row
+    collect per round; each round assigns under the encoder's one size
+    rule (literal codebooks up to ``_KMEANS_LITERAL_MAX`` centroids in
+    total, one broadcast row beyond).  The result is a local frame."""
+    cents = _train_codebooks(df, vec_col, id_col, m, k, iters, seed, "pq_train")
     rows = [
         (s, c, list(map(float, cents[s][c])))
         for s in range(len(cents))
@@ -840,32 +786,6 @@ def _pq_collect_cents(codebooks: DataFrame) -> list[list[list[float]]]:
     return cents
 
 
-def _pq_codes(v: Column, cents: list[list[list[float]]]) -> Column:
-    """array<int> of length m: per-subspace nearest-centroid index.
-    Small codebooks (total centroids <= _KMEANS_LITERAL_MAX) fold into
-    the plan as literals — a pure scan-time projection."""
-    m = len(cents)
-    dsub = len(cents[0][0])
-    return F.array(
-        *[
-            _argmin_cluster(sv, cents[s])
-            for s, sv in enumerate(_pq_slices(v, m, dsub))
-        ]
-    )
-
-
-def _pq_codes_data(v: Column, cb: Column, m: int, dsub: int) -> Column:
-    """Data-driven twin of :func:`_pq_codes`: codebooks arrive as one
-    broadcast ``array<array<array<double>>>`` row, keeping the
-    expression tree O(1) for large ``m * k``."""
-    return F.array(
-        *[
-            _argmin_cluster_data(sv, F.element_at(cb, s + 1))
-            for s, sv in enumerate(_pq_slices(v, m, dsub))
-        ]
-    )
-
-
 def pq_encode(
     df: DataFrame,
     vec_col: str,
@@ -874,23 +794,14 @@ def pq_encode(
 ) -> DataFrame:
     """Quantize ``vec_col`` to ``m`` codebook indices (``array<int>``) —
     the compressed representation ADC search scans instead of raw
-    vectors.  Pure projection: literal codebooks up to
-    ``_KMEANS_LITERAL_MAX`` total centroids, one broadcast row beyond
-    (the documented 1-row attach)."""
+    vectors.
+
+    Call-time action: one bounded collect of the ``m * k`` codebook
+    rows.  The encoding itself is a lazy projection under the one size
+    rule: literal codebooks up to ``_KMEANS_LITERAL_MAX`` centroids in
+    total, one broadcast row beyond (the documented 1-row attach)."""
     cents = _pq_collect_cents(codebooks)
-    v = F.col(vec_col).cast("array<double>")
-    total = sum(len(sub) for sub in cents)
-    if total <= _KMEANS_LITERAL_MAX:
-        return df.withColumn(dest, _pq_codes(v, cents))
-    m, dsub = len(cents), len(cents[0][0])
-    cdf = local_frame(
-        df.sparkSession, [(cents,)], "__cb array<array<array<double>>>"
-    )
-    return (
-        df.crossJoin(F.broadcast(cdf))
-        .withColumn(dest, _pq_codes_data(v, F.col("__cb"), m, dsub))
-        .drop("__cb")
-    )
+    return _with_codes(df, F.col(vec_col).cast("array<double>"), cents, dest)
 
 
 def pq_topk(
@@ -911,13 +822,16 @@ def pq_topk(
 
     The query-side distance table (``m * codebook_k`` floats) is
     computed on the driver and folded into the plan as literals, so the
-    scan does ``m`` array lookups + adds per row — no join, no shuffle;
-    top-k is TakeOrdered exactly like :func:`cosine_topk`.  Pass
-    ``codebooks`` (from :func:`pq_train`) to reuse a trained model and
-    ``code_col`` to score pre-encoded rows (the compressed-scan path —
-    at scale you encode once and drop the raw vectors); otherwise
-    trains + encodes inline.  Returns ``(id, adc_dist)`` ascending,
-    ties by id."""
+    scan does ``m`` array lookups + adds per row — no shuffle; top-k is
+    TakeOrdered exactly like :func:`cosine_topk`.  Pass ``codebooks``
+    (from :func:`pq_train`) to reuse a trained model and ``code_col`` to
+    score pre-encoded rows (the compressed-scan path — at scale you
+    encode once and drop the raw vectors); otherwise trains + encodes
+    inline.  The inline encode is :func:`pq_encode`'s, under the same
+    size rule (literal codebooks up to ``_KMEANS_LITERAL_MAX`` centroids
+    in total, one broadcast row beyond).  Call-time actions: one bounded
+    collect of ``codebooks``, or without it :func:`pq_train`'s actions.
+    Returns ``(id, adc_dist)`` ascending, ties by id."""
     if k < 1:
         raise ValueError("k must be >= 1")
     if code_col is not None and codebooks is None:
@@ -932,7 +846,9 @@ def pq_topk(
     if codebooks is not None:
         cents = _pq_collect_cents(codebooks)
     else:
-        cents = _pq_train_cents(df, vec_col, id_col, m, codebook_k, iters, seed)
+        cents = _train_codebooks(
+            df, vec_col, id_col, m, codebook_k, iters, seed, "pq_topk"
+        )
     mm = len(cents)
     if len(query) != mm * len(cents[0][0]):
         raise ValueError(
@@ -950,10 +866,10 @@ def pq_topk(
         ]
         for s in range(mm)
     ]
-    if code_col is not None:
-        codes = F.col(code_col)
-    else:
-        codes = _pq_codes(F.col(vec_col).cast("array<double>"), cents)
+    if code_col is None:
+        df = _with_codes(df, F.col(vec_col).cast("array<double>"), cents, "__code")
+        code_col = "__code"
+    codes = F.col(code_col)
     dist = None
     for s in range(mm):
         term = F.element_at(
@@ -1006,21 +922,9 @@ def ivf_pq_topk(
             "code_col requires codebooks: pre-encoded codes are only "
             "meaningful against the codebooks that produced them"
         )
-    cents = (
-        centroids_df
-        if centroids_df is not None
-        else centroids(df, vec_col, cluster_col)
+    probe = _probed_clusters(
+        df, query, vec_col, cluster_col, nprobe, centroids_df
     )
-    ranked = (
-        cents.select(
-            F.col(cluster_col),
-            cosine_sim(F.col("centroid"), _qvec(query)).alias("ccos"),
-        )
-        .orderBy(F.col("ccos").desc(), F.col(cluster_col).asc())
-        .limit(nprobe)
-        .collect()
-    )
-    probe = [r[cluster_col] for r in ranked]
     if codebooks is None:
         codebooks = pq_train(df, vec_col, id_col, m, codebook_k, iters, seed)
     return pq_topk(

@@ -74,7 +74,7 @@ def test_probing_verbs_have_no_bare_actions():
         os.path.join(PKG, "operators", f"{name}.py")
         for name in (
             "reshape", "joins", "complete", "transforms", "missing", "filters",
-            "sketches", "vectorize",
+            "sketches", "vectorize", "columns",
         )
     ] + [os.path.join(PKG, "sources", "sinks.py"), os.path.join(PKG, "functions", "math.py")]
     offenders = _offenders(action, paths)
@@ -617,3 +617,67 @@ def test_lsh_pairs_equal_band_table_self_join(spark, mode):
         assert pairs == joined
     else:
         assert _components(pairs) == _components(joined)
+
+
+def _coin_ids(spark, keep=()):
+    """``id`` over 2000 ids in 4 ordered partitions, filtered by a coin
+    flip that differs on every read; the ids in ``keep`` always pass.
+    The coin reads ``os.urandom``: Python workers forked from one daemon
+    start from the same ``random`` state, so their first flips repeat."""
+    import os
+
+    from pyspark.sql.types import BooleanType
+
+    coin = F.udf(lambda _: os.urandom(1)[0] < 128, BooleanType()).asNondeterministic()
+    return spark.range(2000, numPartitions=4).filter(
+        coin("id") | F.col("id").isin(list(keep))
+    )
+
+
+def _check_select_rows_last(spark):
+    got = [r["id"] for r in pj.select_rows(_coin_ids(spark, keep=[1999]), -1).collect()]
+    assert got == [1999]
+
+
+def _check_move_to_end(spark):
+    df = _coin_ids(spark, keep=[0, 1999])
+    got = [r["id"] for r in pj.move(df, [0, -1], position="after", axis=0).collect()]
+    assert got[-2:] == [0, 1999]
+    assert got[:-2] == sorted(got[:-2]) and 0 not in got[:-2]
+
+
+def _check_drop_constant_columns(spark):
+    import os
+
+    from pyspark.sql.types import IntegerType
+
+    bit = F.udf(lambda _: os.urandom(1)[0] & 1, IntegerType()).asNondeterministic()
+    df = spark.range(2).select(*[bit(F.col("id") + i).alias(f"c{i}") for i in range(16)])
+    rows = pj.drop_constant_columns(df).collect()
+    assert len(rows) == 2
+    assert all(rows[0][c] != rows[1][c] for c in rows[0].asDict())
+
+
+def _check_row_to_names(spark):
+    df = _coin_ids(spark).select("id", (F.col("id") * 10).alias("v"))
+    out = pj.row_to_names(df, [0, 1, 2, 3], order_by="id")
+    (name,) = [c for c in out.columns if c != "id"]
+    promoted = [int(x) // 10 for x in name.split("_")]
+    assert sorted(r["id"] for r in out.collect())[:4] == promoted
+
+
+_POSITIONAL = {
+    "select_rows": _check_select_rows_last,
+    "move": _check_move_to_end,
+    "drop_constant_columns": _check_drop_constant_columns,
+    "row_to_names": _check_row_to_names,
+}
+
+
+@pytest.mark.parametrize("verb", list(_POSITIONAL))
+def test_column_verb_on_nondeterministic_input(spark, verb):
+    """A verb that reads its input before it can plan builds its output
+    from the run it read: the row count behind a negative position, the
+    constant columns and the promoted rows all belong to the rows that
+    come back."""
+    _POSITIONAL[verb](spark)

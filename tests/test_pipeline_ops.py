@@ -1303,38 +1303,47 @@ class TestKmeansAssign:
             pj.kmeans_assign(df, "embedding", "vec_id", k=2)
 
 
+def _first_min_argmin(vec, cents):
+    """Pure-Python nearest centroid: the same left-to-right squared
+    distance sums as the Spark expression, ties to the lowest index."""
+    best, best_d = None, None
+    for i, c in enumerate(cents):
+        d = 0.0
+        for a, b in zip(vec, c):
+            d += (a - b) * (a - b)
+        if best_d is None or d < best_d:
+            best, best_d = i, d
+    return best
+
+
 class TestKmeansLargeK:
     """Above _KMEANS_LITERAL_MAX the centroids ride one broadcast row,
     not O(k*dim) plan literals — same assignments, bounded plan size."""
 
     def test_data_path_matches_literal_path_k256(self, spark):
+        # both sides of the size rule (64 centroids fold into the plan as
+        # literals, 256 ride the broadcast row) match the Python argmin
         import random
 
-        from pyjanitor_spark.operators.similarity import (
-            _argmin_cluster,
-            _with_cluster,
-        )
+        from pyjanitor_spark.operators.similarity import _with_codes
 
         rng = random.Random(11)
         dim = 8
-        cents = [[rng.uniform(-5, 5) for _ in range(dim)] for _ in range(256)]
         rows = [(i, [rng.uniform(-5, 5) for _ in range(dim)]) for i in range(100)]
         df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
         v = F.col("embedding").cast("array<double>")
-        lit = {
-            r["vec_id"]: r["c"]
-            for r in df.withColumn("c", _argmin_cluster(v, cents)).collect()
-        }
-        dat = {
-            r["vec_id"]: r["c"]
-            for r in _with_cluster(df, v, cents, "c").collect()
-        }
-        assert lit == dat
+        for k in (64, 256):
+            cents = [[rng.uniform(-5, 5) for _ in range(dim)] for _ in range(k)]
+            got = {
+                r["vec_id"]: r["c"][0]
+                for r in _with_codes(df, v, [cents], "c").collect()
+            }
+            assert got == {i: _first_min_argmin(x, cents) for i, x in rows}, k
 
     def test_plan_size_bounded_at_large_k(self, spark):
         import random
 
-        from pyjanitor_spark.operators.similarity import _with_cluster
+        from pyjanitor_spark.operators.similarity import _with_codes
 
         rng = random.Random(12)
         df = spark.createDataFrame(
@@ -1345,7 +1354,7 @@ class TestKmeansLargeK:
 
         def plan_len(k):
             cents = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(k)]
-            out = _with_cluster(df, v, cents, "c")
+            out = _with_codes(df, v, [cents], "c")
             return len(out._jdf.queryExecution().optimizedPlan().toString())
 
         # doubling k beyond the literal threshold must NOT double the
@@ -2081,23 +2090,63 @@ class TestProductQuantization:
 
     def test_large_codebook_rides_broadcast_row(self, spark, embeddings):
         # 8*16 = 128 > _KMEANS_LITERAL_MAX: encode must use the 1-row
-        # broadcast attach and still match the literal arithmetic
-        from pyjanitor_spark.operators.similarity import (
-            _pq_codes,
-            _pq_collect_cents,
-        )
+        # broadcast attach and still match the first-min arithmetic
+        from pyjanitor_spark.operators.similarity import _pq_collect_cents
 
         cb = pj.pq_train(embeddings, "embedding", "vec_id", m=8, k=16, iters=0)
         out = pj.pq_encode(embeddings, "embedding", cb)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Broadcast" in plan
         cents = _pq_collect_cents(cb)
-        lit = embeddings.withColumn(
-            "pq_code", _pq_codes(F.col("embedding").cast("array<double>"), cents)
+        dsub = len(cents[0][0])
+        for r in out.select("embedding", "pq_code").collect():
+            vec = [float(x) for x in r["embedding"]]
+            assert list(r["pq_code"]) == [
+                _first_min_argmin(vec[s * dsub : (s + 1) * dsub], cents[s])
+                for s in range(len(cents))
+            ]
+
+    def test_pq_topk_inline_codes_bounded(self, spark, embeddings):
+        # the inline encode of pq_topk follows pq_encode's size rule:
+        # 8*16 centroids ride the broadcast row, so its plan stays the
+        # size of pq_encode's, and its rows equal the pre-encoded path
+        q = [
+            float(v)
+            for v in embeddings.filter(F.col("vec_id") == 3).first()["embedding"]
+        ]
+        inline = pj.pq_topk(
+            embeddings, q, "embedding", "vec_id", k=10, m=8, codebook_k=16
         )
-        assert sorted(map(repr, out.select("vec_id", "pq_code").collect())) == sorted(
-            map(repr, lit.select("vec_id", "pq_code").collect())
+        cb = pj.pq_train(embeddings, "embedding", "vec_id", m=8, k=16)
+        enc = pj.pq_encode(embeddings, "embedding", cb)
+
+        def analyzed_len(d):
+            return len(d._jdf.queryExecution().analyzed().toString())
+
+        assert analyzed_len(inline) <= 2 * analyzed_len(enc)
+        coded = pj.pq_topk(
+            enc, q, "embedding", "vec_id", k=10, codebooks=cb, code_col="pq_code"
         )
+        assert [tuple(r) for r in inline.collect()] == [
+            tuple(r) for r in coded.collect()
+        ]
+
+    def test_kmeans_assign_is_one_subspace_pq(self, spark, embeddings):
+        for k, iters, seed in ((4, 2, "km"), (70, 1, "s")):
+            labels = {
+                r["vec_id"]: r["cluster"]
+                for r in pj.kmeans_assign(
+                    embeddings, "embedding", "vec_id", k=k, iters=iters, seed=seed
+                ).collect()
+            }
+            cb = pj.pq_train(
+                embeddings, "embedding", "vec_id", m=1, k=k, iters=iters, seed=seed
+            )
+            codes = {
+                r["vec_id"]: r["pq_code"][0]
+                for r in pj.pq_encode(embeddings, "embedding", cb).collect()
+            }
+            assert labels == codes, (k, iters)
 
     def test_error_contracts(self, spark, embeddings):
         with pytest.raises(ValueError, match="divisible"):
