@@ -741,29 +741,50 @@ def q_semdedup(spark, sf):
 
 def q_semdedup_split(spark, sf):
     # the SAME semantics as q_semdedup but through the triangle-split
-    # hot-cluster path (split=2): pair sub-tasks + distributed
-    # components must reproduce the in-task union-find output exactly,
-    # so this gate shares semdedup's oracle SQL verbatim
+    # hot-cluster path: the largest sf0.01 label cluster (59 rows x 64
+    # dims = 3776 cells) exceeds max_cluster_cells=3000, so the 'auto'
+    # pre-flight routes around the in-task abort into the split
+    # pipeline, where the 500-cell budget splits each cluster 6-8 ways
+    # (sub-tasks of ~15 rows, well under the per-sub-task cap) — pair
+    # sub-tasks + distributed components must reproduce the in-task
+    # union-find output exactly, so this gate shares semdedup's oracle
+    # SQL verbatim
     e, _ = _query_vec(spark, sf)
     return pj.semdedup(
-        e, "embedding", "vec_id", "label", eps=0.3, split=2
+        e,
+        "embedding",
+        "vec_id",
+        "label",
+        eps=0.3,
+        max_cluster_cells=3000,
+        split="auto",
+        auto_split_cells=500,
     ).select("vec_id", "label")
 
 
 def q_near_dup_split(spark, sf):
-    # q_embedding_near_dup through split=2 sub-tasks — same oracle
+    # q_embedding_near_dup through split sub-tasks: a 1000-cell budget
+    # against the 2816-3776-cell sf0.01 label blocks (44-59 rows x 64
+    # dims) splits them 3 or 4 ways, so blocks of one call get
+    # different factors — same oracle
     e = _embs(spark, sf)
     return pj.embedding_near_dup(
-        e, "vec_id", "embedding", threshold=0.4, block_col="label", split=2
+        e,
+        "vec_id",
+        "embedding",
+        threshold=0.4,
+        block_col="label",
+        split="auto",
+        auto_split_cells=1000,
     )
 
 
 def q_near_dup_autosplit(spark, sf):
     # split='auto': per-block factor sized by the rows×dim window;
-    # auto_split_cells=2000 forces every sf0.01 label block (~125 rows
-    # × 64 dims = 8000 cells) to a 4-way triangle split, so the gate
-    # exercises the dynamic task builder, not the m=1 degenerate case
-    # — same oracle as embedding_near_dup
+    # auto_split_cells=2000 sends every sf0.01 label block (44-59 rows
+    # × 64 dims) to a 2-way triangle split, so the gate exercises the
+    # dynamic task builder, not the m=1 degenerate case — same oracle
+    # as embedding_near_dup
     e = _embs(spark, sf)
     return pj.embedding_near_dup(
         e,
@@ -777,11 +798,11 @@ def q_near_dup_autosplit(spark, sf):
 
 
 def q_semdedup_auto(spark, sf):
-    # split='auto' with a tiny per-sub-block budget: the bounded
-    # pre-flight sees the largest cluster exceed auto_split_cells at
-    # ≥20% cell share and routes through the split pipeline — output
-    # must equal the in-task union-find, so this shares semdedup's
-    # oracle SQL verbatim
+    # split='auto' with a tiny per-sub-block budget: every cluster is
+    # over budget, but at sf0.01 the largest holds ~14 % of the pair
+    # work, under the 20 % straggler share, so the bounded pre-flight
+    # keeps the in-task path — output must equal the in-task
+    # union-find, so this shares semdedup's oracle SQL verbatim
     e, _ = _query_vec(spark, sf)
     return pj.semdedup(
         e,
@@ -3472,12 +3493,11 @@ def _pipeline_oracles() -> dict[str, str]:
         "ngram_jaccard_sampled": jaccard_sampled,
         "embedding_near_dup": near_dup,
         "near_dup_multiblock": near_dup_multiblock,
-        # split=2 gates: identical expected output, same oracles
-        "semdedup_split": semdd,
-        "near_dup_split": near_dup,
-        # split='auto' gates (r12): tiny auto_split_cells forces the
+        # split='auto' gates: small auto_split_cells budgets force the
         # window-sized per-block split / the pre-flight split decision;
         # output contract is IDENTITY with the unsplit plans
+        "semdedup_split": semdd,
+        "near_dup_split": near_dup,
         "semdedup_auto": semdd,
         "near_dup_autosplit": near_dup,
         "cosine_topk": topk,

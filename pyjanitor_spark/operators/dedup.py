@@ -573,13 +573,32 @@ def cosine_sim(a: Column, b: Column) -> Column:
     product and ``aggregate`` norms, all JVM-side.  A zero-norm side
     (e.g. the zero TF-IDF vector of an empty document) yields 0.0, not a
     divide-by-zero: under ANSI mode one empty doc in a 100 TB corpus
-    must not kill the whole job."""
+    must not kill the whole job.  A side with a NaN or infinite
+    component also yields 0.0, as in the blocked pair kernel
+    (``utils/vecmat.py``): Spark orders NaN above every value, so a
+    bare ``norm > 0`` test would let ``NaN`` scores through."""
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
     )
     na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
     nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
+    inf = F.lit(float("inf"))
+    finite = (na > 0) & (na < inf) & (nb > 0) & (nb < inf)
+    return F.when(finite, dot / (na * nb)).otherwise(F.lit(0.0))
+
+
+# split='auto' pair-work budget of one sub-task, (rows/m)²·dim
+# multiply-adds (~1 s of BLAS); embedding_near_dup sizes each block's
+# split factor m from it, semdedup its straggler rule
+_AUTO_SPLIT_FLOPS = 2_000_000_000
+
+
+def _is_auto_split(split) -> bool:
+    """``split='auto'`` → True, ``split=1`` → False; anything else
+    raises."""
+    if split not in (1, "auto"):
+        raise ValueError(f"split must be 1 or 'auto', got {split!r}")
+    return split == "auto"
 
 
 def embedding_near_dup(
@@ -595,13 +614,12 @@ def embedding_near_dup(
     max_block_cells: int | None = 200_000_000,
     split: int | str = 1,
     auto_split_cells: int = 25_000_000,
-    auto_split_flops: int = 2_000_000_000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_1 < id_2, cos ≥
     threshold).
 
-    With ``block_col`` (cluster id / LSH bucket) the self-join is
-    equi-keyed on the block — cost Σ block² instead of n².  Without a
+    With ``block_col`` (cluster id / LSH bucket) pairs are scored
+    within each block — cost Σ block² instead of n².  Without a
     natural block column, pass ``auto_block_planes`` (+ ``dim``, the
     vector length) to block on banded random-hyperplane LSH:
     ``auto_block_bands`` independent ``planes``-bit sign buckets, a pair
@@ -610,94 +628,68 @@ def embedding_near_dup(
     cos 0.95 with the 4×4 default — while each band shuffles only a
     short bit-string key.
 
-    The unblocked path is an O(n²) cross join, never taken silently:
-    with no ``block_col`` and no ``auto_block_planes``, a provided
-    ``dim`` auto-enables 8-plane banded blocking, and otherwise the call
-    raises unless ``allow_cross_join=True`` (exact brute force — small
-    frames only).
+    Unblocked scoring is O(n²) and never taken silently: with no
+    ``block_col`` and no ``auto_block_planes``, a provided ``dim``
+    auto-enables 8-plane banded blocking, and otherwise the call raises
+    unless ``allow_cross_join=True`` (exact brute force — small frames
+    only), which scores every row in one block.
 
+    Every block is scored by one Arrow task running the blocked BLAS
+    kernel :func:`~pyjanitor_spark.utils.vecmat.cosine_pairs`
+    (``dot/(n1·n2)``, zero-norm sides score 0.0), brute force included.
     ``max_block_cells`` bounds the per-task embedding matrix at
     rows × dim float64 CELLS (default 2e8 ≈ 1.6 GB) — a row-count cap
     alone under-gates high-dim embeddings (100k rows × 3072 dims is
     2.5 GB before any score block).  A violating block aborts the job
-    naming the block; split it (finer ``block_col`` / more planes) or
-    raise the cap explicitly.  Degenerate vectors — null, ragged
-    length, or containing non-finite components — score 0.0 against
-    everything and so never pair (the historical expression-join
-    exclusion semantics; in particular a NaN component does NOT ride
-    Spark's NaN-is-largest comparison into the output).  Two rows
-    sharing one id value never emit a self-pair.
+    naming the block; split it (finer ``block_col`` / more planes,
+    ``split='auto'``) or raise the cap explicitly.  Degenerate
+    vectors — null, ragged length, or containing non-finite
+    components — score 0.0 against everything and so never pair (in
+    particular a NaN component does NOT ride Spark's NaN-is-largest
+    comparison into the output).  Two rows sharing one id value never
+    emit a self-pair, and a row with a null id never pairs.
 
-    ``split`` > 1 is the HOT-BLOCK straggler fix: one giant block (a
-    boilerplate cluster) otherwise runs as ONE Arrow task while every
-    other core idles.  Triangle partitioning shards each block's pair
-    space into ``split·(split+1)/2`` independent sub-tasks — row r
-    lands in deterministic sub-block ``xxhash64(id) mod split``, and
-    task (i, j) scores sub-block i against sub-block j (diagonal tasks
-    score their own triangle) — every pair lands in exactly ONE task,
-    output identical to ``split=1``, whose task is the one diagonal
-    sub-block over the whole block (every task runs the same blocked
-    pair loop, :func:`~pyjanitor_spark.utils.vecmat.cosine_pairs`).
-    Each row is replicated ``split`` times (shuffle volume ×split) and
-    per-task memory drops to ~(2·block/split)·dim, so ``split ≈
-    ceil(block_rows / 50k)`` turns a one-task straggler into a fleet
-    of balanced tasks.
-
-    ``split='auto'`` sizes the split PER BLOCK from the data, so a
-    100 TB corpus needs no a-priori knowledge of its hot-block size:
-    one window over the block key (a shuffle the pair stage pays
-    anyway) measures each block's rows and dim, and the block is
-    sharded ``m`` ways where ``m`` covers BOTH straggler causes:
+    ``split`` is ``1`` (default: one task per block) or ``'auto'``, the
+    HOT-BLOCK straggler fix: one giant block (a boilerplate cluster,
+    or the one brute-force block) otherwise runs as ONE Arrow task
+    while every other core idles.  ``'auto'`` sizes a split factor
+    ``m`` PER BLOCK from the data: one window over the block key (a
+    shuffle the pair stage pays anyway) measures each block's rows
+    and dim, and ``m`` covers BOTH straggler causes:
 
     * memory — ``ceil(rows·dim / auto_split_cells)`` keeps each
       sub-block's matrix under ``auto_split_cells`` float64 cells
       (default 2.5e7 ≈ 200 MB; a task holds at most two sub-blocks);
-    * compute — ``ceil(rows·sqrt(dim / auto_split_flops))`` keeps each
-      sub-task's pair work ``(rows/m)²·dim`` under ``auto_split_flops``
-      multiply-adds (default 2e9 ≈ a ~1 s BLAS task): a 20k-row
-      64-dim cluster is only 1.3M cells but 2.6e10 pair-flops — a
-      half-minute single task while every other core idles, the shape
-      the memory rule alone cannot see.
+    * compute — ``ceil(rows·sqrt(dim / 2e9))`` keeps each sub-task's
+      pair work ``(rows/m)²·dim`` under 2e9 multiply-adds (≈ a ~1 s
+      BLAS task): a 20k-row 64-dim cluster is only 1.3M cells but
+      2.6e10 pair-flops — a half-minute single task while every other
+      core idles, the shape the memory rule alone cannot see.
 
-    Cold blocks keep ``m=1`` (a single (0,0) diagonal task, identical
-    math to the unsplit path) while the one boilerplate cluster fans
-    out exactly as far as it needs.  The per-block factor is capped at
-    256: a block still oversized at 256-way split trips the
-    ``max_block_cells`` per-sub-task gate with a message naming it —
-    at that size the quadratic pair cost itself is the problem, not
-    task memory.  Shuffle volume within a block grows ×m (each row is
-    replicated to every sub-task touching its sub-block) — inherent to
-    exact all-pairs scoring, and still Σ block²-bounded.
-
-    With ``allow_cross_join=True`` (the documented small-frame exact
-    brute force) ``split``, ``auto_split_cells`` and
-    ``max_block_cells`` do not apply — there is no blocked Arrow task
-    to shard or gate, pairs come from one expression join.  Passing
-    ``split`` != 1 together with the cross-join path raises instead of
-    silently ignoring the knob."""
-    auto_split = isinstance(split, str)
-    if auto_split:
-        if split != "auto":
-            raise ValueError(f"split must be an int >= 1 or 'auto', got {split!r}")
-        if int(auto_split_cells) < 1:
-            raise ValueError("auto_split_cells must be >= 1")
-        if int(auto_split_flops) < 1:
-            raise ValueError("auto_split_flops must be >= 1")
-    elif int(split) < 1:
-        raise ValueError("split must be >= 1")
-    if (
-        block_col is None
-        and not auto_block_planes
-        and allow_cross_join
-        and (auto_split or int(split) != 1)
-    ):
-        raise ValueError(
-            "split applies to the blocked pair stage; allow_cross_join=True "
-            "without a block takes a single expression join with no tasks "
-            "to shard — drop split= or use block_col/auto_block_planes"
-        )
-    if block_col is None and not auto_block_planes and not allow_cross_join:
-        if dim is not None:
+    Triangle partitioning then shards the block's pair space into
+    ``m·(m+1)/2`` independent sub-tasks — row r lands in deterministic
+    sub-block ``xxhash64(id) mod m``, and task (i, j) scores sub-block
+    i against sub-block j (diagonal tasks score their own triangle) —
+    every pair lands in exactly ONE task, so the output is identical
+    to ``split=1``.  Cold blocks keep ``m=1`` (a single diagonal task)
+    while the hot block fans out exactly as far as it needs.  The
+    factor is capped at 256: a block still oversized at 256-way split
+    trips the ``max_block_cells`` per-sub-task gate with a message
+    naming it — at that size the quadratic pair cost itself is the
+    problem, not task memory.  Shuffle volume within a block grows ×m
+    (each row is replicated to every sub-task touching its
+    sub-block) — inherent to exact all-pairs scoring, and still
+    Σ block²-bounded."""
+    auto_split = _is_auto_split(split)
+    if auto_split and int(auto_split_cells) < 1:
+        raise ValueError("auto_split_cells must be >= 1")
+    dedup_pairs = False
+    if block_col is None and not auto_block_planes:
+        if allow_cross_join:
+            # exact brute force: every row in one block
+            df = df.withColumn("__edb_bkt", F.lit(0))
+            block_col = "__edb_bkt"
+        elif dim is not None:
             auto_block_planes = 8
         else:
             raise ValueError(
@@ -705,8 +697,7 @@ def embedding_near_dup(
                 "O(n^2) cross join; pass dim= to auto-enable hyperplane "
                 "blocking, or allow_cross_join=True for exact brute force"
             )
-    dedup_pairs = False
-    if block_col is None and auto_block_planes:
+    if block_col is None:
         if dim is None:
             raise ValueError("auto_block_planes requires dim (vector length)")
         from pyjanitor_spark.operators.similarity import hyperplane_bucket
@@ -730,229 +721,170 @@ def embedding_near_dup(
         )
         block_col = "__edb_bkt"
         dedup_pairs = True  # a pair can collide in several bands
-    cols = [F.col(id_col), F.col(vec_col)] + ([F.col(block_col)] if block_col else [])
-    slim = df.select(*cols)
-    if block_col:
-        # one Arrow task per block computes the Σ block² cosine work as
-        # BLOCKED matrix products instead of an equi-join whose
-        # zip_with/aggregate cosine is CodegenFallback — interpreted
-        # once per PAIR (the semdedup lesson, similarity.py).  Only the
-        # verified (id_1, id_2, cos) pairs leave the task; the pair
-        # loop is utils/vecmat.py's cosine_pairs, whose score-matrix
-        # row block is capped at ~32 MB so task memory is
-        # O(block·dim + rowblock·block).  cos semantics identical to
-        # cosine_sim: dot/(n1·n2), zero-norm sides score 0.0.  The
-        # applyInArrow entry reads the vector column's flat Arrow
-        # buffer as the (n, dim) matrix directly (utils/vecmat.py) —
-        # no per-row Python objects, degenerate rows zero-filled.
-        thr = float(threshold)
-        cells_cap = None if max_block_cells is None else int(max_block_cells)
-        id_t = df.schema[id_col].dataType.simpleString()
-        vname, iname = vec_col, id_col
-        bname = block_col
-        s_n = 0 if auto_split else int(split)
-        split_path = auto_split or s_n > 1
-
-        def _pairs(key, tbl):
-            # one task scores a whole block, or — split path — the
-            # triangle-partitioned sub-task key = (block, ti, tj):
-            # diagonal (ti == tj) the upper triangle over sub-block ti's
-            # rows, off-diagonal the full cross product ti × tj.  Every
-            # (a, b) pair lands in exactly one task — (sb_a, sb_b)
-            # sorted — so no downstream dedup is needed beyond the
-            # banded-collision groupBy below.  An unsplit block is the
-            # one diagonal sub-block over all its rows.
-            import numpy as np
-            import pyarrow as pa
-
-            from pyjanitor_spark.utils.vecmat import (
-                cosine_pairs,
-                list_column_matrix,
-            )
-
-            n = tbl.num_rows
-            ids_arr = tbl.column(iname)
-            if isinstance(ids_arr, pa.ChunkedArray):
-                ids_arr = ids_arr.combine_chunks()
-            empty = pa.table(
-                {
-                    "id_1": ids_arr.slice(0, 0),
-                    "id_2": ids_arr.slice(0, 0),
-                    "cos": pa.array([], type=pa.float64()),
-                }
-            )
-            if n < 2:
-                return empty
-            V, _good, dim = list_column_matrix(tbl.column(vname))
-            if cells_cap is not None and n * dim > cells_cap:
-                if split_path:
-                    raise ValueError(
-                        f"embedding_near_dup: sub-task {key!r} holds "
-                        f"{n} x {dim} = {n * dim} embedding cells, exceeding "
-                        f"max_block_cells={cells_cap}; raise split= or "
-                        f"max_block_cells"
-                    )
-                raise ValueError(
-                    f"embedding_near_dup: block {key[0]!r} holds "
-                    f"{n} x {dim} = {n * dim} embedding cells, exceeding "
-                    f"max_block_cells={cells_cap} (~{cells_cap * 8 >> 30} GiB "
-                    f"float64 per task); split the block (finer block_col / "
-                    f"more auto_block_planes) or raise max_block_cells"
-                )
-            ia = ib = None
-            if split_path:
-                # applyInArrow hands grouping keys as pyarrow scalars
-                ti, tj = (
-                    int(k.as_py() if hasattr(k, "as_py") else k)
-                    for k in key[-2:]
-                )
-                sb_np = np.asarray(tbl.column("__sb"))
-                ia = np.flatnonzero(sb_np == ti)
-                if ti != tj:
-                    ib = np.flatnonzero(sb_np == tj)
-            ids_np = ids_arr.to_numpy(zero_copy_only=False)
-            out_i, out_j, out_c = [], [], []
-            for i, j, cos in cosine_pairs(V, thr, ia, ib):
-                # rows sharing an id value never self-pair (the old
-                # a.id < b.id join predicate)
-                keep = ids_np[i] != ids_np[j]
-                i, j = i[keep], j[keep]
-                if len(i):
-                    swap = ids_np[i] > ids_np[j]  # pair labeled id_1 < id_2
-                    out_i.append(np.where(swap, j, i))
-                    out_j.append(np.where(swap, i, j))
-                    out_c.append(cos[keep])
-            if not out_i:
-                return empty
-            i1 = pa.array(np.concatenate(out_i), type=pa.int64())
-            i2 = pa.array(np.concatenate(out_j), type=pa.int64())
-            return pa.table(
-                {
-                    "id_1": ids_arr.take(i1),
-                    "id_2": ids_arr.take(i2),
-                    "cos": pa.array(np.concatenate(out_c), type=pa.float64()),
-                }
-            )
-
-        if split_path:
-            # deterministic sub-block from the id; a row fans out to
-            # every task touching its sub-block (m rows per input row,
-            # m = the block's split factor), so shuffle volume is ×m
-            # while per-task memory drops ÷(m/2) — the straggler
-            # trade, made explicit.  'auto' sizes m PER BLOCK with one
-            # window over the block key (the same key the pair stage
-            # shuffles on anyway): ceil(rows × dim / auto_split_cells)
-            # capped at 256 — cold blocks stay m=1 (single diagonal
-            # task, same math as the unsplit path), only the hot block
-            # fans out.  The cap is safe: a block still oversized at
-            # 256-way split trips the per-sub-task cells gate below
-            # with a message naming it.
-            if auto_split:
-                wb = Window.partitionBy(bname)
-                blk_rows = F.count(F.lit(1)).over(wb)
-                blk_cells = blk_rows * F.coalesce(
-                    F.max(F.size(F.col(vname))).over(wb).cast("long"),
-                    F.lit(1),
-                )
-                # memory rule: sub-block matrix <= auto_split_cells;
-                # compute rule: sub-task pair work (rows/m)^2*dim <=
-                # auto_split_flops  =>  m >= rows*sqrt(dim/flops)
-                #                       = sqrt(cells*rows/flops)
-                # (double math: cells*rows overflows long at ~1e9 rows)
-                m_mem = F.ceil(
-                    blk_cells / F.lit(float(int(auto_split_cells)))
-                ).cast("int")
-                m_flops = F.ceil(
-                    F.sqrt(
-                        blk_cells.cast("double")
-                        * blk_rows.cast("double")
-                        / F.lit(float(int(auto_split_flops)))
-                    )
-                ).cast("int")
-                m_col = F.least(
-                    F.lit(256),
-                    F.greatest(F.lit(1), m_mem, m_flops),
-                ).cast("int")
-            else:
-                m_col = F.lit(s_n)
-            pre = slim.withColumn("__m", m_col).withColumn(
-                "__sb",
-                F.pmod(
-                    F.xxhash64(F.col(id_col)), F.col("__m").cast("bigint")
-                ).cast("int"),
-            )
-            # tasks touching sub-block sb: (i, sb) for i ≤ sb plus
-            # (sb, j) for j > sb — exactly the i ≤ j triangle rows/cols
-            # through sb, built per-row so m can vary per block
-            lower = F.transform(
-                F.sequence(F.lit(0), F.col("__sb")),
-                lambda i: F.struct(i.alias("i"), F.col("__sb").alias("j")),
-            )
-            upper = F.when(
-                F.col("__sb") < F.col("__m") - 1,
-                F.transform(
-                    F.sequence(F.col("__sb") + 1, F.col("__m") - 1),
-                    lambda j: F.struct(F.col("__sb").alias("i"), j.alias("j")),
-                ),
-            ).otherwise(F.slice(lower, 1, 0))
-            fanned = (
-                pre.withColumn("__t", F.explode(F.concat(lower, upper)))
-                .select(
-                    F.col(iname),
-                    F.col(vname),
-                    F.col(bname),
-                    F.col("__sb"),
-                    F.col("__t.i").alias("__ti"),
-                    F.col("__t.j").alias("__tj"),
-                )
-            )
-            # explicit numPartitions on the group key: sub-tasks are
-            # CPU-heavy but byte-small ((rows/m)·dim floats), so AQE's
-            # byte-based coalescing would glue the hot block's sub-tasks
-            # back into one task, re-creating the straggler the split
-            # exists to kill (measured: 12 vs 30 tasks, 1.6× wall).  A
-            # user-specified repartition is exempt from AQE coalescing;
-            # 4× parallelism over-partitioning keeps two heavy sub-tasks
-            # from hashing into the same partition with high probability,
-            # and the groupBy below reuses this exact hash partitioning
-            # (no second exchange).
-            sess = df.sparkSession
-            n_part = 4 * max(
-                sess.sparkContext.defaultParallelism,
-                int(sess.conf.get("spark.sql.shuffle.partitions", "200")),
-            )
-            fanned = fanned.repartition(n_part, bname, "__ti", "__tj")
-            out = fanned.groupBy(bname, "__ti", "__tj").applyInArrow(
-                _pairs, f"id_1 {id_t}, id_2 {id_t}, cos double"
-            )
-        else:
-            out = slim.groupBy(bname).applyInArrow(
-                _pairs, f"id_1 {id_t}, id_2 {id_t}, cos double"
-            )
-        if dedup_pairs:
-            # a pair colliding in several bands is scored once per band
-            # by independent BLAS blocks; dedup on the PAIR KEY only —
-            # distinct() over the float cos would keep both copies on
-            # any ulp difference between bands
-            out = out.groupBy("id_1", "id_2").agg(F.max("cos").alias("cos"))
-        return out
-    # documented small-frame exact brute force (allow_cross_join=True)
-    a = slim.alias("a")
-    b = slim.alias("b")
-    on = [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")]
-    dot = cosine_sim(
-        F.col(f"a.{vec_col}").cast("array<double>"),
-        F.col(f"b.{vec_col}").cast("array<double>"),
+    slim = df.select(F.col(id_col), F.col(vec_col), F.col(block_col)).filter(
+        F.col(id_col).isNotNull()
     )
-    return (
-        a.join(b, on=on)
-        .select(
-            F.col(f"a.{id_col}").alias("id_1"),
-            F.col(f"b.{id_col}").alias("id_2"),
-            dot.alias("cos"),
+    # one Arrow task per block (or split sub-task) computes the pair
+    # work as BLOCKED matrix products instead of an equi-join whose
+    # zip_with/aggregate cosine is CodegenFallback — interpreted once
+    # per PAIR.  Only the verified (id_1, id_2, cos) pairs leave the
+    # task; utils/vecmat.py loads the block (the vector column's flat
+    # Arrow buffer as the (n, dim) matrix, degenerate rows zero-filled,
+    # the cells gate) and runs the pair loop, whose score-matrix row
+    # block is capped at ~32 MB so task memory is
+    # O(block·dim + rowblock·block).
+    thr = float(threshold)
+    cells_cap = None if max_block_cells is None else int(max_block_cells)
+    id_t = df.schema[id_col].dataType.simpleString()
+    vname, iname, bname = vec_col, id_col, block_col
+
+    def _pairs(key, tbl):
+        # one task scores a whole block, or — split path — the
+        # triangle-partitioned sub-task key = (block, ti, tj):
+        # diagonal (ti == tj) the upper triangle over sub-block ti's
+        # rows, off-diagonal the full cross product ti × tj.  Every
+        # (a, b) pair lands in exactly one task — (sb_a, sb_b)
+        # sorted — so no downstream dedup is needed beyond the
+        # banded-collision groupBy below.
+        import numpy as np
+        import pyarrow as pa
+
+        from pyjanitor_spark.utils.vecmat import block_matrix, cosine_pairs
+
+        what = (
+            f"embedding_near_dup: sub-task {key!r}"
+            if auto_split
+            else f"embedding_near_dup: block {key[0]!r}"
         )
-        .filter(F.col("cos") >= threshold)
-    )
+        ids_arr, V = block_matrix(
+            tbl, iname, vname, cells_cap, "max_block_cells", what
+        )
+        empty = pa.table(
+            {
+                "id_1": ids_arr.slice(0, 0),
+                "id_2": ids_arr.slice(0, 0),
+                "cos": pa.array([], type=pa.float64()),
+            }
+        )
+        if V is None:
+            return empty
+        ia = ib = None
+        if auto_split:
+            # applyInArrow hands grouping keys as pyarrow scalars
+            ti, tj = (
+                int(k.as_py() if hasattr(k, "as_py") else k) for k in key[-2:]
+            )
+            sb_np = np.asarray(tbl.column("__sb"))
+            ia = np.flatnonzero(sb_np == ti)
+            if ti != tj:
+                ib = np.flatnonzero(sb_np == tj)
+        ids_np = ids_arr.to_numpy(zero_copy_only=False)
+        out_i, out_j, out_c = [], [], []
+        for i, j, cos in cosine_pairs(V, thr, ia, ib):
+            # rows sharing an id value never self-pair
+            keep = ids_np[i] != ids_np[j]
+            i, j = i[keep], j[keep]
+            if len(i):
+                swap = ids_np[i] > ids_np[j]  # pair labeled id_1 < id_2
+                out_i.append(np.where(swap, j, i))
+                out_j.append(np.where(swap, i, j))
+                out_c.append(cos[keep])
+        if not out_i:
+            return empty
+        i1 = pa.array(np.concatenate(out_i), type=pa.int64())
+        i2 = pa.array(np.concatenate(out_j), type=pa.int64())
+        return pa.table(
+            {
+                "id_1": ids_arr.take(i1),
+                "id_2": ids_arr.take(i2),
+                "cos": pa.array(np.concatenate(out_c), type=pa.float64()),
+            }
+        )
+
+    schema = f"id_1 {id_t}, id_2 {id_t}, cos double"
+    if auto_split:
+        # deterministic sub-block from the id; a row fans out to every
+        # task touching its sub-block (m rows per input row), so
+        # shuffle volume is ×m while per-task memory drops ÷(m/2) —
+        # the straggler trade, made explicit.  m is sized PER BLOCK
+        # with one window over the block key (the same key the pair
+        # stage shuffles on anyway), capped at 256 — cold blocks stay
+        # m=1 (single diagonal task, same math as the unsplit path).
+        # The cap is safe: a block still oversized at 256-way split
+        # trips the per-sub-task cells gate with a message naming it.
+        wb = Window.partitionBy(bname)
+        blk_rows = F.count(F.lit(1)).over(wb)
+        blk_cells = blk_rows * F.coalesce(
+            F.max(F.size(F.col(vname))).over(wb).cast("long"), F.lit(1)
+        )
+        # memory rule: sub-block matrix <= auto_split_cells; compute
+        # rule: sub-task pair work (rows/m)^2*dim <= _AUTO_SPLIT_FLOPS
+        #   =>  m >= rows*sqrt(dim/flops) = sqrt(cells*rows/flops)
+        # (double math: cells*rows overflows long at ~1e9 rows)
+        m_mem = F.ceil(blk_cells / F.lit(float(int(auto_split_cells)))).cast("int")
+        m_flops = F.ceil(
+            F.sqrt(
+                blk_cells.cast("double")
+                * blk_rows.cast("double")
+                / F.lit(float(_AUTO_SPLIT_FLOPS))
+            )
+        ).cast("int")
+        pre = slim.withColumn(
+            "__m", F.least(F.lit(256), F.greatest(F.lit(1), m_mem, m_flops))
+        ).withColumn(
+            "__sb",
+            F.pmod(F.xxhash64(F.col(id_col)), F.col("__m").cast("bigint")).cast(
+                "int"
+            ),
+        )
+        # tasks touching sub-block sb: (i, sb) for i ≤ sb plus (sb, j)
+        # for j > sb — exactly the i ≤ j triangle rows/cols through
+        # sb, built per-row so m can vary per block
+        lower = F.transform(
+            F.sequence(F.lit(0), F.col("__sb")),
+            lambda i: F.struct(i.alias("i"), F.col("__sb").alias("j")),
+        )
+        upper = F.when(
+            F.col("__sb") < F.col("__m") - 1,
+            F.transform(
+                F.sequence(F.col("__sb") + 1, F.col("__m") - 1),
+                lambda j: F.struct(F.col("__sb").alias("i"), j.alias("j")),
+            ),
+        ).otherwise(F.slice(lower, 1, 0))
+        fanned = pre.withColumn("__t", F.explode(F.concat(lower, upper))).select(
+            F.col(iname),
+            F.col(vname),
+            F.col(bname),
+            F.col("__sb"),
+            F.col("__t.i").alias("__ti"),
+            F.col("__t.j").alias("__tj"),
+        )
+        # explicit numPartitions on the group key: sub-tasks are
+        # CPU-heavy but byte-small ((rows/m)·dim floats), so AQE's
+        # byte-based coalescing would glue the hot block's sub-tasks
+        # back into one task, re-creating the straggler the split
+        # exists to kill (measured: 12 vs 30 tasks, 1.6× wall).  A
+        # user-specified repartition is exempt from AQE coalescing;
+        # 4× parallelism over-partitioning keeps two heavy sub-tasks
+        # from hashing into the same partition with high probability,
+        # and the groupBy below reuses this exact hash partitioning
+        # (no second exchange).
+        sess = df.sparkSession
+        n_part = 4 * max(
+            sess.sparkContext.defaultParallelism,
+            int(sess.conf.get("spark.sql.shuffle.partitions", "200")),
+        )
+        fanned = fanned.repartition(n_part, bname, "__ti", "__tj")
+        out = fanned.groupBy(bname, "__ti", "__tj").applyInArrow(_pairs, schema)
+    else:
+        out = slim.groupBy(bname).applyInArrow(_pairs, schema)
+    if dedup_pairs:
+        # a pair colliding in several bands is scored once per band
+        # by independent BLAS blocks; dedup on the PAIR KEY only —
+        # distinct() over the float cos would keep both copies on
+        # any ulp difference between bands
+        out = out.groupBy("id_1", "id_2").agg(F.max("cos").alias("cos"))
+    return out
 
 
 def component_labels(n: int, edge_blocks):
@@ -1799,19 +1731,16 @@ def remove_duplicated_spans(
     The token stream and the final join read the same
     :func:`~pyjanitor_spark.utils.pin.share` of ``df`` as the spans.
     Call-time jobs: that pin's stages on an input that does not replay
-    identically, and the covered-position pin's stages (the flag
-    aggregate, the semi-join and the distinct; adaptive query
-    execution runs them when the pin is taken, see
-    :func:`~pyjanitor_spark.utils.pin.pin`).
+    identically, else none.
     """
     out_col = dest or column_name
     text = F.col(column_name)
     df, spans, flagged = _dup_spans(df, id_col, column_name, k, min_docs)
-    # feeds BOTH the rewritten-doc id list and the kept-token anti join
-    # — unpinned, the whole flagged+semi-join+explode+distinct chain
-    # (and the flag aggregate above it) plans twice; pinned, it is one
-    # pass and the second consumer reads (id, pos) pairs
-    covered = pin(
+    # feeds both the rewritten-doc id list and the kept-token anti
+    # join, so the chain plans twice over the pinned span table; a pin
+    # here measured no saving (sf0.1, k=5: the same three upstream
+    # passes and the same time) and ran four jobs at call time
+    covered = (
         spans.join(flagged, "__h", "left_semi")
         .select(
             F.col(id_col),

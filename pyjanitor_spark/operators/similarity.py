@@ -23,9 +23,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyjanitor_spark.operators.dedup import cosine_sim
+from pyjanitor_spark.operators.dedup import (
+    _AUTO_SPLIT_FLOPS,
+    _is_auto_split,
+    cosine_sim,
+)
 from pyjanitor_spark.utils.local import local_frame
-from pyjanitor_spark.utils.pin import pin
+from pyjanitor_spark.utils.pin import pin, probe, share
 
 __all__ = [
     "cosine_topk",
@@ -189,7 +193,6 @@ def semdedup(
     max_cluster_cells: int | None = 200_000_000,
     split: int | str = 1,
     auto_split_cells: int = 25_000_000,
-    auto_split_flops: int = 2_000_000_000,
 ) -> DataFrame:
     """Semantic deduplication over an embedding column (SemDeDup,
     Abbas et al. 2023): within each pre-assigned cluster, rows whose
@@ -212,8 +215,11 @@ def semdedup(
     here, and only (id, group) rows ever leave the task (the pair
     stream itself is never shuffled).  Centroids are the decimal-exact
     bounded aggregate reused from :func:`ivf_topk` and join back
-    broadcast (n_clusters rows).  The in-task closure has no iterative
-    lineage, so this default path pins nothing.
+    broadcast (n_clusters rows).  The pair stage, the centroids and
+    the kept-row filter read the same
+    :func:`~pyjanitor_spark.utils.pin.share` of ``df``, so they see one
+    run of its upstream.  Call-time jobs with ``split=1``: that pin's
+    stages on an input that does not replay identically, else none.
 
     The Σ size² pair cost is only bounded when clusters are genuinely
     small relative to the corpus — the natural failure mode is feeding a
@@ -233,103 +239,86 @@ def semdedup(
     the same task, before the pair work.  Degenerate vectors — null, ragged length, or
     non-finite components — are zero-filled in-task: they group with
     nothing (cosine 0.0 < any positive eps) and survive as singleton
-    groups, matching the old expression path's null-pair exclusion
-    instead of crashing the task.
+    groups instead of crashing the task.
 
-    ``split`` > 1 is the HOT-CLUSTER straggler fix: one dominant
-    cluster otherwise runs as a single Arrow task while every other
-    core idles.  The pair stage becomes triangle-partitioned
-    ``embedding_near_dup(split=...)`` sub-tasks — split·(split+1)/2
-    balanced tasks per cluster, per-task memory ÷(split/2) — and the
-    duplicate groups close through the distributed log-round
-    :func:`~pyjanitor_spark.operators.dedup.near_dup_clusters`, whose
-    per-round pins are durable when ``SparkContext.setCheckpointDir``
-    is set (see :func:`~pyjanitor_spark.utils.pin.pin`).  Output is
-    identical — the in-task labeller and the distributed components
-    both yield min-reachable-id groups.  In
-    split mode the cluster-level row gate does not apply
-    (``max_cluster_size`` default 100,000 — passing it EXPLICITLY
-    together with a split emits a warning instead of silently ignoring
-    it); ``max_cluster_cells`` is
-    enforced per SUB-task (the memory-relevant unit).  The quadratic
-    pair COST remains — pick ``split ≈ ceil(hot_cluster_rows / 50k)``.
-
-    ``split='auto'`` removes the manual knob entirely: ONE bounded
-    pre-flight aggregate (a single collected row — per-cluster rows,
-    cells and pair-flops maxima/totals) decides the path.  The split
-    pipeline engages only when the in-task path would either ABORT
-    (the largest cluster violates ``max_cluster_size`` /
+    ``split`` is ``1`` (default, the in-task path above) or ``'auto'``,
+    the HOT-CLUSTER straggler fix: one dominant cluster otherwise runs
+    as a single Arrow task while every other core idles.  ``'auto'``
+    runs ONE bounded pre-flight aggregate through
+    :func:`~pyjanitor_spark.utils.pin.probe` (a single collected row —
+    per-cluster rows, cells and pair-flops maxima/totals, read from
+    the frame the output is then built from), and it decides the path.
+    The split pipeline engages only when the in-task path would either
+    ABORT (the largest cluster violates ``max_cluster_size`` /
     ``max_cluster_cells``) or STRAGGLE — the largest cluster exceeds a
     per-task budget (``auto_split_cells``, the sub-block matrix
-    budget, default 2.5e7 cells ≈ 200 MB float64; or
-    ``auto_split_flops``, the pair-work budget ``rows²·dim``
-    multiply-adds, default 2e9 ≈ a ~1 s BLAS task) AND holds ≥ 20 %
+    budget, default 2.5e7 cells ≈ 200 MB float64; or 2e9 pair-work
+    multiply-adds ``rows²·dim``, ≈ a ~1 s BLAS task) AND holds ≥ 20 %
     of the corpus' total pair work, the measured crossover below
     which other clusters keep the cores busy and distributed
     components costs more than it saves (SCALE.md).  When it engages,
-    the per-BLOCK split factor is then sized by the pair stage itself
-    (``embedding_near_dup(split='auto')``) — cold clusters run as
-    single diagonal tasks, only hot ones fan out.  Output is identical
-    to ``split=1`` in every case.
+    the pair stage becomes
+    ``embedding_near_dup(split='auto')``'s triangle-partitioned
+    sub-tasks, each cluster's split factor sized from its own rows and
+    dim (cold clusters run as single diagonal tasks, only hot ones fan
+    out), and the duplicate groups close through the distributed
+    log-round :func:`~pyjanitor_spark.operators.dedup.near_dup_clusters`,
+    whose per-round pins are durable when
+    ``SparkContext.setCheckpointDir`` is set (see
+    :func:`~pyjanitor_spark.utils.pin.pin`).  Output is identical to
+    ``split=1`` in every case — the in-task labeller and the
+    distributed components both yield min-reachable-id groups.  On
+    the split pipeline the cluster-level row gate does not apply
+    (``max_cluster_size`` default 100,000 — passing it EXPLICITLY
+    emits a warning instead of silently ignoring it);
+    ``max_cluster_cells`` is enforced per SUB-task (the
+    memory-relevant unit).
     """
     if keep not in ("far", "near"):
         raise ValueError(f"keep must be 'far' or 'near', got {keep!r}")
     explicit_row_cap = max_cluster_size is not _ROW_CAP_UNSET
     if not explicit_row_cap:
         max_cluster_size = 100_000
-    if isinstance(split, str):
-        if split != "auto":
-            raise ValueError(
-                f"split must be an int >= 1 or 'auto', got {split!r}"
-            )
+    split_path = False
+    if _is_auto_split(split):
         v0 = F.col(vec_col).cast("array<double>")
-        st = (
-            df.groupBy(cluster_col)
+        df, rows = probe(
+            df,
+            lambda f: f.groupBy(cluster_col)
             .agg(
                 F.count(F.lit(1)).alias("__n"),
-                F.coalesce(F.max(F.size(v0)).cast("long"), F.lit(1)).alias(
-                    "__d"
-                ),
+                F.coalesce(F.max(F.size(v0)).cast("long"), F.lit(1)).alias("__d"),
             )
             .agg(
                 F.max(F.col("__n") * F.col("__d")).alias("mx_cells"),
                 F.max(F.col("__n")).alias("mx_rows"),
                 # pair-work n²·d in double (long overflows at ~1e9 rows)
-                F.max(
-                    F.col("__n").cast("double")
-                    * F.col("__n")
-                    * F.col("__d")
-                ).alias("mx_flops"),
-                F.sum(
-                    F.col("__n").cast("double")
-                    * F.col("__n")
-                    * F.col("__d")
-                ).alias("tot_flops"),
-            )
-            .head()  # bounded: exactly one row
+                F.max(F.col("__n").cast("double") * F.col("__n") * F.col("__d")).alias(
+                    "mx_flops"
+                ),
+                F.sum(F.col("__n").cast("double") * F.col("__n") * F.col("__d")).alias(
+                    "tot_flops"
+                ),
+            ),
         )
-        if st is None or st["mx_cells"] is None:
-            split_eff: int | str = 1  # empty frame
-        else:
+        st = rows[0]  # a global aggregate: exactly one row
+        if st["mx_cells"] is not None:  # else an empty frame
             would_abort = (
-                max_cluster_size is not None
-                and st["mx_rows"] > int(max_cluster_size)
+                max_cluster_size is not None and st["mx_rows"] > int(max_cluster_size)
             ) or (
                 max_cluster_cells is not None
                 and st["mx_cells"] > int(max_cluster_cells)
             )
-            over_budget = st["mx_cells"] > int(auto_split_cells) or st[
-                "mx_flops"
-            ] > float(auto_split_flops)
+            over_budget = (
+                st["mx_cells"] > int(auto_split_cells)
+                or st["mx_flops"] > _AUTO_SPLIT_FLOPS
+            )
             straggler = over_budget and st["mx_flops"] >= _AUTO_HOT_SHARE * max(
                 1.0, st["tot_flops"]
             )
-            split_eff = "auto" if (would_abort or straggler) else 1
+            split_path = would_abort or straggler
     else:
-        split_eff = int(split)
-        if split_eff < 1:
-            raise ValueError("split must be >= 1")
-    split_path = split_eff == "auto" or split_eff > 1
+        df = share(df)
     if split_path and explicit_row_cap and max_cluster_size is not None:
         import warnings
 
@@ -351,31 +340,22 @@ def semdedup(
     # BLOCKED matrix products (the SemDeDup paper's own computation
     # shape, utils/vecmat.py's cosine_pairs) and closes the duplicate
     # groups in-task with dedup.component_labels, the package's one
-    # in-memory labeller.  vs the previous expression-join pair stage
-    # this (a) moves the quadratic inner loop from interpreted HOF
-    # lambdas (zip_with/aggregate are CodegenFallback — evaluated per
-    # PAIR) into one dgemm per block, and (b) removes the pair-stream
-    # shuffle entirely — only (id, group) rows leave the task.  The
+    # in-memory labeller.  The quadratic inner loop is one dgemm per
+    # row block, not interpreted HOF lambdas per PAIR, and there is no
+    # pair-stream shuffle — only (id, group) rows leave the task.  The
     # row-block size bounds the in-task score matrix to ~32 MB, so
     # memory is O(cluster·dim + block·cluster) regardless of cluster
-    # size.  cos semantics unchanged: dot/(n1·n2), zero-norm pairs
-    # score 0.0.  The max_cluster_size guard aborts IN the task (same
-    # job-abort behavior the assert_true window gave, one less window).
-    # applyInArrow reads the vector column's flat Arrow buffer as the
-    # (n, dim) matrix directly (utils/vecmat.py) — no per-row Python
-    # objects at peak; degenerate vectors are zero-filled (singleton
-    # groups), and a rows×dim cells cap guards high-dim clusters a
-    # row count alone would admit.
+    # size.  cos semantics: dot/(n1·n2), zero-norm pairs score 0.0.
+    # The max_cluster_size guard aborts IN the task; utils/vecmat.py's
+    # block_matrix loads the rows (degenerate vectors zero-filled, so
+    # singleton groups) and holds the rows×dim cells gate.
     def _cluster_groups(key, tbl):
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
         from pyjanitor_spark.operators.dedup import component_labels
-        from pyjanitor_spark.utils.vecmat import (
-            cosine_pairs,
-            list_column_matrix,
-        )
+        from pyjanitor_spark.utils.vecmat import block_matrix, cosine_pairs
 
         n_rows = tbl.num_rows
         if cap is not None and n_rows > cap:
@@ -386,20 +366,12 @@ def semdedup(
                 f"with a larger k (kmeans_assign) or raise/disable "
                 f"max_cluster_size"
             )
-        ids_arr = tbl.column("__id")
-        if isinstance(ids_arr, pa.ChunkedArray):
-            ids_arr = ids_arr.combine_chunks()
-        if n_rows < 2:
+        ids_arr, V = block_matrix(
+            tbl, "__id", "__v", cells_cap, "max_cluster_cells",
+            f"semdedup: cluster {key[0]!r}",
+        )
+        if V is None:
             return pa.table({"__sid": ids_arr, "__grp": ids_arr})
-        V, _good, dim = list_column_matrix(tbl.column("__v"))
-        if cells_cap is not None and n_rows * dim > cells_cap:
-            raise ValueError(
-                f"semdedup: cluster {key[0]!r} holds {n_rows} x {dim} "
-                f"= {n_rows * dim} embedding cells, exceeding "
-                f"max_cluster_cells={cells_cap} (~{cells_cap * 8 >> 30} "
-                f"GiB float64 per task); re-cluster with a larger k or "
-                f"raise/disable max_cluster_cells"
-            )
         # number the rows in (id, row) order so the component labeller's
         # min node is the min ID (ties to the first row) — the group
         # representative; edges arrive one score block at a time, so
@@ -416,14 +388,12 @@ def semdedup(
         return pa.table({"__sid": ids_arr, "__grp": ids_arr.take(grp_idx)})
 
     if split_path:
-        # hot-cluster path: triangle-partitioned pair sub-tasks
-        # (embedding_near_dup split=) + distributed min-label
-        # components — identical min-reachable-id groups, no
-        # single-task straggler.  The per-SUB-TASK cells gate
-        # (max_cluster_cells, applied as max_block_cells) still
-        # protects task memory; the cluster-level gates don't apply.
-        # split_eff == 'auto' defers the per-cluster factor to the
-        # pair stage's own window-sized triangle split.
+        # hot-cluster path: triangle-partitioned pair sub-tasks + the
+        # distributed min-label components — identical
+        # min-reachable-id groups, no single-task straggler.  The
+        # per-SUB-TASK cells gate (max_cluster_cells, applied as
+        # max_block_cells) still protects task memory; the
+        # cluster-level row gate doesn't apply.
         from pyjanitor_spark.operators.dedup import (
             embedding_near_dup,
             near_dup_clusters,
@@ -436,9 +406,8 @@ def semdedup(
             threshold=eps_f,
             block_col=cluster_col,
             max_block_cells=max_cluster_cells,
-            split=split_eff,
+            split="auto",
             auto_split_cells=auto_split_cells,
-            auto_split_flops=auto_split_flops,
         )
         grp = near_dup_clusters(
             pairs.select("id_1", "id_2"),

@@ -1155,7 +1155,7 @@ def ngram_lm_score(
     seen-bigram table precomputes ``ln(c_xy/c_x)`` at MODEL scale so
     the corpus-side probe is two equi-joins (bigram key, then w2 key)
     plus one broadcast totals row — never a corpus×model nested loop.
-    With ``broadcast_model`` (default) both model tables are pinned and
+    With ``broadcast_model`` (default) both model tables are
     BROADCAST, so the exploded probe stream — the one corpus-sized
     intermediate, one row per token position — flows scan → explode →
     two broadcast hash joins → partial aggregate inside a single stage
@@ -1165,15 +1165,23 @@ def ngram_lm_score(
     corpus; for a corpus whose model genuinely exceeds broadcast
     limits (hundreds of millions of distinct repeated bigrams), pass
     ``broadcast_model=False`` to keep the shuffled sort-merge probe.
+
+    The model, the probe stream and the join-back read one frame,
+    :func:`~pyjanitor_spark.utils.pin.share` of ``df`` (and of
+    ``train_df`` for the model): an input that does not replay
+    identically is pinned, and under adaptive query execution that pin
+    runs the upstream's shuffle and broadcast stages when the call is
+    made; a replay-stable input runs no job.
     """
-    src = train_df if train_df is not None else df
+    df = share(df)
+    src = df if train_df is None else share(train_df)
     lowered = (
         src.select(F.lower(F.trim(F.col(column_name))).alias("__t"))
         .filter(F.col("__t") != "")
     )
-    # vocabulary: pinned — feeds the totals row, the seen-bigram
-    # denominator, and the backoff table (one corpus tokenize pass)
-    uni = pin(
+    # vocabulary: feeds the totals row, the seen-bigram denominator and
+    # the backoff table
+    uni = (
         lowered.select(F.explode(tokens(F.col("__t"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))

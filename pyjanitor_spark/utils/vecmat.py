@@ -22,15 +22,17 @@ NaN-is-greater-than-everything comparison into the output.
 :func:`cosine_pairs` is the one blocked-cosine pair loop both stages
 share: ``embedding_near_dup`` (whole block, or one triangle-partitioned
 sub-task of a split block) and ``semdedup``'s per-cluster task.  It
-holds the module's only dgemm; callers keep their own cap gates, id
-rules and what they do with each yielded row block.
+holds the module's only dgemm.  :func:`block_matrix` is the one way
+either task loads its rows: ids, matrix and the rows×dim cells gate.
+Callers keep their own id rules and what they do with each yielded
+row block.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["list_column_matrix", "cosine_pairs"]
+__all__ = ["block_matrix", "list_column_matrix", "cosine_pairs"]
 
 
 def list_column_matrix(arr) -> tuple[np.ndarray, np.ndarray, int]:
@@ -99,6 +101,37 @@ def list_column_matrix(arr) -> tuple[np.ndarray, np.ndarray, int]:
             V[bad_vals] = 0.0
             good = good & finite
     return V, good, dim
+
+
+def block_matrix(
+    tbl, id_name: str, vec_name: str, cells_cap, cap_name: str, what: str
+):
+    """``(ids, V)`` for one Arrow task's block: ``ids`` the id column
+    as one ``pyarrow.Array``, ``V`` the vector column's
+    :func:`list_column_matrix`, or ``None`` when the block has fewer
+    than 2 rows (no pair to score).
+
+    ``cells_cap`` (``None`` to skip) bounds ``rows × dim`` float64
+    cells per task; a larger block raises a ``ValueError`` that starts
+    with ``what`` (the verb and the block) and names the caller's cap
+    option ``cap_name``.
+    """
+    import pyarrow as pa
+
+    ids = tbl.column(id_name)
+    if isinstance(ids, pa.ChunkedArray):
+        ids = ids.combine_chunks()
+    n = tbl.num_rows
+    if n < 2:
+        return ids, None
+    V, _good, dim = list_column_matrix(tbl.column(vec_name))
+    if cells_cap is not None and n * dim > cells_cap:
+        raise ValueError(
+            f"{what} holds {n} x {dim} = {n * dim} embedding cells, exceeding "
+            f"{cap_name}={cells_cap} (~{cells_cap * 8 >> 30} GiB float64 per "
+            f"task); use smaller blocks or raise/disable {cap_name}"
+        )
+    return ids, V
 
 
 def cosine_pairs(V: np.ndarray, threshold: float, ia=None, ib=None):

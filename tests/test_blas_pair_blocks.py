@@ -111,9 +111,11 @@ def test_semdedup_multiblock_equals_bruteforce(spark, frame, brute):
     assert got == expect
 
 def test_embedding_near_dup_split_equals_unsplit(spark, frame, brute):
-    """Triangle-partitioned split sub-tasks (split>1) must emit the
-    EXACT pair set and cos values of the single-task path — every pair
-    lands in exactly one (sub-block i, sub-block j) task."""
+    """Triangle-partitioned split sub-tasks must emit the EXACT pair
+    set and cos values of the single-task path — every pair lands in
+    exactly one (sub-block i, sub-block j) task.  The one block holds
+    3000 x 6 = 18000 cells, so the ``auto_split_cells`` budgets force a
+    2-way and a 3-way split."""
     thr = 0.9
     base = pj.embedding_near_dup(
         _sdf(spark, frame), "vid", "emb", threshold=thr, block_col="lab"
@@ -122,24 +124,25 @@ def test_embedding_near_dup_split_equals_unsplit(spark, frame, brute):
         (int(a), int(b)): c
         for a, b, c in zip(base["id_1"], base["id_2"], base["cos"])
     }
-    for split in (2, 3):
+    for cells in (9000, 6000):
         got = pj.embedding_near_dup(
             _sdf(spark, frame), "vid", "emb", threshold=thr,
-            block_col="lab", split=split,
+            block_col="lab", split="auto", auto_split_cells=cells,
         ).toPandas()
         got_m = {
             (int(a), int(b)): c
             for a, b, c in zip(got["id_1"], got["id_2"], got["cos"])
         }
-        assert set(got_m) == set(want), f"split={split} pair set differs"
-        assert len(got) == len(got_m), f"split={split} emitted dup pairs"
+        assert set(got_m) == set(want), f"budget {cells}: pair set differs"
+        assert len(got) == len(got_m), f"budget {cells}: emitted dup pairs"
         for k, v in want.items():
             assert abs(got_m[k] - v) < 1e-12
 
 
 def test_semdedup_split_equals_unsplit(spark, frame):
-    """split>1 routes pairs through distributed components instead of
-    the in-task union-find; the kept set must be identical."""
+    """The split pipeline routes pairs through distributed components
+    instead of the in-task union-find; the kept set must be identical
+    (the 6000-cell budget sends the one 18000-cell cluster there)."""
     thr = 0.9
     kept1 = set(
         int(v)
@@ -151,19 +154,23 @@ def test_semdedup_split_equals_unsplit(spark, frame):
     kept3 = set(
         int(v)
         for v in pj.semdedup(
-            _sdf(spark, frame), "emb", "vid", "lab", eps=thr, split=3,
+            _sdf(spark, frame), "emb", "vid", "lab", eps=thr, split="auto",
+            auto_split_cells=6000,
         ).toPandas()["vid"]
     )
     assert kept1 == kept3
 
 
 def test_split_validates(spark, frame):
+    """``split`` is 1 or 'auto'; any other value names both."""
     import pytest as _pt
 
-    with _pt.raises(ValueError, match="split"):
-        pj.embedding_near_dup(
-            _sdf(spark, frame), "vid", "emb", block_col="lab", split=0
-        )
+    sdf = _sdf(spark, frame)
+    for bad in (0, 2, 4):
+        with _pt.raises(ValueError, match="split must be 1 or 'auto'"):
+            pj.embedding_near_dup(sdf, "vid", "emb", block_col="lab", split=bad)
+        with _pt.raises(ValueError, match="split must be 1 or 'auto'"):
+            pj.semdedup(sdf, "emb", "vid", "lab", split=bad)
 
 
 # ---------------------------------------------------------------- auto
@@ -314,13 +321,14 @@ def test_semdedup_split_warns_on_explicit_gates(spark, frame):
     sdf = _sdf(spark, frame)
     with _w.catch_warnings(record=True) as rec:
         _w.simplefilter("always")
-        pj.semdedup(sdf, "emb", "vid", "lab", eps=0.9, split=2,
-                    max_cluster_size=100)
+        pj.semdedup(sdf, "emb", "vid", "lab", eps=0.9, split="auto",
+                    auto_split_cells=6000, max_cluster_size=100)
     assert any("row gate" in str(r.message) for r in rec)
     # default caps in split mode stay silent — only EXPLICIT ones warn
     with _w.catch_warnings(record=True) as rec:
         _w.simplefilter("always")
-        pj.semdedup(sdf, "emb", "vid", "lab", eps=0.9, split=2)
+        pj.semdedup(sdf, "emb", "vid", "lab", eps=0.9, split="auto",
+                    auto_split_cells=6000)
     assert not [r for r in rec if "row gate" in str(r.message)]
 
 
@@ -336,6 +344,21 @@ def test_autosplit_validates(spark, frame):
     with _pt.raises(ValueError, match="auto_split_cells"):
         pj.embedding_near_dup(sdf, "vid", "emb", block_col="lab",
                               split="auto", auto_split_cells=0)
-    with _pt.raises(ValueError, match="cross"):
-        pj.embedding_near_dup(sdf.limit(5), "vid", "emb",
-                              allow_cross_join=True, split="auto")
+
+
+def test_cross_join_autosplit_equals_unsplit(spark, frame):
+    """Brute force is one block on the blocked kernel, so 'auto' can
+    spread it over sub-tasks (3000 x 6 = 18000 cells, 3-way at a
+    6000-cell budget) with the pair set and cos values unchanged."""
+    sdf = _sdf(spark, frame)
+
+    def pairs(**kw):
+        out = pj.embedding_near_dup(
+            sdf, "vid", "emb", threshold=0.9, allow_cross_join=True, **kw
+        ).toPandas()
+        return {(int(a), int(b)): c for a, b, c in zip(out["id_1"], out["id_2"], out["cos"])}
+
+    want = pairs()
+    got = pairs(split="auto", auto_split_cells=6000)
+    assert want and set(got) == set(want)
+    assert all(abs(got[k] - v) < 1e-12 for k, v in want.items())

@@ -101,6 +101,16 @@ def test_driver_rows_become_frames_only_via_local_frame():
     )
 
 
+def _coin():
+    """A fair coin-flip UDF that flips anew on every read.  It reads
+    ``os.urandom``: Python workers forked from one daemon start from the
+    same ``random`` state, so ``random.random()`` flips can repeat
+    between two reads and let a verb that reads its input twice pass."""
+    from pyspark.sql.types import BooleanType
+
+    return F.udf(lambda _: os.urandom(1)[0] < 128, BooleanType()).asNondeterministic()
+
+
 def _counted(spark, n):
     """``n`` rows whose every column derives from one accumulator-counting
     Python UDF evaluated above a shuffle: the accumulator counts how many
@@ -224,6 +234,38 @@ def test_dedupe_near_runs_upstream_once(spark):
     assert acc.value == 30
 
 
+@pytest.mark.parametrize("split", [1, "auto"])
+def test_semdedup_runs_upstream_once(spark, split):
+    """The pair stage, the centroids and the kept-row filter (and, with
+    'auto', the pre-flight) read one run of the input.  Each of the
+    three clusters holds two exact-duplicate groups, [1, 0] on even ids
+    and [1, 1] on odd ones; every member of a group ties on its
+    centroid cosine, so the smallest id is kept.  The 1-cell budget
+    sends 'auto' through the split pipeline."""
+    df, acc = _counted(spark, 30)
+    emb = F.array(F.lit(1.0), (F.col("v") % 2).cast("double"))
+    df = df.select(F.col("v").cast("long").alias("vid"), "grp", emb.alias("emb"))
+    out = pj.semdedup(df, "emb", "vid", "grp", eps=0.9, split=split, auto_split_cells=1)
+    assert sorted(r["vid"] for r in out.collect()) == [0, 1, 2, 3, 4, 5]
+    assert acc.value == 30
+
+
+def test_ngram_lm_score_runs_upstream_once(spark):
+    """The model, the probe stream and the join-back read one run of
+    the input; the scores equal those of the same rows read from a
+    replay-stable frame."""
+    df, acc = _counted_docs(spark, 30)
+    got = {r["doc_id"]: r["lm_logprob"] for r in pj.ngram_lm_score(df, "text").collect()}
+    assert acc.value == 30
+    plain = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta epsilon g{i % 3}") for i in range(30)],
+        "doc_id long, text string",
+    )
+    want = {r["doc_id"]: r["lm_logprob"] for r in pj.ngram_lm_score(plain, "text").collect()}
+    assert got.keys() == want.keys()
+    assert all(abs(got[i] - want[i]) < 1e-12 for i in want)
+
+
 def test_contamination_score_runs_upstream_once(spark):
     df, acc = _counted_docs(spark, 30)
     bench = spark.createDataFrame([("alpha beta gamma delta epsilon g1",)], "text string")
@@ -245,14 +287,9 @@ def test_assign_packs_on_nondeterministic_input(spark):
     """The running sum and the join-back must read one run of an input
     that differs on every read: every row gets a pack, and the packs
     are the serial packing of exactly the rows returned."""
-    import random
-
-    from pyspark.sql.types import BooleanType
-
-    coin = F.udf(lambda _: random.random() < 0.5, BooleanType()).asNondeterministic()
     df = (
         spark.range(2000, numPartitions=4)
-        .filter(coin("id"))
+        .filter(_coin()("id"))
         .select(
             F.col("id").alias("doc_id"),
             F.concat_ws(" ", F.array_repeat(F.lit("w"), (F.col("id") % 5 + 1).cast("int")))
@@ -300,10 +337,12 @@ for kind in UNSTABLE_KINDS:
     check_index_and_cumsum(spark, kind)
 # the checkpoint files must hold the rows the first action saw, not a
 # recomputation: a nondeterministic UDF would draw new values
-import random
+import os
 from pyspark.sql import functions as F
 from pyjanitor_spark.utils.pin import pin
-draw = F.udf(lambda _: random.random(), "double").asNondeterministic()
+draw = F.udf(
+    lambda _: int.from_bytes(os.urandom(6), "big") / 2**48, "double"
+).asNondeterministic()
 pinned = pin(spark.range(200).repartition(2).withColumn("r", draw("id")))
 first = sorted(map(tuple, pinned.collect()))
 print("PIN_STABLE " + json.dumps(first == sorted(map(tuple, pinned.collect()))))
@@ -339,12 +378,7 @@ def test_pin_durable_checkpoint_dir(tmp_path):
 def test_count_cumulative_unique_on_nondeterministic_input(spark):
     """With ``order_by`` the running count and its join-back must read
     one run of an input that differs on every read."""
-    import random
-
-    from pyspark.sql.types import BooleanType
-
-    coin = F.udf(lambda _: random.random() < 0.5, BooleanType()).asNondeterministic()
-    df = spark.range(2000, numPartitions=4).filter(coin("id")).select(
+    df = spark.range(2000, numPartitions=4).filter(_coin()("id")).select(
         "id", (F.col("id") % 13).alias("val")
     )
     rows = sorted(
@@ -361,12 +395,7 @@ def test_count_cumulative_unique_on_nondeterministic_input(spark):
 def _coin_filtered(spark):
     """2000 ids filtered by a coin flip that differs on every read, with
     a value column ``v`` that ties ids in pairs."""
-    import random
-
-    from pyspark.sql.types import BooleanType
-
-    coin = F.udf(lambda _: random.random() < 0.5, BooleanType()).asNondeterministic()
-    return spark.range(2000, numPartitions=4).filter(coin("id")).select(
+    return spark.range(2000, numPartitions=4).filter(_coin()("id")).select(
         "id", (F.col("id") / 2).cast("long").alias("v")
     )
 
@@ -547,15 +576,10 @@ def test_dedup_verb_on_nondeterministic_input(spark, verb):
     """A dedup verb that reads its input more than once reads one run of
     it: on 400 docs filtered by a coin flip that differs on every read,
     the output equals the verb run on exactly the docs that came back."""
-    import random
-
-    from pyspark.sql.types import BooleanType
-
     text, run = _DEDUP_VERBS[verb]
-    coin = F.udf(lambda _: random.random() < 0.5, BooleanType()).asNondeterministic()
     docs = spark.createDataFrame(
         [(i, text(i)) for i in range(400)], "doc_id long, text string"
-    ).filter(coin("doc_id"))
+    ).filter(_coin()("doc_id"))
     got = sorted(map(tuple, run(spark, docs).collect()), key=repr)
     ids = sorted({r[0] for r in got})
     assert ids
@@ -621,16 +645,9 @@ def test_lsh_pairs_equal_band_table_self_join(spark, mode):
 
 def _coin_ids(spark, keep=()):
     """``id`` over 2000 ids in 4 ordered partitions, filtered by a coin
-    flip that differs on every read; the ids in ``keep`` always pass.
-    The coin reads ``os.urandom``: Python workers forked from one daemon
-    start from the same ``random`` state, so their first flips repeat."""
-    import os
-
-    from pyspark.sql.types import BooleanType
-
-    coin = F.udf(lambda _: os.urandom(1)[0] < 128, BooleanType()).asNondeterministic()
+    flip that differs on every read; the ids in ``keep`` always pass."""
     return spark.range(2000, numPartitions=4).filter(
-        coin("id") | F.col("id").isin(list(keep))
+        _coin()("id") | F.col("id").isin(list(keep))
     )
 
 

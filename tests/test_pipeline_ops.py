@@ -240,6 +240,21 @@ def test_cosine_topk(embeddings):
     assert abs(rows[0]["cos"] - 1.0) < 1e-9
 
 
+def test_cosine_topk_non_finite_vectors_score_zero(spark):
+    """A vector with a NaN or infinite component scores 0.0, as in the
+    blocked pair kernel: Spark orders NaN above every value, so a NaN
+    score would top the ranking."""
+    nan, inf = float("nan"), float("inf")
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [nan, 1.0]), (3, [0.0, 1.0]), (4, [inf, 1.0])],
+        "id long, v array<double>",
+    )
+    rows = pj.cosine_topk(df, [1.0, 0.0], "v", "id", k=4).collect()
+    assert [(r["id"], r["cos"]) for r in rows] == [
+        (1, 1.0), (2, 0.0), (3, 0.0), (4, 0.0)
+    ]
+
+
 def test_ivf_topk_recall(embeddings):
     q = [float(v) for v in embeddings.filter(F.col("vec_id") == 7).first()["embedding"]]
     brute = {r["vec_id"] for r in pj.cosine_topk(embeddings, q, "embedding", "vec_id", 10).collect()}

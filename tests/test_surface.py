@@ -15,7 +15,7 @@ import pyjanitor_spark.utils.order
 # defaulted parameters over the public functions below, after the
 # distinct-value CDF verbs, assign_packs and take_token_budget lost
 # their num_partitions option and semdedup its check option
-MAX_OPTIONS = 476
+MAX_OPTIONS = 474
 
 
 def _public_functions(module):

@@ -152,6 +152,49 @@ def test_embedding_near_dup_duplicate_id_never_self_pairs(spark):
     assert set(got) == {(7, 9)}
 
 
+# ------------------------------------------------ brute force, null ids
+
+def test_embedding_near_dup_cross_join_degenerate_vectors_excluded(spark):
+    """Brute force runs on the blocked kernel too: a NaN-component
+    vector never pairs (no ``cos=NaN`` rows)."""
+    nan = float("nan")
+    rows = [
+        (1, [1.0, 0.0]),
+        (2, [1.0, 0.01]),
+        (3, [nan, 1.0]),
+        (4, [0.0, nan]),
+        (5, [0.0, 1.0]),
+    ]
+    df = spark.createDataFrame(rows, "id long, emb array<double>")
+    out = pj.embedding_near_dup(
+        df, "id", "emb", threshold=0.5, allow_cross_join=True
+    ).collect()
+    assert [(r.id_1, r.id_2) for r in out] == [(1, 2)]
+    assert abs(out[0].cos - 1.0 / (1.0 + 1e-4) ** 0.5) < 1e-12
+
+
+def test_embedding_near_dup_cross_join_cells_gate(spark):
+    df = _cluster_frame(spark, n=8, dim=16)
+    with pytest.raises(Exception, match="max_block_cells"):
+        pj.embedding_near_dup(
+            df, "id", "emb", threshold=0.9, allow_cross_join=True,
+            max_block_cells=100,
+        ).collect()
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+@pytest.mark.parametrize("blocked", [True, False], ids=["block_col", "cross_join"])
+def test_embedding_near_dup_null_id_never_pairs(spark, id_type, blocked):
+    """``id_1 < id_2`` is never true of a null id, so a null-id row
+    pairs with nothing, on every path and for every id type."""
+    ids = [1, None, 3] if id_type == "long" else ["a", None, "c"]
+    rows = [(i, "b", [1.0, 0.0]) for i in ids]
+    df = spark.createDataFrame(rows, f"id {id_type}, blk string, emb array<double>")
+    kw = {"block_col": "blk"} if blocked else {"allow_cross_join": True}
+    out = pj.embedding_near_dup(df, "id", "emb", threshold=0.5, **kw).collect()
+    assert [(r.id_1, r.id_2) for r in out] == [(ids[0], ids[2])]
+
+
 # ------------------------------------- banded pair dedup on pair key
 
 def test_auto_block_pairs_unique_per_pair_key(spark):
