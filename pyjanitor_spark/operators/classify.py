@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from pyjanitor_spark.operators.text_analysis import tokens
 from pyjanitor_spark.utils.local import local_frame
-from pyjanitor_spark.utils.pin import pin
+from pyjanitor_spark.utils.pin import probe, share
 
 __all__ = ["nb_train", "nb_score"]
 
@@ -51,25 +51,26 @@ def nb_train(
     Null-labeled rows are DROPPED from training (the pandas groupby
     convention this package follows everywhere: NaN keys form no group).
 
-    Plan: two corpus scans total — one per-class doc-count aggregate
-    (its bounded one-row-per-class collect also yields the label list
-    and the doc total) and one tokenize pass into (label, token) counts
-    (partial-aggregated shuffle, pinned so ``V`` and the grid share it;
-    under AQE the pin runs that shuffle at call time); the dense vocab × label grid is an ``explode`` over
-    the driver-known label list — no corpus cross join; class totals
-    join back by label (tiny, broadcast), and ``k·V`` rides the plan as
-    a broadcast one-row aggregate rather than a blocking driver
-    ``count()`` (one action per train, not two).
+    Plan: the per-class doc-count aggregate is the one
+    :func:`~pyjanitor_spark.utils.pin.probe` of the labeled rows (its
+    bounded one-row-per-class ``collect`` also yields the label list
+    and the doc total), and the tokenize pass into (label, token)
+    counts reads the probed frame, so both see one run of ``df``; the
+    dense vocab × label grid is an ``explode`` over the driver-known
+    label list — no corpus cross join; class totals join back by label
+    (tiny, broadcast), and ``k·V`` rides the plan as a broadcast
+    one-row aggregate rather than a blocking driver ``count()``.
+
+    Call-time jobs: the probe (the pin's stages on a replay-unstable
+    ``df``, then the per-class ``collect``).
     """
     if k <= 0:
         raise ValueError("smoothing k must be > 0")
     lab = F.col(label_col).cast("string")
-    labeled = df.filter(lab.isNotNull())
     # bounded: one row per class; also carries the label list + doc total
-    ndoc_rows = (
-        labeled.groupBy(lab.alias("label"))
-        .agg(F.count(F.lit(1)).alias("d"))
-        .collect()
+    labeled, ndoc_rows = probe(
+        df.filter(lab.isNotNull()),
+        lambda f: f.groupBy(lab.alias("label")).agg(F.count(F.lit(1)).alias("d")),
     )
     if not ndoc_rows:
         raise ValueError("nb_train: no non-null-labeled rows to train on")
@@ -78,19 +79,15 @@ def nb_train(
     toks = labeled.select(
         lab.alias("label"), F.explode(_toks(F.col(text_col))).alias("token")
     )
-    # V-count and the grid share one pass
-    counts = pin(toks.groupBy("label", "token").agg(F.count(F.lit(1)).alias("c")))
+    counts = toks.groupBy("label", "token").agg(F.count(F.lit(1)).alias("c"))
     vocab = (
         counts.groupBy("token")
         .agg(F.sum("c").alias("tc"))
         .filter(F.col("tc") >= min_count)
         .select("token")
     )
-    # r14: V rides the model plan as a broadcast one-row table instead
-    # of a blocking driver count() — one less driver round trip per
-    # train, and no count-only job re-reads the counts pin.  k·V is the
-    # same IEEE double product either way (V is exact in a double for
-    # any vocabulary below 2^53), so llk is bit-identical.
+    # k·V is the same IEEE double product as a driver count would give
+    # (V is exact in a double below 2^53), so llk is bit-identical
     vcount = vocab.agg(
         (F.lit(float(k)) * F.count(F.lit(1)).cast("double")).alias("__kV")
     )
@@ -129,7 +126,6 @@ def nb_score(
     id_col: str,
     dest: str = "nb_pred",
     keep_scores: bool = False,
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """Score documents against an :func:`nb_train` model frame and
     attach the argmax-class prediction (ties break to the first label
@@ -145,28 +141,35 @@ def nb_score(
 
     Plan: ONE equi-join of exploded tokens against the model and ONE
     pivot on the driver-known label list — no per-class scans, no
-    nested loops.  ``broadcast_model`` (default) pins the join build
-    side to the MODEL: left to its own estimates Catalyst broadcasts
-    the EXPLODED CORPUS TOKEN STREAM instead (explode passes the scan's
-    size estimate through unchanged), collecting the probe side onto
-    the driver — backwards at every scale.  The model is vocabulary ×
-    labels (bounded, ``min_count``-pruned); for a stored model that
-    genuinely exceeds broadcast limits pass ``broadcast_model=False``
-    to let the planner shuffle both sides."""
+    nested loops.  The model is always the BROADCAST side: left to its
+    own estimates Catalyst broadcasts the EXPLODED CORPUS TOKEN STREAM
+    instead (explode passes the scan's size estimate through
+    unchanged), collecting the probe side onto the driver — backwards
+    at every scale.  The model is vocabulary × labels (bounded,
+    ``min_count``-pruned).
+
+    The token stream and the join-back read
+    :func:`~pyjanitor_spark.utils.pin.share` of ``df``; the priors come
+    from a :func:`~pyjanitor_spark.utils.pin.probe` of the model, and
+    its token rows from the probed frame, so both read one run of a
+    freshly trained model.  Call-time jobs: the model probe (the pin's
+    stages on a replay-unstable model, such as :func:`nb_train`'s
+    output, then a one-row-per-class ``collect``), and the ``share``
+    pin's stages on a replay-unstable ``df``.
+    """
     # bounded: one row per class
-    prior_rows = model.filter(F.col("token").isNull()).collect()
+    model, prior_rows = probe(model, lambda m: m.filter(F.col("token").isNull()))
     if not prior_rows:
         raise ValueError("model frame carries no prior rows (token IS NULL)")
     if any(r["label"] is None for r in prior_rows):
         raise ValueError("model frame carries a null label")
     priors = {r["label"]: r["llk"] for r in prior_rows}
     labels = sorted(priors)
-    mtok = model.filter(F.col("token").isNotNull())
+    mtok = F.broadcast(model.filter(F.col("token").isNotNull()))
+    df = share(df)
     toks = df.select(
         F.col(id_col).alias("__id"), F.explode(_toks(F.col(text_col))).alias("token")
     )
-    if broadcast_model:
-        mtok = F.broadcast(mtok)
     pivoted = (
         toks.join(mtok, "token")
         .groupBy("__id")

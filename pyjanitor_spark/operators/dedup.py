@@ -1365,26 +1365,37 @@ def bloom_build(
     SCHEME (2 = Kirsch–Mitzenmacher halves of one md5) so an index
     persisted under a different scheme fails loudly at probe time
     instead of silently missing true duplicates (positions computed
-    under scheme A never line up with bits set under scheme B)."""
+    under scheme A never line up with bits set under scheme B).
+
+    Call-time jobs: with ``expected_items=None``, one
+    :func:`~pyjanitor_spark.utils.pin.probe` counting ``reference``
+    (the pin's stages on a replay-unstable input, then a one-row
+    ``collect``), the bitmap then reading the probed frame; and the
+    bounded ``collect`` of the bitmap words (≤ ``shards`` · m/64
+    rows)."""
     import math
 
     if not 0.0 < fpp < 1.0:
         raise ValueError("fpp must be in (0, 1)")
     if shards < 1:
         raise ValueError("shards must be >= 1")
-    n_total = expected_items if expected_items is not None else max(reference.count(), 1)
-    n = max(1, -(-n_total // shards))  # per-shard expected keys
+    if expected_items is None:
+        # bounded: one row; the bitmap reads the same run of reference
+        reference, (row,) = probe(
+            reference, lambda r: r.agg(F.count(F.lit(1)).alias("n"))
+        )
+        expected_items = row["n"]
+    n = max(1, -(-expected_items // shards))  # per-shard expected keys
     m = max(64, int(-n * math.log(fpp) / (math.log(2) ** 2)))
     h = max(1, round(m / n * math.log(2)))
     nwords = (m + 63) // 64
 
-    def _shard(key: Column) -> Column:
-        return F.pmod(F.xxhash64(key.cast("string")), F.lit(shards))
-
+    word, bit = _bloom_bit(F.col("__pos"))
     words = (
         _with_bloom_halves(
             reference.select(
-                _shard(F.col(key_col)).alias("__shard"), F.col(key_col)
+                _bloom_shard(F.col(key_col), shards).alias("__shard"),
+                F.col(key_col),
             ),
             F.col(key_col),
             m,
@@ -1395,13 +1406,7 @@ def bloom_build(
                 F.array(*[_bloom_position(i, m) for i in range(h)])
             ).alias("__pos"),
         )
-        .select(
-            "__shard",
-            (F.col("__pos") / 64).cast("int").alias("__w"),
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(__pos % 64 AS INT))"
-            ).alias("__b"),
-        )
+        .select("__shard", word.alias("__w"), bit.alias("__b"))
         .groupBy("__shard", "__w")
         .agg(F.bit_or("__b").alias("__word"))
     )
@@ -1462,6 +1467,23 @@ def _bloom_position(i: int, m: int) -> Column:
     return F.pmod(F.col("__bf1") + F.lit(i) * F.col("__bf2"), F.lit(m))
 
 
+def _bloom_shard(key: Column, shards: int) -> Column:
+    """The bitmap (shard) a key's bits live in, on both the build and
+    the probe side."""
+    return F.pmod(F.xxhash64(key.cast("string")), F.lit(shards))
+
+
+def _bloom_bit(pos: Column) -> tuple[Column, Column]:
+    """``(word, bit)`` of bit position ``pos`` in a bitmap of 64-bit
+    words: the 0-based word index and the one-bit mask within it, the
+    one layout the build side sets and the probe side tests.
+    ``F.shiftleft`` takes only a literal bit count on Spark 4.x, so the
+    shift is called by its SQL name."""
+    return (pos / 64).cast("int"), F.call_function(
+        "shiftleft", F.lit(1).cast("bigint"), (pos % 64).cast("int")
+    )
+
+
 def bloom_dedupe_against(
     df: DataFrame,
     reference: DataFrame,
@@ -1508,6 +1530,15 @@ def bloom_dedupe_against(
     for the ``exact=True`` verify anti-join; ``expected_items``/
     ``fpp``/``shards`` are read from the stored index).
 
+    Both probe branches and the null-key branch read
+    :func:`~pyjanitor_spark.utils.pin.share` of ``df``, and with
+    ``exact=True`` the bitmap build and the verify anti-join read
+    ``share`` of ``reference``.  Call-time jobs: :func:`bloom_build`'s
+    when no ``bloom_df`` is given; one
+    :func:`~pyjanitor_spark.utils.pin.probe` of the index's meta rows
+    (one row per shard); and the ``share`` pins' stages on a
+    replay-unstable input.
+
     No reference analog: pyjanitor's ``drop_duplicates`` world is
     single-frame; this is the training-pipeline "new crawl vs corpus"
     primitive (cf. ``dedupe_against`` for the NEAR-dup variant).
@@ -1517,6 +1548,9 @@ def bloom_dedupe_against(
     if bloom_df is None:
         if reference is None:
             raise ValueError("need reference or bloom_df")
+        if exact:
+            # the bitmap and the verify anti-join read one run of it
+            reference = share(reference)
         bloom_df = bloom_build(
             reference, key_col, expected_items=expected_items, fpp=fpp, shards=shards
         )
@@ -1532,8 +1566,10 @@ def bloom_dedupe_against(
             "current Kirsch-Mitzenmacher prober; rebuild the index with "
             "bloom_build on the current version"
         )
-    # bounded meta action: one row per shard
-    meta = bloom_df.select("__shard", "__m", "__h", "__hv").collect()
+    # bounded: one row per shard; the broadcast bitmaps read the same run
+    bloom_df, meta = probe(
+        bloom_df, lambda b: b.select("__shard", "__m", "__h", "__hv")
+    )
     hv = meta[0]["__hv"]
     if hv != _BLOOM_HASH_SCHEME:
         raise ValueError(
@@ -1545,30 +1581,24 @@ def bloom_dedupe_against(
     h = int(meta[0]["__h"])
     shards = len(meta)
 
-    def _shard(key: Column) -> Column:
-        return F.pmod(F.xxhash64(key.cast("string")), F.lit(shards))
-
+    df = share(df)
     # NULL keys are DEFINITELY clean under anti-join semantics (NULL
     # never equals a reference key) — route them around the probe,
     # whose shard equi-join would silently drop them (NULL shard)
     null_keys = df.filter(F.col(key_col).isNull())
-    # NB: F.shiftleft requires a literal bit count on Spark 4.x; the SQL
-    # form accepts an expression, so shifts go through F.expr
     probed = _with_bloom_halves(
         df.filter(F.col(key_col).isNotNull())
-        .withColumn("__shard", _shard(F.col(key_col)))
+        .withColumn("__shard", _bloom_shard(F.col(key_col), shards))
         .join(F.broadcast(bloom_df.select("__shard", "__bloom")), "__shard"),
         F.col(key_col),
         m,
     )
-    checks = [
-        F.expr(
-            f"(element_at(__bloom, CAST(pmod(__bf1 + {i} * __bf2, {m}) / 64 AS INT) + 1) & "
-            f"shiftleft(CAST(1 AS BIGINT), CAST(pmod(__bf1 + {i} * __bf2, {m}) % 64 AS INT))) != 0"
-        )
-        for i in range(h)
-    ]
-    is_candidate = _reduce(lambda a, b: a & b, checks)
+
+    def bit_set(i: int) -> Column:
+        word, bit = _bloom_bit(_bloom_position(i, m))
+        return F.element_at(F.col("__bloom"), word + 1).bitwiseAND(bit) != 0
+
+    is_candidate = _reduce(lambda a, b: a & b, [bit_set(i) for i in range(h)])
     aux = ["__shard", "__bloom", "__bf1", "__bf2"]
     clean = probed.filter(~is_candidate).drop(*aux).unionByName(null_keys)
     if not exact:

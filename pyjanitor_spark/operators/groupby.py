@@ -308,7 +308,7 @@ def groupby_topk(
         for kcol in keys:
             df = df.filter(F.col(kcol).isNotNull())
     # both reference paths — nlargest/nsmallest (numeric/temporal) and
-    # the sort_values().head(k) TypeError fallback (object/bool) — rank
+    # the sort_values-then-head(k) TypeError fallback (object/bool) — rank
     # the non-null values and then PAD with the group's null rows when
     # fewer than k non-nulls exist (pandas nsmallest([NaN], 1) returns
     # the NaN row; fuzz-pinned in test_fuzz_differential5).  nulls-LAST

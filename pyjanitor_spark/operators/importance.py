@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyjanitor_spark.operators.text_analysis import word_shingles
-from pyjanitor_spark.utils.pin import pin
+from pyjanitor_spark.utils.pin import probe, share
 
 __all__ = ["dsir_weights"]
 
@@ -52,8 +52,14 @@ def dsir_weights(
     ≤ ``num_buckets``-row count tables, one bounded 1-row total per
     side, a ≤ ``num_buckets``-row log-ratio table BROADCAST-joined to
     the exploded source grams, and one groupBy-sum per doc in DECIMAL
-    (layout-independent) — two scans of the source, one of the target,
-    no collect of anything unbounded.
+    (layout-independent) — no collect of anything unbounded.  The
+    source counts, the per-doc grams and the join-back read
+    :func:`~pyjanitor_spark.utils.pin.share` of ``df``.
+
+    Call-time jobs: the ``share`` pin's stages on a replay-unstable
+    ``df``, then one :func:`~pyjanitor_spark.utils.pin.probe` of the
+    joined count tables (their shuffle stages and a one-row ``collect``
+    of the totals), so the totals and the ratio table read one run.
     """
     if n < 1:
         raise ValueError("n must be >= 1")
@@ -62,24 +68,22 @@ def dsir_weights(
     if k <= 0:
         raise ValueError("smoothing k must be > 0")
 
-    def bucket(gram):
-        h = F.md5(gram)
-        return F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % num_buckets
-
-    def gram_buckets(frame):
+    def gram_buckets(frame, *keep):
         g = F.explode(
             word_shingles(F.lower(F.col(column_name)), n, distinct=False)
         ).alias("__g")
-        return frame.select(g).select(bucket(F.col("__g")).alias("__b"))
+        h = F.md5(F.col("__g"))
+        b = F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % num_buckets
+        return frame.select(*keep, g).select(*keep, b.alias("__b"))
 
+    df = share(df)
     src = gram_buckets(df).groupBy("__b").agg(F.count(F.lit(1)).alias("__cs"))
     tgt = gram_buckets(target).groupBy("__b").agg(F.count(F.lit(1)).alias("__ct"))
-    # totals + ratio table share it
-    joined = pin(src.join(tgt, "__b", "full").na.fill(0, ["__cs", "__ct"]))
     # bounded: one row (sums over <= num_buckets rows)
-    tot = joined.agg(
-        F.sum("__cs").alias("s"), F.sum("__ct").alias("t")
-    ).first()
+    joined, (tot,) = probe(
+        src.join(tgt, "__b", "full").na.fill(0, ["__cs", "__ct"]),
+        lambda j: j.agg(F.sum("__cs").alias("s"), F.sum("__ct").alias("t")),
+    )
     S, T = int(tot["s"] or 0), int(tot["t"] or 0)
     if T == 0:
         raise ValueError("target corpus has no n-grams to estimate from")
@@ -92,13 +96,7 @@ def dsir_weights(
         ).alias("__lr"),
     )
     perdoc = (
-        df.select(
-            F.col(id_col),
-            F.explode(
-                word_shingles(F.lower(F.col(column_name)), n, distinct=False)
-            ).alias("__g"),
-        )
-        .select(F.col(id_col), bucket(F.col("__g")).alias("__b"))
+        gram_buckets(df, F.col(id_col))
         .join(F.broadcast(table), "__b", "left")
         .groupBy(id_col)
         .agg(F.sum(F.col("__lr").cast(_DEC)).alias("__logw_dec"))

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pyjanitor_spark.utils.pin import probe
+
 __all__ = [
     "deterministic_sample",
     "stratified_sample",
@@ -115,6 +117,10 @@ def mix_corpora(
     engine-reproducible).  Sources absent from ``proportions`` are
     DROPPED.  One bounded per-source count aggregate (len(proportions)
     rows) plus a single filter pass — no shuffle of the data itself.
+    The count is a :func:`~pyjanitor_spark.utils.pin.probe` and the
+    sample is drawn from the probed frame, so both read one run of
+    ``df``.  Call-time jobs: the probe (the pin's stages on a
+    replay-unstable input, then the per-source ``collect``).
 
     Proportions must be positive and sum to ~1 (tolerance 1e-6).
     Expected realized mix error is the sampler's binomial noise,
@@ -127,15 +133,12 @@ def mix_corpora(
     total = sum(proportions.values())
     if abs(total - 1.0) > 1e-6:
         raise ValueError(f"proportions must sum to 1, got {total}")
-    counts = {
-        r[source_column]: r["__n"]
-        for r in df.filter(
-            F.col(source_column).isin(list(proportions))
-        )
-        .groupBy(source_column)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .collect()  # bounded: one row per source in `proportions`
-    }
+    # bounded: one row per source in `proportions`
+    df, rows = probe(
+        df.filter(F.col(source_column).isin(list(proportions))),
+        lambda f: f.groupBy(source_column).agg(F.count(F.lit(1)).alias("__n")),
+    )
+    counts = {r[source_column]: r["__n"] for r in rows}
     missing = sorted(set(proportions) - set(counts))
     if missing:
         raise ValueError(f"sources not present in data: {missing}")

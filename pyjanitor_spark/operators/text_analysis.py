@@ -1078,9 +1078,16 @@ def top_collocations(
     back twice keyed on the word (plain equi-joins — at corpus scale
     these are the well-partitioned joins a vocabulary fits); final
     top-k is ``TakeOrderedAndProject`` with (w1, w2) tie-break.
+
+    The unigram and bigram tables read
+    :func:`~pyjanitor_spark.utils.pin.share` of ``df``.  Call-time
+    jobs: the ``share`` pin's stages on a replay-unstable input, and
+    the shuffle stages of the two pinned count tables (adaptive query
+    execution runs them when the pins are taken).
     """
     if k < 1 or min_count < 1:
         raise ValueError("k and min_count must be >= 1")
+    df = share(df)
     toks = df.select(F.explode(tokens(F.col(column_name))).alias("w"))
     # pinned: the unigram table feeds the w1 join, the w2 join, AND the
     # token total — unpinned, the corpus tokenize+aggregate plans three
@@ -1129,7 +1136,6 @@ def ngram_lm_score(
     alpha: float = 0.4,
     min_count: int = 2,
     train_df: DataFrame | None = None,
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """Average bigram log-probability of each document under a
     stupid-backoff language model (Brants et al. 2007) trained on the
@@ -1155,16 +1161,13 @@ def ngram_lm_score(
     seen-bigram table precomputes ``ln(c_xy/c_x)`` at MODEL scale so
     the corpus-side probe is two equi-joins (bigram key, then w2 key)
     plus one broadcast totals row — never a corpus×model nested loop.
-    With ``broadcast_model`` (default) both model tables are
-    BROADCAST, so the exploded probe stream — the one corpus-sized
-    intermediate, one row per token position — flows scan → explode →
-    two broadcast hash joins → partial aggregate inside a single stage
-    with no exchange at all; the only probe shuffle left is the
-    per-document partial-aggregated average.  A ``min_count``-pruned
-    bigram model is vocabulary-shaped, orders of magnitude below the
-    corpus; for a corpus whose model genuinely exceeds broadcast
-    limits (hundreds of millions of distinct repeated bigrams), pass
-    ``broadcast_model=False`` to keep the shuffled sort-merge probe.
+    Both model tables are always BROADCAST, so the exploded probe
+    stream — the one corpus-sized intermediate, one row per token
+    position — flows scan → explode → two broadcast hash joins →
+    partial aggregate inside a single stage with no exchange at all;
+    the only probe shuffle left is the per-document partial-aggregated
+    average.  A ``min_count``-pruned bigram model is
+    vocabulary-shaped, orders of magnitude below the corpus.
 
     The model, the probe stream and the join-back read one frame,
     :func:`~pyjanitor_spark.utils.pin.share` of ``df`` (and of
@@ -1204,14 +1207,13 @@ def ngram_lm_score(
         F.col("w").alias("__w2"),
         F.log(F.lit(alpha) * F.col("c") / F.col("__T")).alias("__lb"),
     )
-    if broadcast_model:
-        # model tables ride the probe stage as broadcast hash maps: the
-        # per-token-position probe stream never hits an exchange (the
-        # planner's size estimate for an aggregated+filtered string
-        # table is wildly pessimistic, so without the hint the probe
-        # side pays a full sort-exchange keyed on the bigram STRING)
-        seen = F.broadcast(seen)
-        backoff = F.broadcast(backoff)
+    # model tables ride the probe stage as broadcast hash maps: the
+    # per-token-position probe stream never hits an exchange (the
+    # planner's size estimate for an aggregated+filtered string table
+    # is wildly pessimistic, so without the hint the probe side pays a
+    # full sort-exchange keyed on the bigram STRING)
+    seen = F.broadcast(seen)
+    backoff = F.broadcast(backoff)
     scored = (
         df.select(
             F.col(id_col).alias("__id"),
@@ -1257,7 +1259,7 @@ def top_ngrams(
     """Corpus-level top-``k`` most frequent word ``n``-grams (every
     occurrence counts, unlike the distinct shingles MinHash uses).
 
-    Shape: explode → ``groupBy(ngram).count()`` — partial (map-side)
+    Shape: explode → a per-n-gram count aggregate — partial (map-side)
     aggregation means the shuffle carries one row per distinct n-gram per
     partition, not one per occurrence — then ``orderBy().limit(k)``,
     which Spark executes as ``TakeOrderedAndProject`` (per-partition

@@ -70,6 +70,12 @@ def hashed_tfidf(
     * ``l2_normalize``: scale each document's weights to unit L2 norm
       (cosine similarity becomes a dot product) — one extra
       ``partitionBy(id)`` window, still fully parallel.
+
+    With ``as_vector=True`` the tf table and the join-back read
+    :func:`~pyjanitor_spark.utils.pin.share` of ``df``.  Call-time
+    jobs: that ``share`` pin's stages on a replay-unstable input, and
+    the tf pin's shuffle stage (adaptive query execution runs it when
+    the pin is taken).
     """
     if dim < 1:
         raise ValueError("dim must be >= 1")
@@ -77,6 +83,9 @@ def hashed_tfidf(
     if lowercase:
         col = F.lower(col)
     tok = F.explode(F.filter(tokens(col, mode), lambda t: t != "")).alias("__tok")
+    if as_vector:
+        # the tf table and the join-back both read df
+        df = share(df)
     exploded = df.select(F.col(id_column), tok)
     bucket = (
         F.conv(F.substring(F.md5(F.col("__tok")), 1, 8), 16, 10).cast("bigint")

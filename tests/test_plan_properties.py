@@ -339,8 +339,7 @@ def test_registry_generate_broadcast_lint(spark):
         # stage — build sides are DISTINCT bigrams (count>=min_count)
         # and the unigram vocabulary: SUBLINEAR in the token scan
         # (dedup'd aggregates, not a pair stream); the probe stream
-        # never exchanges.  broadcast_model=False restores SMJ for a
-        # corpus whose pruned model exceeds broadcast limits.
+        # never exchanges.  The model is always broadcast.
         "ngram_lm_score",
         # per-doc n-gram fraction table: one row per doc_id (LINEAR in
         # the scan; the estimate tracks the input, so at real scale the

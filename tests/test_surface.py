@@ -14,8 +14,9 @@ import pyjanitor_spark.utils.order
 
 # defaulted parameters over the public functions below, after the
 # distinct-value CDF verbs, assign_packs and take_token_budget lost
-# their num_partitions option and semdedup its check option
-MAX_OPTIONS = 474
+# their num_partitions option, semdedup its check option, and nb_score
+# and ngram_lm_score their broadcast_model option
+MAX_OPTIONS = 472
 
 
 def _public_functions(module):
