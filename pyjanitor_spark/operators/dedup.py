@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyjanitor_spark.operators.text_analysis import tokens, word_shingles
-from pyjanitor_spark.utils.expr import let
+from pyjanitor_spark.utils.expr import exact_key, let
 from pyjanitor_spark.utils.local import local_frame
 from pyjanitor_spark.utils.pin import pin, probe, share
 
@@ -57,11 +57,13 @@ __all__ = [
 ]
 
 
-def _emit_pairs(bucketed: DataFrame, ids_col: str = "__ids") -> DataFrame:
+def _emit_pairs(bucketed: DataFrame) -> DataFrame:
     """All ordered pairs (id_1 < id_2) from bucket rows holding a SORTED
-    id array, emitted CHUNKED: posexplode the array, then each
-    (element i) row explodes only its successors ``slice(ids, i+2, n)``
-    (posexplode index is 0-based, slice position 1-based).
+    element array ``__ids``, emitted CHUNKED: posexplode the array, then
+    each (element i) row explodes only its successors
+    ``slice(ids, i+2, n)`` (posexplode index is 0-based, slice position
+    1-based).  Every other column of ``bucketed`` (the bucket's band)
+    rides along on each pair.
 
     Same Σ C(bucket, 2) output as a flattened all-pairs array, but the
     largest single row holds |bucket| elements, not C(|bucket|, 2) —
@@ -69,10 +71,12 @@ def _emit_pairs(bucketed: DataFrame, ids_col: str = "__ids") -> DataFrame:
     streams as 1e6 rows × ≤8 MB arrays instead of materializing a
     5e11-struct array in one task.  Both generators stay inside
     whole-stage codegen; no extra shuffle."""
-    ids = F.col(ids_col)
+    ids = F.col("__ids")
+    rest = [c for c in bucketed.columns if c != "__ids"]
     return (
-        bucketed.select(ids, F.posexplode(ids).alias("__i", "id_1"))
+        bucketed.select(*rest, ids, F.posexplode(ids).alias("__i", "id_1"))
         .select(
+            *rest,
             "id_1",
             F.explode(
                 F.slice(ids, F.col("__i") + F.lit(2), F.size(ids))
@@ -81,12 +85,13 @@ def _emit_pairs(bucketed: DataFrame, ids_col: str = "__ids") -> DataFrame:
     )
 
 
-def _emit_star(bucketed: DataFrame, ids_col: str = "__ids") -> DataFrame:
-    """STAR pairs from bucket rows holding a SORTED id array: the bucket
-    MIN id paired with every other member — O(bucket) edges with the
-    SAME connected components as the C(bucket, 2) clique
-    (:func:`_emit_pairs`), because every member reaches every other
-    through the hub.
+def _emit_star(bucketed: DataFrame) -> DataFrame:
+    """STAR pairs from bucket rows holding a SORTED element array
+    ``__ids``: the bucket MIN element paired with every other member —
+    O(bucket) edges with the SAME connected components as the
+    C(bucket, 2) clique (:func:`_emit_pairs`), because every member
+    reaches every other through the hub.  Every other column of
+    ``bucketed`` rides along, as in :func:`_emit_pairs`.
 
     This is the asymptotic fix for clustering consumers: a 1e6-doc
     exact-dup bucket (one boilerplate body across a 100 TB corpus)
@@ -94,11 +99,50 @@ def _emit_star(bucketed: DataFrame, ids_col: str = "__ids") -> DataFrame:
     CONNECTIVITY (components / dedupe), not the full candidate pair
     set — pair verification (Jaccard thresholds) must see every pair
     and keeps the all-pairs emitter."""
-    ids = F.col(ids_col)
+    ids = F.col("__ids")
+    rest = [c for c in bucketed.columns if c != "__ids"]
     return bucketed.select(
+        *rest,
         F.element_at(ids, 1).alias("id_1"),
         F.explode(F.slice(ids, 2, F.size(ids))).alias("id_2"),
     )
+
+
+def _band_table(frame: DataFrame, element: Column, keys: list[Column]) -> DataFrame:
+    """(element, band, key) rows, one per band key of each row of
+    ``frame``: band ``b`` is ``keys[b]``, and the element column keeps
+    its name.  The one band table of both banded hashes (MinHash bands,
+    SimHash chunks)."""
+    banded = frame.select(
+        element,
+        F.explode(
+            F.array(
+                *[F.struct(F.lit(b).alias("band"), key.alias("key")) for b, key in enumerate(keys)]
+            )
+        ).alias("bk"),
+    )
+    return banded.select(
+        banded.columns[0], F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    )
+
+
+def _bucket_pairs(bands: DataFrame, element: str, emit) -> DataFrame:
+    """The one LSH bucket→pairs step: ONE shuffle on (band, key) collects
+    each bucket's ``element`` values sorted, and ``emit``
+    (:func:`_emit_pairs` or :func:`_emit_star`) turns them into
+    (band, id_1, id_2) rows in-task (a self-join would plan the band
+    table for both sides and shuffle it twice).  Null keys never form a
+    bucket.  LSH bands have NO bucket-size cap (an exact-dup cluster
+    lands whole in one bucket), so the emitters keep each row
+    O(bucket), not O(bucket²); cost stays ∝ Σ bucket²."""
+    bucketed = (
+        bands.filter(F.col("key").isNotNull())
+        .groupBy("band", "key")
+        .agg(F.sort_array(F.collect_list(element)).alias("__ids"))
+        .filter(F.size("__ids") > 1)
+        .drop("key")
+    )
+    return emit(bucketed)
 
 
 def dedupe_exact(
@@ -110,9 +154,7 @@ def dedupe_exact(
     """Exact dedup: keep the min-``id_col`` row per normalized-text
     group.  min-id (not 'first seen') is the distributed-deterministic
     keep rule."""
-    col = F.col(column_name)
-    key = F.md5(F.trim(F.lower(F.regexp_replace(col, r"\s+", " ")))) if normalize else F.md5(col)
-    w = Window.partitionBy(key)
+    w = Window.partitionBy(exact_key(F.col(column_name), normalize))
     return (
         df.withColumn("__keep", F.min(F.col(id_col)).over(w))
         .filter(F.col(id_col) == F.col("__keep"))
@@ -194,17 +236,7 @@ def minhash_band_buckets(
         for b in range(bands)
     ]
     keyed = sig.select(F.col(id_col), *band_cols)
-    return keyed.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), F.col(f"__band_{b}").alias("key"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    return _band_table(keyed, F.col(id_col), [F.col(f"__band_{b}") for b in range(bands)])
 
 
 def minhash_lsh_pairs(
@@ -219,8 +251,9 @@ def minhash_lsh_pairs(
     """Candidate near-dup pairs (id_1 < id_2) sharing ≥1 LSH band.
 
     signature[k] → ``bands`` bands of k/bands rows
-    (:func:`minhash_band_buckets`); the pairs are those of a self-join
-    of that table on (band, key), then distinct.
+    (:func:`minhash_band_buckets`); each (band, key) bucket emits its
+    pairs in-task (:func:`_bucket_pairs`), then distinct: the pairs of
+    a self-join of that table on (band, key).
 
     ``mode='all'`` (default) emits every in-bucket pair — the candidate
     set a verification stage (exact Jaccard) must see.  ``mode='star'``
@@ -234,21 +267,8 @@ def minhash_lsh_pairs(
     buckets = minhash_band_buckets(
         df, id_col, column_name, k=k, bands=bands, shingle_n=shingle_n
     )
-    # ONE shuffle on (band, key): collect the bucket's ids and emit its
-    # pairs in-task (a self-join would recompute the whole signature
-    # pipeline for both sides and shuffle it twice).  Bucket sizes are
-    # bounded by near-dup cluster sizes, so the collect_list is safe;
-    # cost stays ∝ Σ bucket² either way.
-    bucketed = (
-        buckets.groupBy("band", "key")
-        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("__ids"))
-        .filter(F.size("__ids") > 1)
-    )
-    # chunked emission: LSH bands have NO bucket-size cap (an exact-dup
-    # cluster lands whole in one bucket), so the per-row pair array must
-    # stay O(bucket), not O(bucket²)
     emit = _emit_star if mode == "star" else _emit_pairs
-    return emit(bucketed).distinct()
+    return _bucket_pairs(buckets, id_col, emit).select("id_1", "id_2").distinct()
 
 
 def simhash(
@@ -334,17 +354,26 @@ def simhash_pairs(
     literature: pairs whose ``bits``-bit SimHash fingerprints differ in
     at most ``max_hamming`` bit positions.
 
-    EXACT recall by pigeonhole: the fingerprint splits into ``bands``
-    equal chunks, and a pair within ``max_hamming <= bands - 1`` flips
-    fewer bits than there are chunks, so at least one chunk matches
-    exactly — the equi-join on (band, chunk value) can't miss a
-    qualifying pair (enforced: ``bands > max_hamming``).
+    Candidates come from the same LSH bucket engine as
+    :func:`minhash_lsh_pairs`: the fingerprint splits into ``bands``
+    equal chunks, each (band, chunk value) is a bucket of the one band
+    table (:func:`_band_table`), and one shuffle on the bucket key
+    collects each bucket's (id, fingerprint) elements and emits their
+    pairs in-task (:func:`_bucket_pairs`).  The plan reads the
+    fingerprint once; rows with a null fingerprint (null text) never
+    form a bucket.
 
-    Scale shape: same as MinHash-LSH — fingerprints are one expression
-    pass, the ONLY shuffle is the equi-join on short (band, chunk)
-    keys, candidate volume is Σ bucket² (never all-pairs), and the
-    Hamming verify is a JVM-side ``bit_count(xor)`` expression.
-    Returns (id_1, id_2, hamming) with id_1 < id_2.
+    EXACT recall by pigeonhole: a pair within ``max_hamming <= bands -
+    1`` flips fewer bits than there are chunks, so at least one chunk
+    matches exactly and the pair shares that chunk's bucket (enforced:
+    ``bands > max_hamming``).  A pair sharing several chunks is kept
+    only from its first matching band, so no ``distinct`` is needed,
+    and the Hamming verify is a JVM-side ``bit_count(xor)`` over the
+    two fingerprints on the pair row.  Candidate volume is Σ bucket²,
+    never all-pairs.  Runs no Spark job at call time.
+
+    Returns (id_1, id_2, hamming) with id_1 < id_2, one row per pair of
+    input rows (a repeated id pairs per row; equal ids never pair).
     """
     if bits > 62:
         raise ValueError("bits must be <= 62 (bigint fingerprint for xor)")
@@ -356,66 +385,34 @@ def simhash_pairs(
     if bits % bands:
         raise ValueError("bits must be divisible by bands")
     width = bits // bands
-    mask = (1 << width) - 1
+
+    def chunk(c, j):
+        return F.shiftright(c, j * width).bitwiseAND(F.lit((1 << width) - 1))
+
     fp = simhash(df.select(id_col, column_name), column_name, bits=bits, dest="__sh")
-    banded = fp.select(
-        F.col(id_col),
-        F.col("__sh"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(F.col("__sh"), i * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("key"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"), "__sh")
-    # pin the banded fingerprints: the self-join otherwise plans TWO
-    # independent subtrees (no exchange reuse once one side broadcasts),
-    # and the join's isnotnull(key) null-filter is pushed below the
-    # repartition exchange where it re-evaluates the whole fingerprint
-    # aggregate — 4 fingerprint computations per document in the
-    # executed plan.  The pin is (id, band, key, fp): bands x ~40 bytes
-    # per document, metadata-sized at any scale.
-    banded = pin(banded)
-    a, b = banded.alias("a"), banded.alias("b")
-    xor = F.col("a.__sh").bitwiseXOR(F.col("b.__sh"))
-    ham = F.bit_count(xor)
-    # a pair agreeing on SEVERAL chunks would surface once per matching
-    # band; keep only the row whose band is the pair's FIRST matching
-    # chunk (chunk j matches iff the xor's j-th chunk is zero — an
-    # expression over the two fingerprints already on the row), so each
-    # pair is emitted exactly once and no post-join distinct() has to
-    # re-shuffle the full pair stream
+    sh = F.col("__sh")
+    element = F.struct(F.col(id_col).alias("id"), sh.alias("fp")).alias("__el")
+    table = _band_table(fp, element, [chunk(sh, j) for j in range(bands)])
+    pairs = _bucket_pairs(table, "__el", _emit_pairs)
+    a, b = F.col("id_1"), F.col("id_2")
+    xor = a["fp"].bitwiseXOR(b["fp"])
+    # a pair agreeing on SEVERAL chunks is emitted by each of those
+    # bands' buckets; keep only the row whose band is the pair's FIRST
+    # matching chunk (chunk j matches iff the xor's j-th chunk is zero)
     first_band = None
     for j in range(bands):
-        chunk_zero = (
-            F.shiftright(xor, j * width).bitwiseAND(F.lit(mask)) == 0
-        )
+        chunk_zero = chunk(xor, j) == 0
         first_band = (
             F.when(chunk_zero, F.lit(j))
             if first_band is None
             else first_band.when(chunk_zero, F.lit(j))
         )
     return (
-        a.join(
-            b,
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.key") == F.col("b.key"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .filter(F.col("a.band") == first_band)
+        pairs.filter((a["id"] < b["id"]) & (F.col("band") == first_band))
         .select(
-            F.col(f"a.{id_col}").alias("id_1"),
-            F.col(f"b.{id_col}").alias("id_2"),
-            ham.alias("hamming"),
+            a["id"].alias("id_1"),
+            b["id"].alias("id_2"),
+            F.bit_count(xor).alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
     )

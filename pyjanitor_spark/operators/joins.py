@@ -68,9 +68,9 @@ def _build_condition(lcol: Column, rcol: Column, op: str) -> Column:
 def _num_cast(col: "F.Column", dtype: str) -> "F.Column":
     """Order-preserving numeric view for bucketization.  DATE and
     TIMESTAMP_NTZ cannot cast to double directly (ANSI suggests
-    UNIX_DATE); route every datetime type through timestamp like
-    asof_join does — both operands shift identically so bucket
-    membership is exact."""
+    UNIX_DATE); route every datetime type through timestamp (epoch
+    seconds) — both operands shift identically, so bucket membership
+    and ``asof_join``'s tolerance deltas are exact."""
     if dtype.startswith(("date", "timestamp")):
         return col.cast("timestamp").cast("double")
     return col.cast("double")
@@ -511,14 +511,11 @@ def asof_join(
         .orderBy(F.col("__on").asc(), fwd_side, tie.asc())
         .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     )
-    # deltas in `on` units; timestamps (incl. NTZ, which cannot cast to
-    # double directly) go through an epoch-seconds cast — both operands
-    # shift identically so differences are exact
+    # deltas in `on` units, through the numeric view bucketization uses
     on_t = u.schema["__on"].dataType.simpleString()
-    if on_t.startswith(("timestamp", "date")):
-        num = lambda c: c.cast("timestamp").cast("double")  # noqa: E731
-    else:
-        num = lambda c: c.cast("double")  # noqa: E731
+
+    def num(c):
+        return _num_cast(c, on_t)
 
     picked = None
     if direction in ("backward", "nearest"):

@@ -17,7 +17,7 @@ from functools import reduce as functools_reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pyjanitor_spark.utils.expr import let
+from pyjanitor_spark.utils.expr import exact_key, let
 from pyjanitor_spark.utils.pin import pin, share
 
 __all__ = [
@@ -406,8 +406,7 @@ def fingerprint(
       across engines)"""
     col = F.col(column_name)
     if mode == "exact":
-        norm = F.lower(F.regexp_replace(col, r"\s+", " "))
-        return df.withColumn(dest, F.md5(F.trim(norm)))
+        return df.withColumn(dest, exact_key(col, normalize=True))
     if mode == "rolling":
         sh = word_shingles(col, shingle_n)
         return df.withColumn(dest, F.array_min(F.transform(sh, F.md5)))

@@ -43,6 +43,7 @@ __all__ = [
     "add_column",
     "add_columns",
     "winsorize",
+    "quantile_bin",
     "quantiles",
     "robust_scale",
 ]
@@ -1107,10 +1108,14 @@ def factorize_columns(
     distinct frame by that first position.  Either way the ranking
     window runs over the value-DISTINCT frame only (bounded vocabulary,
     never the full data) and joins back broadcast.  Nulls get code -1
-    like pandas."""
+    like pandas.
+
+    The codes and the rows read ``share(df)``; call-time jobs: the
+    ``share`` pin's stages on a replay-unstable input, else none."""
     cols = resolve_columns(df, column_names)
     if order_by is not None and order_by not in df.columns:
         raise KeyError(f"order column {order_by!r} not in DataFrame")
+    df = share(df)
     out = df
     for c in cols:
         # dense_rank over a value-distinct frame, broadcast-joined back:

@@ -29,6 +29,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyjanitor_spark.utils.expr import exact_key
+
 # expression-only verbs: safe on streaming DataFrames unchanged
 STREAMING_SAFE_VERBS = [
     "clean_names",
@@ -62,7 +64,6 @@ STREAMING_SAFE_VERBS = [
     "jitter",
     "transform_column",
     "process_text",
-    "concatenate_columns",
     "token_count",
     "quality_score",
     "language_id",
@@ -210,13 +211,7 @@ def streaming_dedupe(
     32-hex md5 — state size is bounded by the watermark horizon, not by
     stream length (the exact semantics a 100 TB/day ingest dedup needs).
     """
-    col = F.col(column_name)
-    key = (
-        F.md5(F.trim(F.lower(F.regexp_replace(col, r"\s+", " "))))
-        if normalize
-        else F.md5(col)
-    )
-    out = df.withColumn("__fp", key)
+    out = df.withColumn("__fp", exact_key(F.col(column_name), normalize))
     if out.isStreaming:
         if watermark is None or ts_column is None:
             raise ValueError(

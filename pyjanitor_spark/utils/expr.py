@@ -17,7 +17,7 @@ from typing import Callable
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["let"]
+__all__ = ["exact_key", "let"]
 
 
 def let(value: Column, body: Callable[[Column], Column]) -> Column:
@@ -25,3 +25,11 @@ def let(value: Column, body: Callable[[Column], Column]) -> Column:
     lambda variable.  Use whenever ``body`` references the value more
     than once inside higher-order-function lambdas."""
     return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def exact_key(text: Column, normalize: bool) -> Column:
+    """The exact-dedup key of a text: the md5 of the text, lower-cased
+    with whitespace runs collapsed and trimmed when ``normalize``."""
+    if normalize:
+        text = F.trim(F.lower(F.regexp_replace(text, r"\s+", " ")))
+    return F.md5(text)

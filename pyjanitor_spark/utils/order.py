@@ -72,7 +72,6 @@ def partitioned_cumsum(
     value_col: str,
     order_col: str,
     dest: str,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Running total of ``value_col`` over the total order of
     ``order_col`` with NO single-task stage.
@@ -97,17 +96,15 @@ def partitioned_cumsum(
     range exchange when the call is made."""
     from pyspark.sql import Window
 
-    if num_partitions is not None and num_partitions < 1:
-        raise ValueError("num_partitions must be >= 1")
     order = F.col(order_col).asc()
-    # ALWAYS pass an explicit partition count: repartitionByRange with
-    # only columns is a REPARTITION_BY_COL shuffle that AQE may
-    # coalesce, and the two branch reads below are separately pruned
-    # subtrees whose re-executed exchanges could coalesce to DIFFERENT
-    # partition counts — diverging __pid between the offsets aggregate
-    # and the join-back.  An explicit count is never AQE-coalesced.
-    if num_partitions is None:
-        num_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # ALWAYS pass an explicit partition count (the session's
+    # spark.sql.shuffle.partitions): repartitionByRange with only
+    # columns is a REPARTITION_BY_COL shuffle that AQE may coalesce, and
+    # the two branch reads below are separately pruned subtrees whose
+    # re-executed exchanges could coalesce to DIFFERENT partition counts
+    # — diverging __pid between the offsets aggregate and the
+    # join-back.  An explicit count is never AQE-coalesced.
+    num_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     d = df.repartitionByRange(num_partitions, order)
     d = d.withColumn("__pid", F.spark_partition_id())
     if set(df.columns) - {order_col, value_col}:

@@ -7,6 +7,8 @@ functions/utils.py:40-137)."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -116,6 +118,21 @@ def test_top_level_surface_complete():
         assert hasattr(pj, extra)
 
 
+@contextmanager
+def shuffle_partitions(spark, n):
+    """Force ``partitioned_cumsum``'s shard count: it range-partitions
+    into ``spark.sql.shuffle.partitions`` ranges, read when it is
+    called.  ``n=None`` keeps the session's value."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    if n is not None:
+        spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_partitioned_cumsum_matches_serial(spark):
     """Running sum over the order column must equal the serial prefix sum
     whatever the input partitioning or shard count."""
@@ -132,7 +149,8 @@ def test_partitioned_cumsum_matches_serial(spark):
         serial[i] = acc
     for nparts, target in ((1, None), (11, 7), (32, 3)):
         df = spark.createDataFrame(rows, "o long, v long").repartition(nparts)
-        out = partitioned_cumsum(df, "v", "o", "cum", num_partitions=target)
+        with shuffle_partitions(spark, target):
+            out = partitioned_cumsum(df, "v", "o", "cum")
         got = {r["o"]: r["cum"] for r in out.collect()}
         assert got == serial
 
@@ -184,10 +202,9 @@ def test_partitioned_cumsum_on_wide_replay_stable_input(spark):
         (F.col("id") % 7).alias("v"),
         F.col("id").cast("string").alias("pad"),
     )
-    rows = sorted(
-        (r["o"], r["cum"])
-        for r in partitioned_cumsum(df, "v", "o", "cum", num_partitions=4).collect()
-    )
+    with shuffle_partitions(spark, 4):
+        out = partitioned_cumsum(df, "v", "o", "cum")
+    rows = sorted((r["o"], r["cum"]) for r in out.collect())
     acc, want = 0, []
     for i in range(4000):
         acc += i % 7
@@ -232,10 +249,9 @@ def check_index_and_cumsum(spark, kind):
     idx = sorted(r["idx"] for r in positional_index(df, "idx").select("idx").collect())
     assert idx == list(range(n)), kind
 
-    rows = sorted(
-        (r["o"], r["v"], r["cum"])
-        for r in partitioned_cumsum(df, "v", "o", "cum", num_partitions=4).collect()
-    )
+    with shuffle_partitions(spark, 4):
+        out = partitioned_cumsum(df, "v", "o", "cum")
+    rows = sorted((r["o"], r["v"], r["cum"]) for r in out.collect())
     assert len(rows) == n and len({o for o, _, _ in rows}) == n
     acc = 0
     for o, v, cum in rows:

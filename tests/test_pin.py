@@ -578,6 +578,32 @@ def test_column_statistic_on_nondeterministic_input(spark, verb):
     _STATISTICS[verb](df)
 
 
+_FACTORIZE = {
+    "factorize_columns": lambda df: pj.factorize_columns(df, "s"),
+    "label_encode": lambda df: pj.label_encode(df, "s", order_by="id"),
+}
+
+
+@pytest.mark.parametrize("verb", list(_FACTORIZE))
+def test_factorize_on_nondeterministic_input(spark, verb):
+    """The codes and the rows read one run of the input: on unique
+    string values filtered by a coin flip that differs on every read,
+    every row's code is its value's rank among the values returned
+    (sorted order and first-appearance order agree here)."""
+    df = _coin_filtered(spark).select("id", F.format_string("s%04d", "id").alias("s"))
+    rows = [(r["s"], r["s_enc"]) for r in _FACTORIZE[verb](df).collect()]
+    assert rows
+    rank = {s: i for i, s in enumerate(sorted(s for s, _ in rows))}
+    assert all(code == rank[s] for s, code in rows)
+
+
+def test_factorize_columns_runs_upstream_once(spark):
+    df, acc = _counted(spark, 30)
+    out = pj.factorize_columns(df, ["grp", "id"])
+    assert len(out.collect()) == 30
+    assert acc.value == 30
+
+
 def _span_text(i):
     """A shared 5-token prefix, 5 tokens shared by the ids with the same
     ``i % 7`` and 5 tokens of the doc's own: with ``k=5`` every doc has

@@ -847,6 +847,48 @@ class TestSimhashPairs:
                                          bits=bits, bands=4, max_hamming=mh).collect()}
         assert got == expect
 
+    def test_repeated_ids_and_null_texts_match_brute_force(self, spark):
+        """One output row per pair of input ROWS with id_1 < id_2 and
+        Hamming <= max_hamming: a repeated id pairs once per row, equal
+        ids never pair, null texts (null fingerprint) never pair, and
+        empty or blank texts share one fingerprint."""
+        from collections import Counter
+
+        texts = ["alpha beta gamma delta", "alpha beta gamma delta eps",
+                 "zeta eta theta", None, "", "   "]
+        rows = [(i % 5, texts[i % len(texts)]) for i in range(23)]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        bits, mh = 48, 3
+        fps = [(r["doc_id"], r["sh"]) for r in
+               pj.simhash(df, "text", bits=bits, dest="sh").collect()]
+        expect = Counter(
+            (a, b, bin(fa ^ fb).count("1"))
+            for (a, fa), (b, fb) in (
+                (x, y) if x[0] < y[0] else (y, x)
+                for i, x in enumerate(fps) for y in fps[i + 1:]
+            )
+            if a < b and fa is not None and fb is not None
+            and bin(fa ^ fb).count("1") <= mh
+        )
+        got = Counter(tuple(r) for r in pj.simhash_pairs(
+            df, "doc_id", "text", bits=bits, bands=4, max_hamming=mh).collect())
+        assert expect and got == expect
+
+    def test_one_bucket_shuffle_no_pin(self, spark, documents):
+        """The pairs come from one (band, key) bucket shuffle over one
+        band table: the plan holds no pin (LogicalRDD) and no self-join,
+        and the call runs no Spark job."""
+        sc = spark.sparkContext
+        sc.setJobGroup("simhash_pairs-call", "simhash_pairs call")
+        try:
+            out = pj.simhash_pairs(documents, "doc_id", "text")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("simhash_pairs-call") == []
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan and "Join" not in plan
+        assert plan.count("Aggregate") == 1
+
     def test_bad_args(self, spark):
         df = spark.createDataFrame([(1, "x y")], ["doc_id", "text"])
         with pytest.raises(ValueError):

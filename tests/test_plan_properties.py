@@ -321,7 +321,7 @@ def test_registry_generate_broadcast_lint(spark):
         # (reviewed r12: BuildRight side is one row per doc_id)
         "ngram_jaccard_pairs", "ngram_jaccard_capped",
         "ngram_jaccard_sampled", "dedupe_against",
-        "remove_duplicated_spans", "simhash_pairs", "semdedup",
+        "remove_duplicated_spans", "semdedup",
         # split mode shares semdedup's k-row centroid attach; its
         # broadcast subtree contains the centroid posexplode, and the
         # build side is n_clusters rows by construction (bounded) —

@@ -13,10 +13,11 @@ import pyjanitor_spark.functions
 import pyjanitor_spark.utils.order
 
 # defaulted parameters over the public functions below, after the
-# distinct-value CDF verbs, assign_packs and take_token_budget lost
-# their num_partitions option, semdedup its check option, and nb_score
-# and ngram_lm_score their broadcast_model option
-MAX_OPTIONS = 472
+# distinct-value CDF verbs, assign_packs, take_token_budget and
+# partitioned_cumsum lost their num_partitions option, semdedup its
+# check option, and nb_score and ngram_lm_score their broadcast_model
+# option
+MAX_OPTIONS = 471
 
 
 def _public_functions(module):
@@ -44,14 +45,13 @@ def test_public_options_do_not_grow():
     assert _options() <= MAX_OPTIONS
 
 
-def test_only_partitioned_cumsum_takes_num_partitions():
+def test_no_public_function_takes_num_partitions():
     """A partition count is the engine's choice
-    (``spark.sql.shuffle.partitions``); only ``partitioned_cumsum``
-    keeps it, so tests can force a shard count."""
+    (``spark.sql.shuffle.partitions``); no public function takes one."""
     takers = {
         fn.__name__
         for module in (pyjanitor_spark, pyjanitor_spark.utils.order, pyjanitor_spark.functions)
         for fn in _public_functions(module)
         if "num_partitions" in inspect.signature(fn).parameters
     }
-    assert takers == {"partitioned_cumsum"}
+    assert not takers
